@@ -1250,6 +1250,7 @@ def q_streaming_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrays, the SQL over shingle strings — set sizes coincide absent a
     64-bit collision, making the jaccard doubles bit-identical."""
     import os
+    import re
     import shutil
     import tempfile
 
@@ -1260,40 +1261,44 @@ def q_streaming_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     inp = os.path.join(work, "docs")
     pairs_out = os.path.join(work, "pairs")
     ckpt = os.path.join(work, "ckpt")
-    idx = "nd_q_" + os.path.basename(work).rsplit("_", 1)[-1].lower()
+    # the whole basename, so the tempfile suffix (whose alphabet includes
+    # "_") keeps all its characters in the catalog table name
+    idx = "nd_q_" + re.sub(r"[^a-z0-9]", "", os.path.basename(work).lower())
     # variant family (doc_id // 100000) shifts the shard so copies of one
     # base doc land in different micro-batches → genuinely cross-batch pairs
     shard = F.pmod(F.col("doc_id") + F.floor(F.col("doc_id") / 100000), F.lit(4))
-    for s in range(4):
-        corpus.where(shard == s).coalesce(1).write.mode("append").parquet(inp)
-        q = near_dup_stream(
-            spark,
-            inp,
-            idx,
-            pairs_out,
-            ckpt,
-            threshold=0.8,
-            n=3,
-            num_hashes=128,
-            bands=32,
+    try:
+        for s in range(4):
+            corpus.where(shard == s).coalesce(1).write.mode("append").parquet(inp)
+            q = near_dup_stream(
+                spark,
+                inp,
+                idx,
+                pairs_out,
+                ckpt,
+                threshold=0.8,
+                n=3,
+                num_hashes=128,
+                bands=32,
+            )
+            # bounded wait: a wedged micro-batch must fail THIS query's row,
+            # never hang the whole correctness run
+            if not q.awaitTermination(600):
+                q.stop()
+                raise RuntimeError(f"streaming micro-batch {s} did not drain in 600s")
+        pairs = (
+            spark.read.parquet(pairs_out)
+            .select("id_a", "id_b", "jaccard")
+            .dropDuplicates(["id_a", "id_b"])
+            .localCheckpoint()  # eager: severs lineage from every temp file below
         )
-        # bounded wait: a wedged micro-batch must fail THIS query's row,
-        # never hang the whole correctness run
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError(f"streaming micro-batch {s} did not drain in 600s")
-    pairs = (
-        spark.read.parquet(pairs_out)
-        .select("id_a", "id_b", "jaccard")
-        .dropDuplicates(["id_a", "id_b"])
-        .localCheckpoint()  # eager: severs lineage from every temp file below
-    )
-    wh = spark.conf.get("spark.sql.warehouse.dir", "").replace("file:", "")
-    for t in (f"{idx}_bands", f"{idx}_hashes"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        if wh:
-            shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
-    shutil.rmtree(work, ignore_errors=True)
+    finally:
+        wh = spark.conf.get("spark.sql.warehouse.dir", "").replace("file:", "")
+        for t in (f"{idx}_bands", f"{idx}_hashes"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+            if wh:
+                shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
     return pairs
 
 

@@ -12,11 +12,15 @@ are printed so corpus loss is observable at every step.
 
 Usage (cluster):
     spark-submit --py-files dist/ocr_project_spark.zip \\
+        --driver-java-options -XX:TieredStopAtLevel=1 \\
         ocr_project_spark/jobs/curate.py \\
         --documents <parquet> --out <parquet> \\
         [--drop-repeated-lines] [--c4-clean] [--redact-pii] \\
         [--decontaminate-against <eval parquet> [--ngram 13]] \\
         [--quality-gate]
+
+Under spark-submit the driver JVM is already running when build_session()
+runs, so its C1-tier flag (see session.py) is passed on the command line.
 
 Local smoke (no cluster):
     python -m ocr_project_spark.jobs.curate \\

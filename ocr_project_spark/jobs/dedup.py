@@ -2,10 +2,14 @@
 
 Usage (cluster):
     spark-submit --py-files dist/ocr_project_spark.zip \\
+        --driver-java-options -XX:TieredStopAtLevel=1 \\
         ocr_project_spark/jobs/dedup.py \\
         --documents <parquet> --keep <out> [--kept-corpus <out>] \\
         [--method exact|minhash|simhash] [--threshold 0.8] \\
         [--num-hashes 64] [--bands 16] [--max-bucket N] [--max-hamming 3]
+
+Under spark-submit the driver JVM is already running when build_session()
+runs, so its C1-tier flag (see session.py) is passed on the command line.
 
 Pipeline: read documents → near-dup pairs for the chosen family →
 connected components (large-star/small-star, components.py) → min-id

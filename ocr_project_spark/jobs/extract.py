@@ -2,13 +2,17 @@
 
 Usage (cluster):
     spark-submit --py-files dist/ocr_project_spark.zip \\
+        --driver-java-options -XX:TieredStopAtLevel=1 \\
         ocr_project_spark/jobs/extract.py \\
         --pages <table-or-parquet-path> --results <out> --lineage <out> \\
         [--num-partitions N] [--synthesize-sf-dir DIR [--replicate K]]
 
+Under spark-submit the driver JVM is already running when build_session()
+runs, so its C1-tier flag (see session.py) is passed on the command line.
+
 The job is the SURVEY §3.1 plan: read pages → validate/dispatch → anti-join
 against already-written results (resume) → url-hash repartition →
-Arrow-batch extraction → append results + overwrite lineage. Re-running
+Arrow-batch extraction → append results + append lineage. Re-running
 after a crash extracts only missing urls (see operators/resume.py).
 
 Local smoke (no cluster):

@@ -2,7 +2,7 @@
 
 The reference polls live ``/health`` endpoints and keeps consecutive-failure
 counters (reference: orchestrator/server.py:60-109, 339-380); the batch
-analog is a lineage table — one row per (partition, backend) with doc/byte
+analog is a lineage table — one row per (url bucket, backend) with doc/byte
 counts — and plain aggregations over it. Partial aggregation (map-side
 combine) comes free from Catalyst.
 """
@@ -22,20 +22,31 @@ FAILURE_THRESHOLD = 3  # consecutive failures before marking unhealthy
 SUCCESS_THRESHOLD = 2  # consecutive successes before marking healthy
 
 
+# The range of lineage ``part_id``: url buckets per run and backend, each
+# one breaker health check.
+LINEAGE_BUCKETS = 16
+
+
 def lineage_rows(results: DataFrame) -> DataFrame:
-    """Per-(partition, backend) lineage: doc count, success/failure split,
-    extracted byte count. ``spark_partition_id`` identifies the input split —
-    the extraction operator is narrow, so result partitions are input splits.
+    """Per-(url bucket, backend) lineage: doc count, success/failure split,
+    extracted byte count. ``part_id`` is ``pmod(xxhash64(url),
+    LINEAGE_BUCKETS)``, so the same rows give the same lineage at any core
+    count or read-back packing. The hash is not crc32, so the half-open
+    probe sample (``crc32(url) % probe_mod`` in pipeline.run_job) spreads
+    over many buckets instead of one.
     """
     return (
-        results.withColumn("part_id", F.spark_partition_id())
+        results.withColumn(
+            "part_id",
+            F.pmod(F.xxhash64("url"), F.lit(LINEAGE_BUCKETS)).cast("int"),
+        )
         .groupBy("part_id", "backend")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.col("success").cast("long")).alias("n_success"),
             F.sum((~F.col("success")).cast("long")).alias("n_failed"),
             F.sum("n_bytes").alias("n_bytes"),
-            # P8 analog: summed per-doc kernel seconds per split (wall-clock
+            # P8 analog: summed per-doc kernel seconds per bucket (wall-clock
             # metrics live in lineage, not per-row identity checks)
             F.sum("processing_time").alias("cpu_seconds"),
         )
@@ -64,14 +75,14 @@ def circuit_breaker_gate(lineage: DataFrame) -> dict[str, bool]:
     """R3 circuit-breaker analog: replay the reference's per-backend health
     state machine (orchestrator/server.py:85-109 consecutive-failure
     counters, thresholds orchestrator/config.py:38-42) over a prior run's
-    lineage, partition order standing in for poll order. A partition with
+    lineage, url-bucket order standing in for poll order. A bucket with
     zero successes and ≥1 failure is a failed health check; a backend whose
-    trailing run reaches ``FAILURE_THRESHOLD`` consecutive failed partitions
+    trailing run reaches ``FAILURE_THRESHOLD`` consecutive failed buckets
     trips open (skipped — its next-run rows short-circuit to the
     model-not-loaded shape) and closes again after ``SUCCESS_THRESHOLD``
-    consecutive healthy partitions. With the incremental lineage table
+    consecutive healthy buckets. With the incremental lineage table
     (one append per run, stamped with a monotone ``run_id``), the replay
-    walks (run_id, part_id) order — so healthy half-open-probe partitions
+    walks (run_id, part_id) order — so healthy half-open-probe buckets
     appended by a later breaker-enabled run close the breaker without any
     manual intervention.
 
@@ -89,7 +100,7 @@ def circuit_breaker_gate(lineage: DataFrame) -> dict[str, bool]:
     has_run = "run_id" in lineage.columns
     # (n_success, n_failed) tie-breakers: one run can append two rows with
     # the SAME (run_id, part_id) for a backend (result lineage + probe-fail
-    # lineage both derive part_id from spark_partition_id()), and a
+    # lineage bucket their own urls into the same part_id range), and a
     # nondeterministic tie order could flip which decisive streak completes
     # last — the gate verdict must be a pure function of the lineage rows
     # (resume determinism), so the order replays the old driver-side sort

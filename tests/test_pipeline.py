@@ -286,19 +286,18 @@ def _breaker_corpus(spark, id_lo, id_hi, mineru_healthy):
     ).repartition(4)
 
 
-def test_half_open_probe_recovers_without_disabling_breaker(spark, tmp_path):
-    """ADVICE r3: with the breaker enabled on EVERY run, a tripped backend
-    must still recover by itself — the deterministic half-open url probe
-    keeps running its kernel, probe failures feed the lineage (keeping the
-    breaker open, never checkpointed), and once the backend heals the probe
-    successes append healthy lineage partitions that close the breaker on
-    the next pass. No run ever flips circuit_breaker off."""
+def _half_open_sequence(spark, root):
+    """Run the four-run breaker sequence below into fresh stores under
+    ``root`` and return what each run left in the results store."""
     from ocr_project_spark.pipeline import run_job
 
-    results_path = str(tmp_path / "results")
-    lineage_path = str(tmp_path / "lineage")
+    results_path = str(root / "results")
+    lineage_path = str(root / "lineage")
 
-    # run 1: mineru poisoned → its lineage partitions all fail and trip the
+    def segment():
+        return spark.read.parquet(results_path).where("doc_id >= 40")
+
+    # run 1: mineru poisoned → its lineage buckets all fail and trip the
     # breaker (these malformed docs ARE results: checkpointed failures)
     run_job(spark, _breaker_corpus(spark, 0, 40, False), results_path, lineage_path)
 
@@ -313,12 +312,15 @@ def test_half_open_probe_recovers_without_disabling_breaker(spark, tmp_path):
         circuit_breaker=True,
         probe_mod=4,
     )
-    after2 = spark.read.parquet(results_path).where("doc_id >= 40")
-    assert after2.where("backend = 'mineru'").count() == 0
-    assert after2.where("backend = 'deepseek-ocr' AND success").count() == 20
+    out = {
+        "run2_mineru": segment().where("backend = 'mineru'").count(),
+        "run2_deepseek_ok": segment()
+        .where("backend = 'deepseek-ocr' AND success")
+        .count(),
+    }
 
     # run 3 (breaker ON, backend healed, same urls recrawled healthy): the
-    # probe subset extracts successfully → healthy lineage partitions append
+    # probe subset extracts successfully → healthy lineage buckets append
     run_job(
         spark,
         _breaker_corpus(spark, 40, 80, True),
@@ -327,12 +329,12 @@ def test_half_open_probe_recovers_without_disabling_breaker(spark, tmp_path):
         circuit_breaker=True,
         probe_mod=4,
     )
-    after3 = spark.read.parquet(results_path).where("doc_id >= 40")
-    n_probe_ok = after3.where("backend = 'mineru' AND success").count()
-    assert 0 < n_probe_ok < 20, n_probe_ok  # the probe sample, not the backlog
-    assert after3.where("backend = 'mineru' AND NOT success").count() == 0
+    out["run3_mineru_ok"] = segment().where("backend = 'mineru' AND success").count()
+    out["run3_mineru_failed"] = (
+        segment().where("backend = 'mineru' AND NOT success").count()
+    )
 
-    # run 4 (breaker STILL on): the healthy probe partitions closed the
+    # run 4 (breaker STILL on): the healthy probe buckets closed the
     # breaker → the full backlog extracts and the result set converges
     run_job(
         spark,
@@ -342,10 +344,52 @@ def test_half_open_probe_recovers_without_disabling_breaker(spark, tmp_path):
         circuit_breaker=True,
         probe_mod=4,
     )
-    final = spark.read.parquet(results_path).where("doc_id >= 40")
-    assert final.count() == 40
-    assert final.select("url").distinct().count() == 40
-    assert final.where("backend = 'mineru' AND success").count() == 20
+    out["final_rows"] = segment().count()
+    out["final_urls"] = segment().select("url").distinct().count()
+    out["final_mineru_ok"] = (
+        segment().where("backend = 'mineru' AND success").count()
+    )
+    return out
+
+
+def test_half_open_probe_recovers_without_disabling_breaker(spark, tmp_path):
+    """ADVICE r3: with the breaker enabled on EVERY run, a tripped backend
+    must still recover by itself — the deterministic half-open url probe
+    keeps running its kernel, probe failures feed the lineage (keeping the
+    breaker open, never checkpointed), and once the backend heals the probe
+    successes append healthy lineage buckets that close the breaker on
+    the next pass. No run ever flips circuit_breaker off."""
+    out = _half_open_sequence(spark, tmp_path)
+    assert out["run2_mineru"] == 0
+    assert out["run2_deepseek_ok"] == 20
+    # the probe sample, not the backlog
+    assert 0 < out["run3_mineru_ok"] < 20, out
+    assert out["run3_mineru_failed"] == 0
+    assert out["final_rows"] == 40
+    assert out["final_urls"] == 40
+    assert out["final_mineru_ok"] == 20
+
+
+def test_breaker_verdict_independent_of_readback_packing(spark, tmp_path):
+    """The breaker replays lineage computed from each run's read-back scan.
+    How that scan packs its files follows the core count (one partition
+    with minPartitionNum 1, one per file with 32), and the verdict must
+    not: the same sequence gives the same outcome, and recovers, under
+    both packings."""
+    key = "spark.sql.files.minPartitionNum"
+    prior = spark.conf.get(key, None)
+    outcomes = []
+    try:
+        for n in (1, 32):
+            spark.conf.set(key, str(n))
+            outcomes.append(_half_open_sequence(spark, tmp_path / f"min{n}"))
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+    assert outcomes[0] == outcomes[1], outcomes
+    assert outcomes[0]["final_mineru_ok"] == 20
 
 
 def test_lineage_is_incremental_appends(spark, tmp_path):
@@ -388,8 +432,8 @@ def test_lineage_is_incremental_appends(spark, tmp_path):
 
 def test_circuit_breaker_tie_order_deterministic(spark):
     """One run can append TWO lineage rows with the same (run_id, part_id)
-    for a backend — result lineage + probe-failure lineage both derive
-    part_id from spark_partition_id(). The replay's check order at such a
+    for a backend — result lineage + probe-failure lineage bucket their
+    own urls into the same part_id range. The replay's check order at such a
     tie must be a pure function of the rows (resume determinism), never of
     execution order: ties break on (n_success, n_failed) ascending — the
     failed check (n_success 0) replays BEFORE the healthy one, matching
