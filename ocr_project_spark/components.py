@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ocr_project_spark.session import release_checkpoint
+
 EDGE_SCHEMA = "src long, dst long"
 COMPONENT_SCHEMA = "doc_id long, cluster_id long"
 
@@ -119,7 +121,7 @@ def connected_components(
         )
         prev = _edge_checksum(edges)
         if prev[0] == 0:
-            edges.unpersist()
+            release_checkpoint(edges)
             return spark.createDataFrame([], COMPONENT_SCHEMA)
         for _ in range(max_iter):
             nxt = _small_star(_large_star(edges)).localCheckpoint()
@@ -127,7 +129,7 @@ def connected_components(
             # round's blocks so a long-lived session doesn't accrue one
             # cached edge set per round (only the FINAL round's blocks stay,
             # and they back the returned DataFrame)
-            edges.unpersist()
+            release_checkpoint(edges)
             edges = nxt
             cur = _edge_checksum(edges)
             if cur == prev:

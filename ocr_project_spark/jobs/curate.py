@@ -8,7 +8,27 @@ Each stage is optional (flag-gated) and the stage order is the one the
 public pipelines use: structural cleanup first (repeated-line removal
 changes the text the later stages see), then PII scrubbing, then drop
 whole documents (contaminated, low-quality). Per-stage document counts
-are printed so corpus loss is observable at every step.
+are printed so corpus loss is observable at every step; they are
+``Observation`` metrics on the job's actions, not extra counts.
+
+The plan grows linearly with the number of stages. The chain carries one
+``(doc_id, text)`` frame: C4, PII and the quality gate are projections
+and filters on it, and the passthrough columns are attached once at the
+end by a single join against the input scan. The two corpus-statistic
+stages after line dedup read their input more than once
+(decontamination hashes its grams, then filters it; the LM gate hashes
+its grams, then keeps the passing ids), so the frame is materialized
+with ``localCheckpoint()`` right before each of them:
+
+    scan -> line dedup -> C4 -> PII                  => checkpoint 1
+    checkpoint 1 -> decontamination -> quality gate  => checkpoint 2
+    checkpoint 2 -> LM gate -> passthrough join      => write
+
+Without them each such re-read would re-plan and re-run the whole
+upstream chain — every stage's copies multiply, and the final write
+planned a 1 331-node tree with 14 Python passes on a 600-document
+corpus. Both checkpoints are released when the job ends, also when a
+stage raises.
 
 Usage (cluster):
     spark-submit --py-files dist/ocr_project_spark.zip \\
@@ -17,7 +37,7 @@ Usage (cluster):
         --documents <parquet> --out <parquet> \\
         [--drop-repeated-lines] [--c4-clean] [--redact-pii] \\
         [--decontaminate-against <eval parquet> [--ngram 13]] \\
-        [--quality-gate]
+        [--quality-gate] [--lm-gate [--lm-ngram 2]]
 
 Under spark-submit the driver JVM is already running when build_session()
 runs, so its C1-tier flag (see session.py) is passed on the command line.
@@ -29,14 +49,24 @@ Local smoke (no cluster):
 
 100 TB shape: every stage is one of the audited plans (PLANS.md sections
 6/8) — line dedup shuffles line rows and position sets only, the C4 line
-filter and PII are shuffle-free JVM projections, decontamination
-broadcasts the eval grams, and the quality gate is a narrow filter;
-nothing in the chain collects unbounded data to the driver.
+filter, PII and the quality gate are shuffle-free JVM expressions on one
+frame, decontamination broadcasts the eval grams, and the LM gate
+shuffles 16-byte gram rows; nothing in the chain collects unbounded data
+to the driver. A local checkpoint lives in executor storage and is lost
+with its executor; on a cluster with lossy executors, write the two
+materialized frames to reliable storage instead.
 """
 
 from __future__ import annotations
 
 import argparse
+
+# AQE swaps a join whose input stage came back empty for an empty
+# relation, and an observation inside the dropped subtree never reports:
+# a gate that keeps nothing would then fail the job at ``obs.get``. The
+# rule only saves work on empty inputs, so the job's actions run without.
+AQE_RULES_KEY = "spark.sql.adaptive.optimizer.excludedRules"
+AQE_EMPTY_PRUNING = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
 
 
 def parse_args(argv=None):
@@ -82,100 +112,102 @@ def parse_args(argv=None):
     return p.parse_args(argv)
 
 
+def curation_chain(spark, args, held: list):
+    """The curated frame to write, with the stages ``args`` turns on, and
+    the ``(label, Observation)`` pairs for the stages that drop documents.
+
+    The row-local stages (C4, PII, quality gate) are projections and
+    filters on one ``(doc_id, text)`` frame. Before each corpus-statistic
+    stage after line dedup (decontamination, LM gate) the frame is
+    materialized with ``localCheckpoint()``, which runs the stages so far
+    and fills their observations; each such frame is appended to ``held``
+    for the caller to release (``session.release_checkpoint``) once the
+    output is written, or when a stage raises."""
+    from pyspark.sql import Observation, functions as F
+
+    from ocr_project_spark import textops
+
+    src = spark.read.parquet(args.documents)
+    docs = src.select("doc_id", "text")
+    observations: list[tuple[str, Observation]] = []
+
+    def _observe(df, label):
+        obs = Observation(label)
+        observations.append((label, obs))
+        return df.observe(obs, F.count(F.lit(1)).alias("n"))
+
+    def _materialize(df):
+        df = df.localCheckpoint()
+        held.append(df)
+        return df
+
+    if args.drop_repeated_lines:
+        from ocr_project_spark.dedup import remove_repeated_lines
+
+        docs = remove_repeated_lines(docs, min_docs=args.line_min_docs).drop(
+            "n_removed_lines"
+        )
+    if args.c4_clean:
+        docs = _observe(
+            textops.c4_line_filter(docs).where("kept").select("doc_id", "text"),
+            "C4 line filter",
+        )
+    if args.redact_pii:
+        docs = textops.redact_pii(docs).select("doc_id", "text")
+    if args.decontaminate_against:
+        eval_docs = spark.read.parquet(args.decontaminate_against)
+        docs = _observe(
+            textops.decontaminate(_materialize(docs), eval_docs, n=args.ngram),
+            "decontamination",
+        )
+    if args.quality_gate:
+        docs = _observe(docs.where(textops.passes_quality_gate()), "quality gate")
+    if args.lm_gate:
+        docs = _materialize(docs)
+        keep = (
+            textops.gram_lm_scores(docs, n=args.lm_ngram)
+            .where("passes_lm")
+            .select("doc_id")
+        )
+        docs = _observe(docs.join(keep, "doc_id", "left_semi"), "LM gate")
+    if any(c not in ("doc_id", "text") for c in src.columns):
+        # passthrough columns: one join against the input scan
+        docs = docs.join(src.drop("text"), "doc_id")
+    return docs, observations
+
+
 def main(argv=None, spark=None) -> None:
     """CLI driver; ``spark`` can be injected for in-process tests (the
     session is then left running)."""
     args = parse_args(argv)
-    from ocr_project_spark.session import build_session
+    from ocr_project_spark.session import build_session, release_checkpoint
 
     owns_session = spark is None
     if owns_session:
         spark = build_session(app_name="ocr-project-spark-curate", master=args.master)
+    held: list = []
+    rules_prev = spark.conf.get(AQE_RULES_KEY, None)
+    spark.conf.set(
+        AQE_RULES_KEY, ",".join(r for r in (rules_prev, AQE_EMPTY_PRUNING) if r)
+    )
     try:
-        docs = spark.read.parquet(args.documents)
-        extra_cols = [c for c in docs.columns if c not in ("doc_id", "text")]
-        n0 = docs.count()
+        n0 = spark.read.parquet(args.documents).count()
         print(f"curate: input {n0} documents")
-
-        # per-stage counts ride the ONE final write action as observed
-        # metrics — a .count() per stage would re-execute the whole
-        # un-persisted upstream chain once per enabled stage
-        from pyspark.sql import Observation, functions as F
-
-        observations: list[tuple[str, Observation]] = []
-
-        def _observe(df, label):
-            obs = Observation(label)
-            observations.append((label, obs))
-            return df.observe(obs, F.count(F.lit(1)).alias("n"))
-
-        def _restore(text_df):
-            """Re-attach passthrough columns after a text-rewriting stage."""
-            if not extra_cols:
-                return text_df
-            return text_df.join(docs.drop("text"), "doc_id")
-
-        if args.drop_repeated_lines:
-            from ocr_project_spark.dedup import remove_repeated_lines
-
-            docs = _restore(
-                remove_repeated_lines(docs, min_docs=args.line_min_docs).drop(
-                    "n_removed_lines"
-                )
-            )
-        if args.c4_clean:
-            from ocr_project_spark.textops import c4_line_filter
-
-            docs = _observe(
-                _restore(
-                    c4_line_filter(docs)
-                    .where("kept")
-                    .drop("kept", "blocked", "n_lines", "n_lines_kept")
-                ),
-                "C4 line filter",
-            )
-        if args.redact_pii:
-            from ocr_project_spark.textops import redact_pii
-
-            docs = _restore(
-                redact_pii(docs).drop("n_emails", "n_ipv4", "n_phones")
-            )
-        if args.decontaminate_against:
-            from ocr_project_spark.textops import decontaminate
-
-            eval_docs = spark.read.parquet(args.decontaminate_against)
-            docs = _observe(
-                decontaminate(docs, eval_docs, n=args.ngram), "decontamination"
-            )
-        if args.quality_gate:
-            from ocr_project_spark.textops import quality_gate
-
-            docs = _observe(
-                docs.join(
-                    quality_gate(docs).select("doc_id"), "doc_id", "left_semi"
-                ),
-                "quality gate",
-            )
-        if args.lm_gate:
-            from ocr_project_spark.textops import gram_lm_scores
-
-            docs = _observe(
-                docs.join(
-                    gram_lm_scores(docs, n=args.lm_ngram)
-                    .where("passes_lm")
-                    .select("doc_id"),
-                    "doc_id",
-                    "left_semi",
-                ),
-                "LM gate",
-            )
-
+        # per-stage counts ride the checkpoints and the final write as
+        # observed metrics, not one .count() action per stage
+        docs, observations = curation_chain(spark, args, held)
         docs.write.mode("overwrite").parquet(args.out)
         for label, obs in observations:
             print(f"curate: {label} kept {obs.get['n']} documents")
         n_out = spark.read.parquet(args.out).count()
         print(f"curate: wrote {n_out} of {n0} documents -> {args.out}")
     finally:
+        for df in held:
+            release_checkpoint(df)
+        if rules_prev is None:
+            spark.conf.unset(AQE_RULES_KEY)
+        else:
+            spark.conf.set(AQE_RULES_KEY, rules_prev)
         if owns_session:
             spark.stop()
 

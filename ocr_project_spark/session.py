@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1"
 
@@ -63,3 +63,15 @@ def build_session(
         .config("spark.driver.defaultJavaOptions", DRIVER_JAVA_OPTIONS)
     )
     return builder.getOrCreate()
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks behind a ``localCheckpoint()``-ed DataFrame.
+
+    ``DataFrame.unpersist`` does not: it only un-caches, and a checkpoint
+    is a persisted RDD under a ``LogicalRDD`` leaf, which stays in
+    executor memory until the context cleaner happens to collect it. Call
+    this once nothing reads ``df`` any more."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(True)  # blocking: the blocks are gone on return

@@ -10,7 +10,7 @@ the values (float rounding differs across engines).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 # BPE-ish token pattern: word pieces or single non-space punctuation.
 TOKEN_PATTERN = r"[a-zA-Z0-9]+|[^a-zA-Z0-9\s]"
@@ -30,6 +30,25 @@ def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+# The quality gate's accepted band. Its one definition is
+# :func:`passes_quality_gate`; :func:`quality_gate` and the curation job
+# both filter on it.
+QUALITY_MIN_WORDS = 20
+QUALITY_MIN_AVG_WORD_LEN_X100 = 200
+QUALITY_MAX_AVG_WORD_LEN_X100 = 900
+
+
+def _word_shape(t: Column) -> tuple[Column, Column]:
+    """``(n_words, avg_word_len_x100)`` of a text column."""
+    n_words = F.size(F.split(t, " "))
+    chars_no_space = F.length(F.regexp_replace(t, " ", ""))
+    # cast to long BEFORE multiplying: a single mega-document
+    # (>21.4M non-space chars) overflows the 32-bit intermediate and,
+    # under ANSI, kills the whole pass
+    avg_wl = F.floor(chars_no_space.cast("long") * 100 / n_words).cast("long")
+    return n_words, avg_wl
+
+
 def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Length/word-shape quality features, integer-safe for oracle checks.
 
@@ -39,20 +58,15 @@ def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """
     t = F.col(text_col)
     words = F.split(t, " ")
-    n_words = F.size(words)
-    chars_no_space = F.length(F.regexp_replace(t, " ", ""))
+    n_words, avg_wl = _word_shape(t)
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     stop_hits = F.size(F.filter(words, lambda w: F.array_contains(stop_arr, w)))
     return docs.select(
         "doc_id",
         F.length(t).alias("n_chars"),
         n_words.alias("n_words"),
-        # cast to long BEFORE multiplying: a single mega-document
-        # (>21.4M non-space chars / >214k stopword hits) overflows the
-        # 32-bit intermediate and, under ANSI, kills the whole pass
-        F.floor(chars_no_space.cast("long") * 100 / n_words).cast("long").alias(
-            "avg_word_len_x100"
-        ),
+        avg_wl.alias("avg_word_len_x100"),
+        # long before multiplying, as in _word_shape (>214k stopword hits)
         stop_hits.cast("long").alias("stopword_hits"),
         F.floor(stop_hits.cast("long") * 10000 / n_words).cast("long").alias(
             "stopword_ratio_x10000"
@@ -60,24 +74,42 @@ def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def passes_quality_gate(
+    text_col: str = "text",
+    min_words: int = QUALITY_MIN_WORDS,
+    min_avg_word_len_x100: int = QUALITY_MIN_AVG_WORD_LEN_X100,
+    max_avg_word_len_x100: int = QUALITY_MAX_AVG_WORD_LEN_X100,
+) -> Column:
+    """The quality gate's verdict as one boolean column over the text: a
+    row-local predicate, so a pipeline applies the gate as a narrow filter
+    on the frame it already has instead of joining the scores back."""
+    n_words, avg_wl = _word_shape(F.col(text_col))
+    return (
+        (n_words >= min_words)
+        & (avg_wl >= min_avg_word_len_x100)
+        & (avg_wl <= max_avg_word_len_x100)
+    )
+
+
 def quality_gate(
     docs: DataFrame,
-    min_words: int = 20,
-    min_avg_word_len_x100: int = 200,
-    max_avg_word_len_x100: int = 900,
+    min_words: int = QUALITY_MIN_WORDS,
+    min_avg_word_len_x100: int = QUALITY_MIN_AVG_WORD_LEN_X100,
+    max_avg_word_len_x100: int = QUALITY_MAX_AVG_WORD_LEN_X100,
     text_col: str = "text",
 ) -> DataFrame:
     """Corpus quality filter: keeps documents whose length/word-shape
     features fall in the accepted band (the gate a training-data pipeline
-    applies after extraction). Pure JVM expressions over
-    :func:`quality_scores`; the thresholds are integer-safe so a DuckDB
-    oracle can replay the gate exactly."""
-    scores = quality_scores(docs, text_col)
-    return scores.where(
-        (F.col("n_words") >= min_words)
-        & (F.col("avg_word_len_x100") >= min_avg_word_len_x100)
-        & (F.col("avg_word_len_x100") <= max_avg_word_len_x100)
-    ).select("doc_id", "n_words", "avg_word_len_x100")
+    applies after extraction), as ``(doc_id, n_words, avg_word_len_x100)``.
+    Pure JVM expressions (:func:`passes_quality_gate` over the
+    :func:`quality_scores` features); the thresholds are integer-safe so a
+    DuckDB oracle can replay the gate exactly."""
+    keep = passes_quality_gate(
+        text_col, min_words, min_avg_word_len_x100, max_avg_word_len_x100
+    )
+    return quality_scores(docs.where(keep), text_col).select(
+        "doc_id", "n_words", "avg_word_len_x100"
+    )
 
 
 def gopher_gate(
@@ -604,26 +636,7 @@ def contamination_check(
     (plan-asserted). A 64-bit hash collision flagging a clean gram is
     ~2⁻⁶⁴ — negligible; collisions can only over-flag, never leak
     contamination through."""
-    doc_grams = gram_hashes(docs, n, text_col)
-    eval_grams = (
-        gram_hashes(
-            eval_docs.select(
-                F.lit(0).alias("__eid"), F.col(eval_text_col).alias("__etext")
-            ),
-            n,
-            text_col="__etext",
-            id_col="__eid",
-        )
-        .select("gram_hash")
-    )
-    # left_semi (not inner + eval-side distinct): a doc gram counts once
-    # however many eval docs repeat it, and the tiny eval side broadcasts
-    # raw — no distinct aggregation exchange anywhere on either side.
-    hits = (
-        doc_grams.join(F.broadcast(eval_grams), "gram_hash", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_contaminated_grams"))
-    )
+    hits = _contaminated_gram_counts(docs, eval_docs, n, text_col, eval_text_col)
     return (
         docs.select("doc_id")
         .join(F.broadcast(hits), "doc_id", "left")
@@ -639,6 +652,38 @@ def contamination_check(
     )
 
 
+def _contaminated_gram_counts(
+    docs: DataFrame,
+    eval_docs: DataFrame,
+    n: int,
+    text_col: str,
+    eval_text_col: str,
+) -> DataFrame:
+    """``(doc_id, n_contaminated_grams)`` for the documents sharing at least
+    one gram with the eval set — the small hit table both
+    :func:`contamination_check` and :func:`decontaminate` start from."""
+    doc_grams = gram_hashes(docs, n, text_col)
+    eval_grams = (
+        gram_hashes(
+            eval_docs.select(
+                F.lit(0).alias("__eid"), F.col(eval_text_col).alias("__etext")
+            ),
+            n,
+            text_col="__etext",
+            id_col="__eid",
+        )
+        .select("gram_hash")
+    )
+    # left_semi (not inner + eval-side distinct): a doc gram counts once
+    # however many eval docs repeat it, and the tiny eval side broadcasts
+    # raw — no distinct aggregation exchange anywhere on either side.
+    return (
+        doc_grams.join(F.broadcast(eval_grams), "gram_hash", "left_semi")
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n_contaminated_grams"))
+    )
+
+
 def decontaminate(
     docs: DataFrame,
     eval_docs: DataFrame,
@@ -646,15 +691,13 @@ def decontaminate(
     text_col: str = "text",
     eval_text_col: str = "text",
 ) -> DataFrame:
-    """The corpus with every benchmark-contaminated document dropped
-    (:func:`contamination_check` > 0) — left-anti against the (small)
-    contaminated-id set, so the corpus shuffles nothing."""
-    bad = contamination_check(docs, eval_docs, n, text_col, eval_text_col)
-    return docs.join(
-        F.broadcast(bad.where("contaminated").select("doc_id")),
-        "doc_id",
-        "left_anti",
-    )
+    """The corpus with every benchmark-contaminated document dropped (at
+    least one gram shared with ``eval_docs``, as in
+    :func:`contamination_check`) — left-anti against the (small)
+    contaminated-id set, so the corpus shuffles nothing and is read twice:
+    once to hash its grams, once to filter."""
+    bad = _contaminated_gram_counts(docs, eval_docs, n, text_col, eval_text_col)
+    return docs.join(F.broadcast(bad.select("doc_id")), "doc_id", "left_anti")
 
 
 def gram_lm_scores(
@@ -685,16 +728,19 @@ def gram_lm_scores(
 
     Scale shape: one shuffle-free Arrow pass hashes grams
     (:func:`gram_hashes` — gram strings never materialize), then the
-    classic inverted-df pipeline: groupBy(gram_hash) with map-side partial
-    aggregation → hash join of gram rows against the df table (both sides
-    partitioned by gram_hash, exchange reused) → groupBy(doc_id) rollup.
-    Every shuffled row is 16 bytes; the text payloads never shuffle. The
-    gram pass is evaluated twice (df build + join probe) — at 100 TB,
-    persist or checkpoint ``gram_hashes`` output if the scan dominates."""
+    classic inverted-df pipeline as two shuffles of 16-byte gram rows: a
+    window count partitioned by ``gram_hash`` tags every gram row with its
+    document frequency, and a groupBy(doc_id) rolls the rows up per
+    document. The gram pass is evaluated once — the df table is never
+    joined back, so the plan holds one ``MapInPandas`` — and the text
+    payloads never shuffle."""
+    from pyspark.sql import Window
+
     grams = gram_hashes(docs, n=n, text_col=text_col, id_col=id_col)
-    df_tab = grams.groupBy("gram_hash").agg(F.count(F.lit(1)).alias("df"))
     per = (
-        grams.join(df_tab, "gram_hash")
+        grams.withColumn(
+            "df", F.count(F.lit(1)).over(Window.partitionBy("gram_hash"))
+        )
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_grams"),

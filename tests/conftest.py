@@ -15,6 +15,12 @@ import pytest
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def persistent_rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs whose blocks the session holds (caches and
+    checkpoints)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 @pytest.fixture(scope="session")
 def spark():
     from ocr_project_spark.session import build_session

@@ -11,6 +11,7 @@ from ocr_project_spark.components import (
     near_dup_clusters,
     near_dup_keep,
 )
+from tests.conftest import persistent_rdd_ids
 
 
 def _pairs(spark, edges):
@@ -123,6 +124,16 @@ def test_simhash_dedup_keep(spark):
 def test_nonconvergence_guard(spark):
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(_pairs(spark, [(i, i + 1) for i in range(40)]), max_iter=1)
+
+
+def test_only_final_round_blocks_stay(spark):
+    """Each round's checkpoint is released once the next one exists: after
+    a multi-round chain only the final round's blocks (the ones backing
+    the returned frame) are still persisted."""
+    before = persistent_rdd_ids(spark)
+    comp = connected_components(_pairs(spark, [(i, i + 1) for i in range(9)]))
+    assert len(persistent_rdd_ids(spark) - before) == 1
+    assert _comp_map(comp) == {i: 0 for i in range(10)}
 
 
 def test_embedding_dedup_keep_transitive(spark):

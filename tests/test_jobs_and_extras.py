@@ -375,6 +375,99 @@ def test_curate_cli_lm_gate(spark, tmp_path):
     assert got_ids == {r["doc_id"] for r in base.collect()}
 
 
+def _gibberish_corpus(spark, path, n_docs=20):
+    """Documents of three C4-clean lines whose word bigrams occur in no
+    other document: the LM gate keeps none of them."""
+    def line(i, k):
+        return " ".join(f"gib{i}x{k}x{j}" for j in range(30)) + "."
+
+    rows = [(i, "\n".join(line(i, k) for k in range(3)), "en") for i in range(n_docs)]
+    spark.createDataFrame(rows, "doc_id long, text string, lang string").write.parquet(
+        path
+    )
+
+
+def _every_stage(src, out, eval_path):
+    return [
+        "--documents", src,
+        "--out", out,
+        "--drop-repeated-lines",
+        "--c4-clean",
+        "--redact-pii",
+        "--decontaminate-against", eval_path,
+        "--quality-gate",
+        "--lm-gate",
+    ]
+
+
+def test_curate_lm_gate_keeping_nothing_writes_empty_output(spark, tmp_path, capsys):
+    """Every stage on, and the LM gate drops every document: the job writes
+    an empty corpus and reports 0 for that stage instead of failing to
+    read the stage's observed count (AQE prunes an empty subtree, and an
+    observation inside a pruned subtree never reports)."""
+    from ocr_project_spark.jobs.curate import main as curate_main
+
+    src, ev, out = (str(tmp_path / d) for d in ("docs", "eval", "curated"))
+    _gibberish_corpus(spark, src)
+    spark.createDataFrame([("unrelated eval passage",)], "text string").write.parquet(ev)
+
+    curate_main(_every_stage(src, out, ev), spark=spark)
+    got = spark.read.parquet(out)
+    assert got.count() == 0
+    assert set(got.columns) == {"doc_id", "text", "lang"}
+    printed = capsys.readouterr().out
+    assert "curate: LM gate kept 0 documents" in printed
+    assert "curate: C4 line filter kept 20 documents" in printed
+    assert "curate: wrote 0 of 20 documents" in printed
+
+
+def test_curate_releases_checkpoint_blocks(spark, tmp_path):
+    """The chain materializes its frame before decontamination and before
+    the LM gate; curate.main releases both checkpoints and restores the
+    session's AQE rules when it returns, and also when a stage raises (an
+    unreadable eval path, or an output path under a regular file that
+    fails the final write)."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import AnalysisException
+
+    from ocr_project_spark.jobs.curate import (
+        AQE_RULES_KEY,
+        curation_chain,
+        main,
+        parse_args,
+    )
+    from ocr_project_spark.session import release_checkpoint
+
+    src, ev = str(tmp_path / "docs"), str(tmp_path / "eval")
+    spark.read.parquet(f"{c.SF_DIR}/documents.parquet").write.parquet(src)
+    spark.createDataFrame([("unrelated eval passage",)], "text string").write.parquet(ev)
+
+    before = c.persistent_rdd_ids(spark)
+    held: list = []
+    try:
+        curation_chain(spark, parse_args(_every_stage(src, "unused", ev)), held)
+        assert len(held) == 2
+        assert len(c.persistent_rdd_ids(spark) - before) == 2
+    finally:
+        for df in held:
+            release_checkpoint(df)
+    assert c.persistent_rdd_ids(spark) - before == set()
+
+    main(_every_stage(src, str(tmp_path / "ok"), ev), spark=spark)
+    assert c.persistent_rdd_ids(spark) - before == set()
+
+    with pytest.raises(AnalysisException):
+        main(_every_stage(src, str(tmp_path / "o1"), str(tmp_path / "no_eval")), spark=spark)
+    assert c.persistent_rdd_ids(spark) - before == set()
+
+    (tmp_path / "blocker").write_text("a file, not a directory")
+    with pytest.raises(Py4JJavaError):
+        main(_every_stage(src, str(tmp_path / "blocker" / "out"), ev), spark=spark)
+    assert c.persistent_rdd_ids(spark) - before == set()
+    # the AQE rule the job turns off is back on for the session
+    assert spark.conf.get(AQE_RULES_KEY, None) is None
+
+
 def test_compact_bench_line_is_parseable_and_bounded():
     """The driver records only a ~2000-char stdout tail and parses the
     LAST line — round 4's annotated line outgrew it (parsed: null). The

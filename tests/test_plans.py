@@ -221,6 +221,41 @@ def test_gram_lm_scores_bounded_exchanges(spark, documents):
     assert "partial_count" in plan or "HashAggregate" in plan
 
 
+def test_curation_chain_plan_is_linear(spark, tmp_path):
+    """jobs/curate.py with every stage on: the frame it writes reads the
+    LM gate's checkpoint twice (gram hashing, the keep filter) and the
+    input scan once (passthrough columns) — no stage re-reads its whole
+    upstream chain, and the gram pass runs once."""
+    from ocr_project_spark.jobs.curate import curation_chain, parse_args
+    from ocr_project_spark.session import release_checkpoint
+    from tests.conftest import SF_DIR
+
+    ev = str(tmp_path / "eval")
+    spark.createDataFrame([("unrelated eval passage",)], "text string").write.parquet(ev)
+    args = parse_args(
+        [
+            "--documents", f"{SF_DIR}/documents.parquet",
+            "--out", str(tmp_path / "unused"),
+            "--drop-repeated-lines", "--c4-clean", "--redact-pii",
+            "--decontaminate-against", ev, "--quality-gate", "--lm-gate",
+        ]
+    )
+    held: list = []
+    try:
+        frame, observations = curation_chain(spark, args, held)
+        plan = plan_of(frame)
+    finally:
+        for df in held:
+            release_checkpoint(df)
+    assert len(observations) == 4
+    assert n_nodes(plan, "MapInPandas") <= 2
+    scans = [
+        ln for ln in plan.splitlines()
+        if ln.startswith("(") and ln.split(") ", 1)[-1].startswith("Scan ")
+    ]
+    assert len(scans) <= 3, scans
+
+
 def test_semdedup_pairs_single_cell_exchange(spark):
     """SemDeDup's candidate join shuffles on the cell id — an equi-join,
     never a cartesian product (pinned centroids so no training job runs
