@@ -139,6 +139,9 @@ CORE_RESULT_SCHEMA = T.StructType(
 )
 
 # --- Lineage schema (north rule: per-partition lineage rows) ----------------
+# ``cpu_seconds`` sums the per-doc ``processing_time`` of a bucket, which is
+# a ``time.perf_counter()`` delta: wall seconds spent in the kernel, not CPU
+# seconds. The name is part of the stored schema and is kept as is.
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("part_id", T.IntegerType()),

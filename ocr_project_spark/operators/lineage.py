@@ -46,8 +46,10 @@ def lineage_rows(results: DataFrame) -> DataFrame:
             F.sum(F.col("success").cast("long")).alias("n_success"),
             F.sum((~F.col("success")).cast("long")).alias("n_failed"),
             F.sum("n_bytes").alias("n_bytes"),
-            # P8 analog: summed per-doc kernel seconds per bucket (wall-clock
-            # metrics live in lineage, not per-row identity checks)
+            # P8 analog: per-doc kernel time summed per bucket. The rows'
+            # processing_time is a time.perf_counter() delta, so despite its
+            # name this column holds wall seconds, not CPU seconds (timing
+            # lives in lineage, not in per-row identity checks).
             F.sum("processing_time").alias("cpu_seconds"),
         )
     )
