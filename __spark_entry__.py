@@ -275,7 +275,7 @@ def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _results(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_project_spark.pipeline import run_extraction
 
-    return run_extraction(_pages(spark, sf_dir), repartition=False)
+    return run_extraction(_pages(spark, sf_dir))
 
 
 def _dedup_corpus_de(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -299,85 +299,6 @@ def render_boxes_svg(
     return "".join(parts)
 
 
-# Fixed raster palette for render_boxes_png — the RGB values of the SVG
-# palette above, so the two renderers agree on per-span-index colors. The
-# reference draws each box in np.random.randint colors
-# (deepseek_ocr_backend.py:575-576); a fixed palette is the deterministic
-# analog (SURVEY §7.3 — randomness is excluded from identity checks).
-_RASTER_PALETTE = [
-    (0xE6, 0x19, 0x4B),
-    (0x3C, 0xB4, 0x4B),
-    (0x43, 0x63, 0xD8),
-    (0xF5, 0x82, 0x31),
-    (0x91, 0x1E, 0xB4),
-    (0x46, 0xF0, 0xF0),
-]
-
-
-def render_boxes_png(
-    spans: Sequence[tuple[str, int, int, int, int]],
-    width: int = 1000,
-    height: int = 1000,
-) -> str:
-    """P5 raster parity option — the reference's ``boxes_image`` wire shape:
-    a base64-encoded PNG of the page with box overlays
-    (deepseek_ocr_backend.py:499-614), rendered deterministically.
-
-    Drawing order mirrors the reference: 2px box outlines and label
-    backgrounds go onto the base raster first, then the semi-transparent
-    fills (alpha 20/255) composite over everything via the overlay paste
-    (deepseek_ocr_backend.py:580-603). Deviations, each documented: colors
-    come from the fixed palette (reference: random), the base raster is a
-    white canvas (the reference draws on the decoded source image — the
-    batch engine's sources are HTML/PAGEDOC bytes, not rasters), and the
-    label strip is the reference's background rectangle (x1, y1-15, ~6px
-    per char x 12px) without glyph rendering (the reference's Arial/default
-    font is environment-dependent and not byte-stable). The PNG bytes come
-    from the repo's own encoder (multimodal.encode_png). Debug sink only —
-    excluded from identity oracles exactly like the reference's random
-    raster.
-    """
-    import base64
-
-    import numpy as np
-
-    from ocr_project_spark.multimodal import encode_png
-
-    img = np.full((height, width, 3), 255, dtype=np.uint8)
-    fills: list[tuple[int, int, int, int, tuple[int, int, int]]] = []
-    for i, (ref_text, *box) in enumerate(spans):
-        x1, y1, x2, y2 = denormalize_box(box, width, height)
-        x1, x2 = sorted((max(0, min(x1, width)), max(0, min(x2, width))))
-        y1, y2 = sorted((max(0, min(y1, height)), max(0, min(y2, height))))
-        color = _RASTER_PALETTE[i % len(_RASTER_PALETTE)]
-        # 2px outline (reference draw.rectangle width=2): two nested frames
-        for inset in (0, 1):
-            xa, ya = x1 + inset, y1 + inset
-            xb, yb = max(x2 - inset, xa + 1), max(y2 - inset, ya + 1)
-            img[ya:yb, xa : min(xa + 1, width)] = color
-            img[ya:yb, max(xb - 1, 0) : xb] = color
-            img[ya : min(ya + 1, height), xa:xb] = color
-            img[max(yb - 1, 0) : yb, xa:xb] = color
-        # label background strip: (x1, y1-15) sized by a fixed 6px/char
-        # advance, 12px tall, white at alpha 30/255 (reference :591-597)
-        label = ref_text[:40] if ref_text else "text"
-        ty = max(0, y1 - 15)
-        tx2 = min(width, x1 + 6 * len(label))
-        strip = img[ty : min(ty + 12, height), x1:tx2].astype(np.uint16)
-        img[ty : min(ty + 12, height), x1:tx2] = (
-            (strip * (255 - 30) + 255 * 30) // 255
-        ).astype(np.uint8)
-        fills.append((x1, y1, x2, y2, color))
-    # overlay paste last: fills composite over outlines and labels
-    for x1, y1, x2, y2, color in fills:
-        region = img[y1:y2, x1:x2].astype(np.uint16)
-        tint = np.array(color, dtype=np.uint16)
-        img[y1:y2, x1:x2] = ((region * (255 - 20) + tint * 20) // 255).astype(
-            np.uint8
-        )
-    return base64.b64encode(encode_png(img)).decode("ascii")
-
-
 # M2 — token-interleave cost constants (reference: process/image_process.py
 # :383-390 with IMAGE_SIZE=640, BASE_SIZE=1024, patch 16, downsample 4 from
 # process/config.py:8-12 and image_process.py:146-170):

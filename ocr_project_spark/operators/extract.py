@@ -30,7 +30,7 @@ from ocr_project_spark.contract import (
     RESULT_SCHEMA,
     VALID_BACKENDS,
 )
-from ocr_project_spark.functions.markers import render_boxes_png, render_boxes_svg
+from ocr_project_spark.functions.markers import render_boxes_svg
 from ocr_project_spark.kernels.registry import (
     BACKEND_REGISTRY,
     DocResult,
@@ -53,14 +53,7 @@ def _reject(backend: str, err: str) -> DocResult:
     )
 
 
-def _result_row(
-    url: str,
-    doc_id: int,
-    res: DocResult,
-    elapsed: float = 0.0,
-    raster_boxes: bool = False,
-) -> dict:
-    render = render_boxes_png if raster_boxes else render_boxes_svg
+def _result_row(url: str, doc_id: int, res: DocResult, elapsed: float = 0.0) -> dict:
     return {
         "url": url,
         "doc_id": doc_id,
@@ -77,10 +70,8 @@ def _result_row(
         # deterministic analog of the reference's boxes_image — rendered
         # only on the single-page image path, exactly like the reference
         # (deepseek_ocr_backend.py:176 image path vs 234 pdf path = "";
-        # default "" at api_contract.py:215). Default: SVG (codec-free);
-        # raster_boxes=True: base64 PNG in the reference's wire shape with
-        # a fixed palette (render_boxes_png)
-        "boxes_image": render(res.spans)
+        # default "" at api_contract.py:215), as codec-free SVG
+        "boxes_image": render_boxes_svg(res.spans)
         if res.spans and res.file_type == FILE_TYPE_IMAGE
         else "",
         "page_count": res.page_count,
@@ -94,11 +85,9 @@ def _result_row(
 _COLUMNS = [f.name for f in CORE_RESULT_SCHEMA.fields]
 
 
-def make_extract_fn(model_loaded: dict | None = None, raster_boxes: bool = False):
+def make_extract_fn(model_loaded: dict | None = None):
     """Build the mapInPandas callable; ``model_loaded`` maps backend name →
-    bool and defaults to all-loaded (the reference's steady state).
-    ``raster_boxes=True`` emits boxes_image as base64 PNG (the reference's
-    wire shape) instead of the default SVG analog."""
+    bool and defaults to all-loaded (the reference's steady state)."""
     gate = model_loaded or {}
 
     def _extract_batches(
@@ -156,24 +145,14 @@ def make_extract_fn(model_loaded: dict | None = None, raster_boxes: bool = False
                     )
                 else:
                     res = BACKEND_REGISTRY[backend](bytes(payload), sel)
-                rows.append(
-                    _result_row(
-                        url,
-                        doc_id,
-                        res,
-                        time.perf_counter() - t0,
-                        raster_boxes=raster_boxes,
-                    )
-                )
+                rows.append(_result_row(url, doc_id, res, time.perf_counter() - t0))
             yield pd.DataFrame(rows, columns=_COLUMNS)
 
     return _extract_batches
 
 
 def extract_documents(
-    pages_df: DataFrame,
-    model_loaded: dict | None = None,
-    raster_boxes: bool = False,
+    pages_df: DataFrame, model_loaded: dict | None = None
 ) -> DataFrame:
     """pages(url, html, backend[, doc_id, pages]) → unified result DataFrame.
 
@@ -188,8 +167,7 @@ def extract_documents(
         if opt in pages_df.columns:
             cols.append(opt)
     core = pages_df.select(*cols).mapInPandas(
-        make_extract_fn(model_loaded, raster_boxes=raster_boxes),
-        schema=CORE_RESULT_SCHEMA,
+        make_extract_fn(model_loaded), schema=CORE_RESULT_SCHEMA
     )
     # JVM-derived parity columns (contract.JVM_DERIVED_FIELDS): file_name =
     # url basename (reference api_contract.py:92-95), source_markdown =

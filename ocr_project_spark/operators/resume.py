@@ -15,7 +15,12 @@ by exactly one run). Idempotence is covered by tests/test_resume.py.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+# Analysis errors that mean "no store yet": the path is missing, or it is a
+# directory with no parquet file to infer a schema from.
+_COLD_START_CONDITIONS = frozenset({"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"})
 
 
 def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
@@ -25,11 +30,17 @@ def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
     of a driver-local ``os.path`` check keeps the resume/lineage machinery
     portable to HDFS/S3 paths, where the driver's local filesystem knows
     nothing about the store.
+
+    Any other error propagates: a store whose files cannot be read is
+    damaged, not absent, and treating it as a cold start would restart the
+    run counter and re-extract every url.
     """
     try:
         return spark.read.parquet(path)
-    except Exception:  # noqa: BLE001 — missing/empty/corrupt dir → cold start
-        return None
+    except AnalysisException as e:
+        if e.getCondition() in _COLD_START_CONDITIONS:
+            return None
+        raise
 
 
 def completed_urls(spark: SparkSession, results_path: str) -> DataFrame | None:
@@ -110,52 +121,14 @@ def crawl_delta(
     )
 
 
-def write_results_bucketed(
-    results: DataFrame,
-    table: str,
-    buckets: int = 64,
-    max_records_per_file: int | None = None,
-) -> None:
-    """Persist results as a url-bucketed, url-sorted table (the Iceberg
-    bucket-transform analog over the session catalog): every append keeps
-    rows hash-clustered by the resume key, so the next run's anti-join
-    reads the done side already partitioned — no shuffle on the
-    (large) checkpoint side, ever. ``buckets`` should match the shuffle
-    parallelism the pages side will use."""
-    writer = results.write.mode("append")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    (
-        writer.bucketBy(buckets, "url")
-        .sortBy("url")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
-def completed_urls_bucketed(spark: SparkSession, table: str) -> DataFrame | None:
-    """Done-urls view of a bucketed results table (column-pruned to url;
-    the bucketing metadata lets Catalyst skip the done-side exchange in
-    the resume anti-join — asserted in tests/test_plans.py)."""
-    if not spark.catalog.tableExists(table):
-        return None
-    return spark.table(table).select("url")
-
-
-def resume_filter(
-    pages: DataFrame, done: DataFrame | None, broadcast_threshold: int | None = None
-) -> DataFrame:
+def resume_filter(pages: DataFrame, done: DataFrame | None) -> DataFrame:
     """Skip already-completed urls with a left anti-join.
 
     With AQE on, Spark converts the anti-join to a broadcast join at runtime
-    when the done-side is small; ``broadcast_threshold`` forces the hint for
-    deterministic plans in tests. At 100 TB the done set is large, and the
+    when the done-side is small. At 100 TB the done set is large, and the
     sort-merge anti-join on the url key is the correct shape — both sides
     hash-partition on url and nothing else is shuffled.
     """
     if done is None:
         return pages
-    done = done.select("url").distinct()
-    if broadcast_threshold is not None:
-        done = F.broadcast(done)
-    return pages.join(done, "url", "left_anti")
+    return pages.join(done.select("url").distinct(), "url", "left_anti")

@@ -28,15 +28,21 @@ from ocr_project_spark.operators.skew import salted_repartition
 # close the breaker without an operator manually disabling it.
 HALF_OPEN_PROBE_MOD = 16
 
+# Rows per results file: bounds output file sizes so the results table stays
+# scan-friendly at 100 TB (no multi-GB files from fat partitions, no planner
+# pressure from tiny ones).
+MAX_RECORDS_PER_FILE = 500_000
+
 
 def run_extraction(
     pages: DataFrame,
     num_partitions: int | None = None,
     model_loaded: dict | None = None,
-    repartition: bool = True,
 ) -> DataFrame:
-    """pages → unified results DataFrame (lazy; caller writes/aggregates)."""
-    if repartition and num_partitions:
+    """pages → unified results DataFrame (lazy; caller writes/aggregates).
+    ``num_partitions`` salts and url-hash repartitions the pages first;
+    without it the input partitioning is kept."""
+    if num_partitions:
         pages = salted_repartition(pages, num_partitions)
     return extract_documents(pages, model_loaded=model_loaded)
 
@@ -73,20 +79,16 @@ def _next_run_id(lineage_prior: DataFrame | None) -> int:
 def run_job(
     spark: SparkSession,
     pages: DataFrame,
-    results_path: str | None,
+    results_path: str,
     lineage_path: str | None = None,
     num_partitions: int | None = None,
-    max_records_per_file: int | None = 500_000,
     circuit_breaker: bool = False,
     probe_mod: int = HALF_OPEN_PROBE_MOD,
-    bucketed_table: str | None = None,
-    buckets: int = 64,
 ) -> None:
     """Resumable batch job: skip completed urls, extract, append results and
     lineage. Crash-and-rerun converges to the same result set (see
-    tests/test_resume.py). ``max_records_per_file`` bounds output file sizes
-    so the results table stays scan-friendly at 100 TB (no multi-GB files
-    from fat partitions, no planner pressure from tiny ones).
+    tests/test_resume.py). Results files hold at most
+    ``MAX_RECORDS_PER_FILE`` rows.
 
     Lineage is INCREMENTAL: each run stamps its rows with a monotone
     ``run_id``, reads back only its own rows (parquet row-group stats skip
@@ -102,17 +104,7 @@ def run_job(
     observe recovery and close itself: probe successes are real results
     (checkpointed + healthy lineage), probe failures are treated as
     infrastructure evidence — lineage only, never checkpointed, so the urls
-    retry once the backend recovers.
-
-    ``bucketed_table`` switches the results store from a plain parquet
-    directory to a url-bucketed catalog table (PLANS §2b): each run's
-    append keeps rows hash-clustered on the resume key, so the next run's
-    anti-join reads the (at scale, enormous) done side pre-partitioned —
-    the done-side exchange disappears from the plan entirely. When set,
-    ``results_path`` is ignored (pass None); ``buckets`` should match the
-    pages side's shuffle parallelism. Identical resume/convergence
-    semantics either way (tests/test_resume.py runs the crash/rerun/noop
-    suite against both stores)."""
+    retry once the backend recovers."""
     lineage_prior = (
         read_parquet_if_exists(spark, lineage_path) if lineage_path else None
     )
@@ -122,13 +114,7 @@ def run_job(
 
         model_loaded = circuit_breaker_gate(lineage_prior)
     run_id = _next_run_id(lineage_prior)
-    if bucketed_table is not None:
-        from ocr_project_spark.operators.resume import completed_urls_bucketed
-
-        done = completed_urls_bucketed(spark, bucketed_table)
-    else:
-        done = completed_urls(spark, results_path)
-    todo = resume_filter(pages, done)
+    todo = resume_filter(pages, completed_urls(spark, results_path))
 
     from ocr_project_spark.contract import ERR_MODEL_NOT_LOADED
 
@@ -176,24 +162,11 @@ def run_job(
     results = results.withColumn("run_id", F.lit(run_id).cast("long"))
 
     try:
-        if bucketed_table is not None:
-            from ocr_project_spark.operators.resume import write_results_bucketed
-
-            write_results_bucketed(
-                results, bucketed_table, buckets, max_records_per_file
-            )
-        else:
-            writer = results.write.mode("append")
-            if max_records_per_file:
-                writer = writer.option("maxRecordsPerFile", max_records_per_file)
-            writer.parquet(results_path)
+        results.write.mode("append").option(
+            "maxRecordsPerFile", MAX_RECORDS_PER_FILE
+        ).parquet(results_path)
         if lineage_path:
-            this_run = (
-                spark.table(bucketed_table).where(F.col("run_id") == run_id)
-                if bucketed_table is not None
-                else this_run_results(spark, results_path, run_id)
-            )
-            lin = lineage_rows(this_run)
+            lin = lineage_rows(this_run_results(spark, results_path, run_id))
             if probe_fail_lineage is not None:
                 lin = lin.unionByName(probe_fail_lineage)
             lin.withColumn("run_id", F.lit(run_id).cast("long")).write.mode(

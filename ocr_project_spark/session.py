@@ -38,14 +38,11 @@ DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1"
 
 
 def build_session(
-    app_name: str = "ocr-project-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-    arrow_batch_size: int = 2048,
+    app_name: str = "ocr-project-spark", master: str | None = None
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(cpus if cpus != "*" else 32)
+    shuffle_partitions = int(cpus if cpus != "*" else 32)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -54,9 +51,7 @@ def build_session(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_size)
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))

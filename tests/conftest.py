@@ -47,4 +47,4 @@ def pages(spark):
 def results(pages):
     from ocr_project_spark.pipeline import run_extraction
 
-    return run_extraction(pages, repartition=False).cache()
+    return run_extraction(pages).cache()

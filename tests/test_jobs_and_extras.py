@@ -76,70 +76,6 @@ def test_render_boxes_svg_deterministic():
     assert 'x="32"' in svg1
 
 
-def test_render_boxes_png_golden():
-    """VERDICT r4 item 5: the raster boxes_image option — base64 PNG in the
-    reference's wire shape (deepseek_ocr_backend.py:499-614) with a fixed
-    palette, decodable by the repo's own PNG decoder, fully deterministic."""
-    import base64
-
-    import numpy as np
-
-    from ocr_project_spark.functions.markers import (
-        _RASTER_PALETTE,
-        denormalize_box,
-        render_boxes_png,
-    )
-    from ocr_project_spark.multimodal import decode_png
-
-    spans = [("Title", 40, 40, 959, 90), ("Body <b>", 40, 100, 959, 150)]
-    b64 = render_boxes_png(spans, 200, 200)
-    assert b64 == render_boxes_png(spans, 200, 200)  # deterministic
-    raw = base64.b64decode(b64)
-    assert raw[:8] == b"\x89PNG\r\n\x1a\n"  # reference wire shape: PNG
-    img = decode_png(raw)
-    assert img.shape == (200, 200, 3)
-    # bottom-right inner outline pixel: far from every label strip, and the
-    # only thing compositing over it is its own span's fill — a color
-    # blended with its own tint is itself, so the pixel is EXACTLY the
-    # fixed palette color for that span index
-    for i, (_, *box) in enumerate(spans):
-        x1, y1, x2, y2 = denormalize_box(box, 200, 200)
-        c = np.array(_RASTER_PALETTE[i % len(_RASTER_PALETTE)], dtype=np.uint8)
-        assert (img[y2 - 2, x2 - 2] == c).all()
-    # corners far from any box stay white
-    assert (img[199, 0] == 255).all()
-    # empty spans -> empty 1-color canvas still encodes
-    blank = decode_png(base64.b64decode(render_boxes_png([], 16, 16)))
-    assert (blank == 255).all()
-
-
-def test_extract_raster_boxes_flag(spark):
-    """raster_boxes=True flips boxes_image to the base64-PNG wire shape;
-    default stays the SVG analog (unified_fields oracle unchanged)."""
-    import base64
-
-    from ocr_project_spark.datagen import build_html
-    from ocr_project_spark.operators.extract import extract_documents
-
-    df = spark.createDataFrame(
-        [(
-            "https://h.example.org/d0.html",
-            build_html(0, "alpha beta gamma", "en").encode(),
-            "deepseek-ocr",
-            0,
-        )],
-        "url string, html binary, backend string, doc_id long",
-    )
-    svg_row = extract_documents(df).collect()[0]
-    png_row = extract_documents(df, raster_boxes=True).collect()[0]
-    assert svg_row["boxes_image"].startswith("<svg")
-    decoded = base64.b64decode(png_row["boxes_image"])
-    assert decoded[:8] == b"\x89PNG\r\n\x1a\n"
-    # everything OUTSIDE the flag-gated column is byte-identical
-    for field in ("url", "markdown", "text", "raw_output", "spans", "error"):
-        assert svg_row[field] == png_row[field]
-
-
 def test_html_kernel_inline_markup():
     html = (
         b"<html><body><p>text with <b>bold</b> and <i>italic</i> and "
@@ -466,76 +402,3 @@ def test_curate_releases_checkpoint_blocks(spark, tmp_path):
     assert c.persistent_rdd_ids(spark) - before == set()
     # the AQE rule the job turns off is back on for the session
     assert spark.conf.get(AQE_RULES_KEY, None) is None
-
-
-def test_compact_bench_line_is_parseable_and_bounded():
-    """The driver records only a ~2000-char stdout tail and parses the
-    LAST line — round 4's annotated line outgrew it (parsed: null). The
-    compact builder must stay ≤1500 chars and carry every load-bearing
-    field even under worst-case retry sampling (6 JVM samples on a leg)."""
-    import json
-
-    from bench import compact_bench_line
-
-    timings = {
-        k: 12.345
-        for k in (
-            "lineage_health dedup_exact dedup_minhash dedup_simhash "
-            "dedup_cluster_keep sim_brute sim_lsh text_features gopher_gate "
-            "text_repetition dedup_repeated_ngrams token_shards lang_id "
-            "dedup_lines pii_redact contamination text_normalize c4_clean "
-            "corpus_mix quality_lm semdedup link_graph nb_classify extract"
-        ).split()
-    }
-    extras = {
-        "n_docs": 240000,
-        "docs_per_sec": 50025.4,
-        "identical_frac": 0.9897,
-        "docs_per_sec_jvm_samples": {
-            "2": [8648.9, 8590.6, 8466.6, 8111.1],
-            "8": [32258.1, 31645.7, 27350.6, 21573.5, 30111.2, 29888.8],
-            "32": [50025.4, 41539.2, 47322.1, 45510.4],
-        },
-        "bare_kernel_calibration": {
-            "docs_per_sec": {"8": 22123.4, "32": 61234.5},
-            "n_docs": 20000,
-            "clean_ref": {"8": 22000, "32": 61000},
-        },
-        "bare_kernel_calibration_end": {
-            "docs_per_sec": {"8": 21987.6, "32": 60123.4},
-            "n_docs": 20000,
-            "clean_ref": {"8": 22000, "32": 61000},
-        },
-    }
-    scaling = {
-        "pairs": [
-            {"cpus_a": 2, "cpus_b": 8, "docs_per_sec_a": 8648.9,
-             "docs_per_sec_b": 32258.1, "efficiency": 0.932,
-             "note": "x" * 500},
-            {"cpus_a": 8, "cpus_b": 32, "docs_per_sec_a": 32258.1,
-             "docs_per_sec_b": 50025.4, "efficiency": 0.388,
-             "note": "y" * 500},
-        ],
-        "efficiency": 0.932,
-        "note": "z" * 200,
-    }
-    line = compact_bench_line(
-        total=123.456, timings=timings, sf=0.1, cpus=32, replicate=48,
-        n_base_docs=50000, extras=extras, scaling=scaling,
-    )
-    assert len(line) <= 1500, len(line)
-    assert "\n" not in line
-    got = json.loads(line)
-    assert got["unit"] == "sec" and got["queries"] == timings
-    assert got["docs_per_sec"] == 50025.4 and got["sf"] == 0.1
-    assert got["scaling"]["efficiency"] == 0.932
-    assert all("note" not in p for p in got["scaling"]["pairs"])
-    assert got["bare_kernel"]["start"] == {"8": 22123.4, "32": 61234.5}
-    assert got["bare_kernel"]["clean_ref"] == {"8": 22000, "32": 61000}
-
-    # no-scaling smoke mode: scaling=None must still emit a valid line
-    line2 = compact_bench_line(
-        total=9.9, timings={"extract": 9.9}, sf=0.01, cpus=8, replicate=4,
-        n_base_docs=5000, extras=extras, scaling=None,
-    )
-    assert "scaling" not in json.loads(line2)

@@ -31,7 +31,7 @@ def results_path(spark, pages, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("plans") / "results")
     from ocr_project_spark.pipeline import run_extraction
 
-    run_extraction(pages, repartition=False).write.parquet(path)
+    run_extraction(pages).write.parquet(path)
     return path
 
 
@@ -111,40 +111,6 @@ def test_filter_pushdown_reaches_parquet(spark):
         "PushedFilters: [IsNotNull(o_orderkey), LessThan(o_orderkey,100)]"
         in plan
     )
-
-
-def test_bucketed_resume_antijoin_skips_done_side_shuffle(spark, pages):
-    """Bucketing for co-located joins: with the results table bucketed on
-    url, the resume anti-join shuffles ONLY the incoming pages side — the
-    (at scale, enormous) checkpoint side is read pre-partitioned."""
-    from ocr_project_spark.operators.resume import (
-        completed_urls_bucketed,
-        resume_filter,
-        write_results_bucketed,
-    )
-    from ocr_project_spark.pipeline import run_extraction
-
-    table = "test_results_bucketed"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    # model the at-scale shape: the done side is far too big to broadcast
-    # (force SMJ), and the incoming pages are a fresh scan, not a cache
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        done_results = run_extraction(pages.limit(200), repartition=False)
-        write_results_bucketed(done_results, table, buckets=8)
-        done = completed_urls_bucketed(spark, table)
-        assert done is not None
-        todo = resume_filter(pages, done)
-        plan = plan_of(todo)
-        assert "LeftAnti" in plan
-        # exactly one exchange: the pages side; the bucketed done side none
-        assert n_nodes(plan, "Exchange") == 1
-        assert "Bucketed: true" in plan
-        # and it still computes the right answer
-        assert todo.count() == pages.count() - 200
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_span_removal_no_cartesian_and_partial_aggs(spark, documents):

@@ -6,6 +6,7 @@ duplicates, and the rerun must actually skip completed urls (anti-join).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ocr_project_spark.operators.resume import completed_urls, resume_filter
@@ -44,7 +45,7 @@ def test_completed_urls_missing_dir(spark, tmp_path):
 
 def test_crash_and_rerun_converges(spark, pages, tmp_path):
     results_path = str(tmp_path / "results")
-    full = run_extraction(pages, repartition=False)
+    full = run_extraction(pages)
 
     # simulated crash: only half the urls were written in run #1
     partial = full.where(F.xxhash64("url") % 2 == 0)
@@ -62,6 +63,56 @@ def test_crash_and_rerun_converges(spark, pages, tmp_path):
     clean = {r["url"]: r["text"] for r in full.select("url", "text").collect()}
     resumed = {r["url"]: r["text"] for r in final.select("url", "text").collect()}
     assert resumed == clean
+
+
+def test_run_job_crash_rerun_noop(spark, pages, tmp_path):
+    """The run-level sequence on the results store: a run that covers half
+    the urls (a crash), the full rerun, then a noop rerun — each a real
+    run_job with lineage, so the run counter comes from lineage."""
+    results_path = str(tmp_path / "results")
+    lineage_path = str(tmp_path / "lineage")
+    run_job(spark, pages.where(F.xxhash64("url") % 2 == 0), results_path, lineage_path)
+    n_partial = spark.read.parquet(results_path).count()
+    assert 0 < n_partial < pages.count()
+
+    run_job(spark, pages, results_path, lineage_path)
+    run_job(spark, pages, results_path, lineage_path)
+
+    final = spark.read.parquet(results_path)
+    assert final.count() == pages.count()
+    assert final.groupBy("url").count().where(F.col("count") > 1).count() == 0
+    assert {r[0] for r in final.select("run_id").distinct().collect()} == {0, 1}
+    lineage = spark.read.parquet(lineage_path)
+    assert lineage.select("run_id").distinct().count() == 2
+    clean = run_extraction(pages).select("url", "text").collect()
+    resumed = final.select("url", "text").collect()
+    assert dict(resumed) == dict(clean)
+
+
+def test_damaged_lineage_store_fails_the_run(spark, pages, tmp_path):
+    """A store that exists but cannot be read is not a cold start: run_job
+    must fail before appending results, not restart run_id at 0. A missing
+    path and an empty directory stay cold starts."""
+    from py4j.protocol import Py4JJavaError
+
+    from ocr_project_spark.operators.resume import read_parquet_if_exists
+
+    assert read_parquet_if_exists(spark, str(tmp_path / "missing")) is None
+    (tmp_path / "empty").mkdir()
+    assert read_parquet_if_exists(spark, str(tmp_path / "empty")) is None
+
+    results_path = str(tmp_path / "results")
+    run_job(spark, pages.where("doc_id < 100"), results_path, str(tmp_path / "empty"))
+    first = spark.read.parquet(results_path)
+    assert {r[0] for r in first.select("run_id").distinct().collect()} == {0}
+    n_before = first.count()
+
+    damaged = tmp_path / "damaged"
+    damaged.mkdir()
+    (damaged / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Py4JJavaError):
+        run_job(spark, pages, results_path, str(damaged))
+    assert spark.read.parquet(results_path).count() == n_before
 
 
 def test_rerun_after_completion_is_noop(spark, pages, tmp_path):
@@ -136,71 +187,3 @@ def test_crawl_delta_null_payload_transitions(spark):
     )
     got = {r["url"]: r["status"] for r in crawl_delta(old, new).collect()}
     assert got == {"u/a": "changed", "u/b": "changed"}
-
-
-def test_run_job_bucketed_crash_rerun_noop(spark, pages, tmp_path):
-    """run_job(bucketed_table=...) — verdict item 8: the PLANS §2b bucketed
-    checkpoint as a first-class run_job store. Crash/rerun converges to one
-    row per url (same suite as the plain-parquet store), a completed rerun
-    is a noop, lineage run_ids stay monotone, and the resume anti-join's
-    done side reads the bucketed table with NO exchange."""
-    from ocr_project_spark.operators.resume import completed_urls_bucketed
-
-    table = "test_run_job_bucketed"
-    lineage_path = str(tmp_path / "lineage")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    try:
-        # run #1 "crashes" after covering an arbitrary half of the urls
-        run_job(
-            spark,
-            pages.where(F.xxhash64("url") % 2 == 0),
-            None,
-            lineage_path,
-            bucketed_table=table,
-            buckets=8,
-        )
-        n_partial = spark.table(table).count()
-        assert 0 < n_partial < pages.count()
-
-        # run #2 resumes: only the missing urls extract, result converges
-        run_job(spark, pages, None, lineage_path, bucketed_table=table, buckets=8)
-        final = spark.table(table)
-        assert final.count() == pages.count()
-        assert final.groupBy("url").count().where(F.col("count") > 1).count() == 0
-        # both runs' appends carry their own run_id
-        assert {r[0] for r in final.select("run_id").distinct().collect()} == {0, 1}
-        assert spark.read.parquet(lineage_path).select("run_id").distinct().count() == 2
-
-        # run #3 is a noop (no new results rows, lineage may append an empty run)
-        run_job(spark, pages, None, lineage_path, bucketed_table=table, buckets=8)
-        assert spark.table(table).count() == pages.count()
-
-        # recovered text identical to a clean full run (byte-identity holds
-        # across the store switch)
-        clean = {
-            r["url"]: r["text"]
-            for r in run_extraction(pages, repartition=False)
-            .select("url", "text")
-            .collect()
-        }
-        resumed = {r["url"]: r["text"] for r in final.select("url", "text").collect()}
-        assert resumed == clean
-
-        # the done side of the resume anti-join is exchange-free: only the
-        # incoming pages side shuffles (the PLANS §2b contract)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            todo = resume_filter(pages, completed_urls_bucketed(spark, table))
-            plan = todo._sc._jvm.PythonSQLUtils.explainString(
-                todo._jdf.queryExecution(), "formatted"
-            )
-            assert "LeftAnti" in plan
-            import re
-
-            n_exchange = len(re.findall(r"\(\d+\) Exchange", plan))
-            assert n_exchange == 1, plan
-            assert "Bucketed: true" in plan
-        finally:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
