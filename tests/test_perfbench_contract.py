@@ -31,3 +31,15 @@ def test_perfbench_trace_points_and_call_keywords_exist():
     params = inspect.signature(pipeline.run_job).parameters
     assert {"lineage_path", "num_partitions"} <= params.keys()
     assert callable(make_extract_fn())
+
+
+def test_perfbench_kernel_probe_targets_exist():
+    """The traced run's ``kernels.*`` probes (``perfbench/probes.py``) patch
+    ``kernels.registry.extract_html_pages`` and wrap two registry arms by
+    backend name; a kernel rename must fail here."""
+    from ocr_project_spark.contract import BACKEND_HTML, BACKEND_LAYOUT
+    from ocr_project_spark.kernels import html_extract, registry
+
+    assert registry.extract_html_pages is html_extract.extract_html_pages
+    assert {BACKEND_HTML, BACKEND_LAYOUT} <= registry.BACKEND_REGISTRY.keys()
+    assert all(callable(registry.BACKEND_REGISTRY[b]) for b in (BACKEND_HTML, BACKEND_LAYOUT))

@@ -298,7 +298,7 @@ _FUZZ_TAGS = [
 _ATTR_STYLE = st.sampled_from(["double", "single", "bare"])
 _PAGE_VALUES = st.one_of(
     st.integers(min_value=0, max_value=12).map(str),  # valid: digits
-    st.sampled_from(["x", "2x", "", " 3", "-1"]),  # invalid: ignored
+    st.sampled_from(["x", "2x", "", " 3", "-1", "²"]),  # invalid: ignored
 )
 _FUZZ_ATTRS = st.lists(
     st.one_of(
@@ -408,7 +408,7 @@ class _RefExtractor:
         if tag == "div":
             self.page_stack.append(self.page)
             value = dict(attrs).get("data-page")
-            if value is not None and value.isdigit():
+            if value is not None and value.isdecimal():
                 self.page = int(value)
         if tag in BLOCK_TAGS and self.boiler == 0:
             self.finish()
