@@ -53,7 +53,9 @@ def _reject(backend: str, err: str) -> DocResult:
     )
 
 
-def _result_row(url: str, doc_id: int, res: DocResult, elapsed: float = 0.0) -> dict:
+def _result_row(
+    url: str, doc_id: int | None, res: DocResult, elapsed: float = 0.0
+) -> dict:
     return {
         "url": url,
         "doc_id": doc_id,
@@ -98,17 +100,25 @@ def make_extract_fn(model_loaded: dict | None = None):
             has_doc_id = "doc_id" in pdf.columns
             has_mode = "mode" in pdf.columns
             has_prompt = "prompt" in pdf.columns
+            # A null doc_id or page number arrives as NaN (Arrow → pandas
+            # turns an integer column with nulls into float64); NaN != NaN.
+            doc_ids = (
+                [None if d != d else int(d) for d in pdf["doc_id"].tolist()]
+                if has_doc_id
+                else [-1] * len(pdf)
+            )
             rows = []
             for i in range(len(pdf)):
                 url = pdf["url"].iat[i]
-                doc_id = int(pdf["doc_id"].iat[i]) if has_doc_id else -1
+                doc_id = doc_ids[i]
                 backend = pdf["backend"].iat[i]
                 payload = pdf["html"].iat[i]
                 sel = None
                 if has_pages:
                     raw_sel = pdf["pages"].iat[i]
-                    if raw_sel is not None and len(raw_sel) > 0:
-                        sel = [int(p) for p in raw_sel]
+                    if raw_sel is not None:
+                        # null entries are dropped; none left selects all
+                        sel = [int(p) for p in raw_sel if p == p] or None
                 # explicit mode column wins; else a per-request prompt maps
                 # to a mode (reference: free-form prompt on the DeepSeek arm)
                 mode = pdf["mode"].iat[i] if has_mode else None

@@ -151,6 +151,35 @@ def test_spark_page_selection_column(spark):
     assert row["page_count"] == 3
 
 
+def test_null_doc_id_and_null_pages_entries(spark):
+    """A null doc_id or a null entry in pages fails no task: each row gives
+    one result row; null entries are ignored, and a list left empty selects
+    every page, as an empty list does."""
+    html = build_html(2, TEXT, "en").encode()
+    df = spark.createDataFrame(
+        [
+            ("a", html, BACKEND_HTML, 2, [1, 3]),
+            ("n", html, BACKEND_HTML, None, [1, 3]),
+            ("p", html, BACKEND_HTML, 4, [None, 2]),
+            ("e", html, BACKEND_HTML, 5, [None]),
+            ("z", html, BACKEND_HTML, 6, []),
+        ],
+        "url string, html binary, backend string, doc_id long, pages array<int>",
+    ).coalesce(1)  # one Arrow batch, so the nulls turn every row's ints to float
+    rows = extract_documents(df).collect()
+    assert sorted(r["url"] for r in rows) == ["a", "e", "n", "p", "z"]
+    out = {r["url"]: r for r in rows}
+    assert all(r["success"] for r in rows)
+    assert {u: out[u]["doc_id"] for u in out} == {
+        "a": 2, "n": None, "p": 4, "e": 5, "z": 6
+    }
+    assert out["a"]["processed_pages"] == out["n"]["processed_pages"] == [1, 3]
+    assert out["n"]["text"] == out["a"]["text"]
+    assert out["p"]["processed_pages"] == [2]
+    assert out["e"]["processed_pages"] == out["z"]["processed_pages"] == [1, 2, 3]
+    assert out["e"]["text"] == out["z"]["text"]
+
+
 def test_invalid_mode_rejected(spark):
     """A typo'd mode surfaces as an error row (mirrors unknown-backend),
     never silently coerces to grounding."""

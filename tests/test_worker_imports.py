@@ -1,10 +1,13 @@
-"""Import-cache invalidation from a zip archive, as PySpark's workers do it
-at the start of every task (``importlib.invalidate_caches()``)."""
+"""What importing the package does to a Python worker: import-cache
+invalidation from a zip archive, as PySpark's workers do it at the start of
+every task (``importlib.invalidate_caches()``), and the frozen import heap
+that the daemon's per-task ``gc.collect()`` no longer scans."""
 
 from __future__ import annotations
 
 import importlib
 import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -105,3 +108,55 @@ def test_worker_tasks_do_not_reread_archives(spark):
     for pid in shared:
         counts = first[pid] + second[pid]
         assert max(counts) == min(counts), (pid, first[pid], second[pid])
+
+
+def _heap_in_worker(batches):
+    """mapInPandas UDF: report (pid, frozen objects, live objects) of this
+    worker after it imported the package."""
+    import gc
+
+    import pandas as pd
+
+    import ocr_project_spark  # noqa: F401
+
+    for _ in batches:
+        pass
+    yield pd.DataFrame(
+        {
+            "pid": [os.getpid()],
+            "frozen": [gc.get_freeze_count()],
+            "live": [len(gc.get_objects())],
+        }
+    )
+
+
+def test_worker_import_heap_is_frozen(spark):
+    """A worker freezes its import heap (pyspark.worker, pandas, pyarrow)
+    once, so the daemon's full collection after each task scans only a
+    small remainder."""
+    rows = (
+        spark.range(0, 16, 1, 16)
+        .mapInPandas(_heap_in_worker, "pid long, frozen long, live long")
+        .collect()
+    )
+    assert rows
+    for r in rows:
+        assert r.frozen > 20_000, r
+        assert r.live < r.frozen // 10, r
+
+
+def test_driver_import_does_not_freeze():
+    """Outside a PySpark worker the import freezes nothing and does not
+    pull in pandas."""
+    code = (
+        "import gc, sys; import ocr_project_spark; "
+        "print(gc.get_freeze_count(), 'pandas' in sys.modules)"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.split()
+    assert out == ["0", "False"], out
