@@ -53,8 +53,13 @@ def extract_markdown(raw_output: str) -> str:
     """
     if not raw_output:
         return ""
-    matches = _MD_PATTERN.findall(raw_output)
-    markdown_text = "\n\n".join(m.strip() for m in matches if m.strip())
+    return join_markdown(_MD_PATTERN.findall(raw_output))
+
+
+def join_markdown(refs: Iterable[str]) -> str:
+    """P2 after the regex: strip each non-blank ref text, join with a blank
+    line, collapse blank runs, fall back to the empty-result sentinel."""
+    markdown_text = "\n\n".join(m.strip() for m in refs if m.strip())
     markdown_text = _BLANK_RUN.sub("\n\n", markdown_text).strip()
     return markdown_text if markdown_text else EMPTY_MARKDOWN_SENTINEL
 

@@ -29,6 +29,7 @@ from ocr_project_spark.contract import (
 from ocr_project_spark.functions.markers import (
     assemble_pages,
     extract_markdown,
+    join_markdown,
     make_span_marker,
     parse_spans,
     select_pages_exact,
@@ -145,6 +146,10 @@ def process_html_arm(
     markers are emitted only for blocks whose text equals ``locate_ref`` —
     the deterministic analog of the model answering a locate prompt with
     det markers for the requested span; ``text`` is the located content.
+
+    ``spans`` and the image-path ``markdown`` are defined as P3/P2 of the
+    marker string; they are built from the marked blocks directly, and the
+    string is parsed only when a kept block holds a marker token.
     """
     file_type = FILE_TYPE_IMAGE
     try:
@@ -155,6 +160,7 @@ def process_html_arm(
         kept_set = set(kept)
         page_raws: list[tuple[int, str]] = []
         texts: list[str] = []
+        refs: list[tuple[str, tuple[int, int, int, int]]] = []  # marked blocks
         # selection and reporting are POSITIONAL (document order), exactly
         # like the reference's PDF page indices — a real crawl page's
         # data-page label is arbitrary (non-contiguous, non-1-based) and
@@ -164,29 +170,35 @@ def process_html_arm(
             if pos not in kept_set:
                 continue
             if mode == MODE_FREE:
-                markers = "\n".join(blocks)
-            elif mode == MODE_LOCATE:
-                matches = [
-                    (i, t) for i, t in enumerate(blocks) if t == locate_ref
-                ]
-                markers = "\n".join(
-                    make_span_marker(t, synthetic_box(i)) for i, t in matches
-                )
-                page_raws.append((pos, markers))
-                texts.extend(t for _, t in matches)
+                page_raws.append((pos, "\n".join(blocks)))
+                texts.extend(blocks)
                 continue
-            else:
-                markers = "\n".join(
-                    make_span_marker(t, synthetic_box(i))
-                    for i, t in enumerate(blocks)
-                )
-            page_raws.append((pos, markers))
-            texts.extend(blocks)
+            # locate marks only the blocks equal to the requested ref
+            marked = [
+                (t, synthetic_box(i))
+                for i, t in enumerate(blocks)
+                if mode != MODE_LOCATE or t == locate_ref
+            ]
+            page_raws.append(
+                (pos, "\n".join(make_span_marker(t, box) for t, box in marked))
+            )
+            texts.extend(t for t, _ in marked)
+            refs.extend(marked)
+        text = " ".join(texts)
+        # P2/P3 of the marker string read back exactly the blocks it was
+        # built from unless a kept block itself holds "<|" (a token the
+        # regexes could match inside it), so only then is the string parsed
+        # (tests/test_html_arm_differential.py holds the two equal)
+        parse = "<|" in text
         if file_type == FILE_TYPE_IMAGE:
             raw_output = page_raws[0][1] if page_raws else ""
-            markdown = extract_markdown(raw_output)
+            if parse or not raw_output:
+                markdown = extract_markdown(raw_output)
+            else:
+                markdown = join_markdown(  # P2 drops refs starting "image"
+                    t for t, _ in refs if not t.startswith("image")
+                )
             processed = [1]
-            spans_src = raw_output
         else:
             markdown, processed = assemble_pages(page_raws)
             raw_output = json.dumps(
@@ -201,15 +213,18 @@ def process_html_arm(
                     "processed_pages": processed,
                 }
             )
-            spans_src = "\n".join(raw for _, raw in page_raws)
+        if parse:
+            spans = parse_spans("\n".join(raw for _, raw in page_raws))
+        else:
+            spans = [(t or "text", *box) for t, box in refs]
         return DocResult(
             backend=BACKEND_HTML,
             file_type=file_type,
             success=True,
             markdown=markdown,
-            text=" ".join(texts),
+            text=text,
             raw_output=raw_output,
-            spans=parse_spans(spans_src),
+            spans=spans,
             page_count=total,
             processed_pages=processed,
         )

@@ -9,7 +9,8 @@ per-document fault isolation plus an optional model-loaded short-circuit.
 
 Zero per-row Python at the DataFrame level: the per-document loop runs inside
 the Arrow batch on the executor, exactly where the reference's per-request
-loop ran inside its GPU service.
+loop ran inside its GPU service; inside the batch it is column-wise at both
+ends (``make_extract_fn``).
 """
 
 from __future__ import annotations
@@ -53,78 +54,51 @@ def _reject(backend: str, err: str) -> DocResult:
     )
 
 
-def _result_row(
-    url: str, doc_id: int | None, res: DocResult, elapsed: float = 0.0
-) -> dict:
-    return {
-        "url": url,
-        "doc_id": doc_id,
-        "backend": res.backend,
-        "file_type": res.file_type,
-        "success": res.success,
-        "markdown": res.markdown,
-        "text": res.text,
-        "raw_output": res.raw_output,
-        "spans": [
-            {"ref": s[0], "x1": s[1], "y1": s[2], "x2": s[3], "y2": s[4]}
-            for s in res.spans
-        ],
-        # deterministic analog of the reference's boxes_image — rendered
-        # only on the single-page image path, exactly like the reference
-        # (deepseek_ocr_backend.py:176 image path vs 234 pdf path = "";
-        # default "" at api_contract.py:215), as codec-free SVG
-        "boxes_image": render_boxes_svg(res.spans)
-        if res.spans and res.file_type == FILE_TYPE_IMAGE
-        else "",
-        "page_count": res.page_count,
-        "processed_pages": list(res.processed_pages),
-        "n_bytes": len(res.text.encode("utf-8")),
-        "processing_time": elapsed,
-        "error": res.error,
-    }
-
-
 _COLUMNS = [f.name for f in CORE_RESULT_SCHEMA.fields]
 
 
 def make_extract_fn(model_loaded: dict | None = None):
     """Build the mapInPandas callable; ``model_loaded`` maps backend name →
-    bool and defaults to all-loaded (the reference's steady state)."""
+    bool and defaults to all-loaded (the reference's steady state).
+
+    Each input column is read once per batch with ``tolist`` (the batch's
+    index is never used: callers may pass ``iloc`` slices), and the output
+    frame is built from one list per result column. ``spans`` stay the
+    arms' ``(ref, x1, y1, x2, y2)`` tuples, which Arrow's struct conversion
+    takes as they are. Arms are looked up in ``BACKEND_REGISTRY`` per row,
+    so a replaced entry is the one that runs.
+    """
     gate = model_loaded or {}
 
     def _extract_batches(
         batches: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            has_pages = "pages" in pdf.columns
-            has_doc_id = "doc_id" in pdf.columns
-            has_mode = "mode" in pdf.columns
-            has_prompt = "prompt" in pdf.columns
+            n = len(pdf)
+
+            def column(name: str) -> list:
+                return pdf[name].tolist() if name in pdf.columns else [None] * n
+
             # A null doc_id or page number arrives as NaN (Arrow → pandas
             # turns an integer column with nulls into float64); NaN != NaN.
             doc_ids = (
                 [None if d != d else int(d) for d in pdf["doc_id"].tolist()]
-                if has_doc_id
-                else [-1] * len(pdf)
+                if "doc_id" in pdf.columns
+                else [-1] * n
             )
-            rows = []
-            for i in range(len(pdf)):
-                url = pdf["url"].iat[i]
-                doc_id = doc_ids[i]
-                backend = pdf["backend"].iat[i]
-                payload = pdf["html"].iat[i]
+            results: list[DocResult] = []
+            elapsed: list[float] = []
+            for backend, payload, raw_sel, mode, prompt in zip(
+                *map(column, ("backend", "html", "pages", "mode", "prompt"))
+            ):
                 sel = None
-                if has_pages:
-                    raw_sel = pdf["pages"].iat[i]
-                    if raw_sel is not None:
-                        # null entries are dropped; none left selects all
-                        sel = [int(p) for p in raw_sel if p == p] or None
+                if raw_sel is not None:
+                    # null entries are dropped; none left selects all
+                    sel = [int(p) for p in raw_sel if p == p] or None
                 # explicit mode column wins; else a per-request prompt maps
                 # to a mode (reference: free-form prompt on the DeepSeek arm)
-                mode = pdf["mode"].iat[i] if has_mode else None
                 locate_ref = None
-                if has_prompt:
-                    prompt = pdf["prompt"].iat[i]
+                if prompt is not None:
                     if not mode:
                         mode = resolve_mode(prompt)
                     locate_ref = locate_target(prompt)
@@ -155,8 +129,39 @@ def make_extract_fn(model_loaded: dict | None = None):
                     )
                 else:
                     res = BACKEND_REGISTRY[backend](bytes(payload), sel)
-                rows.append(_result_row(url, doc_id, res, time.perf_counter() - t0))
-            yield pd.DataFrame(rows, columns=_COLUMNS)
+                elapsed.append(time.perf_counter() - t0)
+                results.append(res)
+            texts = [r.text for r in results]
+            yield pd.DataFrame(
+                {
+                    "url": column("url"),
+                    "doc_id": doc_ids,
+                    "backend": [r.backend for r in results],
+                    "file_type": [r.file_type for r in results],
+                    "success": [r.success for r in results],
+                    "markdown": [r.markdown for r in results],
+                    "text": texts,
+                    "raw_output": [r.raw_output for r in results],
+                    "spans": [r.spans for r in results],
+                    # deterministic analog of the reference's boxes_image —
+                    # rendered only on the single-page image path, exactly
+                    # like the reference (deepseek_ocr_backend.py:176 image
+                    # path vs 234 pdf path = ""; default "" at
+                    # api_contract.py:215), as codec-free SVG
+                    "boxes_image": [
+                        render_boxes_svg(r.spans)
+                        if r.spans and r.file_type == FILE_TYPE_IMAGE
+                        else ""
+                        for r in results
+                    ],
+                    "page_count": [r.page_count for r in results],
+                    "processed_pages": [r.processed_pages for r in results],
+                    "n_bytes": [len(t.encode("utf-8")) for t in texts],
+                    "processing_time": elapsed,
+                    "error": [r.error for r in results],
+                },
+                columns=_COLUMNS,
+            )
 
     return _extract_batches
 

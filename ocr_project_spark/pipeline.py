@@ -6,6 +6,9 @@
 One logical plan; Catalyst handles staging. The only shuffles are the
 (optional) salted repartition and the resume anti-join — extraction itself
 is narrow and the lineage aggregation is a partial-agg-friendly groupBy.
+The results append runs in the same stage as the extraction, and its
+parquet writer dictionary-encodes only the low-cardinality columns
+(``DICTIONARY_COLUMNS``).
 """
 
 from __future__ import annotations
@@ -32,6 +35,17 @@ HALF_OPEN_PROBE_MOD = 16
 # scan-friendly at 100 TB (no multi-GB files from fat partitions, no planner
 # pressure from tiny ones).
 MAX_RECORDS_PER_FILE = 500_000
+
+# Parquet dictionary encoding only on the low-cardinality result columns.
+# The rest (url, text, markdown, raw_output, ...) are near-unique per row: a
+# dictionary of them hashes every value for no saving, and at
+# MAX_RECORDS_PER_FILE rows it outgrows its page and falls back to plain.
+DICTIONARY_COLUMNS = ("backend", "file_type", "error", "run_id")
+RESULTS_WRITE_OPTIONS = {
+    "maxRecordsPerFile": MAX_RECORDS_PER_FILE,
+    "parquet.enable.dictionary": "false",
+    **{f"parquet.enable.dictionary#{c}": "true" for c in DICTIONARY_COLUMNS},
+}
 
 
 def run_extraction(
@@ -88,7 +102,8 @@ def run_job(
     """Resumable batch job: skip completed urls, extract, append results and
     lineage. Crash-and-rerun converges to the same result set (see
     tests/test_resume.py). Results files hold at most
-    ``MAX_RECORDS_PER_FILE`` rows.
+    ``MAX_RECORDS_PER_FILE`` rows and dictionary-encode only
+    ``DICTIONARY_COLUMNS``.
 
     Lineage is INCREMENTAL: each run stamps its rows with a monotone
     ``run_id``, reads back only its own rows (parquet row-group stats skip
@@ -162,9 +177,9 @@ def run_job(
     results = results.withColumn("run_id", F.lit(run_id).cast("long"))
 
     try:
-        results.write.mode("append").option(
-            "maxRecordsPerFile", MAX_RECORDS_PER_FILE
-        ).parquet(results_path)
+        results.write.mode("append").options(**RESULTS_WRITE_OPTIONS).parquet(
+            results_path
+        )
         if lineage_path:
             lin = lineage_rows(this_run_results(spark, results_path, run_id))
             if probe_fail_lineage is not None:

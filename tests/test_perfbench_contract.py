@@ -43,3 +43,71 @@ def test_perfbench_kernel_probe_targets_exist():
     assert registry.extract_html_pages is html_extract.extract_html_pages
     assert {BACKEND_HTML, BACKEND_LAYOUT} <= registry.BACKEND_REGISTRY.keys()
     assert all(callable(registry.BACKEND_REGISTRY[b]) for b in (BACKEND_HTML, BACKEND_LAYOUT))
+
+
+def _batch():
+    """Ten pages of both backends, cut like the probe's batches so that the
+    index does not start at 0."""
+    import pandas as pd
+
+    from ocr_project_spark.datagen import backend_for, build_payload
+
+    rows = [
+        {
+            "url": f"https://example.org/{d}",
+            "html": build_payload(d, f"Paragraph {d}.\n\nSecond paragraph.", "en"),
+            "backend": backend_for(d),
+            "doc_id": d,
+        }
+        for d in range(1, 11)
+    ]
+    return pd.DataFrame(rows).iloc[3:9]
+
+
+def test_extract_fn_reads_probe_batches_by_position():
+    """``probes.extraction_layers`` feeds ``iloc`` slices and reads the
+    output as pandas."""
+    from ocr_project_spark.operators.extract import make_extract_fn
+
+    batch = _batch()
+    out = list(make_extract_fn()(iter([batch])))
+    assert len(out) == 1
+    frame = out[0]
+    assert {"backend", "file_type", "success", "raw_output"} <= set(frame.columns)
+    assert frame["url"].tolist() == batch["url"].tolist()
+    assert frame["backend"].tolist() == batch["backend"].tolist()
+    assert frame["success"].all()
+
+
+def test_extract_fn_runs_patched_arm_and_parser(monkeypatch):
+    """The probe wraps ``BACKEND_REGISTRY`` entries and the registry's
+    ``extract_html_pages`` global before it builds the extract function;
+    the wrapped callables must be the ones that run."""
+    from ocr_project_spark.contract import BACKEND_HTML, BACKEND_LAYOUT
+    from ocr_project_spark.kernels import registry
+    from ocr_project_spark.operators.extract import make_extract_fn
+
+    calls = {"parse": 0, BACKEND_HTML: 0, BACKEND_LAYOUT: 0}
+
+    def counting(key, fn):
+        def wrapped(*args, **kwargs):
+            calls[key] += 1
+            return fn(*args, **kwargs)
+
+        return wrapped
+
+    reg = registry.BACKEND_REGISTRY
+    monkeypatch.setattr(
+        registry, "extract_html_pages", counting("parse", registry.extract_html_pages)
+    )
+    for backend in (BACKEND_HTML, BACKEND_LAYOUT):
+        monkeypatch.setitem(reg, backend, counting(backend, reg[backend]))
+    batch = _batch()
+    list(make_extract_fn()(iter([batch])))
+    n_html = int((batch["backend"] == BACKEND_HTML).sum())
+    assert 0 < n_html < len(batch)
+    assert calls == {
+        "parse": n_html,
+        BACKEND_HTML: n_html,
+        BACKEND_LAYOUT: len(batch) - n_html,
+    }

@@ -89,6 +89,41 @@ def test_run_job_crash_rerun_noop(spark, pages, tmp_path):
     assert dict(resumed) == dict(clean)
 
 
+def test_results_store_dictionary_encodes_only_low_cardinality_columns(
+    spark, pages, tmp_path
+):
+    """The results append keeps parquet dictionary encoding only on the
+    low-cardinality columns; the near-unique payload columns are written
+    plain. The store still reads back equal to a plain extraction."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    results_path = str(tmp_path / "results")
+    run_job(spark, pages, results_path)
+    largest = max(glob.glob(f"{results_path}/*.parquet"), key=os.path.getsize)
+    meta = pq.ParquetFile(largest).metadata.row_group(0)
+    chunks = {
+        meta.column(i).path_in_schema: meta.column(i) for i in range(meta.num_columns)
+    }
+    plain = (
+        "url", "doc_id", "text", "markdown", "source_markdown", "raw_output",
+        "boxes_image", "spans.list.element.ref",
+    )
+    for col in plain:
+        assert not chunks[col].has_dictionary_page, col
+    for col in ("backend", "file_type", "run_id"):
+        assert chunks[col].has_dictionary_page, col
+
+    stored = spark.read.parquet(results_path).drop("run_id", "processing_time")
+    clean = run_extraction(pages).drop("processing_time")
+    assert stored.count() == clean.count() == pages.count()
+    assert stored.exceptAll(clean).count() == 0
+    stored_text = dict(stored.select("url", "text").collect())
+    assert stored_text == dict(clean.select("url", "text").collect())
+
+
 def test_damaged_lineage_store_fails_the_run(spark, pages, tmp_path):
     """A store that exists but cannot be read is not a cold start: run_job
     must fail before appending results, not restart run_id at 0. A missing
