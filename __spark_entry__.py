@@ -4,7 +4,7 @@
 sf0.001. ``queries()`` exposes one callable per implemented operator family
 from SURVEY.md §2 (extraction lifecycle, lineage/health, skew observability,
 backend comparison) plus the training-data operators (dedup families,
-similarity search, text analysis). ``oracle_sql()`` gives the DuckDB
+text analysis). ``oracle_sql()`` gives the DuckDB
 equivalent for every SQL-expressible query; the synthetic ``pages`` table is
 a pure function of the driver's ``documents`` table (see
 ocr_project_spark/datagen.py), so every extraction invariant — including
@@ -14,12 +14,11 @@ re-derivable with plain SQL over ``documents``.
 Every query carries a DuckDB oracle. The hash-based families use invariants
 instead of replaying the hash in SQL: dedup_minhash's *verified output*
 equals the exact n-gram-Jaccard pairs (candidate recall ≈ 1 at 128/32);
-dedup_simhash and the ANN queries (lsh/ivf) run over corpora with planted
-exact copies, whose co-location in every bucket/cell is a mathematical
-property of the index (identical input ⇒ identical hash), making the
-expected answer exact SQL; corpus_percentiles is exact because the GK
-sketch is exact below its accuracy bound. The round-3 cluster queries
-(dedup_minhash_components) replay connected components
+dedup_simhash runs over a corpus with planted exact copies, whose pairing
+is a mathematical property of the hash (identical input ⇒ identical
+hash), making the expected answer exact SQL; corpus_percentiles is exact
+because the GK sketch is exact below its accuracy bound. The round-3
+cluster queries (dedup_minhash_components) replay connected components
 with a recursive-CTE transitive closure over the exact-jaccard pair set;
 media_png / media_video predict the REAL PNG/Y4M decodes from planted pixel
 formulas; warc_sinks closes the loop extraction → WET/WAT sinks → WARC
@@ -750,50 +749,6 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_nb_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Model-based quality filtering with a classifier TRAINED IN-ENGINE
-    (classify.py — the DCLM/FineWeb-style stage, as count-based multinomial
-    Naive Bayes so training is exact-integer and partitioning-independent):
-    corpus = documents ('clean') ∪ planted unique-word gibberish ('junk',
-    +100000), train on the even-id half of both populations, classify
-    everything. The oracle replays training AND inference in SQL; only the
-    argmax ships (no float columns) and the minimum argmax margin on this
-    corpus is ≈ 11.8 nats — nine orders above cross-engine libm noise."""
-    from ocr_project_spark.classify import nb_classify
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    gib = F.concat_ws(
-        " ",
-        *[
-            F.concat(F.lit("gib"), F.col("doc_id").cast("string"), F.lit(f"_{i}"))
-            for i in range(12)
-        ],
-    )
-    corpus = docs.select(
-        "doc_id", F.lit("clean").alias("label_true"), "text"
-    ).unionByName(
-        docs.select(
-            (F.col("doc_id") + 100000).alias("doc_id"),
-            F.lit("junk").alias("label_true"),
-            gib.alias("text"),
-        )
-    )
-    train = corpus.where("doc_id % 2 = 0").select(
-        F.col("label_true").alias("label"), "text"
-    )
-    preds = nb_classify(train, corpus)
-    return (
-        corpus.select("doc_id", "label_true")
-        .join(preds, "doc_id")
-        .select(
-            "doc_id",
-            "label_true",
-            "pred_label",
-            (F.col("label_true") == F.col("pred_label")).alias("correct"),
-        )
-    )
-
-
 def q_dedup_repeated_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Substring-level duplication inventory: cross-document repeated 8-word
     spans over the planted-dup corpus (exact aggregation → exact oracle)."""
@@ -886,175 +841,6 @@ def q_dedup_minhash_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "cluster_id",
         (F.col("doc_id") == F.col("cluster_id")).alias("kept"),
-    )
-
-
-def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All four ANN families under one contract, tagged by family (round-4
-    merge of sim_topk_brute/lsh/ivf, + the new IVF-PQ index):
-
-    - 'brute'  — exact cosine top-5 over the NATURAL corpus; DuckDB
-      recomputes every cosine and ranks (cross-engine float check);
-    - 'lsh'    — SRP-LSH bucket→candidate→score→rank over the planted-copy
-      corpus (top-2 = the two exact copies, a structural guarantee);
-    - 'ivf'    — IVF with DISTRIBUTED Lloyd training, same planted answer;
-    - 'ivfpq'  — IVF-PQ (Jégou et al. 2011): PQ codes ride the inverted
-      lists instead of raw vectors, JVM-side ADC scoring + exact re-rank;
-      an identical vector shares the query's cell AND codes, so its ADC is
-      the global minimum and re-rank pins cosine 1.0 — same planted answer.
-
-    General-recall behavior of every approximate family vs brute force is
-    asserted in tests (test_similarity, test_round4b)."""
-    from ocr_project_spark.similarity import (
-        brute_force_topk,
-        ivf_topk,
-        ivfpq_topk,
-        lsh_topk,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qs = emb.where("vec_id < 10")
-    corpus = _planted_ann_corpus(spark, sf_dir)
-    legs = [
-        ("brute", brute_force_topk(emb, qs, k=5)),
-        ("lsh", lsh_topk(corpus, qs, k=2, n_planes=4, n_tables=8)),
-        (
-            "ivf",
-            ivf_topk(
-                corpus, qs, k=2, n_cells=16, n_probe=4, train="distributed"
-            ),
-        ),
-        ("ivfpq", ivfpq_topk(corpus, qs, k=2, n_cells=16, n_probe=4)),
-    ]
-    out = None
-    for family, df in legs:
-        tagged = df.select(
-            F.lit(family).alias("family"),
-            "query_id",
-            F.col("rank").cast("long").alias("rank"),
-            "neighbor_id",
-        )
-        out = tagged if out is None else out.unionByName(tagged)
-    return out
-
-
-def q_sim_embed_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs AND the dedup keep-list in one
-    tagged row set (round-4 merge of the sim_embed_near_dup and
-    sim_dedup_keep queries), over a derived corpus with planted exact
-    copies (vec_id + 100000): 'pair' rows are the LSH-candidate +
-    exact-cosine-verified near-dup pairs (cross-engine float check —
-    DuckDB recomputes every cosine); 'keep' rows are the vec_ids that
-    survive connected-component dedup (each copy has a lower-id near-dup
-    at cosine ≈ 1.0, so the kept set is exactly the originals)."""
-    from ocr_project_spark.components import near_dup_keep
-    from ocr_project_spark.similarity import embedding_near_dup_pairs
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    corpus = emb.select("vec_id", "embedding").unionByName(
-        emb.select((F.col("vec_id") + 100000).alias("vec_id"), "embedding")
-    )
-    pairs = embedding_near_dup_pairs(corpus, threshold=0.95)
-    keep = near_dup_keep(corpus, pairs.select("id_a", "id_b"), id_col="vec_id")
-    return pairs.select(
-        F.lit("pair").alias("kind"),
-        "id_a",
-        "id_b",
-        F.round("cosine", 6).alias("cosine"),
-    ).unionByName(
-        keep.select(
-            F.lit("keep").alias("kind"),
-            F.col("doc_id").alias("id_a"),
-            # sentinels, not NULLs: a NULL BIGINT degrades to float NaN in
-            # the driver's pandas-side oracle frame and breaks value hashing
-            F.lit(-1).cast("long").alias("id_b"),
-            F.lit(-1.0).alias("cosine"),
-        )
-    )
-
-
-def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023): k-means-cluster the embeddings, dedup
-    within clusters only. Over the planted-copy corpus (vec_id + 100000)
-    every vector has exactly one semantic duplicate — its exact copy, which
-    provably lands in the same cluster (identical vector ⇒ identical
-    nearest centroid) at cosine ≈ 1.0, while the natural cosine ceiling
-    (~0.51) stays far below the 0.95 threshold — so per-vector dup degree,
-    max duplicate cosine, and the kept set are all exact SQL. The
-    cluster-scoped recall trade-off (cross-cluster near-dups survive) is
-    asserted in tests with pinned centroids."""
-    from ocr_project_spark.components import near_dup_keep
-    from ocr_project_spark.similarity import semdedup_pairs
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    corpus = emb.unionByName(
-        emb.select((F.col("vec_id") + 100000).alias("vec_id"), "embedding")
-    )
-    pairs = semdedup_pairs(corpus, threshold=0.95, n_cells=8)
-    kept = near_dup_keep(corpus, pairs.select("id_a", "id_b"), id_col="vec_id")
-    degree = (
-        pairs.select(F.col("id_a").alias("vec_id"), "cosine")
-        .unionByName(pairs.select(F.col("id_b").alias("vec_id"), "cosine"))
-        .groupBy("vec_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_sem_dups"),
-            F.round(F.max("cosine"), 6).alias("max_dup_cosine"),
-        )
-    )
-    return (
-        corpus.select("vec_id")
-        .join(degree, "vec_id", "left")
-        .join(
-            kept.select(F.col("doc_id").alias("vec_id"), F.lit(True).alias("kept")),
-            "vec_id",
-            "left",
-        )
-        .select(
-            "vec_id",
-            F.coalesce("n_sem_dups", F.lit(0)).alias("n_sem_dups"),
-            "max_dup_cosine",
-            F.coalesce("kept", F.lit(False)).alias("kept"),
-        )
-    )
-
-
-def q_diversity_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D4-style diversity pruning over the NATURAL embeddings table (no
-    planting): cells come from a pinned standard-basis quantizer (centroid
-    j = e_j, j < 4), so the oracle replays assignment exactly — the dot
-    with a basis vector is the raw coordinate, identical in both engines
-    (multiplications by 0/1 and zero-additions are exact in IEEE754) —
-    and the per-cell prototypicality ranking + integer-ratio drop rule
-    (most prototypical 1/4 of each cell dropped) end-to-end in SQL. A
-    genuine full-replay oracle, not a planted invariant."""
-    import numpy as np
-
-    from ocr_project_spark.similarity import prototype_prune
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    return prototype_prune(emb, np.eye(64)[:4], drop_num=1, drop_den=4)
-
-
-def _planted_ann_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embeddings ∪ two planted exact copies per vector (+100000, +200000).
-    An exact copy shares every SRP-LSH bucket and every IVF cell with its
-    original (identical vector ⇒ identical hyperplane signs / nearest
-    centroid), and scores cosine ≈ 1.0 vs a ≤ 0.51 natural ceiling — so the
-    top-2 neighbors of each query are its two copies (tie → id asc), a
-    mathematical guarantee of the index structure, exact at any scale."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    return (
-        emb.unionByName(
-            emb.select((F.col("vec_id") + 100000).alias("vec_id"), "embedding")
-        ).unionByName(
-            emb.select((F.col("vec_id") + 200000).alias("vec_id"), "embedding")
-        )
     )
 
 
@@ -1368,41 +1154,6 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_bloom_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dolma-style Bloom-filter seen-set (Soldaini et al. 2024) for
-    cross-snapshot dedup: the filter is built from the doc_id % 3 ≠ 0
-    slice's keys, then EVERY key probes it. Output per document:
-    ``probably_seen`` (the filter's answer), ``exact_seen`` (ground
-    truth), ``false_positive`` (their disagreement — zero false negatives
-    is the Bloom guarantee, and the driver hash-checks it row by row).
-    ``m_bits`` is sized small (2048) so real false positives are exercised
-    and inventoried at the driver SF rather than idealized away. The
-    oracle rebuilds the filter and every probe in SQL from the identical
-    md5 arithmetic (hash_split's conv idiom), bit_or words and all."""
-    from ocr_project_spark.bloomset import bloom_build, bloom_probe
-
-    m_bits, k_probes = 2048, 4
-    keys = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.concat(F.lit("k"), F.col("doc_id").cast("string")).alias("key"),
-    )
-    bloom = bloom_build(
-        keys.where("doc_id % 3 != 0").select("key"),
-        m_bits=m_bits,
-        k_probes=k_probes,
-    )
-    flags = bloom_probe(keys, bloom, m_bits=m_bits, k_probes=k_probes)
-    exact = (F.col("doc_id") % 3 != 0).alias("exact_seen")
-    return flags.select(
-        "doc_id",
-        "probably_seen",
-        exact,
-        (F.col("probably_seen") & ~(F.col("doc_id") % 3 != 0)).alias(
-            "false_positive"
-        ),
-    )
-
-
 def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document fingerprint suite in one query: whole-text md5 +
     min-shingle md5 (fingerprints) joined with the Karp-Rabin rolling-hash
@@ -1676,17 +1427,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "media_codecs": q_media_codecs,
         "c4_clean": q_c4_clean,
         "text_normalize": q_text_normalize,
-        "sim_topk": q_sim_topk,
         "dsir_select": q_dsir_select,
-        "bloom_seen": q_bloom_seen,
         "url_canonical": q_url_canonical,
-        "diversity_prune": q_diversity_prune,
         "media_video": q_media_video,
-        "nb_classify": q_nb_classify,
         "dedup_minhash": q_dedup_minhash,
-        "semdedup": q_semdedup,
         "quality_lm": q_quality_lm,
-        "sim_embed_dedup": q_sim_embed_dedup,
         "dedup_blocking": q_dedup_blocking,
         "corpus_mix": q_corpus_mix,
         "corpus_partitioning": q_corpus_partitioning,
@@ -2124,67 +1869,6 @@ def oracle_sql() -> dict[str, str]:
             UNION ALL
             SELECT 'exact' AS family, * FROM ({_JACCARD_DE_SQL})
         """,
-        # nb_classify: NB training + inference replayed end-to-end in SQL;
-        # only the argmax ships, min margin ≈ 11.8 nats on this corpus
-        "nb_classify": """
-            WITH corpus AS (
-                SELECT doc_id, 'clean' AS label_true, text FROM documents
-                UNION ALL
-                SELECT doc_id + 100000, 'junk',
-                       array_to_string(list_transform(range(12),
-                           i -> 'gib' || doc_id || '_' || i), ' ')
-                FROM documents
-            ),
-            train AS (
-                SELECT label_true AS label, text FROM corpus WHERE doc_id % 2 = 0
-            ),
-            tok AS (
-                SELECT label, unnest(string_split(text, ' ')) AS word FROM train
-            ),
-            model AS (SELECT label, word, count(*) AS c FROM tok GROUP BY 1, 2),
-            vocab AS (SELECT count(DISTINCT word) AS v FROM tok),
-            classes AS (
-                SELECT p.label, p.n_docs, t.n_tokens,
-                       (SELECT v FROM vocab) AS vocab
-                FROM (SELECT label, count(*) AS n_docs FROM train GROUP BY 1) p
-                JOIN (SELECT label, CAST(sum(c) AS BIGINT) AS n_tokens
-                      FROM model GROUP BY 1) t USING (label)
-            ),
-            ntrain AS (SELECT CAST(sum(n_docs) AS BIGINT) AS n FROM classes),
-            dcount AS (
-                SELECT doc_id, word, count(*) AS k
-                FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-                      FROM corpus)
-                GROUP BY 1, 2
-            ),
-            matched AS (
-                SELECT d.doc_id, m.label, SUM(d.k * ln(m.c + 1)) AS ms
-                FROM dcount d JOIN model m USING (word) GROUP BY 1, 2
-            ),
-            ndoc AS (
-                SELECT doc_id, label_true,
-                       len(string_split(text, ' ')) AS n
-                FROM corpus
-            ),
-            scored AS (
-                SELECT nd.doc_id, nd.label_true, c.label,
-                       ln(c.n_docs * 1.0 / (SELECT n FROM ntrain))
-                         + COALESCE(m.ms, 0)
-                         - nd.n * ln(c.n_tokens + c.vocab) AS score
-                FROM ndoc nd CROSS JOIN classes c
-                LEFT JOIN matched m
-                  ON m.doc_id = nd.doc_id AND m.label = c.label
-            ),
-            r AS (
-                SELECT doc_id, label_true, label, score,
-                       row_number() OVER (PARTITION BY doc_id
-                                          ORDER BY score DESC, label ASC) AS rk
-                FROM scored
-            )
-            SELECT doc_id, label_true, label AS pred_label,
-                   (label_true = label) AS correct
-            FROM r WHERE rk = 1
-        """,
         # byte-exact replay of remove_repeated_spans: same full-8-gram
         # inventory (parallel unnest zips starts with grams), same covered
         # positions, same ordered single-space rejoin
@@ -2239,91 +1923,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(0 AS BIGINT) AS hamming
             FROM documents WHERE lang = 'de'
         """,
-        # sim_topk: 'brute' recomputed cosine-by-cosine in DuckDB; the three
-        # approximate families over the planted-copy corpus where each
-        # query's top-2 are its two exact copies (guaranteed bucket / cell /
-        # PQ-code co-location at cosine 1.0; tie → id asc)
-        "sim_topk": """
-            WITH q AS (
-                SELECT vec_id AS query_id, embedding::DOUBLE[] AS vq
-                FROM embeddings WHERE vec_id < 10
-            ),
-            c AS (
-                SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS vn
-                FROM embeddings
-            ),
-            s AS (
-                SELECT query_id, neighbor_id,
-                       list_dot_product(vq, vn)
-                           / (sqrt(list_dot_product(vq, vq))
-                              * sqrt(list_dot_product(vn, vn))) AS cosine
-                FROM q, c WHERE query_id <> neighbor_id
-            ),
-            brute AS (
-                SELECT query_id, rank, neighbor_id FROM (
-                    SELECT query_id, neighbor_id,
-                           row_number() OVER (
-                               PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id ASC) AS rank
-                    FROM s
-                ) WHERE rank <= 5
-            ),
-            planted AS (
-                SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS rank,
-                       vec_id + 100000 AS neighbor_id
-                FROM embeddings WHERE vec_id < 10
-                UNION ALL
-                SELECT vec_id, CAST(2 AS BIGINT), vec_id + 200000
-                FROM embeddings WHERE vec_id < 10
-            )
-            SELECT 'brute' AS family, query_id, rank, neighbor_id FROM brute
-            UNION ALL
-            SELECT 'lsh', query_id, rank, neighbor_id FROM planted
-            UNION ALL
-            SELECT 'ivf', query_id, rank, neighbor_id FROM planted
-            UNION ALL
-            SELECT 'ivfpq', query_id, rank, neighbor_id FROM planted
-        """,
-        # pair rows: DuckDB recomputes every cosine (cross-engine float
-        # check); keep rows: each planted copy has a lower-id near-dup at
-        # cosine ≈ 1 → kept set = the originals, exactly. Sentinel -1s on
-        # keep rows, never NULLs (pandas NULL-int → NaN degradation).
-        "sim_embed_dedup": """
-            WITH corpus AS (
-                SELECT vec_id, embedding FROM embeddings
-                UNION ALL
-                SELECT vec_id + 100000, embedding FROM embeddings
-            ),
-            s AS (
-                SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                       list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
-                           / (sqrt(list_dot_product(a.embedding::DOUBLE[],
-                                                    a.embedding::DOUBLE[]))
-                              * sqrt(list_dot_product(b.embedding::DOUBLE[],
-                                                      b.embedding::DOUBLE[])))
-                           AS cosine
-                FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
-            )
-            SELECT 'pair' AS kind, id_a, id_b, round(cosine, 6) AS cosine
-            FROM s WHERE cosine >= 0.95
-            UNION ALL
-            SELECT 'keep' AS kind, vec_id AS id_a,
-                   CAST(-1 AS BIGINT) AS id_b, CAST(-1.0 AS DOUBLE) AS cosine
-            FROM embeddings
-        """,
-        # every vector's one semantic dup is its exact copy (same k-means
-        # cell guaranteed; natural cosine ceiling ~0.51 < 0.95 threshold)
-        "semdedup": """
-            WITH corpus AS (
-                SELECT vec_id FROM embeddings
-                UNION ALL
-                SELECT vec_id + 100000 FROM embeddings
-            )
-            SELECT vec_id, CAST(1 AS BIGINT) AS n_sem_dups,
-                   CAST(1.0 AS DOUBLE) AS max_dup_cosine,
-                   (vec_id < 100000) AS kept
-            FROM corpus
-        """,
         # merged video row set: kind='sampled' replays the fake decode at
         # the byte level (frame ids = sha256(payload || ascii suffix));
         # kind='y4m' predicts the REAL container decode's per-frame sums
@@ -2367,42 +1966,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT 'y4m', i.media_id, CAST(s.t AS BIGINT), '',
                    CAST(i.w AS BIGINT), CAST(i.h AS BIGINT), CAST(s.s AS BIGINT)
             FROM ids i JOIN sums s USING (media_id)
-        """,
-        # diversity_prune: full SQL replay — basis-centroid dots are raw
-        # coordinates (exact in both engines), ranking on the rounded
-        # prototypicality with vec_id tiebreak, integer-ratio drop rule
-        "diversity_prune": """
-            WITH cent AS (
-                SELECT * FROM (VALUES (0, 1), (1, 2), (2, 3), (3, 4)) t(cell, idx)
-            ),
-            dots AS (
-                SELECT e.vec_id, c.cell,
-                       CAST(e.embedding[c.idx] AS DOUBLE) AS dot,
-                       sqrt(list_dot_product(e.embedding::DOUBLE[],
-                                             e.embedding::DOUBLE[])) AS nrm
-                FROM embeddings e CROSS JOIN cent c
-            ),
-            assign AS (
-                SELECT vec_id, cell, dot, nrm,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY dot DESC, cell ASC) AS rk
-                FROM dots
-            ),
-            a AS (
-                SELECT vec_id, cell, round(dot / nrm, 6) AS prototypicality
-                FROM assign WHERE rk = 1
-            ),
-            r AS (
-                SELECT vec_id, cell, prototypicality,
-                       row_number() OVER (PARTITION BY cell
-                                          ORDER BY prototypicality DESC,
-                                                   vec_id ASC) AS rk,
-                       count(*) OVER (PARTITION BY cell) AS n
-                FROM a
-            )
-            SELECT vec_id, CAST(cell AS BIGINT) AS cell, prototypicality,
-                   (rk * 4 > n * 1) AS kept
-            FROM r
         """,
         # fake audio features: every number derives from sha256 digest
         # byte ranges, replayed here from the hex nibbles
@@ -2907,51 +2470,6 @@ def oracle_sql() -> dict[str, str]:
                    sum_target_df * raw_total * 2
                        >= sum_raw_df * target_total * 1 AS selected
             FROM per, rt, tt
-        """,
-        # bloom_seen: full in-SQL replay of the filter build AND every
-        # probe from the identical md5-position arithmetic (15 hex chars →
-        # 60-bit int → mod m), 32-bit words, bit_or aggregation
-        "bloom_seen": """
-            WITH k AS (
-                SELECT doc_id, 'k' || doc_id AS key FROM documents
-            ),
-            i AS (SELECT unnest(generate_series(0, 3)) AS i),
-            sp AS (
-                SELECT CAST(('0x' || substring(
-                           md5('bloom#' || i || '#' || key), 1, 15))
-                           AS BIGINT) % 2048 AS pos
-                FROM k, i WHERE doc_id % 3 <> 0
-            ),
-            words AS (
-                SELECT pos // 32 AS word_idx,
-                       bit_or(CAST(1 AS BIGINT)
-                              << CAST(pos % 32 AS INTEGER)) AS bits
-                FROM sp GROUP BY 1
-            ),
-            cp AS (
-                SELECT doc_id,
-                       CAST(('0x' || substring(
-                           md5('bloom#' || i || '#' || key), 1, 15))
-                           AS BIGINT) % 2048 AS pos
-                FROM k, i
-            ),
-            j AS (
-                SELECT doc_id,
-                       CASE WHEN (CAST(1 AS BIGINT)
-                                  << CAST(pos % 32 AS INTEGER))
-                                 & coalesce(bits, 0) <> 0
-                            THEN 1 ELSE 0 END AS hit
-                FROM cp LEFT JOIN words ON words.word_idx = pos // 32
-            ),
-            f AS (
-                -- min(hit), duplicate-id-invariant like the Spark side
-                SELECT doc_id, min(hit) = 1 AS probably_seen
-                FROM j GROUP BY 1
-            )
-            SELECT doc_id, probably_seen,
-                   doc_id % 3 <> 0 AS exact_seen,
-                   probably_seen AND NOT (doc_id % 3 <> 0) AS false_positive
-            FROM f
         """,
         "quality_lm": """
             WITH corpus AS (

@@ -32,8 +32,8 @@ def lineage_rows(results: DataFrame) -> DataFrame:
     extracted byte count. ``part_id`` is ``pmod(xxhash64(url),
     LINEAGE_BUCKETS)``, so the same rows give the same lineage at any core
     count or read-back packing. The hash is not crc32, so the half-open
-    probe sample (``crc32(url) % probe_mod`` in pipeline.run_job) spreads
-    over many buckets instead of one.
+    probe sample (``crc32(url) % HALF_OPEN_PROBE_MOD`` in pipeline.run_job)
+    spreads over many buckets instead of one.
     """
     return (
         results.withColumn(

@@ -97,7 +97,6 @@ def run_job(
     lineage_path: str | None = None,
     num_partitions: int | None = None,
     circuit_breaker: bool = False,
-    probe_mod: int = HALF_OPEN_PROBE_MOD,
 ) -> None:
     """Resumable batch job: skip completed urls, extract, append results and
     lineage. Crash-and-rerun converges to the same result set (see
@@ -114,12 +113,12 @@ def run_job(
     ``circuit_breaker=True`` replays the accumulated lineage through the R3
     health state machine (operators/lineage.circuit_breaker_gate) and
     short-circuits a tripped backend's rows to the model-not-loaded shape
-    instead of running its kernel — EXCEPT a deterministic ~1/``probe_mod``
-    url sample (the half-open probe), which still runs so the breaker can
-    observe recovery and close itself: probe successes are real results
-    (checkpointed + healthy lineage), probe failures are treated as
-    infrastructure evidence — lineage only, never checkpointed, so the urls
-    retry once the backend recovers."""
+    instead of running its kernel — EXCEPT a deterministic
+    ~1/``HALF_OPEN_PROBE_MOD`` url sample (the half-open probe), which still
+    runs so the breaker can observe recovery and close itself: probe
+    successes are real results (checkpointed + healthy lineage), probe
+    failures are treated as infrastructure evidence — lineage only, never
+    checkpointed, so the urls retry once the backend recovers."""
     lineage_prior = (
         read_parquet_if_exists(spark, lineage_path) if lineage_path else None
     )
@@ -137,18 +136,19 @@ def run_job(
     probe_fail_lineage = None
     tripped = [b for b, ok in (model_loaded or {}).items() if not ok]
     parts: list[DataFrame] = []
-    if tripped and probe_mod:
+    if tripped:
         is_probe = F.col("backend").isin(tripped) & (
-            F.crc32(F.col("url")) % probe_mod == 0
+            F.crc32(F.col("url")) % HALF_OPEN_PROBE_MOD == 0
         )
-        # the probe set is bounded (~todo/probe_mod of the tripped backend
-        # only), so persisting it for the dual success/failure use is cheap.
+        # the probe set is bounded (~todo/HALF_OPEN_PROBE_MOD of the tripped
+        # backend only), so persisting it for the dual success/failure use is
+        # cheap.
         # Probe FAILURES are deliberately infra evidence, never checkpointed
         # results: under an open breaker a failure cannot be attributed to
         # the document (the reference's down-backend errors mask document
         # status), so the url stays retryable until the breaker closes —
         # the trade-off is that a genuinely-malformed probe doc re-probes
-        # each breaker-open run (bounded by probe_mod) until recovery.
+        # each breaker-open run (~1/HALF_OPEN_PROBE_MOD) until recovery.
         probe_results = run_extraction(
             todo.where(is_probe), num_partitions=num_partitions
         ).persist()

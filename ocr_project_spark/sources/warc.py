@@ -103,11 +103,6 @@ def gunzip_members_with_stats(data: bytes) -> tuple[bytes, int]:
     return b"".join(out), n_bad
 
 
-def gunzip_members(data: bytes) -> bytes:
-    """Bytes-only view of :func:`gunzip_members_with_stats`."""
-    return gunzip_members_with_stats(data)[0]
-
-
 def _parse_headers(block: bytes) -> dict[bytes, bytes]:
     headers: dict[bytes, bytes] = {}
     for line in block.split(CRLF)[1:]:  # first line is the version/status line

@@ -18,8 +18,7 @@ import __spark_entry__ as entrymod  # noqa: E402
 from ocr_project_spark.session import build_session  # noqa: E402
 
 TABLES = (
-    "region nation customer supplier part orders lineitem events documents "
-    "embeddings"
+    "region nation customer supplier part orders lineitem events documents"
 ).split()
 
 

@@ -136,28 +136,6 @@ def test_only_final_round_blocks_stay(spark):
     assert _comp_map(comp) == {i: 0 for i in range(10)}
 
 
-def test_embedding_dedup_keep_transitive(spark):
-    """Embedding V-shape: a and b are both near c (cosine ≥ 0.95) but not
-    each other — closure must drop the whole cluster except its min id."""
-    import numpy as np
-
-    from ocr_project_spark.similarity import embedding_dedup_keep
-
-    rng_c = np.zeros(64); rng_c[0] = 1.0
-    a = np.zeros(64); a[0] = 1.0; a[1] = 0.30     # cos(a,c) ≈ 0.958
-    b = np.zeros(64); b[0] = 1.0; b[1] = -0.30    # cos(b,c) ≈ 0.958, cos(a,b) ≈ 0.835
-    far = np.zeros(64); far[2] = 1.0
-    rows = [
-        (1, [float(x) for x in a]),
-        (2, [float(x) for x in b]),
-        (3, [float(x) for x in rng_c]),
-        (9, [float(x) for x in far]),
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    kept = {r["vec_id"] for r in embedding_dedup_keep(emb, threshold=0.95).collect()}
-    assert kept == {1, 9}
-
-
 def test_constraint_propagation_conf_restored(spark):
     """connected_components disables constraint propagation for its loop
     only — the session conf must come back exactly as it was."""

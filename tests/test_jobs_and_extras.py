@@ -1,5 +1,5 @@
-"""Tests for the spark-submit CLI, the IVF ANN variant, the deterministic
-SVG boxes renderer, and html-kernel robustness on messier real-world markup.
+"""Tests for the spark-submit CLI, the deterministic SVG boxes renderer,
+and html-kernel robustness on messier real-world markup.
 """
 
 from __future__ import annotations
@@ -37,32 +37,6 @@ def test_cli_end_to_end_and_resume(spark, tmp_path):
 def test_cli_requires_input_source(spark, tmp_path):
     with pytest.raises(SystemExit):
         extract_main(["--results", str(tmp_path / "r")], spark=spark)
-
-
-def test_ivf_topk_recall(spark):
-    from ocr_project_spark.similarity import brute_force_topk, ivf_topk
-
-    emb = spark.read.parquet(f"{c.SF_DIR}/embeddings.parquet").cache()
-    queries = emb.where("vec_id < 10")
-    brute = {
-        (r["query_id"], r["neighbor_id"])
-        for r in brute_force_topk(emb, queries, k=5).collect()
-    }
-    approx = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ivf_topk(emb, queries, k=5, n_cells=16, n_probe=4).collect()
-    }
-    recall = len(brute & approx) / len(brute)
-    assert recall >= 0.6, f"IVF recall {recall:.2f} too low"
-
-
-def test_ivf_deterministic(spark):
-    from ocr_project_spark.similarity import ivf_centroids
-
-    emb = spark.read.parquet(f"{c.SF_DIR}/embeddings.parquet")
-    c1 = ivf_centroids(emb, n_cells=8)
-    c2 = ivf_centroids(emb, n_cells=8)
-    assert (c1 == c2).all()
 
 
 def test_render_boxes_svg_deterministic():

@@ -286,10 +286,14 @@ def _breaker_corpus(spark, id_lo, id_hi, mineru_healthy):
     ).repartition(4)
 
 
-def _half_open_sequence(spark, root):
+def _half_open_sequence(spark, root, monkeypatch):
     """Run the four-run breaker sequence below into fresh stores under
-    ``root`` and return what each run left in the results store."""
+    ``root`` and return what each run left in the results store. The probe
+    sample is widened to ~1/4 of the urls so this small corpus has one."""
+    from ocr_project_spark import pipeline
     from ocr_project_spark.pipeline import run_job
+
+    monkeypatch.setattr(pipeline, "HALF_OPEN_PROBE_MOD", 4)
 
     results_path = str(root / "results")
     lineage_path = str(root / "lineage")
@@ -310,7 +314,6 @@ def _half_open_sequence(spark, root):
         results_path,
         lineage_path,
         circuit_breaker=True,
-        probe_mod=4,
     )
     out = {
         "run2_mineru": segment().where("backend = 'mineru'").count(),
@@ -327,7 +330,6 @@ def _half_open_sequence(spark, root):
         results_path,
         lineage_path,
         circuit_breaker=True,
-        probe_mod=4,
     )
     out["run3_mineru_ok"] = segment().where("backend = 'mineru' AND success").count()
     out["run3_mineru_failed"] = (
@@ -342,7 +344,6 @@ def _half_open_sequence(spark, root):
         results_path,
         lineage_path,
         circuit_breaker=True,
-        probe_mod=4,
     )
     out["final_rows"] = segment().count()
     out["final_urls"] = segment().select("url").distinct().count()
@@ -352,14 +353,16 @@ def _half_open_sequence(spark, root):
     return out
 
 
-def test_half_open_probe_recovers_without_disabling_breaker(spark, tmp_path):
+def test_half_open_probe_recovers_without_disabling_breaker(
+    spark, tmp_path, monkeypatch
+):
     """ADVICE r3: with the breaker enabled on EVERY run, a tripped backend
     must still recover by itself — the deterministic half-open url probe
     keeps running its kernel, probe failures feed the lineage (keeping the
     breaker open, never checkpointed), and once the backend heals the probe
     successes append healthy lineage buckets that close the breaker on
     the next pass. No run ever flips circuit_breaker off."""
-    out = _half_open_sequence(spark, tmp_path)
+    out = _half_open_sequence(spark, tmp_path, monkeypatch)
     assert out["run2_mineru"] == 0
     assert out["run2_deepseek_ok"] == 20
     # the probe sample, not the backlog
@@ -370,7 +373,9 @@ def test_half_open_probe_recovers_without_disabling_breaker(spark, tmp_path):
     assert out["final_mineru_ok"] == 20
 
 
-def test_breaker_verdict_independent_of_readback_packing(spark, tmp_path):
+def test_breaker_verdict_independent_of_readback_packing(
+    spark, tmp_path, monkeypatch
+):
     """The breaker replays lineage computed from each run's read-back scan.
     How that scan packs its files follows the core count (one partition
     with minPartitionNum 1, one per file with 32), and the verdict must
@@ -382,7 +387,9 @@ def test_breaker_verdict_independent_of_readback_packing(spark, tmp_path):
     try:
         for n in (1, 32):
             spark.conf.set(key, str(n))
-            outcomes.append(_half_open_sequence(spark, tmp_path / f"min{n}"))
+            outcomes.append(
+                _half_open_sequence(spark, tmp_path / f"min{n}", monkeypatch)
+            )
     finally:
         if prior is None:
             spark.conf.unset(key)

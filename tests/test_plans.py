@@ -80,16 +80,6 @@ def test_flagship_rollup_broadcasts_dim_and_partial_aggs(spark):
     assert n_nodes(plan, "HashAggregate") >= 2  # partial + final
 
 
-def test_brute_topk_broadcasts_queries(spark):
-    """similarity: the (small) query side is broadcast — the corpus is
-    scanned once with no corpus-side shuffle before scoring."""
-    from ocr_project_spark.similarity import brute_force_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    plan = plan_of(brute_force_topk(emb, emb.where("vec_id < 5"), k=3))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-
-
 def test_exact_dedup_partial_aggregation(spark, documents):
     """dedup: md5 groupBy decomposes into partial+final HashAggregate (one
     row per distinct hash crosses the wire per partition)."""
@@ -220,37 +210,3 @@ def test_curation_chain_plan_is_linear(spark, tmp_path):
         if ln.startswith("(") and ln.split(") ", 1)[-1].startswith("Scan ")
     ]
     assert len(scans) <= 3, scans
-
-
-def test_semdedup_pairs_single_cell_exchange(spark):
-    """SemDeDup's candidate join shuffles on the cell id — an equi-join,
-    never a cartesian product (pinned centroids so no training job runs
-    at plan-build time)."""
-    import numpy as np
-
-    from ocr_project_spark.similarity import semdedup_pairs
-
-    rows = [(i, [float(i % 3), 1.0]) for i in range(12)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    plan = plan_of(
-        semdedup_pairs(df, threshold=0.9, centroids=np.array([[1.0, 0.0], [0.0, 1.0]]))
-    )
-    assert n_nodes(plan, "CartesianProduct") == 0
-    assert n_nodes(plan, "BroadcastNestedLoopJoin") == 0
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
-
-
-def test_nb_classifier_plan_shapes(spark, documents):
-    """NB inference: the model join is a hash/merge equi-join on word, the
-    only nested-loops are the tiny broadcast scaffolds (1-row vocab and
-    n_train aggregates onto |labels| rows — the classes subtree appears
-    twice, once under the n_train aggregate — and |labels| rows onto
-    docs), and no CartesianProduct anywhere — text payloads never
-    shuffle."""
-    from ocr_project_spark.classify import nb_classify
-
-    train = documents.select(F.col("lang").alias("label"), "text")
-    plan = plan_of(nb_classify(train, documents))
-    assert n_nodes(plan, "CartesianProduct") == 0
-    assert n_nodes(plan, "BroadcastNestedLoopJoin") <= 4
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan

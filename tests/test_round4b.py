@@ -1,116 +1,13 @@
-"""Round-4 late additions: Bloom seen-sets, DSIR importance weights,
-URL spam scoring, IVF-PQ ANN.
+"""Round-4 late additions: DSIR importance weights, URL spam scoring,
+mojibake repair, the composed curation chain.
 """
 
 from __future__ import annotations
 
-import hashlib
-
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from tests.test_plans import n_nodes, plan_of
-
-M_BITS = 1 << 14
-K_PROBES = 4
-
-
-@pytest.fixture(scope="module")
-def embeddings(spark):
-    from tests import conftest as c
-
-    return spark.read.parquet(f"{c.SF_DIR}/embeddings.parquet").cache()
-
-
-# ---------------------------------------------------------------- bloom
-
-
-def _py_positions(key: str, salt: str = "bloom") -> list[int]:
-    out = []
-    for i in range(K_PROBES):
-        h = hashlib.md5(f"{salt}#{i}#{key}".encode()).hexdigest()
-        out.append(int(h[:15], 16) % M_BITS)
-    return out
-
-
-def test_bloom_positions_match_reference(spark):
-    """The Spark position expression is the md5 arithmetic the oracle
-    replays — check against an independent Python computation."""
-    from ocr_project_spark.bloomset import _positions
-
-    keys = spark.createDataFrame([("alpha",), ("beta",), ("k#42",)], ["key"])
-    rows = keys.select(
-        "key", _positions(F.col("key"), K_PROBES, M_BITS, "bloom").alias("p")
-    ).collect()
-    for r in rows:
-        assert list(r["p"]) == _py_positions(r["key"])
-
-
-def test_bloom_no_false_negatives_and_fp_accounting(spark, documents):
-    from ocr_project_spark.bloomset import bloom_build, bloom_probe
-
-    seen = documents.where("doc_id % 3 != 0").select(
-        F.concat(F.lit("k"), F.col("doc_id")).alias("key")
-    )
-    bloom = bloom_build(seen, m_bits=M_BITS, k_probes=K_PROBES)
-    flags = bloom_probe(
-        documents.select("doc_id", F.concat(F.lit("k"), F.col("doc_id")).alias("key")),
-        bloom,
-        m_bits=M_BITS,
-        k_probes=K_PROBES,
-    ).collect()
-    by_id = {r["doc_id"]: r["probably_seen"] for r in flags}
-    n_fp = 0
-    for did, probably in by_id.items():
-        if did % 3 != 0:
-            assert probably, f"false negative for seen key {did}"
-        elif probably:
-            n_fp += 1
-    # load factor n*k/m ≈ 0.08 ⇒ FP ≈ (1-e^-0.08)^4 ≈ 4e-5: zero at sf0.001
-    n_unseen = sum(1 for d in by_id if d % 3 == 0)
-    assert n_fp <= max(1, n_unseen // 20)
-
-
-def test_bloom_merge_equals_joint_build(spark, documents):
-    from ocr_project_spark.bloomset import bloom_build, bloom_merge
-
-    a = documents.where("doc_id % 2 = 0").select(F.concat(F.lit("k"), F.col("doc_id")).alias("key"))
-    b = documents.where("doc_id % 2 = 1").select(F.concat(F.lit("k"), F.col("doc_id")).alias("key"))
-    joint = bloom_build(a.unionByName(b), m_bits=M_BITS)
-    merged = bloom_merge(bloom_build(a, m_bits=M_BITS), bloom_build(b, m_bits=M_BITS))
-    assert sorted(map(tuple, joint.collect())) == sorted(
-        map(tuple, merged.collect())
-    )
-
-
-def test_bloom_dedup_against_drops_only_seen(spark, documents):
-    from ocr_project_spark.bloomset import bloom_dedup_against
-
-    seen = documents.where("doc_id % 3 != 0").select(F.concat(F.lit("k"), F.col("doc_id")).alias("key"))
-    kept = bloom_dedup_against(
-        documents.select("doc_id", F.concat(F.lit("k"), F.col("doc_id")).alias("key")),
-        seen,
-        m_bits=M_BITS,
-    )
-    kept_ids = {r["doc_id"] for r in kept.collect()}
-    # every kept id is genuinely novel (no false negatives ⇒ no seen id kept)
-    assert all(d % 3 == 0 for d in kept_ids)
-
-
-def test_bloom_probe_plan_broadcasts_filter(spark, documents):
-    from ocr_project_spark.bloomset import bloom_build, bloom_probe
-
-    seen = documents.select(F.concat(F.lit("k"), F.col("doc_id")).alias("key"))
-    plan = plan_of(
-        bloom_probe(
-            documents.select("doc_id", F.concat(F.lit("k"), F.col("doc_id")).alias("key")),
-            bloom_build(seen, m_bits=M_BITS),
-            m_bits=M_BITS,
-        )
-    )
-    assert n_nodes(plan, "BroadcastHashJoin") >= 1
-    assert n_nodes(plan, "CartesianProduct") == 0
 
 
 # ---------------------------------------------------------- importance (DSIR)
@@ -236,62 +133,6 @@ def test_url_spam_zero_exchange(spark, pages):
 
     plan = plan_of(url_spam_scores(pages.select("doc_id", "url")))
     assert n_nodes(plan, "Exchange") == 0
-
-
-# -------------------------------------------------------------- ivf-pq
-
-
-def test_ivfpq_planted_copies_rank_first(spark, embeddings):
-    from ocr_project_spark.similarity import ivfpq_topk
-
-    emb = embeddings.select("vec_id", "embedding")
-    corpus = emb.unionByName(
-        emb.select((F.col("vec_id") + 100000).alias("vec_id"), "embedding")
-    ).unionByName(
-        emb.select((F.col("vec_id") + 200000).alias("vec_id"), "embedding")
-    )
-    got = ivfpq_topk(
-        corpus, emb.where("vec_id < 5"), k=2, n_cells=8, n_probe=3
-    ).collect()
-    by_q: dict[int, dict[int, int]] = {}
-    for r in got:
-        by_q.setdefault(r["query_id"], {})[r["rank"]] = r["neighbor_id"]
-    for q, ranks in by_q.items():
-        assert ranks[1] == q + 100000
-        assert ranks[2] == q + 200000
-    assert len(by_q) == 5
-
-
-def test_ivfpq_recall_vs_brute(spark, embeddings):
-    from ocr_project_spark.similarity import brute_force_topk, ivfpq_topk
-
-    qs = embeddings.where("vec_id < 10")
-    truth = {
-        (r["query_id"], r["neighbor_id"])
-        for r in brute_force_topk(embeddings, qs, k=5).collect()
-    }
-    got = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ivfpq_topk(
-            embeddings, qs, k=5, n_cells=8, n_probe=4, m_sub=16, n_codes=32
-        ).collect()
-    }
-    # approximate index: require decent overlap with the exact answer
-    assert len(got & truth) >= 0.5 * len(truth)
-
-
-def test_ivfpq_plan_jvm_adc(spark, embeddings):
-    """ADC scoring is JVM joins/aggs: the only Python appears in the two
-    narrow encode passes, and the distance-table join broadcasts."""
-    from ocr_project_spark.similarity import ivfpq_topk
-
-    emb = embeddings.select("vec_id", "embedding")
-    plan = plan_of(ivfpq_topk(emb, emb.where("vec_id < 3"), k=2, n_cells=4))
-    assert n_nodes(plan, "CartesianProduct") == 0
-    assert n_nodes(plan, "BroadcastHashJoin") >= 2
-    # one fused corpus pass (cell + codes) + the tiny query-table pass
-    # (evaluated twice: probe cells and distance tables)
-    assert n_nodes(plan, "MapInPandas") <= 3
 
 
 # ------------------------------------------------------------ mojibake
@@ -483,24 +324,6 @@ def test_curate_chain_matches_composed_sql_replay(spark, tmp_path):
     assert any("<EMAIL>" in t and "<IP>" in t and "<PHONE>" in t for _, t in got)
 
 
-def test_bloom_probe_null_key_is_never_seen(spark):
-    """A NULL candidate key must surface as probably_seen=false — not
-    vanish from the output (plain explode would drop the row) and not
-    poison the rollup with a null sum."""
-    from ocr_project_spark.bloomset import bloom_build, bloom_probe
-
-    seen = spark.createDataFrame([("alpha",), ("beta",)], ["key"])
-    bloom = bloom_build(seen)
-    cands = spark.createDataFrame(
-        [(1, "alpha"), (2, None), (3, "gamma")], "doc_id long, key string"
-    )
-    got = {
-        r["doc_id"]: r["probably_seen"]
-        for r in bloom_probe(cands, bloom).collect()
-    }
-    assert got == {1: True, 2: False, 3: False}
-
-
 def test_importance_empty_target_selects_nothing(spark, documents):
     """DSIR with an empty target corpus must select zero documents —
     the degenerate cross-multiplication (0 >= 0) would otherwise select
@@ -510,25 +333,6 @@ def test_importance_empty_target_selects_nothing(spark, documents):
     empty = documents.where("doc_id < 0").select("doc_id", "text")
     out = importance_weights(documents.limit(20), empty, n=2)
     assert out.where("selected").count() == 0
-
-
-def test_bloom_probe_duplicate_candidate_ids(spark):
-    """A candidate id appearing on multiple input rows must not flip a
-    definitely-seen key to probably_seen=false (sum(hit)==k breaks on
-    duplicates; the aggregation is min-based and duplicate-invariant)."""
-    from ocr_project_spark.bloomset import bloom_build, bloom_probe
-
-    seen = spark.createDataFrame([("alpha",)], ["key"])
-    bloom = bloom_build(seen)
-    cands = spark.createDataFrame(
-        [(1, "alpha"), (1, "alpha"), (2, "alpha"), (3, "nope")],
-        "doc_id long, key string",
-    )
-    got = {
-        r["doc_id"]: r["probably_seen"]
-        for r in bloom_probe(cands, bloom).collect()
-    }
-    assert got == {1: True, 2: True, 3: False}
 
 
 def test_canonical_url_strips_port_before_query(spark):
@@ -553,12 +357,3 @@ def test_canonical_url_strips_port_before_query(spark):
         "https://example.com?x=1",
         "https://example.com:8443/a",
     ]
-
-
-def test_bloom_merge_requires_a_filter():
-    import pytest
-
-    from ocr_project_spark.bloomset import bloom_merge
-
-    with pytest.raises(ValueError, match="at least one filter"):
-        bloom_merge()
