@@ -920,37 +920,18 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_media_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image decode across BOTH implemented codecs in one codec-tagged
-    row set (registry consolidation: the round-4 `media_png`+`media_jpeg`
-    rows merged, neither dropped).
-
-    PNG rows: payloads are synthesized PNGs (gray/RGB alternating, all five
-    scanline filters cycling) whose dimensions and pixel values are pure
-    integer functions of the doc id, so the oracle predicts
-    width/height/Σpixels with plain SQL while the engine earns them by
-    actually inflating and unfiltering the PNG bytes (multimodal.decode_png)
-    — including the planted corrupt-IDAT rows (id % 31 = 7) that must
-    surface as `corrupt`, never dead batches.
-
-    JPEG rows: synthesized block-constant grayscale JPEGs whose decode is
-    mathematically LOSSLESS (DC-only blocks, DC quantizer divides the DC
-    coefficient exactly — multimodal.synthesize_jpeg_media), so the oracle
-    predicts the decode output with integer arithmetic while the engine
-    earns it by real marker walk + Huffman decode + dequantization + IDCT
-    (jpegcodec.decode_jpeg). Lossy-path accuracy bounds and the
-    spec-table/zigzag/IDCT anchors live in pytest."""
-    from ocr_project_spark.multimodal import (
-        image_pixel_stats,
-        synthesize_jpeg_media,
-        synthesize_png_media,
-    )
+    """REAL PNG decode, codec-tagged: payloads are synthesized PNGs
+    (gray/RGB alternating, all five scanline filters cycling) whose
+    dimensions and pixel values are pure integer functions of the doc id,
+    so the oracle predicts width/height/Σpixels with plain SQL while the
+    engine earns them by actually inflating and unfiltering the PNG bytes
+    (multimodal.decode_png) — including the planted corrupt-IDAT rows
+    (id % 31 = 7) that must surface as `corrupt`, never dead batches."""
+    from ocr_project_spark.multimodal import image_pixel_stats, synthesize_png_media
 
     docs = _docs(spark, sf_dir)
     png = image_pixel_stats(synthesize_png_media(docs), decode="strict")
-    jpeg = image_pixel_stats(synthesize_jpeg_media(docs), decode="strict")
-    return png.withColumn("codec", F.lit("png")).unionByName(
-        jpeg.withColumn("codec", F.lit("jpeg"))
-    )
+    return png.withColumn("codec", F.lit("png"))
 
 
 def q_media_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -978,9 +959,8 @@ def q_media_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc quality profile in ONE row set (round-5 merge of the
-    text_quality and gopher_gate queries, freeing the registry slot for
-    streaming_near_dup without dropping any operator from coverage):
-    quality_scores + the quality_gate verdict + both token counters
+    text_quality and gopher_gate queries, dropping no operator from
+    coverage): quality_scores + the quality_gate verdict + both token counters
     (subsuming round 3's text_token_counts) joined with the Gopher-rules
     gate features/verdict (gopher_gate(emit_all=True)) and the
     within-document repetition signals (repetition_signals). The gopher
@@ -1015,77 +995,6 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(gopher, "doc_id")
         .join(rep, "doc_id")
     )
-
-
-def q_streaming_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch-replay oracle for the incremental cross-batch near-dup index
-    (streaming/incremental.py near_dup_stream — previously the only
-    pytest-only family): the planted-dup corpus lands as FOUR deterministic
-    shards, each drained by its own availableNow micro-batch run against
-    the accumulated bucketed index, at the SAME LSH configuration as the
-    batch dedup_minhash query (3-gram shingles, 128 hashes / 32 bands,
-    threshold 0.8). The shard key offsets each planted variant family
-    (base / +100000 exact copy / +200000 near-dup) into a DIFFERENT batch,
-    so every planted pair is found via the cross-batch index join, not
-    within one batch. The union of per-batch pair emissions must equal the
-    exact all-pairs 3-gram-Jaccard SQL closure — the same oracle
-    dedup_minhash passes — because a pair (a, b) is emitted exactly when
-    its later member's batch joins the index that already holds the
-    earlier member's band rows, and LSH candidate recall ≈ 1 at 128/32
-    for j ≥ 0.8. Streaming verification runs over xxhash64 shingle-hash
-    arrays, the SQL over shingle strings — set sizes coincide absent a
-    64-bit collision, making the jaccard doubles bit-identical."""
-    import os
-    import re
-    import shutil
-    import tempfile
-
-    from ocr_project_spark.streaming.incremental import near_dup_stream
-
-    corpus = _dedup_corpus_de(spark, sf_dir).select("doc_id", "text", "lang")
-    work = tempfile.mkdtemp(prefix="stream_nd_")
-    inp = os.path.join(work, "docs")
-    pairs_out = os.path.join(work, "pairs")
-    ckpt = os.path.join(work, "ckpt")
-    # the whole basename, so the tempfile suffix (whose alphabet includes
-    # "_") keeps all its characters in the catalog table name
-    idx = "nd_q_" + re.sub(r"[^a-z0-9]", "", os.path.basename(work).lower())
-    # variant family (doc_id // 100000) shifts the shard so copies of one
-    # base doc land in different micro-batches → genuinely cross-batch pairs
-    shard = F.pmod(F.col("doc_id") + F.floor(F.col("doc_id") / 100000), F.lit(4))
-    try:
-        for s in range(4):
-            corpus.where(shard == s).coalesce(1).write.mode("append").parquet(inp)
-            q = near_dup_stream(
-                spark,
-                inp,
-                idx,
-                pairs_out,
-                ckpt,
-                threshold=0.8,
-                n=3,
-                num_hashes=128,
-                bands=32,
-            )
-            # bounded wait: a wedged micro-batch must fail THIS query's row,
-            # never hang the whole correctness run
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError(f"streaming micro-batch {s} did not drain in 600s")
-        pairs = (
-            spark.read.parquet(pairs_out)
-            .select("id_a", "id_b", "jaccard")
-            .dropDuplicates(["id_a", "id_b"])
-            .localCheckpoint()  # eager: severs lineage from every temp file below
-        )
-    finally:
-        wh = spark.conf.get("spark.sql.warehouse.dir", "").replace("file:", "")
-        for t in (f"{idx}_bands", f"{idx}_hashes"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            if wh:
-                shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
-        shutil.rmtree(work, ignore_errors=True)
-    return pairs
 
 
 def q_quality_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1419,7 +1328,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     coverage."""
     return {
         # --- changed or added this round / round 3 tail ---
-        "streaming_near_dup": q_streaming_near_dup,
         "text_quality": q_text_quality,
         "recrawl_ops": q_recrawl_ops,
         "warc_sinks": q_warc_sinks,
@@ -1969,11 +1877,6 @@ def oracle_sql() -> dict[str, str]:
         """,
         # fake audio features: every number derives from sha256 digest
         # byte ranges, replayed here from the hex nibbles
-        # media_jpeg: the engine Huffman-decodes + dequantizes + IDCTs real
-        # baseline JPEG bytes; block-constant grayscale with DC quantizer 8
-        # makes the decode exact, so the oracle predicts the sums from the
-        # planted block formula (w ≤ 56 → bx ≤ 6, h ≤ 48 → by ≤ 5; each
-        # block contributes 64·v, grayscale replicates ×3 channels)
         # link_graph: the engine harvests real <a href> bytes from the html
         # payloads; the oracle rebuilds the identical host graph from
         # doc_id arithmetic (outlinks target doc_id + 7·i, hosts are pure
@@ -2096,31 +1999,15 @@ def oracle_sql() -> dict[str, str]:
                    CAST(ROUND(r3.rank * 1e6) AS BIGINT) AS pagerank_micro
             FROM deg JOIN r3 ON r3.host = deg.host
         """,
-        # media_codecs (png ∪ jpeg, codec-tagged): the engine decodes real
-        # PNG bytes (inflate + unfilter; ids with id % 31 = 7 carry a
+        # media_codecs (png, codec-tagged): the engine decodes real PNG
+        # bytes (inflate + unfilter; ids with id % 31 = 7 carry a
         # structurally valid PNG with a truncated IDAT — must surface as
-        # `corrupt` rows, never dead batches) and real lossless baseline
-        # JPEGs (marker walk + Huffman + dequant + IDCT); the oracle
-        # predicts both decodes from the planted-pixel formulas (see
-        # multimodal.synthesize_png_media / synthesize_jpeg_media). Static
-        # series bounds match the synthesis ranges.
+        # `corrupt` rows, never dead batches); the oracle predicts the
+        # decode from the planted-pixel formula (see
+        # multimodal.synthesize_png_media). Static series bounds match the
+        # synthesis ranges.
         "media_codecs": """
-            WITH jids AS (
-                SELECT doc_id AS media_id,
-                       16 + 8 * (doc_id % 6) AS w,
-                       16 + 8 * ((doc_id // 7) % 5) AS h
-                FROM documents
-            ),
-            bxs AS (SELECT g AS bx FROM generate_series(0, 6) t(g)),
-            bys AS (SELECT g AS by FROM generate_series(0, 5) t(g)),
-            jsums AS (
-                SELECT i.media_id,
-                       SUM((i.media_id + 3 * bx + 5 * by) % 256) * 64 AS s
-                FROM jids i, bxs, bys
-                WHERE bxs.bx < i.w // 8 AND bys.by < i.h // 8
-                GROUP BY i.media_id
-            ),
-            ids AS (
+            WITH ids AS (
                 SELECT doc_id AS media_id,
                        16 + doc_id % 48 AS w,
                        12 + (doc_id // 7) % 36 AS h
@@ -2150,14 +2037,6 @@ def oracle_sql() -> dict[str, str]:
                    i.media_id % 31 = 7 AS corrupt,
                    'png' AS codec
             FROM ids i JOIN sums s USING (media_id)
-            UNION ALL
-            SELECT i.media_id,
-                   CAST(i.w AS BIGINT) AS width,
-                   CAST(i.h AS BIGINT) AS height,
-                   CAST(3 * s.s AS BIGINT) AS pixel_sum,
-                   FALSE AS corrupt,
-                   'jpeg' AS codec
-            FROM jids i JOIN jsums s USING (media_id)
         """,
         "media_audio": f"""
             WITH h AS (
@@ -2277,10 +2156,6 @@ def oracle_sql() -> dict[str, str]:
             JOIN wstat ON f.doc_id = wstat.doc_id
             LEFT JOIN dup ON f.doc_id = dup.doc_id
         """,
-        # streaming_near_dup: the cross-batch incremental LSH index must
-        # reproduce the batch closure — the exact all-pairs 3-gram-Jaccard
-        # set over the same planted corpus (LSH recall ≈ 1 at 128/32)
-        "streaming_near_dup": _JACCARD_DE_SQL,
         # WET round-trip: the parsed-back record set equals ground truth
         # (url derivation identical to url_canonical's)
         # warc_sinks: WET rows are the byte-identity ground truth; WAT rows

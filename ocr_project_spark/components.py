@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from ocr_project_spark.session import release_checkpoint
 
-EDGE_SCHEMA = "src long, dst long"
 COMPONENT_SCHEMA = "doc_id long, cluster_id long"
 
 

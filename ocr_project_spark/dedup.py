@@ -23,7 +23,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 MINHASH_SEED = 0x5EED
-SIMHASH_SEED = 0xCAFE
 
 NEAR_DUP_MARKER = "zzznear"
 EXACT_DUP_OFFSET = 100_000

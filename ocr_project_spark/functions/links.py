@@ -54,8 +54,6 @@ _HREF_PATTERNS = (
     r"(?i)<a\s(?:[^>]*?\s)?href\s*=\s*'(https?://[^'\s>]+)",
     r"(?i)<a\s(?:[^>]*?\s)?href\s*=\s*(https?://[^\"'\s>]+)",
 )
-# retained name for callers/tests that reference the double-quote form
-_HREF_PATTERN = _HREF_PATTERNS[0]
 
 
 def extract_outlinks(

@@ -101,7 +101,6 @@ VALID_MODES = (MODE_GROUNDING, MODE_FREE, MODE_LOCATE)
 # with and without it.
 PROMPT_IMAGE_TOKEN = "<image>\n"
 PROMPT_GROUNDING_MARKER = "<|grounding|>"  # config.py:27,30-31
-PROMPT_FREE = "Free OCR."  # config.py:28,32
 # config.py:36 'rec' template: Locate <|ref|>xxxx<|/ref|> in the image.
 _LOCATE_PATTERN = re.compile(
     r"^Locate <\|ref\|>(.*)<\|/ref\|> in the image\.$", re.DOTALL

@@ -6,13 +6,13 @@ bytes stay in the DataFrame, no temp files — SURVEY §2.1 S3). The Spark-side
 plumbing — schemas, Arrow batch shapes, ``mapInPandas`` signatures,
 partitioning behavior — is real and tested. Decode has three tiers:
 
-- binary netpbm (P6 RGB / P5 gray), 8-bit non-interlaced PNG, baseline
-  sequential JPEG (jpegcodec.py), RIFF/WAVE PCM audio, and YUV4MPEG2 video
-  decode FOR REAL in ``decode=\"strict\"`` mode — stdlib + numpy only, no
-  codec library needed — feeding genuine dimensions/pixels/samples;
-- the remaining codec formats (WebP/AVIF/GIF, compressed audio, mp4) raise
-  NotImplementedError in strict mode (the honest production posture until
-  a codec dependency lands on the executors);
+- binary netpbm (P6 RGB / P5 gray), 8-bit non-interlaced PNG, RIFF/WAVE
+  PCM audio, and YUV4MPEG2 video decode FOR REAL in ``decode=\"strict\"``
+  mode — stdlib + numpy only, no codec library needed — feeding genuine
+  dimensions/pixels/samples;
+- the remaining codec formats (JPEG/WebP/AVIF/GIF, compressed audio, mp4)
+  raise NotImplementedError in strict mode (the honest production posture
+  until a codec dependency lands on the executors);
 - ``decode=\"fake\"`` is a deterministic pure function of the payload bytes
   (stable across executors/runs), which keeps every downstream operator —
   feature extraction, resize bookkeeping, frame sampling, dedup joins —
@@ -316,27 +316,20 @@ def encode_png(
     )
 
 
-JPEG_MAGIC = b"\xff\xd8"
-
-
 def decode_image(payload: bytes) -> np.ndarray:
-    """Strict-mode image decode dispatch: binary netpbm, PNG, or baseline
-    JPEG → (h, w, 3) uint8. Raises NotImplementedError for the remaining
-    codec-requiring formats (WebP/AVIF/GIF/TIFF) — the shared gate for
+    """Strict-mode image decode dispatch: binary netpbm or PNG → (h, w, 3)
+    uint8. Raises NotImplementedError for the codec-requiring formats
+    (JPEG/WebP/AVIF/GIF/TIFF) — the shared gate for
     image_features/image_tiles/image_pixel_stats."""
     if payload[:2] in (PPM_MAGIC, PGM_MAGIC):
         return decode_netpbm(payload)
     if payload[:8] == PNG_MAGIC:
         return decode_png(payload)
-    if payload[:2] == JPEG_MAGIC:
-        from ocr_project_spark.jpegcodec import decode_jpeg
-
-        return decode_jpeg(payload)
     raise NotImplementedError(
         "this payload format requires a codec library on the executors "
-        "(none in this environment); binary netpbm (P5/P6), 8-bit "
-        "non-interlaced PNG, and baseline sequential JPEG decode "
-        "natively, or use decode='fake' for the deterministic stand-in"
+        "(none in this environment); binary netpbm (P5/P6) and 8-bit "
+        "non-interlaced PNG decode natively, or use decode='fake' for the "
+        "deterministic stand-in"
     )
 
 
@@ -1001,42 +994,6 @@ def synthesize_png_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 if i % 31 == 7:
                     payload = corrupt_png_idat(payload)
                 rows.append({"media_id": i, "payload": payload})
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return ids.select(id_col).mapInPandas(
-        _batches, schema="media_id long, payload binary"
-    )
-
-
-def synthesize_jpeg_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic baseline-JPEG fixture payloads from an id column:
-    BLOCK-CONSTANT grayscale images (w = 16 + 8·(id%6), h = 16 +
-    8·((id//7)%5), every 8×8 block filled with (id + 3·bx + 5·by) mod 256).
-    A constant block has only a DC coefficient, and the fixture quant
-    table's DC quantizer (8) divides 8·(v−128) exactly — so the REAL
-    Huffman + dequantization + IDCT decode is mathematically lossless on
-    these payloads and a SQL oracle predicts width/height/Σpixels with
-    integer arithmetic (the ``media_jpeg`` driver query). Lossy behavior
-    on general images is bounded in pytest; exactness here is what makes
-    the codec differentially checkable without a reference library."""
-    from ocr_project_spark.jpegcodec import encode_jpeg
-
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for raw_id in pdf[id_col]:
-                i = int(raw_id)
-                w = 16 + 8 * (i % 6)
-                h = 16 + 8 * ((i // 7) % 5)
-                img = np.zeros((h, w, 3), dtype=np.uint8)
-                for by in range(h // 8):
-                    for bx in range(w // 8):
-                        img[
-                            by * 8 : (by + 1) * 8, bx * 8 : (bx + 1) * 8, :
-                        ] = (i + 3 * bx + 5 * by) % 256
-                rows.append(
-                    {"media_id": i, "payload": encode_jpeg(img, gray=True)}
-                )
             yield pd.DataFrame(rows, columns=["media_id", "payload"])
 
     return ids.select(id_col).mapInPandas(

@@ -203,47 +203,6 @@ def test_y4m_roundtrip_property(w, h, n_frames, num, den, seed):
         assert np.array_equal(luma, orig)
 
 
-@settings(max_examples=40, deadline=None)
-@given(
-    bw=st.integers(min_value=1, max_value=5),
-    bh=st.integers(min_value=1, max_value=4),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-    mode=st.sampled_from(["gray", "444", "420", "422"]),
-    restart=st.sampled_from([0, 1, 3]),
-)
-def test_jpeg_unit_quant_roundtrip_property(bw, bh, seed, mode, restart):
-    """decode(encode(img, unit quant)) stays within the documented
-    rounding bounds for arbitrary pixel content, MCU-aligned dimensions,
-    every sampling mode, and restart-marker intervals — the Huffman /
-    DCT / upsampling paths hold everywhere, not just on the gradient
-    fixtures. Subsampled modes use channel-equal pixels (constant chroma)
-    so chroma averaging is lossless and the bound stays tight."""
-    import numpy as np
-
-    from ocr_project_spark.jpegcodec import decode_jpeg, encode_jpeg
-
-    align = 16 if mode in ("420", "422") else 8
-    w = bw * align
-    h = bh * (16 if mode == "420" else 8)
-    rng = np.random.default_rng(seed)
-    img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-    if mode != "444":
-        img = img[:, :, :1].repeat(3, axis=2)  # constant chroma / gray
-    q1 = np.ones((8, 8), dtype=np.int64)
-    payload = encode_jpeg(
-        img,
-        gray=(mode == "gray"),
-        subsample=mode if mode in ("420", "422") else False,
-        quant=q1,
-        restart_interval=restart,
-    )
-    out = decode_jpeg(payload)
-    assert out.shape == img.shape
-    bound = 3 if mode == "444" else 2
-    err = np.abs(out.astype(int) - img.astype(int)).max()
-    assert err <= bound, (mode, err)
-
-
 # ---------------------------------------------------------------------------
 # adversarial HTML fuzz (round-5 verdict item 6): the byte-identity core's
 # paging bug (commit de853e0) lived undetected since round 1 because the

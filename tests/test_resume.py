@@ -89,6 +89,21 @@ def test_run_job_crash_rerun_noop(spark, pages, tmp_path):
     assert dict(resumed) == dict(clean)
 
 
+def test_lineage_store_schema_is_lineage_schema_plus_run_id(spark, pages, tmp_path):
+    """The lineage store holds exactly ``contract.LINEAGE_SCHEMA`` plus the
+    run stamp: same field names, order and types."""
+    from pyspark.sql import types as T
+
+    from ocr_project_spark.contract import LINEAGE_SCHEMA
+
+    lineage_path = str(tmp_path / "lineage")
+    subset = pages.where(F.xxhash64("url") % 8 == 0)
+    run_job(spark, subset, str(tmp_path / "results"), lineage_path)
+    stored = spark.read.parquet(lineage_path).schema
+    want = [(f.name, f.dataType) for f in LINEAGE_SCHEMA] + [("run_id", T.LongType())]
+    assert [(f.name, f.dataType) for f in stored] == want
+
+
 def test_results_store_dictionary_encodes_only_low_cardinality_columns(
     spark, pages, tmp_path
 ):

@@ -718,3 +718,41 @@ def test_importance_weights_empty_target_weight_is_zero(spark):
     empty = docs.where("doc_id < 0")
     rows = importance_weights(docs, empty).select("doc_id", "weight").collect()
     assert rows[0]["weight"] == 0.0
+
+
+def test_stateless_curation_ops_compose_with_streams(spark, documents, tmp_path):
+    """The shuffle-free curation projections (redact_pii here) are valid
+    Structured Streaming transformations as-is: readStream → redact_pii →
+    availableNow parquet sink equals the batch result, and a second
+    invocation with the same checkpoint reprocesses nothing."""
+    from ocr_project_spark.textops import redact_pii
+
+    inp = str(tmp_path / "segments")
+    out = str(tmp_path / "redacted")
+    ckpt = str(tmp_path / "ckpt")
+
+    docs = documents.select("doc_id", "text").where("doc_id < 200")
+    docs.coalesce(1).write.mode("append").parquet(inp)
+
+    stream = spark.readStream.schema("doc_id long, text string").parquet(inp)
+    q = (
+        redact_pii(stream)
+        .writeStream.trigger(availableNow=True)
+        .option("checkpointLocation", ckpt)
+        .start(out)
+    )
+    q.awaitTermination(120)
+    got = spark.read.parquet(out)
+    want = redact_pii(docs)
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0
+
+    # same checkpoint, no new segments -> nothing reprocessed
+    q = (
+        redact_pii(stream)
+        .writeStream.trigger(availableNow=True)
+        .option("checkpointLocation", ckpt)
+        .start(out)
+    )
+    q.awaitTermination(120)
+    assert spark.read.parquet(out).count() == want.count()
