@@ -20,9 +20,9 @@ hash), making the expected answer exact SQL; corpus_percentiles is exact
 because the GK sketch is exact below its accuracy bound. The round-3
 cluster queries (dedup_minhash_components) replay connected components
 with a recursive-CTE transitive closure over the exact-jaccard pair set;
-media_png / media_video predict the REAL PNG/Y4M decodes from planted pixel
-formulas; warc_sinks closes the loop extraction → WET/WAT sinks → WARC
-parse against ground truth, byte-for-byte.
+media_video predicts the REAL Y4M decode from planted pixel formulas;
+warc_sinks closes the loop extraction → WET/WAT sinks → WARC parse against
+ground truth, byte-for-byte.
 """
 
 from __future__ import annotations
@@ -898,65 +898,6 @@ def q_media_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampled.unionByName(y4m)
 
 
-def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal image-feature pass (fake decode): dimensions derive from
-    the payload's sha256 digest, so width/height/content-hash are
-    SQL-replayable; the tile plan + feature vector are golden-tested in
-    pytest (the ratio-search is not reasonably SQL-expressible)."""
-    from ocr_project_spark.multimodal import image_features
-
-    docs = _docs(spark, sf_dir)
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "utf-8").alias("payload"),
-    )
-    out = image_features(media, decode="fake")
-    return out.select(
-        "media_id",
-        F.col("width").cast("long").alias("width"),
-        F.col("height").cast("long").alias("height"),
-        "sha256",
-    )
-
-
-def q_media_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL PNG decode, codec-tagged: payloads are synthesized PNGs
-    (gray/RGB alternating, all five scanline filters cycling) whose
-    dimensions and pixel values are pure integer functions of the doc id,
-    so the oracle predicts width/height/Σpixels with plain SQL while the
-    engine earns them by actually inflating and unfiltering the PNG bytes
-    (multimodal.decode_png) — including the planted corrupt-IDAT rows
-    (id % 31 = 7) that must surface as `corrupt`, never dead batches."""
-    from ocr_project_spark.multimodal import image_pixel_stats, synthesize_png_media
-
-    docs = _docs(spark, sf_dir)
-    png = image_pixel_stats(synthesize_png_media(docs), decode="strict")
-    return png.withColumn("codec", F.lit("png"))
-
-
-def q_media_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio-feature plumbing on the deterministic fake path (the real WAV
-    decode is pytest-covered — binary WAV payloads are not constructible in
-    SQL): every output is a pure function of sha256(payload), replayed by
-    the oracle from the digest's hex nibbles."""
-    from ocr_project_spark.multimodal import audio_features
-
-    docs = _docs(spark, sf_dir)
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "utf-8").alias("payload"),
-    )
-    out = audio_features(media, decode="fake")
-    return out.select(
-        "media_id",
-        F.col("sample_rate").cast("long").alias("sample_rate"),
-        "n_samples",
-        "duration_ms",
-        "rms_x1000",
-        "zero_crossings",
-    )
-
-
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc quality profile in ONE row set (round-5 merge of the
     text_quality and gopher_gate queries, dropping no operator from
@@ -1332,7 +1273,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "recrawl_ops": q_recrawl_ops,
         "warc_sinks": q_warc_sinks,
         "link_graph": q_link_graph,
-        "media_codecs": q_media_codecs,
         "c4_clean": q_c4_clean,
         "text_normalize": q_text_normalize,
         "dsir_select": q_dsir_select,
@@ -1371,9 +1311,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_repeated_ngrams": q_dedup_repeated_ngrams,
         "dedup_span_removal": q_dedup_span_removal,
         "dedup_simhash": q_dedup_simhash,
-        # --- multimodal ---
-        "media_features": q_media_features,
-        "media_audio": q_media_audio,
     }
 
 
@@ -1875,8 +1812,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(i.w AS BIGINT), CAST(i.h AS BIGINT), CAST(s.s AS BIGINT)
             FROM ids i JOIN sums s USING (media_id)
         """,
-        # fake audio features: every number derives from sha256 digest
-        # byte ranges, replayed here from the hex nibbles
         # link_graph: the engine harvests real <a href> bytes from the html
         # payloads; the oracle rebuilds the identical host graph from
         # doc_id arithmetic (outlinks target doc_id + 7·i, hosts are pure
@@ -1998,79 +1933,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(deg.n_inlinks AS BIGINT) AS n_inlinks,
                    CAST(ROUND(r3.rank * 1e6) AS BIGINT) AS pagerank_micro
             FROM deg JOIN r3 ON r3.host = deg.host
-        """,
-        # media_codecs (png, codec-tagged): the engine decodes real PNG
-        # bytes (inflate + unfilter; ids with id % 31 = 7 carry a
-        # structurally valid PNG with a truncated IDAT — must surface as
-        # `corrupt` rows, never dead batches); the oracle predicts the
-        # decode from the planted-pixel formula (see
-        # multimodal.synthesize_png_media). Static series bounds match the
-        # synthesis ranges.
-        "media_codecs": """
-            WITH ids AS (
-                SELECT doc_id AS media_id,
-                       16 + doc_id % 48 AS w,
-                       12 + (doc_id // 7) % 36 AS h
-                FROM documents
-            ),
-            xs AS (SELECT g AS x FROM generate_series(0, 63) t(g)),
-            ys AS (SELECT g AS y FROM generate_series(0, 47) t(g)),
-            sums AS (
-                SELECT i.media_id,
-                       SUM((i.media_id + x + 2 * y) % 256) AS s1,
-                       SUM((i.media_id + x + 2 * y) % 256
-                           + (i.media_id + x + 2 * y + 85) % 256
-                           + (i.media_id + x + 2 * y + 170) % 256) AS s3
-                FROM ids i, xs, ys
-                WHERE xs.x < i.w AND ys.y < i.h
-                GROUP BY i.media_id
-            )
-            SELECT i.media_id,
-                   CAST(CASE WHEN i.media_id % 31 = 7 THEN 0 ELSE i.w END
-                        AS BIGINT) AS width,
-                   CAST(CASE WHEN i.media_id % 31 = 7 THEN 0 ELSE i.h END
-                        AS BIGINT) AS height,
-                   CAST(CASE WHEN i.media_id % 31 = 7 THEN 0
-                             WHEN i.media_id % 2 = 0 THEN 3 * s.s1
-                             ELSE s.s3 END
-                        AS BIGINT) AS pixel_sum,
-                   i.media_id % 31 = 7 AS corrupt,
-                   'png' AS codec
-            FROM ids i JOIN sums s USING (media_id)
-        """,
-        "media_audio": f"""
-            WITH h AS (
-                SELECT doc_id AS media_id, sha256(text) AS hx FROM documents
-            ),
-            v AS (
-                SELECT media_id,
-                       8000 + ({_hex_int('hx', 1, 4)}) % 40000 AS sample_rate,
-                       1000 + ({_hex_int('hx', 5, 6)}) % 100000 AS n_samples,
-                       ({_hex_int('hx', 11, 4)}) % 1000 AS rms_x1000,
-                       ({_hex_int('hx', 15, 6)}) AS zc_raw
-                FROM h
-            )
-            SELECT media_id,
-                   CAST(sample_rate AS BIGINT) AS sample_rate,
-                   CAST(n_samples AS BIGINT) AS n_samples,
-                   CAST(n_samples * 1000 // sample_rate AS BIGINT)
-                       AS duration_ms,
-                   CAST(rms_x1000 AS BIGINT) AS rms_x1000,
-                   CAST(zc_raw % n_samples AS BIGINT) AS zero_crossings
-            FROM v
-        """,
-        # fake decode dims = 320 + (digest hex nibbles as int) % 1600
-        "media_features": f"""
-            WITH h AS (
-                SELECT doc_id AS media_id, sha256(text) AS hx FROM documents
-            )
-            SELECT media_id,
-                   CAST(320 + ({_hex_int('hx', 1)}) % 1600 AS BIGINT)
-                       AS width,
-                   CAST(320 + ({_hex_int('hx', 5)}) % 1600 AS BIGINT)
-                       AS height,
-                   hx AS sha256
-            FROM h
         """,
         # text_quality: scores + the gate verdict as a CASE over the same
         # integer-scaled features (quality_scores ∘ quality_gate in one row)

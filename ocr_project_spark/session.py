@@ -26,6 +26,10 @@ dirs) are kept, not replaced. It only takes effect when this factory
 launches the JVM, i.e. under ``python``; under ``spark-submit`` the JVM is
 already running when the builder runs, so pass
 ``--driver-java-options -XX:TieredStopAtLevel=1`` there.
+
+The console progress bar is off: its ``[Stage N:>`` redraws share stdout
+with the jobs' printed counts and ``check_oracles.py``'s per-query lines,
+and run into them.
 """
 
 from __future__ import annotations
@@ -54,6 +58,7 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
         .config("spark.driver.defaultJavaOptions", DRIVER_JAVA_OPTIONS)
     )

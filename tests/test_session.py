@@ -1,4 +1,4 @@
-"""The session factory's driver JVM options."""
+"""The session factory's driver options."""
 
 from __future__ import annotations
 
@@ -23,3 +23,13 @@ def test_factory_sets_default_not_extra_java_options(monkeypatch):
     opts = build_session()
     assert opts["spark.driver.defaultJavaOptions"] == "-XX:TieredStopAtLevel=1"
     assert "spark.driver.extraJavaOptions" not in opts
+
+
+def test_factory_turns_off_console_progress(monkeypatch):
+    """No ``[Stage N:>`` bar between the lines a job or script prints."""
+    from ocr_project_spark.session import build_session
+
+    monkeypatch.setattr(
+        SparkSession.Builder, "getOrCreate", lambda self: dict(self._options)
+    )
+    assert build_session()["spark.ui.showConsoleProgress"] == "false"
