@@ -1263,10 +1263,13 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Registry ordered most-recently-changed first (the round-3 verdict:
     the driver records the first 50 rows, so anything that could fall off a
-    window must be a long-stable query, never one that changed this round)
-    and consolidated to ≤50 entries by merging operator pairs that
-    naturally compose (profile joins), without dropping any operator from
-    coverage."""
+    window must be a long-stable query, never one that changed this round),
+    with operator pairs that naturally compose (profile joins) merged into
+    one entry. It covers the operators that a job, CLI or benchmark
+    reaches, plus ``media_video``, the last family none of them reaches.
+    tests/test_entry_registry.py keeps it whole: every query has
+    its oracle and ``q_`` function, and no package module is reached from
+    the tests alone."""
     return {
         # --- changed or added this round / round 3 tail ---
         "text_quality": q_text_quality,

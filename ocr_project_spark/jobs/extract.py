@@ -11,7 +11,7 @@ Under spark-submit the driver JVM is already running when build_session()
 runs, so its C1-tier flag (see session.py) is passed on the command line.
 
 The job is the SURVEY §3.1 plan: read pages → validate/dispatch → anti-join
-against already-written results (resume) → url-hash repartition →
+against already-written results (resume) → url-hash rebalance →
 Arrow-batch extraction → append results + append lineage. Re-running
 after a crash extracts only missing urls (see operators/resume.py).
 
@@ -37,7 +37,15 @@ def parse_args(argv=None):
     p.add_argument("--replicate", type=int, default=1)
     p.add_argument("--results", required=True, help="results output path")
     p.add_argument("--lineage", help="lineage output path")
-    p.add_argument("--num-partitions", type=int, default=None)
+    p.add_argument(
+        "--num-partitions",
+        type=int,
+        default=None,
+        help="url-hash bucket count of the extraction; an upper bound on "
+        "the extraction tasks, as AQE packs small buckets into one task "
+        "(default: keep the input partitioning); with --synthesize-sf-dir "
+        "also the synthesized table's partition count",
+    )
     p.add_argument("--master", default=None)
     p.add_argument(
         "--wet",

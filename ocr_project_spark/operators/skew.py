@@ -3,13 +3,18 @@
 At 10^12 documents, host-level skew is the dominant hazard: one hot domain
 can hold millions of pages. Two distinct mechanisms defuse it:
 
-1. **Row placement** (`salted_repartition`): partitions are assigned by
-   ``xxhash64(url)`` — urls are unique, so placement is uniform by
-   construction and a hot host's pages spread across *all* partitions (this
+1. **Row placement** (`url_hash_rebalance`): rows go into url-hash buckets
+   by ``xxhash64(url)`` — urls are unique, so placement is uniform by
+   construction and a hot host's pages spread across *all* buckets (this
    is the salting effect the north rule's "bucketed by url-hash with salted
    repartitioning" asks for at the extraction stage: no executor ever owns a
-   whole domain). Placement is a pure function of (url, num_partitions), so
-   re-runs place every url identically — required for resume determinism.
+   whole domain). Bucket placement is a pure function of (url,
+   num_buckets), so re-runs place every url identically — required for
+   resume determinism. The exchange is a rebalance, so AQE packs adjacent
+   small buckets into one task and splits an oversized one: the bucket
+   count is an upper bound on tasks, and an append runs as many tasks as
+   its bytes need. With AQE off every bucket is its own partition.
+   `salted_repartition` is the same placement as a fixed-N exchange.
    An earlier design bucketed by ``xxhash64(host)``; with far fewer distinct
    hosts than partitions that *creates* stragglers (measured 4× slowdown at
    local[32] on the synthetic corpus) — keys must outnumber partitions.
@@ -81,6 +86,23 @@ def salted_repartition(
     to the multinomial limit regardless of host skew, and every url lands on
     the same partition across re-runs (resume determinism)."""
     return df.repartition(num_partitions, F.xxhash64(F.col(url_col)))
+
+
+def url_hash_rebalance(
+    df: DataFrame, num_buckets: int, url_col: str = "url"
+) -> DataFrame:
+    """Rebalance into ``num_buckets`` deterministic url-hash buckets.
+
+    The same bucket placement as :func:`salted_repartition`, but through a
+    ``REBALANCE_PARTITIONS_BY_COL`` exchange, which AQE may coalesce or
+    split: tasks ≤ buckets, sized by bytes. The hint takes column names,
+    not expressions, hence the helper column; it is dropped before any
+    consumer sees the rows."""
+    return (
+        df.withColumn("__bucket", F.xxhash64(F.col(url_col)))
+        .hint("rebalance", num_buckets, "__bucket")
+        .drop("__bucket")
+    )
 
 
 def host_salt(

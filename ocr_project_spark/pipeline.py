@@ -1,10 +1,10 @@
 """End-to-end extraction pipeline (SURVEY §3.1 "Spark rebuild" plan):
 
-    read pages → validate/dispatch → anti-join resume → salted repartition
+    read pages → validate/dispatch → anti-join resume → url-hash rebalance
     → mapInPandas extraction → results + lineage sinks
 
 One logical plan; Catalyst handles staging. The only shuffles are the
-(optional) salted repartition and the resume anti-join — extraction itself
+(optional) url-hash rebalance and the resume anti-join — extraction itself
 is narrow and the lineage aggregation is a partial-agg-friendly groupBy.
 The results append runs in the same stage as the extraction, and its
 parquet writer dictionary-encodes only the low-cardinality columns
@@ -22,7 +22,7 @@ from ocr_project_spark.operators.resume import (
     read_parquet_if_exists,
     resume_filter,
 )
-from ocr_project_spark.operators.skew import salted_repartition
+from ocr_project_spark.operators.skew import url_hash_rebalance
 
 # Half-open circuit-breaker probe: while a backend's breaker is open, urls
 # with crc32(url) % HALF_OPEN_PROBE_MOD == 0 (a deterministic ~1/16 sample,
@@ -54,10 +54,12 @@ def run_extraction(
     model_loaded: dict | None = None,
 ) -> DataFrame:
     """pages → unified results DataFrame (lazy; caller writes/aggregates).
-    ``num_partitions`` salts and url-hash repartitions the pages first;
-    without it the input partitioning is kept."""
+    ``num_partitions`` first rebalances the pages into that many url-hash
+    buckets (``operators/skew.url_hash_rebalance``): an upper bound on the
+    extraction tasks, since AQE packs small buckets into one task. Without
+    it the input partitioning is kept."""
     if num_partitions:
-        pages = salted_repartition(pages, num_partitions)
+        pages = url_hash_rebalance(pages, num_partitions)
     return extract_documents(pages, model_loaded=model_loaded)
 
 
@@ -100,7 +102,10 @@ def run_job(
 ) -> None:
     """Resumable batch job: skip completed urls, extract, append results and
     lineage. Crash-and-rerun converges to the same result set (see
-    tests/test_resume.py). Results files hold at most
+    tests/test_resume.py). ``num_partitions`` is the url-hash bucket count
+    of the extraction (see ``run_extraction``); the append writes one
+    results file per task that AQE packs from the buckets, so a small
+    append writes few files. Results files hold at most
     ``MAX_RECORDS_PER_FILE`` rows and dictionary-encode only
     ``DICTIONARY_COLUMNS``.
 

@@ -33,6 +33,43 @@ def test_perfbench_trace_points_and_call_keywords_exist():
     assert callable(make_extract_fn())
 
 
+def _perfbench_library_imports():
+    """(module, name) of every ``from ocr_project_spark… import name`` in
+    perfbench's files; most sit inside the functions that use them, so a
+    missing name would only raise in the middle of a run."""
+    import ast
+
+    found = set()
+    for path in Path(PERFBENCH).glob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(
+                "ocr_project_spark"
+            ):
+                found.update((node.module, a.name) for a in node.names)
+    return found
+
+
+def test_perfbench_library_imports_resolve():
+    """Every library name perfbench imports exists. ``run_job`` no longer
+    calls ``skew.salted_repartition``; the ``skew.*`` probe
+    (``probes.pipeline_layers``) still does, with (pages, num_partitions)."""
+    import importlib.util
+
+    imports = _perfbench_library_imports()
+    assert ("ocr_project_spark.operators.skew", "salted_repartition") in imports
+    for module, name in sorted(imports):
+        mod = importlib.import_module(module)
+        # or a submodule: from package import module
+        assert hasattr(mod, name) or (
+            hasattr(mod, "__path__")
+            and importlib.util.find_spec(f"{module}.{name}") is not None
+        ), (module, name)
+
+    from ocr_project_spark.operators.skew import salted_repartition
+
+    inspect.signature(salted_repartition).bind(None, 8)
+
+
 def test_perfbench_kernel_probe_targets_exist():
     """The traced run's ``kernels.*`` probes (``perfbench/probes.py``) patch
     ``kernels.registry.extract_html_pages`` and wrap two registry arms by
