@@ -20,7 +20,6 @@ hash), making the expected answer exact SQL; corpus_percentiles is exact
 because the GK sketch is exact below its accuracy bound. The round-3
 cluster queries (dedup_minhash_components) replay connected components
 with a recursive-CTE transitive closure over the exact-jaccard pair set;
-media_video predicts the REAL Y4M decode from planted pixel formulas;
 warc_sinks closes the loop extraction → WET/WAT sinks → WARC parse against
 ground truth, byte-for-byte.
 """
@@ -40,17 +39,6 @@ _WELL_FORMED = "doc_id % 97 <> 13"
 _MALFORMED = "doc_id % 97 = 13"
 _N_PARAS = "cast(ceil(len(string_split(text, ' ')) / 8.0) as bigint)"
 _N_PAGES = f"least(1 + doc_id % 3, greatest({_N_PARAS}, 1))"
-
-# url spam scoring fragments (url_canonical oracle): occurrence counts of
-# the pinned fragment list + the TLD regex, built from the SAME constants
-# the operator uses so the lists cannot drift apart
-from ocr_project_spark.functions.urls import SPAM_TLDS, SPAM_URL_WORDS  # noqa: E402
-
-_SPAM_SUM = " + ".join(
-    f"CAST((length(su) - length(replace(su, '{w}', ''))) / {len(w)} AS BIGINT)"
-    for w in SPAM_URL_WORDS
-)
-_SPAM_TLD_RE = r"\.(" + "|".join(SPAM_TLDS) + r")$"
 
 # mojibake repair chain (text_normalize oracle): the SAME pinned table the
 # operator applies, rendered as chr() concatenations so no control byte or
@@ -457,39 +445,6 @@ def q_host_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return counts.join(stats, "host")
 
 
-def q_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Host link-graph analytics (the Common-Crawl-style host-rank stage a
-    web-curation pipeline weights documents by): absolute <a href> harvest
-    from the raw html payloads as one JVM regexp projection, host-level
-    weighted edge list, per-host fan-out/fan-in, and 3-iteration weighted
-    PageRank with uniform dangling redistribution. The planted outlinks
-    target doc_id + 7·i (datagen.build_html), so the oracle rebuilds the
-    ENTIRE graph — edges, degrees, and all three power iterations — from
-    doc_id arithmetic without parsing any HTML, while the engine earns the
-    same numbers from the actual href scan. PageRank ships in micro-rank
-    integer units (round(rank·1e6)): cross-engine float noise is ~1e-15,
-    nine orders below the rounding quantum."""
-    from ocr_project_spark.functions.links import (
-        extract_outlinks,
-        host_degrees,
-        host_graph,
-        host_pagerank,
-    )
-
-    pages = _pages(spark, sf_dir)
-    graph = host_graph(extract_outlinks(pages))
-    deg = host_degrees(graph)
-    pr = host_pagerank(graph, n_iter=3)
-    return deg.join(pr, "host").select(
-        "host",
-        F.col("out_degree").cast("long").alias("out_degree"),
-        F.col("in_degree").cast("long").alias("in_degree"),
-        F.col("n_outlinks").cast("long").alias("n_outlinks"),
-        F.col("n_inlinks").cast("long").alias("n_inlinks"),
-        F.round(F.col("pagerank") * 1e6).cast("long").alias("pagerank_micro"),
-    )
-
-
 def q_recrawl_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BOTH recrawl operators in one family-tagged row set (subsumes the
     round-3/4 `latest_capture` row).
@@ -535,98 +490,6 @@ def q_recrawl_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         "status",
     )
     return latest_rows.unionByName(delta_rows)
-
-
-def q_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL canonicalization + RefinedWeb-style URL spam filtering in one
-    row set. Every url is deterministically messied (a fragment, a
-    tracking-only query, an uppercased host, or an explicit :443 port,
-    cycling on doc_id) and must canonicalize back to exactly the clean url
-    the oracle rebuilds from doc_id arithmetic. The spam signals then score
-    a deterministically spam-planted variant (doc_id % 9 = 4 → spam-word
-    path; = 7 → digit-heavy host on a spam TLD; else the clean url), so
-    both firing and non-firing paths of every signal are oracle-replayed
-    arithmetically (occurrence counts, TLD regex, integer digit-majority
-    gate, path depth). Each row also carries the url's SURT key (the
-    public Wayback/Common-Crawl CDX index key: host dot-reversed — what
-    makes a registered domain one contiguous sort range at 100 TB),
-    replayed arithmetically by the oracle."""
-    from ocr_project_spark.functions.urls import (
-        canonicalize_urls,
-        surt_key,
-        url_spam_scores,
-    )
-
-    pages = _pages(spark, sf_dir)
-    prefix = F.regexp_extract("url", r"^(https://[^/]*)", 1)
-    rest = F.regexp_replace("url", r"^https://[^/]*", "")
-    m = F.col("doc_id") % 4
-    messy = (
-        F.when(m == 0, F.concat(F.col("url"), F.lit("#section-2")))
-        .when(
-            m == 1,
-            F.concat(F.col("url"), F.lit("?utm_source=feed&utm_medium=rss")),
-        )
-        .when(m == 2, F.concat(F.upper(prefix), rest))
-        .otherwise(F.concat(prefix, F.lit(":443"), rest))
-    )
-    out = canonicalize_urls(pages.withColumn("url", messy)).select(
-        "doc_id", "url"
-    )
-    s = F.col("doc_id") % 9
-    spam_variant = (
-        F.when(s == 4, F.concat(F.col("url"), F.lit("/casino-poker-bonus")))
-        .when(
-            s == 7,
-            F.concat(
-                F.lit("https://x"),
-                F.col("doc_id").cast("string"),
-                F.lit("77.xyz/page"),
-            ),
-        )
-        .otherwise(F.col("url"))
-    )
-    scored = url_spam_scores(
-        out.select(
-            "doc_id",
-            F.col("url").alias("canonical_url"),
-            spam_variant.alias("url"),
-        ),
-        keep=("canonical_url",),
-    )
-    return scored.select(
-        "doc_id",
-        F.col("canonical_url").alias("url"),
-        surt_key(F.col("canonical_url")).alias("surt"),
-        "n_spam_words",
-        "bad_tld",
-        "n_host_digits",
-        "host_len",
-        "digit_heavy_host",
-        "path_depth",
-        "url_suspect",
-    )
-
-
-def q_host_crawl_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A crawl scheduler's per-url plan: the anti-SEO-spam document cap (at
-    most 5 urls per host, selected deterministically by md5(url) order —
-    replayed rank-exactly) joined with the per-host politeness budget
-    (observed span → recommended crawl delay via the salted two-stage host
-    aggregation). One query exercises cap_per_host AND host_politeness,
-    both replayed arithmetically by the oracle."""
-    from ocr_project_spark.operators.skew import cap_per_host, host_politeness
-
-    pages = _pages(spark, sf_dir)
-    capped = cap_per_host(pages.select("url"), max_per_host=5).select(
-        "url", "host"
-    )
-    budget = host_politeness(pages).select(
-        "host", "n_urls", "recommended_delay_ms"
-    )
-    return capped.join(budget, "host").select(
-        "url", "host", "n_urls", "recommended_delay_ms"
-    )
 
 
 def q_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -842,60 +705,6 @@ def q_dedup_minhash_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cluster_id",
         (F.col("doc_id") == F.col("cluster_id")).alias("kept"),
     )
-
-
-def q_media_video(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both video paths in one tagged row set (round-4 merge of the
-    media_frames and media_y4m queries). kind='sampled': 1→N frame
-    sampling through the real Arrow plumbing on the deterministic fake
-    decode (payload = utf-8 of documents.text, duration a pure function
-    of doc_id — frame counts AND content ids sha256(payload || '#frame-i')
-    are SQL-replayable). kind='y4m': REAL YUV4MPEG2 container decode —
-    synthesized payloads whose per-frame luma planes are a pure integer
-    function of (id, frame); the oracle predicts frame count, dimensions
-    and Σluma while the engine earns them by walking the real container
-    (multimodal.decode_y4m; every_ms=100 at 10 fps samples every frame).
-    Sentinels (-1 / '') instead of NULLs — pandas NULL-int degradation."""
-    from ocr_project_spark.multimodal import (
-        frame_pixel_stats,
-        sample_frames,
-        synthesize_y4m_media,
-    )
-
-    docs = _docs(spark, sf_dir)
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("video").alias("kind"),
-        F.encode("text", "utf-8").alias("payload"),
-        F.struct(
-            F.lit("application/octet-stream").alias("mime"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            (F.lit(500) + (F.col("doc_id") % 5) * 700).cast("int").alias(
-                "duration_ms"
-            ),
-        ).alias("meta"),
-    )
-    sampled = sample_frames(media, every_ms=1000, decode="fake").select(
-        F.lit("sampled").alias("kind"),
-        "media_id",
-        F.col("frame_idx").cast("long").alias("frame_idx"),
-        "frame_sha256",
-        F.lit(-1).cast("long").alias("width"),
-        F.lit(-1).cast("long").alias("height"),
-        F.lit(-1).cast("long").alias("luma_sum"),
-    )
-    y4m_media = synthesize_y4m_media(docs)
-    y4m = frame_pixel_stats(y4m_media, every_ms=100, decode="strict").select(
-        F.lit("y4m").alias("kind"),
-        "media_id",
-        F.col("frame_idx").cast("long").alias("frame_idx"),
-        F.lit("").alias("frame_sha256"),
-        F.col("width").cast("long").alias("width"),
-        F.col("height").cast("long").alias("height"),
-        F.col("luma_sum").cast("long").alias("luma_sum"),
-    )
-    return sampled.unionByName(y4m)
 
 
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1265,22 +1074,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     the driver records the first 50 rows, so anything that could fall off a
     window must be a long-stable query, never one that changed this round),
     with operator pairs that naturally compose (profile joins) merged into
-    one entry. It covers the operators that a job, CLI or benchmark
-    reaches, plus ``media_video``, the last family none of them reaches.
+    one entry. It covers every operator that a job, CLI or benchmark
+    reaches, plus the query-only operators listed in ROADMAP item 2.
     tests/test_entry_registry.py keeps it whole: every query has
-    its oracle and ``q_`` function, and no package module is reached from
-    the tests alone."""
+    its oracle and ``q_`` function, no package module is reached from
+    the tests alone, and only the modules it lists are reached from this
+    file alone."""
     return {
         # --- changed or added this round / round 3 tail ---
         "text_quality": q_text_quality,
         "recrawl_ops": q_recrawl_ops,
         "warc_sinks": q_warc_sinks,
-        "link_graph": q_link_graph,
         "c4_clean": q_c4_clean,
         "text_normalize": q_text_normalize,
         "dsir_select": q_dsir_select,
-        "url_canonical": q_url_canonical,
-        "media_video": q_media_video,
         "dedup_minhash": q_dedup_minhash,
         "quality_lm": q_quality_lm,
         "dedup_blocking": q_dedup_blocking,
@@ -1295,7 +1102,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_fingerprints": q_doc_fingerprints,
         "corpus_profile": q_corpus_profile,
         "host_profile": q_host_profile,
-        "host_crawl_plan": q_host_crawl_plan,
         # --- byte-identity core ---
         "flagship_rollup": q_flagship_rollup,
         "extract_text_identity": q_extract_text_identity,
@@ -1546,111 +1352,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(-1 AS BIGINT) AS kept_epoch, 'added' AS status
             FROM u WHERE doc_id % 7 = 1
         """,
-        "url_canonical": f"""
-            WITH u AS (
-                SELECT doc_id,
-                       'https://'
-                       || CASE WHEN doc_id % 10 < 3 THEN 'popular.example.com'
-                               ELSE 'site-' || CAST(doc_id % 40 AS VARCHAR)
-                                    || '.example.org'
-                          END
-                       || '/' || source || '/doc' || doc_id
-                       || CASE WHEN {_N_PAGES} > 1 THEN '.pdf' ELSE '.html' END
-                           AS url
-                FROM documents
-            ),
-            v AS (
-                SELECT doc_id, url,
-                       lower(CASE
-                           WHEN doc_id % 9 = 4
-                               THEN url || '/casino-poker-bonus'
-                           WHEN doc_id % 9 = 7
-                               THEN 'https://x' || doc_id || '77.xyz/page'
-                           ELSE url
-                       END) AS su
-                FROM u
-            ),
-            h AS (
-                SELECT doc_id, url, su,
-                       regexp_extract(su,
-                           '^[a-z][a-z0-9+.-]*://([^/:?#]*)', 1) AS host,
-                       regexp_replace(regexp_replace(su,
-                           '^[a-z][a-z0-9+.-]*://[^/]*', ''),
-                           '[?#].*$', '') AS path
-                FROM v
-            ),
-            z AS (
-                SELECT doc_id, url,
-                       {_SPAM_SUM} AS n_spam_words,
-                       regexp_matches(host, '{_SPAM_TLD_RE}') AS bad_tld,
-                       CAST(length(host)
-                            - length(regexp_replace(host, '[0-9]', '', 'g'))
-                            AS BIGINT) AS n_host_digits,
-                       CAST(length(host) AS BIGINT) AS host_len,
-                       CAST(length(path) - length(replace(path, '/', ''))
-                            AS BIGINT) AS path_depth
-                FROM h
-            )
-            SELECT z.doc_id, z.url,
-                   CASE WHEN z.doc_id % 10 < 3 THEN 'com,example,popular'
-                        ELSE 'org,example,site-'
-                             || CAST(z.doc_id % 40 AS VARCHAR)
-                   END || ')' || regexp_replace(z.url, '^https://[^/]*', '')
-                       AS surt,
-                   n_spam_words, bad_tld, n_host_digits,
-                   host_len,
-                   n_host_digits * 2 > host_len AS digit_heavy_host,
-                   path_depth,
-                   (n_spam_words > 0) OR bad_tld
-                       OR (n_host_digits * 2 > host_len) AS url_suspect
-            FROM z
-        """,
-        # host_crawl_plan: the capped-url rank replay (same url derivation +
-        # deterministic (md5(url), url) rank order as the former host_caps
-        # oracle) joined with the politeness-budget arithmetic per host
-        "host_crawl_plan": f"""
-            WITH u AS (
-                SELECT doc_id,
-                       CASE WHEN doc_id % 10 < 3 THEN 'popular.example.com'
-                            ELSE 'site-' || CAST(doc_id % 40 AS VARCHAR)
-                                 || '.example.org'
-                       END AS host,
-                       'https://'
-                       || CASE WHEN doc_id % 10 < 3 THEN 'popular.example.com'
-                               ELSE 'site-' || CAST(doc_id % 40 AS VARCHAR)
-                                    || '.example.org'
-                          END
-                       || '/' || source || '/doc' || doc_id
-                       || CASE WHEN {_N_PAGES} > 1 THEN '.pdf' ELSE '.html' END
-                           AS url
-                FROM documents
-            ),
-            r AS (
-                SELECT url, host,
-                       row_number() OVER (
-                           PARTITION BY host ORDER BY md5(url), url
-                       ) AS rn
-                FROM u
-            ),
-            s AS (
-                SELECT host,
-                       count(*) AS n_urls,
-                       CAST(max(doc_id) - min(doc_id) AS BIGINT)
-                           AS span_seconds
-                FROM u GROUP BY 1
-            ),
-            b AS (
-                SELECT host, n_urls,
-                       CAST(greatest(1000,
-                            CASE WHEN n_urls > 1
-                                 THEN floor(span_seconds * 1000 / (n_urls - 1))
-                                 ELSE 0 END) AS BIGINT)
-                           AS recommended_delay_ms
-                FROM s
-            )
-            SELECT r.url, r.host, b.n_urls, b.recommended_delay_ms
-            FROM r JOIN b USING (host) WHERE r.rn <= 5
-        """,
         "warc_extract": f"""
             SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0
         """,
@@ -1771,172 +1472,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(0 AS BIGINT) AS hamming
             FROM documents WHERE lang = 'de'
         """,
-        # merged video row set: kind='sampled' replays the fake decode at
-        # the byte level (frame ids = sha256(payload || ascii suffix));
-        # kind='y4m' predicts the REAL container decode's per-frame sums
-        "media_video": """
-            WITH m AS (
-                SELECT doc_id AS media_id, text,
-                       500 + 700 * (doc_id % 5) AS duration_ms
-                FROM documents
-            ),
-            f AS (
-                SELECT media_id, text,
-                       unnest(generate_series(
-                           0, greatest(duration_ms // 1000, 1) - 1
-                       )) AS frame_idx
-                FROM m
-            ),
-            ids AS (
-                SELECT doc_id AS media_id,
-                       8 + doc_id % 24 AS w,
-                       6 + (doc_id // 5) % 18 AS h,
-                       2 + doc_id % 4 AS nf
-                FROM documents
-            ),
-            xs AS (SELECT g AS x FROM generate_series(0, 31) q(g)),
-            ys AS (SELECT g AS y FROM generate_series(0, 23) q(g)),
-            ts AS (SELECT g AS t FROM generate_series(0, 5) q(g)),
-            sums AS (
-                SELECT i.media_id, ts.t,
-                       SUM((i.media_id + x + 2 * y + 3 * ts.t) % 256) AS s
-                FROM ids i, xs, ys, ts
-                WHERE xs.x < i.w AND ys.y < i.h AND ts.t < i.nf
-                GROUP BY i.media_id, ts.t
-            )
-            SELECT 'sampled' AS kind, media_id,
-                   CAST(frame_idx AS BIGINT) AS frame_idx,
-                   sha256(text || '#frame-' || frame_idx) AS frame_sha256,
-                   CAST(-1 AS BIGINT) AS width, CAST(-1 AS BIGINT) AS height,
-                   CAST(-1 AS BIGINT) AS luma_sum
-            FROM f
-            UNION ALL
-            SELECT 'y4m', i.media_id, CAST(s.t AS BIGINT), '',
-                   CAST(i.w AS BIGINT), CAST(i.h AS BIGINT), CAST(s.s AS BIGINT)
-            FROM ids i JOIN sums s USING (media_id)
-        """,
-        # link_graph: the engine harvests real <a href> bytes from the html
-        # payloads; the oracle rebuilds the identical host graph from
-        # doc_id arithmetic (outlinks target doc_id + 7·i, hosts are pure
-        # functions of the id — datagen.build_html) and replays degree
-        # aggregation plus all three PageRank power iterations in SQL.
-        # Micro-rank integers keep the float comparison 9 orders above
-        # cross-engine summation noise.
-        "link_graph": """
-            WITH l AS (
-                SELECT doc_id AS s, doc_id + 7 * i.i AS t
-                FROM documents, (VALUES (1), (2), (3)) i(i)
-                WHERE doc_id % 2 = 0 AND doc_id % 97 <> 13
-            ),
-            e AS (
-                SELECT CASE WHEN s % 10 < 3 THEN 'popular.example.com'
-                            ELSE 'site-' || CAST(s % 40 AS VARCHAR)
-                                 || '.example.org' END AS src_host,
-                       CASE WHEN t % 10 < 3 THEN 'popular.example.com'
-                            ELSE 'site-' || CAST(t % 40 AS VARCHAR)
-                                 || '.example.org' END AS dst_host,
-                       count(*) AS n_links
-                FROM l GROUP BY 1, 2
-            ),
-            nodes AS (
-                SELECT src_host AS host FROM e
-                UNION
-                SELECT dst_host FROM e
-            ),
-            nn AS (SELECT count(*) AS n FROM nodes),
-            ow AS (SELECT src_host, SUM(n_links) AS w FROM e GROUP BY 1),
-            deg AS (
-                SELECT n.host,
-                       COALESCE(o.out_degree, 0) AS out_degree,
-                       COALESCE(i.in_degree, 0) AS in_degree,
-                       COALESCE(o.n_outlinks, 0) AS n_outlinks,
-                       COALESCE(i.n_inlinks, 0) AS n_inlinks
-                FROM nodes n
-                LEFT JOIN (
-                    SELECT src_host, count(*) AS out_degree,
-                           SUM(n_links) AS n_outlinks
-                    FROM e GROUP BY 1
-                ) o ON o.src_host = n.host
-                LEFT JOIN (
-                    SELECT dst_host, count(*) AS in_degree,
-                           SUM(n_links) AS n_inlinks
-                    FROM e GROUP BY 1
-                ) i ON i.dst_host = n.host
-            ),
-            r0 AS (
-                SELECT host, 1.0 / (SELECT n FROM nn) AS rank FROM nodes
-            ),
-            d0 AS (
-                SELECT COALESCE(SUM(rank), 0) AS dm FROM r0
-                WHERE host NOT IN (SELECT src_host FROM ow)
-            ),
-            r1 AS (
-                SELECT n.host,
-                       0.15 / (SELECT n FROM nn)
-                       + 0.85 * (COALESCE(c.contrib, 0)
-                                 + (SELECT dm FROM d0) / (SELECT n FROM nn))
-                           AS rank
-                FROM nodes n
-                LEFT JOIN (
-                    SELECT e.dst_host,
-                           SUM(r.rank * (e.n_links / CAST(ow.w AS DOUBLE)))
-                               AS contrib
-                    FROM e
-                    JOIN ow ON ow.src_host = e.src_host
-                    JOIN r0 r ON r.host = e.src_host
-                    GROUP BY 1
-                ) c ON c.dst_host = n.host
-            ),
-            d1 AS (
-                SELECT COALESCE(SUM(rank), 0) AS dm FROM r1
-                WHERE host NOT IN (SELECT src_host FROM ow)
-            ),
-            r2 AS (
-                SELECT n.host,
-                       0.15 / (SELECT n FROM nn)
-                       + 0.85 * (COALESCE(c.contrib, 0)
-                                 + (SELECT dm FROM d1) / (SELECT n FROM nn))
-                           AS rank
-                FROM nodes n
-                LEFT JOIN (
-                    SELECT e.dst_host,
-                           SUM(r.rank * (e.n_links / CAST(ow.w AS DOUBLE)))
-                               AS contrib
-                    FROM e
-                    JOIN ow ON ow.src_host = e.src_host
-                    JOIN r1 r ON r.host = e.src_host
-                    GROUP BY 1
-                ) c ON c.dst_host = n.host
-            ),
-            d2 AS (
-                SELECT COALESCE(SUM(rank), 0) AS dm FROM r2
-                WHERE host NOT IN (SELECT src_host FROM ow)
-            ),
-            r3 AS (
-                SELECT n.host,
-                       0.15 / (SELECT n FROM nn)
-                       + 0.85 * (COALESCE(c.contrib, 0)
-                                 + (SELECT dm FROM d2) / (SELECT n FROM nn))
-                           AS rank
-                FROM nodes n
-                LEFT JOIN (
-                    SELECT e.dst_host,
-                           SUM(r.rank * (e.n_links / CAST(ow.w AS DOUBLE)))
-                               AS contrib
-                    FROM e
-                    JOIN ow ON ow.src_host = e.src_host
-                    JOIN r2 r ON r.host = e.src_host
-                    GROUP BY 1
-                ) c ON c.dst_host = n.host
-            )
-            SELECT deg.host,
-                   CAST(deg.out_degree AS BIGINT) AS out_degree,
-                   CAST(deg.in_degree AS BIGINT) AS in_degree,
-                   CAST(deg.n_outlinks AS BIGINT) AS n_outlinks,
-                   CAST(deg.n_inlinks AS BIGINT) AS n_inlinks,
-                   CAST(ROUND(r3.rank * 1e6) AS BIGINT) AS pagerank_micro
-            FROM deg JOIN r3 ON r3.host = deg.host
-        """,
         # text_quality: scores + the gate verdict as a CASE over the same
         # integer-scaled features (quality_scores ∘ quality_gate in one row)
         # + the two token counters (subsumes the round-3 text_token_counts)
@@ -2022,7 +1557,7 @@ def oracle_sql() -> dict[str, str]:
             LEFT JOIN dup ON f.doc_id = dup.doc_id
         """,
         # WET round-trip: the parsed-back record set equals ground truth
-        # (url derivation identical to url_canonical's)
+        # (the url derivation replays datagen.url_for)
         # warc_sinks: WET rows are the byte-identity ground truth; WAT rows
         # are the planted link set (even well-formed docs × i ∈ {1,2,3},
         # dst host/url pure doc_id arithmetic) plus one empty-payload row

@@ -21,9 +21,9 @@ can re-derive any property with plain SQL arithmetic:
 - hot host       = doc_id % 10 < 3  → one shared host (30% of all urls —
                    the host-level skew the salted repartitioning defuses)
 - outlinks       = html-arm pages carry 3 absolute cross-host links to
-                   host_for(doc_id + 7·i), i ∈ {1,2,3} (host link-graph
-                   fixture; the links sit in boilerplate so extraction
-                   identity is unaffected)
+                   host_for(doc_id + 7·i), i ∈ {1,2,3} (the WAT sink's
+                   outlink fixture; the links sit in boilerplate so
+                   extraction identity is unaffected)
 """
 
 from __future__ import annotations
@@ -121,10 +121,10 @@ def build_html(doc_id: int, text: str, lang: str) -> str:
         f'<a href="/l{i}">{LANG_MARKERS[lang][i % len(LANG_MARKERS[lang])]}</a>'
         for i in range(6)
     )
-    # Absolute cross-host outlinks (host link-graph fixture): target doc
-    # ids are doc_id + 7·i, so src and dst hosts are both pure doc_id
-    # arithmetic and the DuckDB oracle rebuilds the whole host graph
-    # without parsing HTML. They live in the <aside> (boilerplate), so
+    # Absolute cross-host outlinks (the WAT sink's outlink fixture):
+    # target doc ids are doc_id + 7·i, so src and dst urls are both pure
+    # doc_id arithmetic and the DuckDB oracle rebuilds every link without
+    # parsing HTML. They live in the <aside> (boilerplate), so
     # extraction byte-identity is untouched.
     aside += "".join(
         f'<a href="https://{host_for(doc_id + 7 * i)}/ref/doc{doc_id + 7 * i}.html">ref</a>'
@@ -218,38 +218,18 @@ PAGES_GEN_SCHEMA = (
 )
 
 
-REPLICA_STRIDE = 1_000_000
-
-
-def synthesize_pages(spark, sf_dir: str, replicate: int = 1, num_partitions: int | None = None):
+def synthesize_pages(spark, sf_dir: str, num_partitions: int | None = None):
     """Distributed pages-table synthesis: documents parquet → pages DataFrame.
 
     Runs as ``mapInPandas`` so generation scales with the input (no driver
     collect); the ``doc_id``/``backend`` columns ride along for the DuckDB
     differential oracle and dispatch tests.
 
-    ``replicate`` deterministically tiles the corpus (doc_id + k·10^6, k =
-    0..replicate-1) for benchmark scale-up — every property derived from
-    doc_id (backend, pages, host, malformed) re-derives per replica, and
-    urls stay globally unique. ``num_partitions`` spreads the small source
-    parquet before the generation pass (one file would otherwise synthesize
-    on a single task)."""
-    from pyspark.sql import functions as F
-
+    ``num_partitions`` spreads the small source parquet before the
+    generation pass (one file would otherwise synthesize on a single
+    task)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     base = docs.select("doc_id", "text", "lang", "source")
-    if replicate > 1:
-        base = base.select(
-            F.explode(
-                F.array(*[F.lit(k * REPLICA_STRIDE) for k in range(replicate)])
-            ).alias("off"),
-            "doc_id",
-            "text",
-            "lang",
-            "source",
-        ).select(
-            (F.col("doc_id") + F.col("off")).alias("doc_id"), "text", "lang", "source"
-        )
     if num_partitions:
         base = base.repartition(num_partitions)
     return base.mapInPandas(_synthesize_batch, schema=PAGES_GEN_SCHEMA)

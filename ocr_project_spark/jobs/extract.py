@@ -5,7 +5,7 @@ Usage (cluster):
         --driver-java-options -XX:TieredStopAtLevel=1 \\
         ocr_project_spark/jobs/extract.py \\
         --pages <table-or-parquet-path> --results <out> --lineage <out> \\
-        [--num-partitions N] [--synthesize-sf-dir DIR [--replicate K]]
+        [--num-partitions N] [--synthesize-sf-dir DIR]
 
 Under spark-submit the driver JVM is already running when build_session()
 runs, so its C1-tier flag (see session.py) is passed on the command line.
@@ -34,7 +34,6 @@ def parse_args(argv=None):
         help="synthesize the pages table from this testdata dir instead of "
         "reading --pages (deterministic fixture mode)",
     )
-    p.add_argument("--replicate", type=int, default=1)
     p.add_argument("--results", required=True, help="results output path")
     p.add_argument("--lineage", help="lineage output path")
     p.add_argument(
@@ -82,7 +81,6 @@ def main(argv=None, spark=None) -> None:
             pages = synthesize_pages(
                 spark,
                 args.synthesize_sf_dir,
-                replicate=args.replicate,
                 num_partitions=args.num_partitions,
             )
         elif args.pages:

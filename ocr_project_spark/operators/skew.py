@@ -20,12 +20,12 @@ can hold millions of pages. Two distinct mechanisms defuse it:
    local[32] on the synthetic corpus) — keys must outnumber partitions.
 
 2. **Host-keyed aggregation** (`salted_host_agg` / `salted_host_counts`):
-   when a downstream stage genuinely groups by host (per-host stats,
-   politeness budgets), a plain ``groupBy(host)`` sends every hot-host row
-   to one reducer. The classic fix: a deterministic per-url salt for hot
-   hosts → partial ``groupBy(host, salt)`` → final ``groupBy(host)``. The
-   second stage shuffles one row per (host, salt) — bounded by
-   ``salt_buckets``, independent of the hot host's row count. (Catalyst's
+   when a downstream stage genuinely groups by host (per-host stats), a
+   plain ``groupBy(host)`` sends every hot-host row to one reducer. The
+   classic fix: a deterministic per-url salt for hot hosts → partial
+   ``groupBy(host, salt)`` → final ``groupBy(host)``. The second stage
+   shuffles one row per (host, salt) — bounded by ``salt_buckets``,
+   independent of the hot host's row count. (Catalyst's
    partial aggregation already bounds *count-like* aggs; explicit salting is
    the general pattern that also covers collect/median-style aggs and is
    kept as the documented scale path.)
@@ -168,97 +168,6 @@ def host_stats(
         url_col=url_col,
         salt_buckets=salt_buckets,
         hot=hot,
-    )
-
-
-def host_politeness(
-    df: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-    min_delay_ms: int = 1000,
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
-    hot: DataFrame | None = None,
-) -> DataFrame:
-    """Per-host politeness budget: observed crawl span, mean inter-request
-    gap, and a recommended crawl delay (``max(min_delay_ms, observed
-    gap)`` — never recrawl a domain faster than it was crawled, floor at
-    the policy minimum). Built on the salted two-stage host aggregation,
-    so a hot domain's millions of rows never converge on one reducer;
-    outputs are integer-safe for the differential oracle."""
-    stats = host_stats(df, url_col, ts_col, salt_buckets, hot)
-    span = F.unix_timestamp("last_ts") - F.unix_timestamp("first_ts")
-    gap = (
-        F.when(
-            F.col("n_urls") > 1,
-            F.floor(span * 1000 / (F.col("n_urls") - 1)),
-        )
-        .otherwise(F.lit(0))
-        .cast("long")
-    )
-    return stats.select(
-        "host",
-        "n_urls",
-        span.cast("long").alias("span_seconds"),
-        gap.alias("avg_gap_ms"),
-        F.greatest(F.lit(min_delay_ms).cast("long"), gap).alias(
-            "recommended_delay_ms"
-        ),
-    )
-
-
-def cap_per_host(
-    df: DataFrame,
-    max_per_host: int = 100,
-    url_col: str = "url",
-    approximate: bool = False,
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
-) -> DataFrame:
-    """Per-host document cap: keep at most ``max_per_host`` urls per host,
-    chosen deterministically by md5(url) order — the anti-SEO-spam
-    downsampling a webtext corpus applies so no single domain dominates
-    training data. The selection is a pure function of the url set (no
-    ``sample``, no row-order dependence), so re-runs and repartitions keep
-    identical documents and a SQL oracle replays the cut exactly.
-
-    Exact mode (default): one window over (host) ordered by the hash — the
-    shuffle key is host, so a mega-host concentrates on one reducer; AQE's
-    skew handling splits the sort, and the window itself is rank-only (no
-    payload aggregation). Right for the usual small training caps
-    (10²–10³).
-
-    ``approximate=True`` is the constant-memory path for 10^12-row corpora
-    with million-page hosts: THRESHOLD SAMPLING — the salted two-stage
-    host counts (never one reducer per host) join back and a url is kept
-    when its md5-derived uniform draw falls below cap/host_count. No
-    host-keyed sort or window anywhere (plan-asserted); each kept set is
-    still a pure function of the url set, at the price of a binomial
-    (±O(√cap)) rather than exact cap. Hosts at or under the cap keep
-    every url in both modes."""
-    hosted = with_host(df, url_col)
-    if not approximate:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("host").orderBy(
-            F.md5(F.col(url_col)), F.col(url_col)
-        )
-        return (
-            hosted.withColumn("__rank", F.row_number().over(w))
-            .where(F.col("__rank") <= max_per_host)
-            .drop("__rank")
-        )
-    counts = salted_host_counts(df, url_col, salt_buckets)
-    # uniform draw in [0, 2^32) from the url digest; keep when
-    # draw < 2^32 · cap / n_urls (exact to double precision: cap·2^32 ≪ 2^52)
-    draw = F.conv(F.substring(F.md5(F.col(url_col)), 1, 8), 16, 10).cast("long")
-    threshold = F.floor(
-        F.lit(float(max_per_host) * 2.0**32) / F.col("n_urls")
-    ).cast("long")
-    return (
-        hosted.join(counts, "host")
-        .where(
-            (F.col("n_urls") <= max_per_host) | (draw < threshold)
-        )
-        .drop("n_urls")
     )
 
 

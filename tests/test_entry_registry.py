@@ -1,7 +1,8 @@
 """The query registry and the package's import graph stay whole: every
 query has its oracle and its ``q_`` function, every ``q_`` function is
-registered, and every package module is reachable from code that runs
-outside the tests. No Spark action; these are static checks.
+registered, every package module is reachable from code that runs
+outside the tests, and only the listed modules are reached from the query
+registry alone. No Spark action; these are static checks.
 """
 
 from __future__ import annotations
@@ -79,3 +80,41 @@ def test_every_package_module_is_reached_outside_tests():
         reached.add(name)
         todo |= _imported_modules(modules[name], known) - reached
     assert known - reached == set()
+
+
+def _reached(roots: list[Path], modules: dict[str, Path]) -> set[str]:
+    """Package modules that ``roots`` import, directly or through each
+    other."""
+    known = set(modules)
+    reached: set[str] = set()
+    todo = set().union(*(_imported_modules(p, known) for p in roots))
+    while todo:
+        name = todo.pop()
+        reached.add(name)
+        todo |= _imported_modules(modules[name], known) - reached
+    return reached
+
+
+# Package modules that only __spark_entry__'s queries reach, each with the
+# reason it stays.
+QUERY_ONLY_MODULES = {
+    # the paper's comparison mode (P9): both backends on one document set
+    "ocr_project_spark.operators.compare",
+}
+
+
+def test_no_new_module_is_reached_only_from_the_query_registry():
+    """A module that no job, CLI or benchmark imports runs only as a
+    registry query; a new one is a new family outside the engine, so it
+    must be listed above with its reason (or wired into a job)."""
+    modules = {_module_name(p): p for p in (ROOT / PACKAGE).rglob("*.py")}
+    engine = _reached(
+        [
+            *(ROOT / "perfbench").rglob("*.py"),
+            *(ROOT / "scripts").rglob("*.py"),
+            *(ROOT / PACKAGE / "jobs").rglob("*.py"),
+        ],
+        modules,
+    )
+    entry_only = _reached([ROOT / "__spark_entry__.py"], modules) - engine
+    assert entry_only == QUERY_ONLY_MODULES

@@ -1,25 +1,19 @@
-"""Host link-graph analytics: outlink harvest, degrees, PageRank.
+"""Outlink harvest: the href regex over raw html payloads.
 
 The datagen contract plants 3 absolute cross-host links per well-formed
 html-arm page (targets doc_id + 7·i — datagen.build_html), so the expected
-graph is pure arithmetic; the driver-side `link_graph` oracle replays the
-same arithmetic in SQL. Here we pin the semantics the oracle can't see:
-the href regex behavior on adversarial payloads, the PageRank definition
-on a hand-computable graph, and the Σrank = 1 invariant.
+link set is pure arithmetic; the `warc_sinks` oracle in __spark_entry__.py
+replays the same arithmetic in SQL through the WAT sink. Here we pin what
+the oracle can't see: the href regex behavior on adversarial payloads,
+host parsing, and the pruned JVM-only scan.
 """
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from ocr_project_spark.datagen import host_for, is_malformed
-from ocr_project_spark.functions.links import (
-    extract_outlinks,
-    host_degrees,
-    host_graph,
-    host_pagerank,
-)
+from ocr_project_spark.functions.links import extract_outlinks
 
 
 @pytest.fixture(scope="module")
@@ -97,48 +91,6 @@ def test_outlink_harvest_covers_real_crawl_anchor_spellings(spark):
     }
 
 
-def test_host_degrees_full_outer_zeros(spark):
-    g = spark.createDataFrame(
-        [("a", "b", 3), ("a", "c", 1), ("b", "c", 2)],
-        "src_host string, dst_host string, n_links long",
-    )
-    rows = {r["host"]: r for r in host_degrees(g).collect()}
-    assert rows["a"]["out_degree"] == 2 and rows["a"]["in_degree"] == 0
-    assert rows["a"]["n_outlinks"] == 4 and rows["a"]["n_inlinks"] == 0
-    assert rows["c"]["out_degree"] == 0 and rows["c"]["n_inlinks"] == 3
-    assert rows["b"]["out_degree"] == 1 and rows["b"]["in_degree"] == 1
-
-
-def test_pagerank_hand_computed_with_dangling(spark):
-    """a→b (weight 1), b→a and b→c (equal weights): c is dangling. One
-    iteration from uniform, d = 0.85, N = 3 — hand arithmetic."""
-    g = spark.createDataFrame(
-        [("a", "b", 2), ("b", "a", 1), ("b", "c", 1)],
-        "src_host string, dst_host string, n_links long",
-    )
-    r = {row["host"]: row["pagerank"] for row in host_pagerank(g, n_iter=1).collect()}
-    base = 0.15 / 3
-    dangling = (1 / 3) / 3  # c's uniform share, redistributed to every node
-    assert r["a"] == pytest.approx(base + 0.85 * (1 / 6 + dangling))
-    assert r["b"] == pytest.approx(base + 0.85 * (1 / 3 + dangling))
-    assert r["c"] == pytest.approx(base + 0.85 * (1 / 6 + dangling))
-
-
-def test_pagerank_mass_conserved_and_hot_host_ranks_first(links):
-    g = host_graph(links)
-    pr = host_pagerank(g, n_iter=3)
-    total = pr.agg(F.sum("pagerank")).collect()[0][0]
-    assert total == pytest.approx(1.0, abs=1e-9)
-    top = pr.orderBy(F.desc("pagerank")).first()
-    assert top["host"] == "popular.example.com"
-
-
-def test_empty_graph(spark):
-    g = spark.createDataFrame([], "src_host string, dst_host string, n_links long")
-    assert host_pagerank(g).count() == 0
-    assert host_degrees(g).count() == 0
-
-
 def test_link_graph_plan_no_cartesian_and_pruned_scan(spark, pages):
     """The href harvest is a JVM projection over a 2-column scan; nothing
     in the family plans a cartesian product."""
@@ -147,8 +99,6 @@ def test_link_graph_plan_no_cartesian_and_pruned_scan(spark, pages):
     plan = plan_of(extract_outlinks(pages.select("url", "html")))
     assert n_nodes(plan, "CartesianProduct") == 0
     assert "MapInPandas" not in plan.split("Generate")[0].split("Scan")[0]
-    g = host_graph(extract_outlinks(pages))
-    assert n_nodes(plan_of(host_pagerank(g, n_iter=1)), "CartesianProduct") == 0
 
 
 def test_outlink_scan_prunes_to_url_and_html(spark, tmp_path_factory):
@@ -170,8 +120,8 @@ def test_outlink_scan_prunes_to_url_and_html(spark, tmp_path_factory):
 
 def test_malformed_href_and_invalid_utf8_do_not_kill_the_job(spark):
     """ANSI-mode crash-proofing: a non-UTF-8 payload byte and an
-    RFC-invalid harvested href must degrade per-row (NULL host, dropped
-    by host_graph), never fail the job."""
+    RFC-invalid harvested href must degrade per-row (NULL host), never
+    fail the job."""
     html = bytearray(
         b'\xff\xfe<a href="https://ok.org/a">x</a>'
         b'<a href="https://spacey.org/foo bar">y</a>'
@@ -188,11 +138,6 @@ def test_malformed_href_and_invalid_utf8_do_not_kill_the_job(spark):
         ("https://spacey.org/foo", "spacey.org"),
         # unparseable authority → NULL host, row kept, job alive
         ("https://bad.org:not-a-port/x", None),
-    }
-    g = host_graph(extract_outlinks(pages))
-    assert {(r["src_host"], r["dst_host"]) for r in g.collect()} == {
-        ("src.org", "ok.org"),
-        ("src.org", "spacey.org"),
     }
 
 

@@ -399,6 +399,30 @@ def test_breaker_verdict_independent_of_readback_packing(
     assert outcomes[0]["final_mineru_ok"] == 20
 
 
+def test_cli_circuit_breaker_flag_reaches_run_job(spark, tmp_path):
+    """``--circuit-breaker`` is the only way a job reaches the breaker: a
+    poisoned run trips mineru, and the next poisoned run, submitted with
+    the flag through jobs/extract.main, writes no mineru rows (short
+    circuit; probe failures are never checkpointed) and every deepseek-ocr
+    row. Without the flag the second run writes 20 mineru error rows."""
+    from ocr_project_spark.jobs.extract import main as extract_main
+
+    store = [
+        "--results", str(tmp_path / "results"),
+        "--lineage", str(tmp_path / "lineage"),
+    ]
+    for i, (lo, hi) in enumerate([(0, 40), (40, 80)]):
+        path = str(tmp_path / f"pages{i}")
+        _breaker_corpus(spark, lo, hi, False).write.parquet(path)
+        extract_main(
+            ["--pages", path, *store] + (["--circuit-breaker"] if i else []),
+            spark=spark,
+        )
+    second = spark.read.parquet(str(tmp_path / "results")).where("doc_id >= 40")
+    assert second.where("backend = 'mineru'").count() == 0
+    assert second.where("backend = 'deepseek-ocr' AND success").count() == 20
+
+
 def test_lineage_is_incremental_appends(spark, tmp_path):
     """Each run appends ONE run_id worth of lineage computed from its own
     rows (never a rescan/overwrite of the full results table), and the

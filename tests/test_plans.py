@@ -142,17 +142,6 @@ def test_lineage_readback_prunes_to_current_run(spark, pages, tmp_path):
     assert rb.count() == pages.count() - 100
 
 
-def test_cap_per_host_single_host_exchange(spark):
-    """cap_per_host shuffles once, on host, for the rank window."""
-    from ocr_project_spark.operators.skew import cap_per_host
-
-    rows = [(f"https://h{i % 3}.example.org/p{i}",) for i in range(30)]
-    df = spark.createDataFrame(rows, "url string")
-    plan = plan_of(cap_per_host(df, max_per_host=2))
-    assert n_nodes(plan, "Exchange") <= 2  # round-robin source + host hash
-    assert n_nodes(plan, "Window") == 1
-
-
 def test_line_removal_no_cartesian_and_partial_aggs(spark, documents):
     """PLANS §8: line dedup's only wide ops are partial-agg groupBys and
     key joins — never a cartesian product; payloads never shuffle."""

@@ -1,5 +1,5 @@
-"""Round-4 late additions: DSIR importance weights, URL spam scoring,
-mojibake repair, the composed curation chain.
+"""Round-4 late additions: DSIR importance weights, mojibake repair,
+the composed curation chain.
 """
 
 from __future__ import annotations
@@ -102,37 +102,6 @@ def test_importance_plan_broadcasts_target_side(spark, documents):
     assert n_nodes(plan, "BroadcastHashJoin") + n_nodes(
         plan, "BroadcastNestedLoopJoin"
     ) >= 3
-
-
-# ------------------------------------------------------------- url spam
-
-
-def test_url_spam_signals(spark):
-    from ocr_project_spark.functions.urls import url_spam_scores
-
-    rows = spark.createDataFrame(
-        [
-            (1, "https://example.com/articles/post.html"),
-            (2, "https://best-casino-bonus.example.com/casino/poker.html"),
-            (3, "https://x931425.xyz/page"),
-            (4, "https://ok.org/a/b/c/d?q=1"),
-        ],
-        ["doc_id", "url"],
-    )
-    out = {r["doc_id"]: r for r in url_spam_scores(rows).collect()}
-    assert out[1]["n_spam_words"] == 0 and not out[1]["url_suspect"]
-    assert out[2]["n_spam_words"] == 3  # casino ×2 + poker
-    assert out[2]["url_suspect"]
-    assert out[3]["bad_tld"] and out[3]["digit_heavy_host"]
-    assert out[3]["url_suspect"]
-    assert out[4]["path_depth"] == 4 and not out[4]["url_suspect"]
-
-
-def test_url_spam_zero_exchange(spark, pages):
-    from ocr_project_spark.functions.urls import url_spam_scores
-
-    plan = plan_of(url_spam_scores(pages.select("doc_id", "url")))
-    assert n_nodes(plan, "Exchange") == 0
 
 
 # ------------------------------------------------------------ mojibake
@@ -333,27 +302,3 @@ def test_importance_empty_target_selects_nothing(spark, documents):
     empty = documents.where("doc_id < 0").select("doc_id", "text")
     out = importance_weights(documents.limit(20), empty, n=2)
     assert out.where("selected").count() == 0
-
-
-def test_canonical_url_strips_port_before_query(spark):
-    """Default ports must drop when the authority is followed directly by
-    a query string, not only by a path or end-of-string — otherwise the
-    same page keeps two canonical keys."""
-    from ocr_project_spark.functions.urls import canonical_url
-
-    rows = spark.createDataFrame(
-        [
-            ("http://example.com:80?x=1",),
-            ("http://example.com?x=1",),
-            ("https://example.com:443?x=1",),
-            ("https://example.com:8443/a",),  # non-default port survives
-        ],
-        ["url"],
-    ).select(canonical_url(F.col("url")).alias("c"))
-    got = [r["c"] for r in rows.collect()]
-    assert got == [
-        "http://example.com?x=1",
-        "http://example.com?x=1",
-        "https://example.com?x=1",
-        "https://example.com:8443/a",
-    ]

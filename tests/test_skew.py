@@ -112,49 +112,6 @@ def test_salted_host_counts_exact(pages):
     assert got[HOT_HOST] > 0.25 * sum(expected.values())
 
 
-def test_host_politeness_budget(spark, pages):
-    """Politeness budget: recommended delay is the observed gap floored at
-    the policy minimum; hosts crawled once get the minimum."""
-    from ocr_project_spark.operators.skew import host_politeness, host_stats
-
-    out = {r["host"]: r for r in host_politeness(pages).collect()}
-    stats = {r["host"]: r for r in host_stats(pages).collect()}
-    assert out.keys() == stats.keys()
-    for host, r in out.items():
-        s = stats[host]
-        span = int((s["last_ts"] - s["first_ts"]).total_seconds())
-        assert r["span_seconds"] == span
-        if r["n_urls"] > 1:
-            assert r["avg_gap_ms"] == span * 1000 // (r["n_urls"] - 1)
-        else:
-            assert r["avg_gap_ms"] == 0
-        assert r["recommended_delay_ms"] == max(1000, r["avg_gap_ms"])
-
-
-def test_canonical_url_rules(spark):
-    """Each canonicalization rule: case, fragment, tracking runs, default
-    ports — while preserving meaningful query params and path case."""
-    from ocr_project_spark.functions.urls import canonicalize_urls
-
-    cases = [
-        ("HTTPS://Example.COM/Path/Page.html", "https://example.com/Path/Page.html"),
-        ("https://a.com/p#frag?not-a-query", "https://a.com/p"),
-        ("https://a.com/p?utm_source=x&utm_medium=y&q=1",
-         "https://a.com/p?q=1"),
-        ("https://a.com/p?q=1&utm_campaign=z", "https://a.com/p?q=1"),
-        ("https://a.com/p?fbclid=abc", "https://a.com/p"),
-        ("http://a.com:80/p", "http://a.com/p"),
-        ("https://a.com:443/p?a=1&b=2", "https://a.com/p?a=1&b=2"),
-        ("https://a.com:8443/p", "https://a.com:8443/p"),  # non-default kept
-        ("https://a.com/p?gclid=1&utm_a=2&keep=3#f", "https://a.com/p?keep=3"),
-    ]
-    df = spark.createDataFrame([(u,) for u, _ in cases], "url string")
-    got = [r["url"] for r in canonicalize_urls(df).collect()]
-    # collect() preserves the single-partition input order here
-    for (inp, expected), out in zip(cases, got):
-        assert out == expected, f"{inp} -> {out} != {expected}"
-
-
 def test_hot_hosts_is_lazy_one_pass(spark):
     """hot_hosts must not run an eager count() action at construction time
     (ADVICE r2): building the DataFrame launches zero Spark jobs, and the
@@ -175,63 +132,6 @@ def test_hot_hosts_is_lazy_one_pass(spark):
     assert hot_hosts(df, threshold=0.5).collect() == []
 
 
-def test_cap_per_host_deterministic(spark):
-    from ocr_project_spark.operators.skew import cap_per_host
-
-    rows = [(f"https://h{i % 3}.example.org/p{i}",) for i in range(90)]
-    df = spark.createDataFrame(rows, "url string")
-    a = {r["url"] for r in cap_per_host(df, max_per_host=5).collect()}
-    b = {r["url"] for r in cap_per_host(df.repartition(13), max_per_host=5).collect()}
-    assert a == b and len(a) == 15  # 3 hosts × 5
-    # cap larger than any host's count keeps everything
-    assert cap_per_host(df, max_per_host=40).count() == 90
-
-
-def test_cap_per_host_approximate_threshold_sampling(spark):
-    """approximate=True (the constant-memory mega-host path): kept counts
-    land within binomial tolerance of the cap, hosts at/under the cap keep
-    everything, and the kept set is a pure function of the url set
-    (repartition-invariant)."""
-    from ocr_project_spark.operators.skew import cap_per_host
-
-    # one mega-host with 2000 urls + one small host under the cap
-    rows = [(f"https://mega.example.org/p{i}",) for i in range(2000)]
-    rows += [(f"https://tiny.example.org/p{i}",) for i in range(7)]
-    df = spark.createDataFrame(rows, "url string")
-    kept = cap_per_host(df, max_per_host=100, approximate=True)
-    by_host = {
-        r["host"]: r["n"]
-        for r in kept.groupBy("host").agg(F.count("*").alias("n")).collect()
-    }
-    assert by_host["tiny.example.org"] == 7  # under cap → all kept
-    # binomial: mean 100, σ = √(2000·p·(1−p)) ≈ 9.7 → ±5σ bound
-    assert 50 <= by_host["mega.example.org"] <= 150, by_host
-    # deterministic: repartition changes nothing
-    a = {r["url"] for r in kept.collect()}
-    b = {
-        r["url"]
-        for r in cap_per_host(
-            df.repartition(17), max_per_host=100, approximate=True
-        ).collect()
-    }
-    assert a == b
-
-
-def test_cap_per_host_approximate_no_window_no_host_sort(spark):
-    """Plan contract for the approximate cap: no Window operator and no
-    host-keyed global sort anywhere — the mega-host never funnels into a
-    single reducer (the point of threshold sampling)."""
-    from tests.test_plans import n_nodes, plan_of
-
-    from ocr_project_spark.operators.skew import cap_per_host
-
-    rows = [(f"https://h{i % 3}.example.org/p{i}",) for i in range(30)]
-    df = spark.createDataFrame(rows, "url string")
-    plan = plan_of(cap_per_host(df, max_per_host=2, approximate=True))
-    assert n_nodes(plan, "Window") == 0
-    assert "row_number" not in plan
-
-
 def test_with_host_tolerates_invalid_urls(spark):
     """ANSI-mode crash-proofing: an RFC-invalid crawl url gets a NULL host
     group instead of killing host aggregation."""
@@ -244,25 +144,3 @@ def test_with_host_tolerates_invalid_urls(spark):
     assert rows["https://ok.org/a"] == "ok.org"
     assert rows["https://bad host/with space"] is None
 
-
-def test_surt_key_published_form(spark):
-    """SURT: scheme dropped, host dot-reversed comma-joined, port after the
-    reversed host, path/query kept verbatim."""
-    from ocr_project_spark.functions.urls import surt_key
-
-    df = spark.createDataFrame(
-        [
-            ("https://sub.Example.com/a/b?q=1",),
-            ("http://example.com:8080/x",),
-            ("https://host/",),
-            ("https://example.org",),
-        ],
-        "url string",
-    )
-    got = [r["s"] for r in df.select(surt_key(df.url).alias("s")).collect()]
-    assert got == [
-        "com,example,sub)/a/b?q=1",
-        "com,example:8080)/x",
-        "host)/",
-        "org,example)",
-    ]
