@@ -9,14 +9,14 @@ per component — this module is that step for the minhash/simhash families.
 
 Algorithm: alternating large-star / small-star (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC 2014) — O(log²n)
-rounds worst-case (2 rounds on the clique-like components LSH actually
-emits), each round two groupBy+join passes over the EDGE list only (pair
-scale, never corpus scale), expressed entirely as DataFrame min-aggregates
-and equi-joins: no ``collect_set`` (a star center with millions of
-neighbors would blow an array column), no driver state beyond one
-convergence scalar per round. Each round is localCheckpoint-ed to truncate
-the logical plan — an iterative loop without truncation grows the Catalyst
-plan exponentially. On a production cluster with lossy executors, swap
+rounds worst-case (none when every component already is a star), each
+round two groupBy+join passes over the EDGE list only (pair scale, never
+corpus scale), expressed entirely as DataFrame min-aggregates and
+equi-joins: no ``collect_set`` (a star center with millions of neighbors
+would blow an array column), no driver state beyond one star-forest flag
+per round. Each round is localCheckpoint-ed to truncate the logical plan —
+an iterative loop without truncation grows the Catalyst plan
+exponentially. On a production cluster with lossy executors, swap
 ``localCheckpoint`` for ``checkpoint`` against a reliable checkpoint dir;
 the mechanics are identical.
 """
@@ -27,17 +27,24 @@ from pyspark.sql import DataFrame, functions as F
 
 from ocr_project_spark.session import release_checkpoint
 
-COMPONENT_SCHEMA = "doc_id long, cluster_id long"
 
-
-def _edge_checksum(edges: DataFrame) -> tuple[int, int]:
-    # modular sum keeps the content hash ANSI-overflow-safe at any edge count
-    h = F.xxhash64("src", "dst") % F.lit(1_000_000_007)
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum(h), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return row["n"], row["h"]
+def _is_star_forest(edges: DataFrame) -> bool:
+    """Whether the oriented (src > dst) edges are stars: every src has
+    exactly one dst and no dst is a src. One grouped pass over the nodes:
+    out-degree, and an in-edge where the min of the out flags is 0."""
+    ends = F.explode(
+        F.array(
+            F.struct(F.col("src").alias("node"), F.lit(1).alias("out")),
+            F.struct(F.col("dst").alias("node"), F.lit(0).alias("out")),
+        )
+    )
+    nodes = (
+        edges.select(ends.alias("e"))
+        .groupBy("e.node")
+        .agg(F.sum("e.out").alias("n_out"), F.min("e.out").alias("min_out"))
+    )
+    bad = (F.col("n_out") > 1) | ((F.col("n_out") > 0) & (F.col("min_out") == 0))
+    return nodes.where(bad).isEmpty()
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -94,10 +101,10 @@ def connected_components(
     deterministic representative). Nodes in no pair simply don't appear —
     :func:`near_dup_clusters` fills in singletons.
 
-    Fixed point: the edge set is monotone under the star operations (dst
-    labels only ever decrease), so a stable (count, content-hash) checksum
-    — one scalar row per round — is the termination proof. At the fixed
-    point the edges form stars (node → component min) exactly.
+    The rounds stop at the first star forest: a fixed point of both star
+    operations, whose only oriented form maps every node to its
+    component's minimum. The edges are oriented (large, small) up front,
+    so disjoint pairs, or no pairs, run no round at all.
     """
     spark = pairs.sparkSession
     # Catalyst's constraint propagation mis-rewrites constraints through
@@ -111,16 +118,19 @@ def connected_components(
     spark.conf.set(cp_key, "false")
     try:
         edges = (
-            pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+            pairs.select(
+                F.greatest(id_a, id_b).alias("src"), F.least(id_a, id_b).alias("dst")
+            )
             .where(F.col("src") != F.col("dst"))
             .distinct()
             .localCheckpoint()  # materialize once: pair generation is expensive
         )
-        prev = _edge_checksum(edges)
-        if prev[0] == 0:
-            release_checkpoint(edges)
-            return spark.createDataFrame([], COMPONENT_SCHEMA)
-        for _ in range(max_iter):
+        rounds = 0
+        while not _is_star_forest(edges):
+            if rounds == max_iter:
+                raise RuntimeError(
+                    f"connected_components did not converge in {max_iter} rounds"
+                )
             nxt = _small_star(_large_star(edges)).localCheckpoint()
             # nxt is self-contained once checkpointed — release the previous
             # round's blocks so a long-lived session doesn't accrue one
@@ -128,14 +138,7 @@ def connected_components(
             # and they back the returned DataFrame)
             release_checkpoint(edges)
             edges = nxt
-            cur = _edge_checksum(edges)
-            if cur == prev:
-                break
-            prev = cur
-        else:
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} rounds"
-            )
+            rounds += 1
     finally:
         spark.conf.set(cp_key, cp_prev)
     members = edges.select(

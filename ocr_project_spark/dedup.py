@@ -20,7 +20,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 MINHASH_SEED = 0x5EED
 
@@ -119,17 +119,19 @@ def shingle_sets(
     keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """Distinct word n-gram shingles per doc (JVM: sequence/transform)."""
-    words = F.split(F.col(text_col), " ")
+    extra = [F.col(c) for c in keep]
+    shingles = _shingles(F.col(text_col), n).alias("shingles")
+    return docs.select(F.col(id_col).alias("doc_id"), shingles, *extra)
+
+
+def _shingles(text: Column, n: int) -> Column:
+    words = F.split(text, " ")
     cnt = F.size(words)
-    grams = F.array_distinct(
+    return F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), F.greatest(cnt - (n - 1), F.lit(1))),
             lambda i: F.concat_ws(" ", F.slice(words, i, n)),
         )
-    )
-    extra = [F.col(c) for c in keep]
-    return docs.select(
-        F.col(id_col).alias("doc_id"), grams.alias("shingles"), *extra
     )
 
 
@@ -561,17 +563,17 @@ def minhash_near_dup_pairs(
     hash→sign→band pass, then exact-jaccard verification of candidates only
     (LSH gives recall, the verify step restores precision).
 
-    The shingle expression is pure JVM codegen and is recomputed on each
-    verify side instead of persisting a derived column set — no cached
-    blocks leak into long-lived sessions, and at 100 TB recomputing a
-    codegen'd transform is cheaper than materializing per-doc string arrays
-    in executor memory.
+    Each subplan runs once and nothing is persisted. The band rows are
+    repartitioned on the bucket key before either self-join side renames
+    ``doc_id``, so both sides read one exchange (``ReusedExchange``): the
+    fused UDF runs once. The verify joins carry raw ``(doc_id, text)`` rows
+    and shingle above the joins, so only candidate documents are shingled.
 
     ``max_bucket`` is the degenerate-bucket safety valve for web corpora: a
     band bucket of b members emits b² candidate pairs, so one bucket
     holding a million byte-identical boilerplate pages would go quadratic.
-    Buckets larger than the cap are dropped BEFORE the self-join (one extra
-    partial-agg count, broadcast back). Over-cap buckets are *usually*
+    Buckets larger than the cap are dropped BEFORE the self-join (a window
+    count over the same exchange). Over-cap buckets are *usually*
     dominated by exact-duplicate classes (run :func:`exact_dup_groups`
     first, which collapses those for a linear price) — but templated
     near-identical pages can also share a band bucket, so capping CAN lose
@@ -581,36 +583,29 @@ def minhash_near_dup_pairs(
     count-what-you-drop posture as the WARC parser's ``n_skipped``. AQE's
     skew-join split remains the backstop for buckets under the cap."""
     hashed = hashed_shingles(docs, n, text_col)
-    banded = minhash_band_rows_from_hashes(hashed, num_hashes, bands)
+    banded = minhash_band_rows_from_hashes(hashed, num_hashes, bands).repartition(
+        "band_idx", "band_hash"
+    )
     if max_bucket is not None:
-        ok_buckets = (
-            banded.groupBy("band_idx", "band_hash")
-            .agg(F.count(F.lit(1)).alias("__n"))
+        bucket = Window.partitionBy("band_idx", "band_hash")
+        banded = (
+            banded.withColumn("__n", F.count(F.lit(1)).over(bucket))
             .where(F.col("__n") <= max_bucket)
-            .select("band_idx", "band_hash")
+            .drop("__n")
         )
-        banded = banded.join(ok_buckets, ["band_idx", "band_hash"], "left_semi")
-    cands = _band_bucket_pairs(banded)
-    sh = shingle_sets(docs, n, text_col)
+    texts = docs.select("doc_id", F.col(text_col).alias("text"))
+    a, b = texts.alias("a"), texts.alias("b")
+    sh_a, sh_b = _shingles(F.col("a.text"), n), _shingles(F.col("b.text"), n)
     verified = (
-        cands.join(
-            sh.select(
-                F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a")
-            ),
-            "id_a",
-        )
-        .join(
-            sh.select(
-                F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b")
-            ),
-            "id_b",
-        )
+        _band_bucket_pairs(banded)
+        .join(a, F.col("id_a") == F.col("a.doc_id"))
+        .join(b, F.col("id_b") == F.col("b.doc_id"))
         .select(
             "id_a",
             "id_b",
             (
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b"))
+                F.size(F.array_intersect(sh_a, sh_b))
+                / F.size(F.array_union(sh_a, sh_b))
             ).alias("jaccard"),
         )
     )

@@ -180,6 +180,8 @@ def main(argv=None, spark=None) -> None:
     """CLI driver; ``spark`` can be injected for in-process tests (the
     session is then left running)."""
     args = parse_args(argv)
+    from pyspark.sql import Observation, functions as F
+
     from ocr_project_spark.session import build_session, release_checkpoint
 
     owns_session = spark is None
@@ -193,14 +195,16 @@ def main(argv=None, spark=None) -> None:
     try:
         n0 = spark.read.parquet(args.documents).count()
         print(f"curate: input {n0} documents")
-        # per-stage counts ride the checkpoints and the final write as
-        # observed metrics, not one .count() action per stage
+        # per-stage and output counts ride the checkpoints and the final
+        # write as observed metrics, not one .count() action each
         docs, observations = curation_chain(spark, args, held)
-        docs.write.mode("overwrite").parquet(args.out)
+        out_obs = Observation("out")
+        docs.observe(out_obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(args.out)
         for label, obs in observations:
             print(f"curate: {label} kept {obs.get['n']} documents")
-        n_out = spark.read.parquet(args.out).count()
-        print(f"curate: wrote {n_out} of {n0} documents -> {args.out}")
+        print(f"curate: wrote {out_obs.get['n']} of {n0} documents -> {args.out}")
     finally:
         for df in held:
             release_checkpoint(df)

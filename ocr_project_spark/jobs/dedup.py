@@ -62,6 +62,8 @@ def main(argv=None, spark=None) -> None:
     """CLI driver; ``spark`` can be injected for in-process tests (the
     session is then left running)."""
     args = parse_args(argv)
+    from pyspark.sql import Observation, functions as F
+
     from ocr_project_spark.session import build_session
 
     owns_session = spark is None
@@ -102,11 +104,13 @@ def main(argv=None, spark=None) -> None:
             from ocr_project_spark.dedup import simhash_dedup_keep
 
             keep = simhash_dedup_keep(docs, max_hamming=args.max_hamming)
-        keep.write.mode("overwrite").parquet(args.keep)
-        n_keep = spark.read.parquet(args.keep).count()
-        print(f"dedup: kept {n_keep} of {docs.count()} documents -> {args.keep}")
+        kept_obs = Observation("keep")
+        keep.observe(kept_obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(args.keep)
+        print(f"dedup: kept {kept_obs.get['n']} of {docs.count()} documents -> {args.keep}")
         if args.kept_corpus:
-            kept_ids = spark.read.parquet(args.keep)
+            kept_ids = spark.read.schema("doc_id long").parquet(args.keep)
             docs.join(kept_ids, "doc_id", "left_semi").write.mode(
                 "overwrite"
             ).parquet(args.kept_corpus)

@@ -200,13 +200,6 @@ def parse_warc_records_with_stats(
     return out, n_skipped
 
 
-def parse_warc_records(
-    data: bytes,
-) -> list[tuple[str, datetime | None, bytes]]:
-    """Records-only view of :func:`parse_warc_records_with_stats`."""
-    return parse_warc_records_with_stats(data)[0]
-
-
 def pages_from_warc(
     segments: DataFrame,
     content_col: str = "content",

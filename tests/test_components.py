@@ -148,3 +148,90 @@ def test_constraint_propagation_conf_restored(spark):
         spark.createDataFrame([], "id_a long, id_b long")
     ).collect()
     assert spark.conf.get(key, "true") == before
+
+
+def _oracle(edges):
+    """Pure-Python union-find: every node of a non-self pair → its
+    component's minimum id."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a == b:
+            continue
+        for x in (a, b):
+            parent.setdefault(x, x)
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _random_graph(seed, n_nodes=40, n_edges=30):
+    import random
+
+    rng = random.Random(seed)
+    ids = rng.sample(range(1, 10_000), n_nodes)
+    return [tuple(rng.sample(ids, 2)) for _ in range(n_edges)]
+
+
+def _shapes():
+    """Disjoint shapes in one graph, each in its own id range: pairs, a
+    path, a clique, a star whose center is not the minimum, duplicate and
+    reversed pairs, and a self pair."""
+    pairs = [(1, 2), (4, 3), (6, 5)]
+    path = [(100 + i, 101 + i) for i in range(7)]
+    clique = [(a, b) for a in range(200, 205) for b in range(a + 1, 205)]
+    star = [(350, leaf) for leaf in (310, 320, 360, 370)]
+    dups = [(400, 401), (401, 400), (400, 401), (402, 401)]
+    return pairs + path + clique + star + dups + [(500, 500)]
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [
+        [],
+        [(1, 2), (3, 4), (5, 6), (8, 7)],
+        _shapes(),
+        _random_graph(1),
+        _random_graph(2, n_edges=45),
+        _random_graph(3, n_nodes=12, n_edges=20),
+    ],
+    ids=["empty", "pairs", "shapes", "random1", "random2", "random3"],
+)
+def test_components_match_union_find(spark, edges):
+    assert _comp_map(connected_components(_pairs(spark, edges))) == _oracle(edges)
+
+
+def _count_rounds(monkeypatch):
+    from ocr_project_spark import components
+
+    rounds = []
+    small_star = components._small_star
+
+    def counted(edges):
+        rounds.append(1)
+        return small_star(edges)
+
+    monkeypatch.setattr(components, "_small_star", counted)
+    return rounds
+
+
+def test_pairs_only_input_runs_no_round(spark, monkeypatch):
+    """Disjoint pairs already are a star forest once oriented (large,
+    small): the loop stops before its first round."""
+    rounds = _count_rounds(monkeypatch)
+    edges = [(1, 2), (4, 3), (5, 6), (5, 6)]
+    assert _comp_map(connected_components(_pairs(spark, edges))) == _oracle(edges)
+    assert rounds == []
+
+
+def test_path_converges_in_a_few_rounds(spark, monkeypatch):
+    rounds = _count_rounds(monkeypatch)
+    edges = [(i, i + 1) for i in range(9)]
+    assert _comp_map(connected_components(_pairs(spark, edges))) == _oracle(edges)
+    assert 0 < len(rounds) < 25

@@ -140,6 +140,45 @@ def test_dedup_cli_max_bucket_logs_drops(spark, tmp_path, capsys):
     assert 90 in keep
 
 
+def _chain_corpus():
+    """50-word documents: 1 ~ 2 and 2 ~ 3 above the 0.8 threshold, 1 !~ 3
+    (the chain components collapse), and 50 unrelated."""
+    words = [f"tok{i}" for i in range(50)]
+
+    def edit(k):  # replace the first k words
+        return " ".join([f"zz{j}" for j in range(k)] + words[k:])
+
+    return [
+        (1, " ".join(words), "en"),
+        (2, edit(3), "en"),
+        (3, edit(6), "en"),
+        (50, " ".join(f"far{i}" for i in range(50)), "en"),
+    ]
+
+
+@pytest.mark.parametrize(
+    "rows, n_keep",
+    [
+        ([(i, " ".join(f"w{i}x{j}" for j in range(20)), "en") for i in range(8)], 8),
+        (_chain_corpus(), 2),
+    ],
+    ids=["no-near-dups", "components-drop"],
+)
+def test_dedup_cli_counts_match_written_rows(spark, tmp_path, capsys, rows, n_keep):
+    """The printed keep count is observed on the keep-list write: it equals
+    the rows of the written keep list, and of the kept corpus."""
+    from ocr_project_spark.jobs.dedup import main
+
+    src, keep, kept = (str(tmp_path / d) for d in ("d", "k", "kc"))
+    spark.createDataFrame(rows, "doc_id long, text string, lang string").write.parquet(src)
+    main(["--documents", src, "--keep", keep, "--kept-corpus", kept], spark=spark)
+    printed = capsys.readouterr().out
+    n_written = spark.read.parquet(keep).count()
+    assert n_written == n_keep
+    assert f"dedup: kept {n_written} of {len(rows)} documents -> {keep}" in printed
+    assert spark.read.parquet(kept).count() == n_written
+
+
 def test_extract_cli_wet_output(spark, tmp_path):
     """--wet publishes the extracted text as parseable WET segments whose
     record set round-trips to the results."""

@@ -199,3 +199,57 @@ def test_curation_chain_plan_is_linear(spark, tmp_path):
         if ln.startswith("(") and ln.split(") ", 1)[-1].startswith("Scan ")
     ]
     assert len(scans) <= 3, scans
+
+
+def final_plan(df) -> str:
+    """The final adaptive plan of a DataFrame whose action has run."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def subtrees(plan: str, op: str) -> list[str]:
+    """Each node whose name holds ``op``, with everything under it, from a
+    plan's tree string (children are indented deeper than their parent)."""
+    lines = plan.splitlines()
+
+    def depth(ln: str) -> int:
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    out = []
+    for i, ln in enumerate(lines):
+        if op in ln[depth(ln):].split(" ", 1)[0]:
+            end = i + 1
+            while end < len(lines) and depth(lines[end]) > depth(ln):
+                end += 1
+            out.append("\n".join(lines[i:end]))
+    return out
+
+
+@pytest.mark.parametrize("max_bucket", [None, 50])
+def test_minhash_pairs_run_band_udf_once_and_shingle_only_candidates(
+    spark, documents, tmp_path, max_bucket
+):
+    """PLANS §5: after an action, the final plan holds ONE fused MinHash
+    pass, whose band exchange both sides of the bucket self-join read
+    (ReusedExchange); the verify joins move raw (doc_id, text) rows and
+    shingle above the joins, so no exchange fed by the corpus scan carries
+    a shingle projection. Reads a copy no fixture caches: over a cached
+    relation the two self-join sides never canonicalize alike."""
+    from ocr_project_spark.dedup import minhash_near_dup_pairs
+
+    documents.write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    df = minhash_near_dup_pairs(docs, max_bucket=max_bucket)
+    df.collect()
+    plan = final_plan(df)
+    assert plan.count("MapInPandas") == 1, plan
+    assert any(
+        "band_hash" in ln for ln in plan.splitlines() if "ReusedExchange" in ln
+    ), plan
+    verify_side = [
+        t for t in subtrees(plan, "Exchange")
+        if "Scan" in t and "MapInPandas" not in t
+    ]
+    assert verify_side, plan
+    for t in verify_side:
+        assert "array_distinct(transform(sequence(" not in t, t

@@ -78,7 +78,7 @@ def test_warc_roundtrip_property(payloads, with_requests, compression):
     from datetime import datetime, timezone
 
     from ocr_project_spark.sources.warc import (
-        parse_warc_records,
+        parse_warc_records_with_stats,
         synthesize_warc_segment,
     )
 
@@ -90,7 +90,7 @@ def test_warc_roundtrip_property(payloads, with_requests, compression):
     seg = synthesize_warc_segment(
         docs, include_request_records=with_requests, compression=compression
     )
-    records = parse_warc_records(seg)
+    records = parse_warc_records_with_stats(seg)[0]
     assert [(u, p) for u, _, p in records] == [(u, p) for u, _, p in docs]
 
 

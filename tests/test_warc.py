@@ -12,7 +12,7 @@ from ocr_project_spark.datagen import build_html
 from ocr_project_spark.operators.extract import extract_documents
 from ocr_project_spark.sources.warc import (
     pages_from_warc,
-    parse_warc_records,
+    parse_warc_records_with_stats,
     synthesize_warc_segment,
 )
 
@@ -38,7 +38,7 @@ def test_parse_records_skips_requests_and_non200():
         [("https://site-x.example.org/gone.html", TS, b"not found")],
         include_request_records=False,
     ).replace(b"HTTP/1.1 200 OK", b"HTTP/1.1 404 NF")
-    records = parse_warc_records(seg)
+    records = parse_warc_records_with_stats(seg)[0]
     assert [u for u, _, _ in records] == [u for u, _, _ in docs]
     for (u, ts, payload), (eu, ets, epayload) in zip(records, docs):
         assert ts == ets
@@ -51,14 +51,14 @@ def test_parse_records_payload_with_blank_lines():
         [("https://s.example.org/x.html", TS, payload)],
         include_request_records=False,
     )
-    records = parse_warc_records(seg)
+    records = parse_warc_records_with_stats(seg)[0]
     assert len(records) == 1
     assert records[0][2] == payload  # Content-Length framing, not split
 
 
 def test_parse_records_truncated_tail():
     seg = synthesize_warc_segment(_docs(2), include_request_records=False)
-    records = parse_warc_records(seg + b"WARC/1.0\r\ngarbage")
+    records = parse_warc_records_with_stats(seg + b"WARC/1.0\r\ngarbage")[0]
     assert len(records) == 2
 
 
@@ -108,15 +108,15 @@ def test_parse_records_gzip_per_record_and_whole_file():
     rec_gz = synthesize_warc_segment(docs, compression="record")
     file_gz = synthesize_warc_segment(docs, compression="file")
     assert rec_gz != raw and file_gz != raw
-    expected = parse_warc_records(raw)
-    assert parse_warc_records(rec_gz) == expected
-    assert parse_warc_records(file_gz) == expected
+    expected = parse_warc_records_with_stats(raw)[0]
+    assert parse_warc_records_with_stats(rec_gz)[0] == expected
+    assert parse_warc_records_with_stats(file_gz)[0] == expected
     assert [u for u, _, _ in expected] == [u for u, _, _ in docs]
 
 
 def test_parse_records_gzip_trailing_garbage():
     seg = synthesize_warc_segment(_docs(2), compression="record")
-    records = parse_warc_records(seg + b"\x00garbage-not-gzip")
+    records = parse_warc_records_with_stats(seg + b"\x00garbage-not-gzip")[0]
     assert len(records) == 2
 
 
@@ -125,7 +125,7 @@ def test_status_code_is_second_token_not_substring():
         [("https://s.example.org/x.html", TS, b"payload")],
         include_request_records=False,
     ).replace(b"HTTP/1.1 200 OK", b"HTTP/1.1 404 see 200 page")
-    assert parse_warc_records(seg) == []
+    assert parse_warc_records_with_stats(seg)[0] == []
 
 
 def test_malformed_content_length_resyncs_to_next_record():
