@@ -16,10 +16,9 @@ instead of replaying the hash in SQL: dedup_minhash's *verified output*
 equals the exact n-gram-Jaccard pairs (candidate recall ≈ 1 at 128/32);
 dedup_simhash runs over a corpus with planted exact copies, whose pairing
 is a mathematical property of the hash (identical input ⇒ identical
-hash), making the expected answer exact SQL; corpus_percentiles is exact
-because the GK sketch is exact below its accuracy bound. The round-3
-cluster queries (dedup_minhash_components) replay connected components
-with a recursive-CTE transitive closure over the exact-jaccard pair set;
+hash), making the expected answer exact SQL. The round-3 cluster queries
+(dedup_minhash_components) replay connected components with a
+recursive-CTE transitive closure over the exact-jaccard pair set;
 warc_sinks closes the loop extraction → WET/WAT sinks → WARC parse against
 ground truth, byte-for-byte.
 """
@@ -39,28 +38,6 @@ _WELL_FORMED = "doc_id % 97 <> 13"
 _MALFORMED = "doc_id % 97 = 13"
 _N_PARAS = "cast(ceil(len(string_split(text, ' ')) / 8.0) as bigint)"
 _N_PAGES = f"least(1 + doc_id % 3, greatest({_N_PARAS}, 1))"
-
-# mojibake repair chain (text_normalize oracle): the SAME pinned table the
-# operator applies, rendered as chr() concatenations so no control byte or
-# NBSP has to survive a SQL string literal
-from ocr_project_spark.textops import MOJIBAKE_TABLE  # noqa: E402
-
-
-def _sql_chr(s: str) -> str:
-    return " || ".join(f"chr({ord(c)})" for c in s)
-
-
-_MOJIBAKE_SQL = "orig"
-for _bad, _good in MOJIBAKE_TABLE:
-    _MOJIBAKE_SQL = (
-        f"replace({_MOJIBAKE_SQL}, {_sql_chr(_bad)}, {_sql_chr(_good)})"
-    )
-
-# the planted mojibake segment of q_text_normalize, chr()-rendered
-_MOJI_SEG_SQL = _sql_chr(
-    " don\u00e2\u20ac\u2122t \u00e2\u20ac\u0153ok"
-    "\u00e2\u20ac\x9d caf\u00c3\u00a9 \u00e2\u20ac\u201d"
-)
 
 # markdown surfaces (shared by markdown_identity / unified_fields /
 # prompt_modes oracles; all assume a CTE exposing doc_id, words, n_paras,
@@ -236,17 +213,6 @@ SELECT c.doc_id,
 FROM corpus c LEFT JOIN comp k ON c.doc_id = k.doc_id
 WHERE c.lang = 'de'
 """
-
-
-def _hex_int(col_expr: str, offset: int, nchars: int = 4) -> str:
-    """SQL for parsing ``nchars`` lowercase-hex chars at 1-based ``offset``
-    of ``col_expr`` into an int (DuckDB has no hex→int cast)."""
-    return " + ".join(
-        f"(strpos('0123456789abcdef', substr({col_expr}, {offset + i}, 1)) - 1)"
-        f" * {16 ** (nchars - 1 - i)}"
-        for i in range(nchars)
-    )
-
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -775,69 +741,6 @@ def q_quality_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gram_lm_scores(docs.unionByName(planted), n=2)
 
 
-def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR-style importance-weight data selection (Xie et al. 2023) over
-    documents ∪ planted gibberish (+100000 on doc_id % 5 = 0, the
-    quality_lm planting), with the doc_id % 5 = 0 natural slice as the
-    TARGET corpus. Gibberish bigrams never appear in the target ⇒
-    sum_target_df = 0 ⇒ weight exactly 0.0 and not selected; natural docs
-    share bigrams with the target slice and score positive weights. The
-    integers are exact, the weight is a fixed tree of IEEE double
-    divisions (bit-identical cross-engine), and the selected gate is
-    DECIMAL cross-multiplication — the oracle rebuilds gram STRINGS in
-    DuckDB (cross-representation, like contamination/quality_lm) and
-    replays everything."""
-    from ocr_project_spark.textops import importance_weights
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    gib = F.concat_ws(
-        " ",
-        *[
-            F.concat(F.lit("gib"), F.col("doc_id").cast("string"), F.lit(f"_{i}"))
-            for i in range(12)
-        ],
-    )
-    planted = docs.where("doc_id % 5 = 0").select(
-        (F.col("doc_id") + 100000).alias("doc_id"), gib.alias("text")
-    )
-    corpus = docs.unionByName(planted)
-    target = docs.where("doc_id % 5 = 0")
-    out = importance_weights(corpus, target, n=2)
-    return out.select(
-        "doc_id",
-        "n_feats",
-        "sum_raw_df",
-        "sum_target_df",
-        "weight",
-        "selected",
-    )
-
-
-def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document fingerprint suite in one query: whole-text md5 +
-    min-shingle md5 (fingerprints) joined with the Karp-Rabin rolling-hash
-    winnowing stats (rolling_fingerprints: gram count and minimum gram
-    hash, the Horner fold replayed bit-for-bit by DuckDB's list_reduce)."""
-    from ocr_project_spark.textops import fingerprints, rolling_fingerprints
-
-    docs = _docs(spark, sf_dir)
-    return fingerprints(docs).join(
-        rolling_fingerprints(docs).select("doc_id", "n_grams", "min_hash"),
-        "doc_id",
-    )
-
-
-def q_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language corpus profile: exact aggregates (corpus_stats) joined
-    with the mergeable-sketch word-length percentiles (corpus_percentiles
-    — exact below the GK accuracy bound, so DuckDB's quantile_disc replays
-    them)."""
-    from ocr_project_spark.textops import corpus_percentiles, corpus_stats
-
-    docs = _docs(spark, sf_dir)
-    return corpus_stats(docs).join(corpus_percentiles(docs), "lang")
-
-
 def q_warc_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BOTH Common-Crawl distribution sinks round-tripped in one
     format-tagged row set (subsumes the round-4 `wet_roundtrip` row).
@@ -887,71 +790,6 @@ def q_warc_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return wet_rows.unionByName(wat_rows)
-
-
-def q_corpus_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document corpus release decisions in one row set (merges round
-    3's doc_splits + token_shards rows): the md5-bucket train/val/test
-    assignment (hash_split — a pure function of the id, invariant to
-    partitioning/row order, where df.sample is neither) joined with the
-    ≤10k-token greedy shard packing (shard_by_token_budget — the
-    distributed per-bucket prefix sum, which must equal the single global
-    cumulative-sum window the oracle runs)."""
-    from ocr_project_spark.textops import hash_split, shard_by_token_budget
-
-    docs = _docs(spark, sf_dir)
-    return hash_split(docs).join(shard_by_token_budget(docs), "doc_id")
-
-
-def q_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode + whitespace canonicalization WITH mojibake repair over a
-    corpus planted with a messy suffix (cp1252 mojibake — curly quote,
-    double quote via the unmapped 0x9d byte, Ã© and an em dash — then
-    CRLF, decomposed combining accents, a double space, a BEL control
-    char, NBSP): the mojibake chain and CR/control/space passes are JVM
-    literal/regex projections; NFC composition — no Spark built-in exists
-    — is one Arrow-batched ``mapInPandas`` pass (vectorized
-    ``Series.str.normalize``). The oracle replays the exact chain with
-    DuckDB ``replace`` + ``regexp_replace(..., 'g')`` + ``nfc_normalize``,
-    so the two engines' replace semantics AND Unicode tables are checked
-    against each other byte-for-byte."""
-    from ocr_project_spark.textops import normalize_text
-
-    messy = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.concat(
-            "text",
-            # cp1252 mojibake: donâ€™t → don’t, â€œokâ€(9d) → “ok”,
-            # cafÃ© → café, â€” → em dash
-            F.lit(
-                " don\u00e2\u20ac\u2122t \u00e2\u20ac\u0153ok"
-                "\u00e2\u20ac\x9d caf\u00c3\u00a9 \u00e2\u20ac\u201d"
-            ),
-            # decomposed i+U+0308 / e+U+0301 (NFC must compose),
-            # precomposed é (NFC identity), BEL (stripped), NBSP (→ space)
-            F.lit("\r\nnai\u0308ve  caf\u00e9 e\u0301tude\x07\u00a0fin"),
-        ).alias("text"),
-    )
-    return normalize_text(messy, fix_mojibake=True)
-
-
-def q_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic corpus mixing toward token proportions en:zh:de =
-    5:2:2 (es/fr dropped): the limiting source (de at this sf) is kept in
-    full and the others are thinned by an md5-draw that is a pure function
-    of the id. The keep rule is exact integer cross-multiplication
-    (DECIMAL(38,0) in Spark, HUGEINT in the oracle) — no float thresholds
-    — so the kept set is replayed row-exactly."""
-    from ocr_project_spark.textops import sample_corpus_mix
-
-    return sample_corpus_mix(_docs(spark, sf_dir), {"en": 5, "zh": 2, "de": 2})
-
-
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_project_spark.textops import lang_id
-
-    pages = _pages(spark, sf_dir).where("doc_id % 97 <> 13")
-    return lang_id(pages)
 
 
 def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1086,21 +924,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "recrawl_ops": q_recrawl_ops,
         "warc_sinks": q_warc_sinks,
         "c4_clean": q_c4_clean,
-        "text_normalize": q_text_normalize,
-        "dsir_select": q_dsir_select,
         "dedup_minhash": q_dedup_minhash,
         "quality_lm": q_quality_lm,
         "dedup_blocking": q_dedup_blocking,
-        "corpus_mix": q_corpus_mix,
-        "corpus_partitioning": q_corpus_partitioning,
         "dedup_minhash_components": q_dedup_minhash_components,
         "pii_redact": q_pii_redact,
         "dedup_lines": q_dedup_lines,
         "contamination": q_contamination,
         "backend_listing": q_backend_listing,
-        "lang_id": q_lang_id,
-        "doc_fingerprints": q_doc_fingerprints,
-        "corpus_profile": q_corpus_profile,
         "host_profile": q_host_profile,
         # --- byte-identity core ---
         "flagship_rollup": q_flagship_rollup,
@@ -1594,158 +1425,10 @@ def oracle_sql() -> dict[str, str]:
             SELECT 'wat' AS fmt, url, '' AS payload
             FROM u WHERE doc_id % 2 = 1 OR {_MALFORMED}
         """,
-        # hash_split replay (same md5 hex-prefix bucket, same ordered
-        # threshold chain) joined with the shard packing replay (the
-        # distributed prefix sum must equal one global cumulative window)
-        "corpus_partitioning": f"""
-            WITH b AS (
-                SELECT doc_id,
-                       ({_hex_int("md5('split' || CAST(doc_id AS VARCHAR))", 1, 8)})
-                           % 10000 AS bucket
-                FROM documents
-            ),
-            t AS (
-                SELECT doc_id,
-                       CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-                FROM documents
-            ),
-            s AS (
-                SELECT doc_id, n_tokens,
-                       CAST((sum(n_tokens) OVER (ORDER BY doc_id
-                                 ROWS BETWEEN UNBOUNDED PRECEDING
-                                 AND CURRENT ROW)
-                             - n_tokens) // 10000 AS BIGINT) AS shard
-                FROM t
-            )
-            SELECT b.doc_id, CAST(bucket AS BIGINT) AS bucket,
-                   CASE WHEN bucket < 9800 THEN 'train'
-                        WHEN bucket < 9900 THEN 'val'
-                        ELSE 'test' END AS split,
-                   s.n_tokens, s.shard
-            FROM b JOIN s ON b.doc_id = s.doc_id
-        """,
-        # normalize_text replay: the identical regexp chain (RE2 escapes in
-        # plain-literal patterns; 'g' = replace-all like Spark) then
-        # DuckDB's nfc_normalize vs the engine's Python unicodedata NFC —
-        # a cross-engine check of the Unicode composition tables
-        "text_normalize": f"""
-            WITH m AS (
-                SELECT doc_id,
-                       text || {_MOJI_SEG_SQL}
-                            || chr(13) || chr(10) || 'nai' || chr(776)
-                            || 've  caf' || chr(233) || ' e' || chr(769)
-                            || 'tude' || chr(7) || chr(160) || 'fin' AS orig
-                FROM documents
-            ),
-            n AS (
-                SELECT doc_id, orig,
-                       nfc_normalize(
-                           regexp_replace(
-                               regexp_replace(
-                                   regexp_replace(
-                                       regexp_replace({_MOJIBAKE_SQL},
-                                                      '\\r\\n|\\r',
-                                                      chr(10), 'g'),
-                                       chr(160), ' ', 'g'),
-                                   '[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f\\x7f]',
-                                   '', 'g'),
-                               '  +', ' ', 'g')) AS text
-                FROM m
-            )
-            SELECT doc_id, text, text <> orig AS changed FROM n
-        """,
-        # sample_corpus_mix replay: per-source token totals, the argmin
-        # limiting source (IEEE double of the same ints in both engines,
-        # source-asc tiebreak), then the exact HUGEINT cross-multiplication
-        # keep rule — no float thresholds anywhere
-        "corpus_mix": f"""
-            WITH t AS (
-                SELECT doc_id, lang AS source,
-                       CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-                FROM documents
-            ),
-            w(source, weight) AS (VALUES ('de', 2), ('en', 5), ('zh', 2)),
-            tw AS (
-                SELECT t.source, CAST(sum(n_tokens) AS BIGINT) AS total,
-                       weight
-                FROM t JOIN w ON t.source = w.source
-                GROUP BY t.source, weight
-            ),
-            lim AS (
-                SELECT total AS lim_total, weight AS lim_weight FROM tw
-                ORDER BY CAST(total AS DOUBLE) / weight ASC, source ASC
-                LIMIT 1
-            )
-            SELECT doc_id, source, n_tokens
-            FROM t JOIN tw USING (source), lim
-            WHERE CAST(({_hex_int("md5('mix' || CAST(doc_id AS VARCHAR))", 1, 8)})
-                       AS HUGEINT)
-                      * CAST(total AS HUGEINT) * CAST(lim_weight AS HUGEINT)
-                < CAST(4294967296 AS HUGEINT)
-                      * CAST(lim_total AS HUGEINT) * CAST(weight AS HUGEINT)
-        """,
         # quality_lm: the corpus IS the language model — gram strings are
         # rebuilt here while Spark only ever sees 64-bit gram hashes (a
         # cross-representation check); familiarity is int/int IEEE division
         # in both engines
-        # dsir_select: cross-representation replay (gram STRINGS rebuilt in
-        # SQL; Spark never materializes them). weight is a fixed tree of
-        # IEEE double divisions over exact integers — bit-identical in both
-        # engines; the selected gate is integer cross-multiplication
-        # (DuckDB promotes to HUGEINT, Spark carries DECIMAL(38,0)).
-        "dsir_select": """
-            WITH corpus AS (
-                SELECT doc_id, text FROM documents
-                UNION ALL
-                SELECT doc_id + 100000,
-                       array_to_string(list_transform(range(12),
-                           i -> 'gib' || doc_id || '_' || i), ' ')
-                FROM documents WHERE doc_id % 5 = 0
-            ),
-            w AS (
-                SELECT doc_id, string_split(text, ' ') AS ws,
-                       len(string_split(text, ' ')) AS n
-                FROM corpus
-            ),
-            g AS (
-                SELECT DISTINCT doc_id, gram FROM (
-                    SELECT doc_id,
-                           unnest(list_transform(
-                               range(greatest(n - 1, 1)),
-                               i -> array_to_string(
-                                   list_slice(ws, i + 1, i + 2), ' ')
-                           )) AS gram
-                    FROM w
-                )
-            ),
-            tg AS (
-                SELECT doc_id, gram FROM g
-                WHERE doc_id < 100000 AND doc_id % 5 = 0
-            ),
-            rdf AS (SELECT gram, count(*) AS raw_df FROM g GROUP BY 1),
-            tdf AS (SELECT gram, count(*) AS target_df FROM tg GROUP BY 1),
-            rt AS (SELECT count(*) AS raw_total FROM g),
-            tt AS (SELECT count(*) AS target_total FROM tg),
-            per AS (
-                SELECT doc_id,
-                       CAST(count(*) AS BIGINT) AS n_feats,
-                       CAST(sum(raw_df) AS BIGINT) AS sum_raw_df,
-                       CAST(sum(coalesce(target_df, 0)) AS BIGINT)
-                           AS sum_target_df
-                FROM g
-                JOIN rdf USING (gram)
-                LEFT JOIN tdf USING (gram)
-                GROUP BY 1
-            )
-            SELECT doc_id, n_feats, sum_raw_df, sum_target_df,
-                   (CAST(sum_target_df AS DOUBLE)
-                        / CAST(target_total AS DOUBLE))
-                   / (CAST(sum_raw_df AS DOUBLE)
-                        / CAST(raw_total AS DOUBLE)) AS weight,
-                   sum_target_df * raw_total * 2
-                       >= sum_raw_df * target_total * 1 AS selected
-            FROM per, rt, tt
-        """,
         "quality_lm": """
             WITH corpus AS (
                 SELECT doc_id, text FROM documents
@@ -1784,60 +1467,6 @@ def oracle_sql() -> dict[str, str]:
                    (n_grams - n_rare) / n_grams AS familiarity,
                    (n_rare * 2 <= n_grams) AS passes_lm
             FROM per
-        """,
-        # doc_fingerprints: whole-text + min-shingle md5 alongside the
-        # winnowing stats; the Horner fold (a·B + c) mod P with
-        # first-element init is exactly list_reduce's semantics →
-        # bit-for-bit replay
-        "doc_fingerprints": """
-            WITH c AS (
-                SELECT doc_id,
-                       md5(text) AS md5_fingerprint,
-                       list_min(list_transform(
-                           generate_series(1,
-                               greatest(len(string_split(text, ' ')) - 3, 1)),
-                           i -> md5(array_to_string(
-                               list_slice(string_split(text, ' '), i, i + 3),
-                               ' '))
-                       )) AS shingle_fingerprint,
-                       list_transform(string_split_regex(text, ''),
-                           ch -> CAST(unicode(ch) AS BIGINT)) AS codes
-                FROM documents
-            )
-            SELECT doc_id, md5_fingerprint, shingle_fingerprint,
-                   CAST(greatest(len(codes) - 7, 1) AS BIGINT) AS n_grams,
-                   CAST(list_min(list_transform(
-                       generate_series(1, greatest(len(codes) - 7, 1)),
-                       i -> list_reduce(list_slice(codes, i, i + 7),
-                                        (a, ch) -> (a * 257 + ch)
-                                                   % 2147483647)
-                   )) AS BIGINT) AS min_hash
-            FROM c
-        """,
-        # corpus_profile: exact aggregates + percentiles in one per-lang
-        # row. The GK sketch is exact while per-group n ≤ its accuracy
-        # bound (10000), and Spark's exact-mode rank convention equals
-        # DuckDB's quantile_disc (validated on distinct values at n=7..1000)
-        "corpus_profile": """
-            SELECT lang, count(*) AS n_docs,
-                   CAST(sum(len(string_split(text, ' '))) AS BIGINT)
-                       AS total_words,
-                   CAST(floor(sum(len(string_split(text, ' '))) * 100
-                        / count(*)) AS BIGINT) AS avg_words_x100,
-                   CAST(min(len(string_split(text, ' '))) AS BIGINT)
-                       AS min_words,
-                   CAST(max(len(string_split(text, ' '))) AS BIGINT)
-                       AS max_words,
-                   CAST(quantile_disc(len(string_split(text, ' ')), 0.5)
-                        AS BIGINT) AS p50_words,
-                   CAST(quantile_disc(len(string_split(text, ' ')), 0.9)
-                        AS BIGINT) AS p90_words,
-                   CAST(quantile_disc(len(string_split(text, ' ')), 0.99)
-                        AS BIGINT) AS p99_words
-            FROM documents GROUP BY 1
-        """,
-        "lang_id": f"""
-            SELECT doc_id, lang AS pred_lang FROM documents WHERE {_WELL_FORMED}
         """,
         # 13-gram benchmark-overlap decontamination: the oracle rebuilds the
         # same eval set (20-word prefix of doc_id % 13 = 5), derives the same

@@ -1,11 +1,12 @@
 """Text-analysis operators for the training-data pipeline.
 
 These are the large-scale corpus operations a 100 TB extraction pipeline
-feeds: token counting, quality scoring, document fingerprinting, and
-language identification. Everything stays JVM-side (built-in
-``pyspark.sql.functions``, whole-stage codegen) — no Python in the hot path.
-Integer-safe formulas are used wherever a DuckDB differential oracle checks
-the values (float rounding differs across engines).
+feeds: token counting, quality scoring and gating, C4 line cleaning, PII
+redaction, benchmark decontamination and corpus-frequency LM scoring.
+Everything but the word-gram hashing of :func:`gram_hashes` (one narrow
+Arrow pass) stays JVM-side (built-in ``pyspark.sql.functions``, whole-stage
+codegen). Integer-safe formulas are used wherever a DuckDB differential
+oracle checks the values (float rounding differs across engines).
 """
 
 from __future__ import annotations
@@ -228,313 +229,6 @@ def repetition_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
             .alias("dup_2gram_frac_x10000"),
         )
     )
-
-
-def corpus_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-language corpus rollup: doc counts, word totals, exact
-    avg/min/max word counts (integer-safe) — the dataset-card numbers a
-    corpus release ships. Partial+final aggregation throughout."""
-    n_words = F.size(F.split(F.col(text_col), " "))
-    return (
-        docs.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(n_words).cast("long").alias("total_words"),
-            F.floor(F.sum(n_words) * 100 / F.count(F.lit(1)))
-            .cast("long")
-            .alias("avg_words_x100"),
-            F.min(n_words).cast("long").alias("min_words"),
-            F.max(n_words).cast("long").alias("max_words"),
-        )
-    )
-
-
-def corpus_percentiles(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Sketch-based distribution summary: approximate word-count
-    percentiles per language via ``percentile_approx`` (GK sketch —
-    mergeable across partitions, the 100 TB path for distribution stats).
-    The sketch is exact while per-group n ≤ its accuracy bound (10000), so
-    the DuckDB ``quantile_disc`` oracle checks it exactly at test scale."""
-    n_words = F.size(F.split(F.col(text_col), " "))
-    return docs.groupBy("lang").agg(
-        F.percentile_approx(n_words, [0.5, 0.9, 0.99], 10000).alias("pcts")
-    ).select(
-        "lang",
-        F.col("pcts")[0].cast("long").alias("p50_words"),
-        F.col("pcts")[1].cast("long").alias("p90_words"),
-        F.col("pcts")[2].cast("long").alias("p99_words"),
-    )
-
-
-def shard_by_token_budget(
-    docs: DataFrame,
-    budget: int = 10_000,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Deterministic training-shard assignment: documents ordered by id are
-    packed greedily into shards of ≤ ``budget`` whitespace tokens (shard =
-    running-token-count-before-this-doc // budget) — how a corpus release
-    cuts ~fixed-token-size training files.
-
-    Scalable prefix sum, not a global window: ids are bucketed into
-    ``defaultParallelism`` contiguous ranges by pure arithmetic on the id
-    span (deterministic — no range-sampling), per-bucket token totals are a
-    bounded driver combine (one row per bucket), and a bucket-local
-    cumulative window shifted by the bucket's offset yields exactly the
-    global ``sum() OVER (ORDER BY id)`` the DuckDB oracle replays. The
-    offsets rejoin as a broadcast map join — never an O(n_buckets)
-    ``when``-chain, whose Catalyst expression-tree depth would become the
-    limit at thousands of buckets on a real cluster. No stage ever holds
-    more than one bucket's rows plus the tiny offset table. (With a
-    pathologically skewed id distribution, swap the arithmetic buckets
-    for quantile boundaries — the offset mechanics are identical.)"""
-    from pyspark.sql import Window
-
-    spark = docs.sparkSession
-    n_tokens = F.size(F.split(F.col(text_col), " ")).cast("long")
-    n_parts = max(spark.sparkContext.defaultParallelism, 2)
-    span = docs.agg(
-        F.min(id_col).alias("lo"), F.max(id_col).alias("hi")
-    ).collect()[0]
-    lo, hi = span["lo"], span["hi"]
-    if lo is None:  # empty input: empty output, same schema
-        return spark.createDataFrame(
-            [], "doc_id long, n_tokens long, shard long"
-        )
-    width = max((hi - lo + 1), 1)
-    # bucket by DIVISION, not (id-lo)*n_parts/width: the multiply overflows
-    # long for wide id spans (any 64-bit-hash id scheme) and aborts under
-    # ANSI; ceil-width division gives ≤ n_parts equal ranges. All three
-    # hazards of long/double arithmetic are sidestepped at once by exact
-    # DECIMAL(38,0) integral division: (a) `doc_id - lo` overflows long
-    # when ids span the full 64-bit range, (b) `/` is double division and
-    # loses exactness above 2^53 — precisely the 64-bit-hash-id regime —
-    # so a boundary id could round UP into bucket == n_parts, (c) `div`
-    # keeps the result integral. least() clamps the last ceil-division
-    # remainder range onto the final bucket.
-    per_bucket = max(-(-width // n_parts), 1)
-    bucket = F.least(
-        F.expr(
-            f"(cast(doc_id as decimal(38,0)) - cast('{lo}' as decimal(38,0)))"
-            f" div cast('{per_bucket}' as decimal(38,0))"
-        ),
-        F.lit(n_parts - 1).cast("long"),
-    )
-    base = docs.select(
-        F.col(id_col).alias("doc_id"), n_tokens.alias("n_tokens")
-    ).withColumn("__part", bucket.cast("int"))
-    # bounded: one row per bucket crosses to the driver
-    totals = {
-        r["__part"]: r["total"]
-        for r in base.groupBy("__part").agg(F.sum("n_tokens").alias("total")).collect()
-    }
-    offsets = []
-    acc = 0
-    for part in sorted(totals):
-        offsets.append((part, acc))
-        acc += totals[part]
-    offset_df = F.broadcast(
-        spark.createDataFrame(offsets, "__part int, __offset long")
-    )
-    w = Window.partitionBy("__part").orderBy("doc_id")
-    cum_before = (
-        F.sum("n_tokens").over(w) - F.col("n_tokens") + F.col("__offset")
-    )
-    return (
-        base.join(offset_df, "__part")
-        .select(
-            "doc_id",
-            "n_tokens",
-            F.floor(cum_before / budget).cast("long").alias("shard"),
-        )
-    )
-
-
-def hash_split(
-    docs: DataFrame,
-    splits: dict[str, int] | None = None,
-    buckets: int = 10_000,
-    id_col: str = "doc_id",
-    salt: str = "split",
-) -> DataFrame:
-    """Deterministic train/val/test assignment: each document lands in a
-    bucket via md5(salt ‖ id) and the ordered ``splits`` weights partition
-    the bucket space — the held-out-set cut a training pipeline makes,
-    where sampling must be a pure function of the id (NEVER
-    ``df.sample``: its output depends on partitioning and row order, so a
-    re-run or a repartition silently reshuffles the split). Uniform by
-    md5; stratification across languages/hosts follows from uniformity.
-    Pure JVM expression (md5 → hex-prefix parse → modulo), and exactly
-    replayable in SQL, so the assignment is oracle-checked byte-for-byte.
-
-    ``splits`` maps name → weight in buckets (must sum to ≤ ``buckets``;
-    remainder falls into the last split). Output: (doc_id, bucket, split).
-    """
-    splits = splits or {"train": 9_800, "val": 100, "test": 100}
-    if sum(splits.values()) > buckets:
-        raise ValueError(
-            f"split weights sum to {sum(splits.values())} > {buckets} buckets"
-        )
-    bucket = (
-        F.conv(F.substring(F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string"))), 1, 8), 16, 10)
-        .cast("long")
-        % buckets
-    )
-    names = list(splits)
-    bounds = []
-    acc = 0
-    for name in names:
-        acc += splits[name]
-        bounds.append((name, acc))
-    # build innermost-last: the final chain tests the lowest bound first
-    expr = F.lit(names[-1])
-    for name, hi in reversed(bounds[:-1]):
-        expr = F.when(F.col("bucket") < F.lit(hi), F.lit(name)).otherwise(expr)
-    out = docs.select(F.col(id_col).alias("doc_id"), bucket.alias("bucket"))
-    return out.select("doc_id", "bucket", expr.alias("split"))
-
-
-def fingerprints(docs: DataFrame, text_col: str = "text", shingle: int = 4) -> DataFrame:
-    """Document fingerprints: full-text md5 plus a shingle fingerprint —
-    the lexicographic minimum of the md5s of all word ``shingle``-grams
-    (a winnowing-style content fingerprint robust to boundary edits).
-    Pure JVM expression: sequence → transform → array_min.
-    """
-    t = F.col(text_col)
-    words = F.split(t, " ")
-    n = F.size(words)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - (shingle - 1), F.lit(1))),
-        lambda i: F.md5(F.concat_ws(" ", F.slice(words, i, shingle))),
-    )
-    return docs.select(
-        "doc_id",
-        F.md5(t).alias("md5_fingerprint"),
-        F.array_min(grams).alias("shingle_fingerprint"),
-    )
-
-
-# Karp-Rabin rolling-hash constants: Horner fold (a·B + c) mod P with the
-# first char as the init value — exactly DuckDB's list_reduce semantics, so
-# the oracle can replay the hash bit-for-bit.
-ROLL_BASE = 257
-ROLL_PRIME = (1 << 31) - 1
-
-
-def rolling_fingerprints(
-    docs: DataFrame,
-    k: int = 8,
-    window: int = 16,
-    text_col: str = "text",
-) -> DataFrame:
-    """Winnowing document fingerprints (Schleimer et al.) over a Karp-Rabin
-    rolling hash: character ``k``-gram hashes → per-``window`` minima →
-    the deduplicated winnowed set. The classic guarantee: two documents
-    sharing any substring of length ≥ k + window - 1 share at least one
-    fingerprint — the substring-level near-dup index a plagiarism/dedup
-    pipeline builds at scale.
-
-    Vectorized numpy inside Arrow batches (sliding-window dot against the
-    power vector, mod-safe in int64; per-window minima via a strided view).
-    Output: (doc_id, n_grams, min_hash, fingerprints array<long>) —
-    ``min_hash`` equals the minimum over ALL gram hashes, which is also the
-    minimum of the winnowed set, and is SQL-replayable via list_reduce's
-    Horner fold (the driver oracle)."""
-    import numpy as np
-    from numpy.lib.stride_tricks import sliding_window_view
-
-    pow_vec = np.empty(k, dtype=np.int64)
-    acc = 1
-    for j in range(k - 1, -1, -1):
-        pow_vec[j] = acc
-        acc = (acc * ROLL_BASE) % ROLL_PRIME
-
-    def _grams(codes: "np.ndarray") -> "np.ndarray":
-        if len(codes) < k:
-            # short doc: one gram over the whole text (list_slice clips the
-            # same way oracle-side)
-            h = 0
-            for c in codes:
-                h = (h * ROLL_BASE + int(c)) % ROLL_PRIME
-            return np.array([h], dtype=np.int64)
-        win = sliding_window_view(codes, k).astype(np.int64)
-        return ((win * pow_vec[None, :] % ROLL_PRIME).sum(axis=1)) % ROLL_PRIME
-
-    def _batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                if not isinstance(text, str):
-                    text = ""  # NULL text: fingerprint the empty string
-                codes = np.frombuffer(
-                    text.encode("utf-32-le"), dtype=np.uint32
-                )
-                grams = _grams(codes)
-                if len(grams) <= window:
-                    mins = np.array([grams.min()], dtype=np.int64)
-                else:
-                    mins = sliding_window_view(grams, window).min(axis=1)
-                rows.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "n_grams": len(grams),
-                        "min_hash": int(grams.min()),
-                        "fingerprints": np.unique(mins),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_grams", "min_hash", "fingerprints"]
-            )
-
-    return docs.select("doc_id", text_col).mapInPandas(
-        _batches,
-        schema="doc_id long, n_grams long, min_hash long, fingerprints array<long>",
-    )
-
-
-# Per-language identification profiles: public function words (the
-# stopword-frequency approach of Cavnar–Trenkle-style langid) plus public
-# web-chrome vocabulary (nav/footer/legal words — the strongest signal on
-# web pages; "impressum"/"datenschutz" alone identify German legal pages).
-# Entries are chosen pairwise-disjoint across profiles and disjoint from
-# ambiguous short forms shared between languages ("a", "in", "es", "la",
-# "son", "des", "was" are all omitted for that reason) so the argmax stays
-# discriminative. Latin-script languages score on word-boundary membership;
-# zh (no word boundaries) scores on character/word substring occurrences.
-LANGID_PROFILES: dict[str, tuple[str, ...]] = {
-    "en": (
-        "and", "of", "to", "you", "that", "for", "are", "with", "they",
-        "this", "have", "from", "not", "which", "would", "there", "when",
-        "your", "will", "how",
-        "homepage", "about", "privacy", "terms", "sitemap",
-    ),
-    "de": (
-        "der", "die", "das", "und", "ist", "nicht", "ein", "eine", "mit",
-        "auf", "für", "dem", "den", "sich", "auch", "wird", "sind", "oder",
-        "aber", "nach",
-        "startseite", "impressum", "kontakt", "datenschutz", "hilfe",
-    ),
-    "fr": (
-        "le", "les", "est", "pas", "pour", "dans", "qui", "une", "vous",
-        "avec", "sur", "mais", "nous", "cette", "par", "au", "ce", "plus",
-        "ont", "tout",
-        "accueil", "confidentialite", "mentions", "recherche", "aide",
-    ),
-    "es": (
-        "el", "los", "las", "por", "para", "con", "como", "pero", "sus",
-        "este", "ser", "más", "muy", "sin", "sobre", "entre", "cuando",
-        "todo", "una", "fue",
-        "inicio", "acerca", "contacto", "privacidad", "buscar",
-    ),
-    "zh": (
-        "的", "是", "在", "了", "和", "有", "我", "不", "这", "个", "为",
-        "他", "们", "中", "也", "就",
-        "首页", "关于我们", "联系我们", "隐私政策", "搜索",
-    ),
-}
 
 
 def gram_hashes(
@@ -798,228 +492,6 @@ def redact_pii(
     )
 
 
-def lang_id(
-    pages: DataFrame,
-    payload_col: str = "html",
-    profiles: dict[str, tuple[str, ...]] | None = None,
-) -> DataFrame:
-    """Language identification by public stopword/web-chrome profile scoring
-    (see :data:`LANGID_PROFILES`): lowercase, tokenize on non-letter runs,
-    count per-language profile membership (substring occurrences for the
-    boundary-less zh script), argmax with an alphabetical-first
-    deterministic tiebreak. Everything JVM-side — regex split + codegen'd
-    ``filter``/``array_contains`` membership and length-difference counts;
-    no Python in the path, the whole pass is one narrow projection at any
-    scale. Accuracy on real mixed-language prose is pytest-covered
-    (tests/test_textops.py); the driver oracle holds it to ground truth on
-    the synthetic corpus."""
-    profiles = profiles or LANGID_PROFILES
-    # CAST, not decode(): under ANSI mode decode throws
-    # MALFORMED_CHARACTER_CODING on any non-UTF-8 byte (real crawl payloads
-    # have them), killing the job; the cast passes invalid bytes through
-    # and profile words still match in the valid regions
-    text = F.lower(F.col(payload_col).cast("string"))
-    words = F.split(text, r"[^\p{L}]+")
-
-    def hits(lang: str):
-        prof = profiles[lang]
-        if lang == "zh":
-            h = F.lit(0).cast("long")
-            for entry in prof:
-                occ = (
-                    F.length(text)
-                    - F.length(F.replace(text, F.lit(entry), F.lit("")))
-                ) / F.length(F.lit(entry))
-                h = h + occ.cast("long")
-            return h
-        prof_arr = F.array(*[F.lit(w) for w in prof])
-        return F.size(
-            F.filter(words, lambda w: F.array_contains(prof_arr, w))
-        ).cast("long")
-
-    langs = sorted(profiles)
-    hit_cols = {lang: hits(lang) for lang in langs}
-    best = F.greatest(*[hit_cols[lang] for lang in langs])
-    pred = F.lit(None).cast("string")
-    # alphabetical-first deterministic tiebreak
-    for lang in reversed(langs):
-        pred = F.when(hit_cols[lang] == best, F.lit(lang)).otherwise(pred)
-    # zero evidence → 'und' (ISO 639 undetermined), NOT the first
-    # alphabetical profile: with every hit count 0 the all-zero tie would
-    # otherwise label a Russian/Japanese/numeric page confidently as the
-    # lowest-sorting language and pollute per-language stats downstream
-    pred = F.when(best > 0, pred).otherwise(F.lit("und"))
-    return pages.select("doc_id", pred.alias("pred_lang"))
-
-
-# Pinned mojibake repairs: the UTF-8-bytes-decoded-as-cp1252 sequences of
-# the characters that dominate real web mojibake (curly quotes, dashes,
-# ellipsis, the common Latin accents), each mapped back to the character
-# whose encoding produced it — the deterministic core of ftfy-style
-# encoding repair (Speer 2019), as a FIXED ordered replace chain so a SQL
-# oracle replays it byte-for-byte. Heuristic by nature: a document that
-# legitimately contains "Ã©" is "repaired" too — the standard, documented
-# ambiguity of mojibake fixing (the sequences are vanishingly rare as
-# intentional text on the web).
-MOJIBAKE_TABLE: tuple[tuple[str, str], ...] = (
-    ("â€™", "’"),  # â€™ → ’
-    ("â€˜", "‘"),  # â€˜ → ‘
-    ("â€œ", "“"),  # â€œ → “
-    ("â€\x9d", "”"),  # â€ + 0x9d (unmapped in cp1252) → ”
-    ("â€“", "–"),  # â€“ → –
-    ("â€”", "—"),  # â€” → —
-    ("â€¦", "…"),  # â€¦ → …
-    ("Ã©", "é"),  # Ã© → é
-    ("Ã¨", "è"),  # Ã¨ → è
-    ("Ãª", "ê"),  # Ãª → ê
-    ("Ã\xa0", "à"),  # Ã + NBSP → à
-    ("Ã§", "ç"),  # Ã§ → ç
-    ("Ã±", "ñ"),  # Ã± → ñ
-    ("Ã¶", "ö"),  # Ã¶ → ö
-    ("Ã¼", "ü"),  # Ã¼ → ü
-    ("Ã¤", "ä"),  # Ã¤ → ä
-)
-
-
-def normalize_text(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    fix_mojibake: bool = False,
-) -> DataFrame:
-    """Unicode + whitespace normalization — the canonicalization pass a
-    web-text pipeline applies before any hashing/dedup so that visually
-    identical strings hash identically: optional mojibake repair
-    (``fix_mojibake`` — the pinned :data:`MOJIBAKE_TABLE` replace chain,
-    run FIRST so repaired NBSP/control bytes flow into the passes below),
-    CRLF/CR → LF, NBSP → space, strip C0 control characters (keeping LF
-    and TAB), collapse runs of 2+ spaces, then Unicode NFC composition.
-    Output (doc_id, text, changed).
-
-    The structural passes are pure JVM regexp projections (whole-stage
-    codegen); NFC has no Spark built-in, so it runs as ONE narrow
-    Arrow-batched pass (``mapInPandas`` + vectorized
-    ``Series.str.normalize``) — no shuffle anywhere, embarrassingly
-    parallel over the scan at any scale. The DuckDB oracle replays the
-    exact chain with ``replace`` + ``regexp_replace(..., 'g')`` +
-    ``nfc_normalize``."""
-    import pandas as pd  # noqa: F401 (schema hint for readers)
-
-    orig = F.col(text_col)
-    t = orig
-    if fix_mojibake:
-        for bad, good in MOJIBAKE_TABLE:
-            t = F.replace(t, F.lit(bad), F.lit(good))
-    cleaned = F.regexp_replace(t, "\r\n|\r", "\n")
-    cleaned = F.regexp_replace(cleaned, "\u00a0", " ")
-    cleaned = F.regexp_replace(
-        cleaned, "[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f\\x7f]", ""
-    )
-    cleaned = F.regexp_replace(cleaned, "  +", " ")
-    staged = docs.select(
-        F.col(id_col).alias("doc_id"),
-        orig.alias("__orig"),
-        cleaned.alias("__cleaned"),
-    )
-
-    def _nfc(batches):
-        for pdf in batches:
-            out = pdf["__cleaned"].str.normalize("NFC")
-            yield pdf.assign(text=out, changed=out != pdf["__orig"])[
-                ["doc_id", "text", "changed"]
-            ]
-
-    return staged.mapInPandas(
-        _nfc, schema="doc_id long, text string, changed boolean"
-    )
-
-
-def sample_corpus_mix(
-    docs: DataFrame,
-    weights: dict[str, int],
-    source_col: str = "lang",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    salt: str = "mix",
-) -> DataFrame:
-    """Deterministic corpus mixing: down-sample each source so the kept
-    corpus approaches the target token proportions ``weights`` (integer
-    weights; sources absent from ``weights`` are dropped). The limiting
-    source — the one whose ``total/weight`` is smallest — is kept in full
-    and every other source is thinned to match, i.e. the largest corpus
-    achievable at the requested mix without upsampling.
-
-    Per-document keep/drop is a pure function of the id (md5 draw, like
-    :func:`hash_split` — never ``df.sample``), so the mix is stable across
-    re-runs and repartitions. The keep test is exact integer
-    cross-multiplication (no float thresholds):
-
-        draw · total_s · w_lim  <  2^32 · total_lim · w_s
-
-    with the products carried in DECIMAL(38,0) — ≤ 2^32·2^50·2^20 ≈ 10^31
-    < 10^38, so the arithmetic stays exact at 100 TB token totals. Only the
-    per-source totals (one row per source, joined back via broadcast) leave
-    the aggregation; nothing collects to the driver. Output: the kept
-    corpus as (doc_id, source, n_tokens).
-
-    Cost note: the totals subtree and the final projection are separate
-    scans, so each action reads the (id, source, text) columns twice. The
-    alternative single-scan plan — ``sum(n_tokens) over (partition by
-    source)`` — shuffles EVERY row on the low-cardinality source key
-    (skew: one reducer per language), which is strictly worse at 100 TB;
-    if the double scan dominates, pre-compute ``n_tokens`` into the table
-    upstream so both scans prune ``text``."""
-    if not weights or any(w <= 0 for w in weights.values()):
-        raise ValueError("weights must be a non-empty map of positive ints")
-    spark = docs.sparkSession
-    n_tokens = F.size(F.split(F.col(text_col), " ")).cast("long")
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(source_col).alias("source"),
-        n_tokens.alias("n_tokens"),
-    )
-    w_df = spark.createDataFrame(
-        sorted(weights.items()), "source string, weight long"
-    )
-    totals = (
-        base.groupBy("source")
-        .agg(F.sum("n_tokens").alias("total"))
-        .join(F.broadcast(w_df), "source")
-    )
-    # limiting source: argmin(total/weight), tie → source asc. The ORDER BY
-    # division is IEEE double of the same ints in both engines (oracle-safe);
-    # the keep comparison below never divides.
-    lim = (
-        totals.orderBy(
-            (F.col("total").cast("double") / F.col("weight")).asc(),
-            F.col("source").asc(),
-        )
-        .limit(1)
-        .select(
-            F.col("total").alias("lim_total"), F.col("weight").alias("lim_weight")
-        )
-    )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    draw = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(salt), F.col("doc_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-    )
-    return (
-        base.join(F.broadcast(totals), "source")
-        .join(F.broadcast(lim))
-        .where(
-            dec(draw) * dec(F.col("total")) * dec(F.col("lim_weight"))
-            < dec(F.lit(4294967296)) * dec(F.col("lim_total")) * dec(F.col("weight"))
-        )
-        .select("doc_id", "source", "n_tokens")
-    )
-
-
 # Default blocked-word list for the C4 page filter — a small, pinned
 # stand-in for the large public blocklist C4 uses (the "bad words" page
 # filter of Raffel et al. 2020 drops any page containing a listed word).
@@ -1106,141 +578,4 @@ def c4_line_filter(
         blocked.alias("blocked"),
         F.size("__lines").cast("long").alias("n_lines"),
         F.size("__kept").cast("long").alias("n_lines_kept"),
-    )
-
-
-def importance_weights(
-    docs: DataFrame,
-    target_docs: DataFrame,
-    n: int = 2,
-    n_buckets: int | None = None,
-    theta_num: int = 1,
-    theta_den: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """DSIR-style data selection via importance weights (Xie et al. 2023,
-    "Data Selection for Language Models via Importance Resampling"): score
-    every raw document by how much more its n-gram features look like a
-    small high-quality TARGET corpus than like the raw corpus itself, then
-    gate on the weight — the published recipe for carving a Wikipedia-like
-    (or domain-specific) slice out of a web crawl.
-
-    Features are distinct word ``n``-grams (:func:`gram_hashes` — one
-    shuffle-free Arrow pass, gram strings never materialize). With
-    ``n_buckets`` set, features hash into that many buckets exactly as the
-    paper's hashed n-gram model (collisions intentional — the bucketed
-    model is what scales the target table to a fixed size); unbucketed
-    (the default) every distinct gram is its own feature, which keeps the
-    oracle cross-representation-exact (DuckDB rebuilds gram STRINGS and
-    counts document frequencies — representation-independent, like the
-    contamination and quality_lm oracles).
-
-    Per document:
-
-    - ``n_feats``        — distinct features in the document,
-    - ``sum_raw_df``     — total raw-corpus document frequency over them,
-    - ``sum_target_df``  — total target-corpus document frequency,
-    - ``weight``         — (sum_target_df/target_total)/(sum_raw_df/raw_total):
-      the ratio-of-sums importance estimate. Pure IEEE double division of
-      exact integers with a fixed expression tree, so both engines produce
-      the identical bits (no transcendentals anywhere),
-    - ``selected``       — weight ≥ theta_num/theta_den, decided by exact
-      DECIMAL(38,0) cross-multiplication (no float threshold):
-      sum_target_df·raw_total·theta_den ≥ sum_raw_df·target_total·theta_num.
-
-    Scale shape: the raw side is the standard inverted-df pipeline
-    (groupBy(feature) partial agg → hash join back → per-doc rollup, every
-    shuffled row 16 bytes); the target side is small by construction (a
-    curated slice) so its df table broadcasts; the two corpus-total scalars
-    join in via broadcast. Payload text never shuffles."""
-    feat = (
-        (F.pmod(F.col("gram_hash"), F.lit(n_buckets))).alias("feat")
-        if n_buckets
-        else F.col("gram_hash").alias("feat")
-    )
-    raw = gram_hashes(docs, n=n, text_col=text_col, id_col=id_col).select(
-        "doc_id", feat
-    )
-    # target keeps its real doc ids: target_df is a document frequency
-    # (how many target docs contain the feature), symmetric with raw_df —
-    # unlike the contamination check, which wants set membership only
-    tgt = gram_hashes(
-        target_docs, n=n, text_col=text_col, id_col=id_col
-    ).select(F.col(id_col).alias("doc_id"), feat)
-    if n_buckets:
-        # bucketing collides distinct grams into one feature id; without a
-        # re-distinct, (doc, feat) rows duplicate and raw_df/target_df
-        # become doc-gram PAIR counts, not the documented document
-        # frequencies (gram_hashes is distinct per doc, but only pre-mod)
-        raw = raw.distinct()
-        tgt = tgt.distinct()
-    tgt = tgt.select("feat")
-    raw_df = raw.groupBy("feat").agg(F.count(F.lit(1)).alias("raw_df"))
-    tgt_df = tgt.groupBy("feat").agg(F.count(F.lit(1)).alias("target_df"))
-    # corpus totals derive from the df tables (sum of per-feature counts
-    # = total (doc, feat) rows) — aggregating `raw`/`tgt` directly would
-    # re-run the full gram pass over each corpus a third time
-    # coalesce: sum over zero rows is NULL (count was 0) and a NULL
-    # target_total would null out the empty-target gate below
-    raw_total = raw_df.groupBy().agg(
-        F.coalesce(F.sum("raw_df"), F.lit(0)).alias("raw_total")
-    )
-    tgt_total = tgt_df.groupBy().agg(
-        F.coalesce(F.sum("target_df"), F.lit(0)).alias("target_total")
-    )
-    per = (
-        raw.join(raw_df, "feat")
-        .join(F.broadcast(tgt_df), "feat", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_feats"),
-            F.sum("raw_df").cast("long").alias("sum_raw_df"),
-            F.sum(F.coalesce("target_df", F.lit(0)))
-            .cast("long")
-            .alias("sum_target_df"),
-        )
-    )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    return (
-        per.join(F.broadcast(raw_total))
-        .join(F.broadcast(tgt_total))
-        .select(
-            "doc_id",
-            "n_feats",
-            "sum_raw_df",
-            "sum_target_df",
-            (
-                # when(target_total > 0): the selected column already
-                # guards the empty-target case, but the weight division
-                # itself would raise DIVIDE_BY_ZERO under ANSI for any
-                # caller that reads it (0/0) — weight 0.0 matches
-                # "select nothing" semantics
-                F.when(
-                    F.col("target_total") > 0,
-                    (
-                        F.col("sum_target_df").cast("double")
-                        / F.col("target_total").cast("double")
-                    )
-                    / (
-                        F.col("sum_raw_df").cast("double")
-                        / F.col("raw_total").cast("double")
-                    ),
-                ).otherwise(F.lit(0.0))
-            ).alias("weight"),
-            (
-                # target_total > 0: an empty target corpus must select
-                # NOTHING — without this conjunct the cross-multiplied
-                # comparison degenerates to 0 >= 0 and selects everything
-                (F.col("target_total") > 0)
-                & (
-                    dec(F.col("sum_target_df"))
-                    * dec(F.col("raw_total"))
-                    * dec(F.lit(theta_den))
-                    >= dec(F.col("sum_raw_df"))
-                    * dec(F.col("target_total"))
-                    * dec(F.lit(theta_num))
-                )
-            ).alias("selected"),
-        )
     )

@@ -267,6 +267,154 @@ def test_curate_cli_full_chain(spark, tmp_path):
     assert got.where("text LIKE '%<EMAIL>%'").count() == got.count()
 
 
+def test_curate_chain_matches_composed_sql_replay(spark, tmp_path):
+    """End-to-end differential for the curation CLI: run the real chain
+    (line dedup -> C4 -> PII -> quality gate) through jobs/curate.main,
+    then replay the ENTIRE composition as one DuckDB query over the same
+    input parquet and require the final (doc_id, text) sets to match
+    exactly. The per-stage oracles prove each stage alone; this proves
+    the stages compose in the CLI's order (each stage sees the previous
+    stage's rewritten text, not the original)."""
+    import duckdb
+
+    from ocr_project_spark.jobs.curate import main
+
+    nav = "Home | News | Sports | Contact page."
+    rows = []
+    for i in range(30):
+        lines = [
+            nav,
+            f"Document number {i} tells a unique and rather detailed "
+            "story about streaming data pipelines today.",
+            f"Another unique closing sentence number {i} rounds out "
+            "the document with enough extra words to pass easily.",
+            f"Yet another filler sentence number {i} exists to satisfy "
+            "the minimum kept lines rule nicely.",
+        ]
+        cls = i % 5
+        # per-doc-unique trigger lines: an identical line planted in every
+        # cohort member would repeat across >= 2 docs and be REMOVED by
+        # stage 1 (line dedup) before C4 ever saw it — which the first run
+        # of this test demonstrated end-to-end
+        if cls == 1:  # C4 lorem-ipsum page drop
+            lines.append(
+                f"Lorem ipsum dolor sit amet number {i}, consectetur."
+            )
+        elif cls == 2:  # survives; PII redacted
+            lines.append(
+                f"Contact admin{i}@example.com or 10.0.0.{i} or "
+                "555-123-4567 for details immediately."
+            )
+        elif cls == 3:  # C4 blocked-word page drop
+            lines.append(
+                f"Win the casino jackpot number {i} tonight, my friends!"
+            )
+        elif cls == 4:  # passes C4 (3 short lines) but fails quality gate
+            lines = [
+                f"Doc {i} has five words.",
+                f"Doc {i} shows five words.",
+                f"Doc {i} holds five words.",
+            ]
+        rows.append((i, "\n".join(lines)))
+    src = str(tmp_path / "docs")
+    out = str(tmp_path / "curated")
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(
+        1
+    ).write.parquet(src)
+
+    main(
+        [
+            "--documents",
+            src,
+            "--out",
+            out,
+            "--drop-repeated-lines",
+            "--c4-clean",
+            "--redact-pii",
+            "--quality-gate",
+        ],
+        spark=spark,
+    )
+    got = {
+        (r["doc_id"], r["text"])
+        for r in spark.read.parquet(out).select("doc_id", "text").collect()
+    }
+
+    line_keep = (
+        "x -> len(string_split(x, ' ')) >= 5 "
+        "AND regexp_matches(x, '[.!?\"]$')"
+    )
+    want = duckdb.sql(
+        rf"""
+        WITH src AS (SELECT doc_id, text FROM read_parquet('{src}/*.parquet')),
+        lines AS (
+            SELECT doc_id, unnest(string_split(text, chr(10))) AS line
+            FROM src
+        ),
+        rep AS (
+            SELECT line FROM lines
+            GROUP BY line HAVING count(DISTINCT doc_id) >= 2
+        ),
+        rl AS (SELECT coalesce(list(line), []) AS rls FROM rep),
+        s1 AS (  -- remove_repeated_lines
+            SELECT doc_id,
+                   array_to_string(
+                       list_filter(string_split(text, chr(10)),
+                                   x -> NOT list_contains(rls, x)),
+                       chr(10)) AS text
+            FROM src, rl
+        ),
+        c4 AS (  -- c4_line_filter over the stage-1 text
+            SELECT doc_id,
+                   array_to_string(
+                       list_filter(string_split(text, chr(10)), {line_keep}),
+                       chr(10)) AS new_text,
+                   (NOT contains(lower(text), 'lorem ipsum'))
+                       AND (NOT contains(text, '{{'))
+                       AND (NOT regexp_matches(lower(text),
+                           '\b(porn|xxx|viagra|casino|jackpot|escort)\b'))
+                       AND len(list_filter(string_split(text, chr(10)),
+                               {line_keep})) >= 3 AS kept
+            FROM s1
+        ),
+        s2 AS (SELECT doc_id, new_text AS text FROM c4 WHERE kept),
+        s3 AS (  -- redact_pii, same sequential replace chain
+            SELECT doc_id,
+                   regexp_replace(
+                       regexp_replace(
+                           regexp_replace(text,
+                               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{{2,}}',
+                               '<EMAIL>', 'g'),
+                           '\b\d{{1,3}}\.\d{{1,3}}\.\d{{1,3}}\.\d{{1,3}}\b',
+                           '<IP>', 'g'),
+                       '\b\d{{3}}-\d{{3}}-\d{{4}}\b', '<PHONE>', 'g') AS text
+            FROM s2
+        ),
+        s4 AS (
+            SELECT doc_id, text,
+                   len(string_split(text, ' ')) AS n_words,
+                   CAST(floor(len(replace(text, ' ', '')) * 100
+                              / len(string_split(text, ' '))) AS BIGINT)
+                       AS awl
+            FROM s3
+        )
+        SELECT doc_id, text FROM s4
+        WHERE n_words >= 20 AND awl BETWEEN 200 AND 900
+        """
+    ).fetchall()
+    want = {(r[0], r[1]) for r in want}
+
+    assert got == want
+    kept_classes = {d % 5 for d, _ in got}
+    # lorem (1), blocked (3), and thin (4) cohorts are gone; the nav line
+    # is gone from every survivor; PII never reaches the output
+    assert kept_classes == {0, 2}
+    for _, text in got:
+        assert nav not in text
+        assert "@example.com" not in text and "555-123-4567" not in text
+    assert any("<EMAIL>" in t and "<IP>" in t and "<PHONE>" in t for _, t in got)
+
+
 def test_curate_cli_c4_clean(spark, tmp_path):
     """jobs/curate.py --c4-clean: CLI output equals the composed library
     stage (kept docs only, text rebuilt from surviving lines, passthrough

@@ -114,16 +114,6 @@ def test_span_removal_no_cartesian_and_partial_aggs(spark, documents):
     assert "partial_count" in plan or "HashAggregate" in plan
 
 
-def test_token_shards_offsets_join_is_broadcast(spark, documents):
-    """PLANS §6: the per-bucket offset map joins back as a tiny broadcast
-    hash join, never an O(n_buckets) when-chain."""
-    from ocr_project_spark.textops import shard_by_token_budget
-
-    plan = plan_of(shard_by_token_budget(documents))
-    assert n_nodes(plan, "BroadcastHashJoin") >= 1
-    assert "CASE WHEN (__part" not in plan
-
-
 def test_lineage_readback_prunes_to_current_run(spark, pages, tmp_path):
     """The per-run lineage pass reads ONLY the current run's rows: the
     run_id equality predicate reaches the parquet scan, so files written by

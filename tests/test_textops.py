@@ -1,19 +1,13 @@
-"""Text-analysis operator tests: token counting, quality scores,
-fingerprints, and language-ID over the driver documents + synthesized pages.
+"""Text-analysis operator tests: token counting, quality scores and gates,
+repetition signals, decontamination, PII redaction, C4 cleaning and
+word-gram LM scoring over the driver documents and crafted corpora.
 """
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import functions as F
 
-from ocr_project_spark.textops import (
-    fingerprints,
-    lang_id,
-    quality_scores,
-    token_counts,
-)
+from ocr_project_spark.textops import quality_scores, token_counts
 
 
 def test_token_counts_crafted(spark):
@@ -44,82 +38,6 @@ def test_quality_scores_crafted(spark):
     assert row["stopword_ratio_x10000"] == 4000
 
 
-def test_fingerprints_md5(spark):
-    text = "alpha beta gamma delta epsilon"
-    df = spark.createDataFrame([(0, text)], "doc_id long, text string")
-    row = fingerprints(df).collect()[0]
-    assert row["md5_fingerprint"] == hashlib.md5(text.encode()).hexdigest()
-    grams = [
-        "alpha beta gamma delta",
-        "beta gamma delta epsilon",
-    ]
-    expect = min(hashlib.md5(g.encode()).hexdigest() for g in grams)
-    assert row["shingle_fingerprint"] == expect
-
-
-def test_fingerprint_robust_to_suffix_edit(spark):
-    a = " ".join(f"w{i}" for i in range(20))
-    b = a + " extra"
-    df = spark.createDataFrame([(0, a), (1, b)], "doc_id long, text string")
-    rows = {r["doc_id"]: r for r in fingerprints(df).collect()}
-    assert rows[0]["md5_fingerprint"] != rows[1]["md5_fingerprint"]
-    # winnowing min-gram usually survives a boundary edit
-    assert rows[0]["shingle_fingerprint"] == rows[1]["shingle_fingerprint"]
-
-
-def test_corpus_stats_exact(documents):
-    from ocr_project_spark.textops import corpus_stats
-
-    row = {r["lang"]: r for r in corpus_stats(documents).collect()}
-    expected = {
-        r["lang"]: r
-        for r in documents.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.size(F.split("text", " "))).alias("tw"),
-        )
-        .collect()
-    }
-    assert row.keys() == expected.keys()
-    for lang, e in expected.items():
-        assert row[lang]["n_docs"] == e["n"]
-        assert row[lang]["total_words"] == e["tw"]
-        assert row[lang]["min_words"] <= row[lang]["max_words"]
-
-
-def test_corpus_percentiles_vs_numpy(documents):
-    import numpy as np
-
-    from ocr_project_spark.textops import corpus_percentiles
-
-    got = {r["lang"]: r for r in corpus_percentiles(documents).collect()}
-    rows = documents.select(
-        "lang", F.size(F.split("text", " ")).alias("n")
-    ).collect()
-    by_lang: dict = {}
-    for r in rows:
-        by_lang.setdefault(r["lang"], []).append(r["n"])
-    for lang, vals in by_lang.items():
-        arr = np.array(sorted(vals))
-        # GK sketch at accuracy 10000 over ≤250 values is exact: the
-        # returned element's rank must bracket the target quantile
-        for p, col in ((0.5, "p50_words"), (0.9, "p90_words"), (0.99, "p99_words")):
-            v = got[lang][col]
-            rank = (arr <= v).mean()
-            assert rank >= p - 0.05
-            assert (arr < v).mean() <= p + 0.05
-
-
-def test_lang_id_matches_ground_truth(pages, documents):
-    pred = lang_id(pages)
-    joined = pred.join(documents.select("doc_id", "lang"), "doc_id")
-    # malformed (truncated) payloads may lose their markers; well-formed
-    # pages must classify exactly
-    total = joined.count()
-    correct = joined.where(F.col("pred_lang") == F.col("lang")).count()
-    assert correct / total > 0.98
-
-
 def test_gopher_gate_rules(spark):
     """Each Gopher-style rule independently rejects: too short, degenerate
     word length, non-alphabetic junk, missing stopword evidence."""
@@ -136,95 +54,6 @@ def test_gopher_gate_rules(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     kept = {r["doc_id"] for r in gopher_gate(df).collect()}
     assert kept == {0}
-
-
-def test_shard_by_token_budget_matches_global_cumsum(spark, documents):
-    """The distributed prefix-sum sharding equals the naive global
-    cumulative sum, every shard stays within budget (single-doc overflows
-    aside), and shard ids are contiguous from 0."""
-    from ocr_project_spark.textops import shard_by_token_budget
-
-    budget = 2000
-    out = sorted(
-        (r["doc_id"], r["n_tokens"], r["shard"])
-        for r in shard_by_token_budget(documents, budget=budget).collect()
-    )
-    cum = 0
-    shards = {}
-    for doc_id, n_tokens, shard in out:
-        assert shard == cum // budget
-        cum += n_tokens
-        shards.setdefault(shard, 0)
-        shards[shard] += n_tokens
-    assert sorted(shards) == list(range(len(shards)))
-
-
-def test_rolling_fingerprints_winnowing_guarantee(spark):
-    """Schleimer et al.'s guarantee: documents sharing a substring of
-    length >= k + window - 1 share at least one winnowed fingerprint;
-    unrelated documents (different alphabets) share none. min_hash equals
-    the minimum of the winnowed set."""
-    from ocr_project_spark.textops import rolling_fingerprints
-
-    shared = "the quick brown fox jumps over the lazy dog again and again"
-    rows = [
-        (0, "prefix words here " + shared + " suffix tail"),
-        (1, shared + " completely different ending text follows now"),
-        (2, "zzz qqq xxx vvv kkk www yyy uuu completely disjoint charset"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in rolling_fingerprints(df, k=8, window=16).collect()}
-    fp0, fp1, fp2 = (set(out[i]["fingerprints"]) for i in (0, 1, 2))
-    assert fp0 & fp1  # shared substring -> shared fingerprint
-    assert not (fp0 & fp2)
-    for r in out.values():
-        assert r["min_hash"] == min(r["fingerprints"])
-    # horner fold cross-check against a python reference on a tiny doc
-    tiny = spark.createDataFrame([(9, "abcdefgh")], "doc_id long, text string")
-    row = rolling_fingerprints(tiny, k=8, window=16).collect()[0]
-    h = 0
-    for ch in "abcdefgh":
-        h = (h * 257 + ord(ch)) % ((1 << 31) - 1)
-    assert row["n_grams"] == 1 and row["min_hash"] == h
-
-
-def test_shard_by_token_budget_empty_input(spark):
-    from ocr_project_spark.textops import shard_by_token_budget
-
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    out = shard_by_token_budget(empty, budget=100)
-    assert out.collect() == []
-    assert [f.name for f in out.schema.fields] == ["doc_id", "n_tokens", "shard"]
-
-
-def test_lang_id_real_prose_accuracy(spark):
-    """The stopword-profile scorer must identify real mixed-language prose,
-    not just the synthetic chrome (round-2 verdict: make lang_id mean
-    something beyond the corpus)."""
-    from ocr_project_spark.textops import lang_id
-
-    fixtures = [
-        (1, "en", b"This is the report that you asked for and they are "
-                  b"going to review it with your team when the data is ready."),
-        (2, "de", b"Der Bericht ist nicht fertig und die Daten werden erst "
-                  b"nach dem Treffen mit der Abteilung bereitgestellt."),
-        (3, "fr", b"Nous avons pour objectif de livrer le rapport dans les "
-                  b"meilleurs delais avec une analyse complete pour vous."),
-        (4, "es", b"El informe no esta listo y los datos se entregan para "
-                  b"revision con el equipo cuando este todo preparado."),
-        (5, "zh", "这个报告还没有完成我们会在会议之后提供数据他们都说这是很重要的".encode()),
-        (6, "en", b"<html><nav><a href='/about'>about</a></nav><p>They have "
-                  b"not shipped this yet and there would be more to review "
-                  b"when you are ready.</p></html>"),
-        (7, "de", b"<footer>Impressum Kontakt Datenschutz</footer><p>Die "
-                  b"Seite wird nach dem Update nicht mehr angezeigt.</p>"),
-    ]
-    df = spark.createDataFrame(
-        [(i, bytearray(p)) for i, _, p in fixtures], "doc_id long, html binary"
-    )
-    preds = {r["doc_id"]: r["pred_lang"] for r in lang_id(df).collect()}
-    for i, want, _ in fixtures:
-        assert preds[i] == want, f"doc {i}: {preds[i]} != {want}"
 
 
 def test_repetition_signals(spark):
@@ -246,39 +75,6 @@ def test_repetition_signals(spark):
     assert out[3]["top_word_frac_x10000"] == 10000
     assert out[3]["dup_2gram_frac_x10000"] == 10000
     assert out[4]["n_words"] == 1 and out[4]["dup_2gram_frac_x10000"] == 0
-
-
-def test_hash_split_deterministic_and_partition_invariant(spark):
-    """The split must be a pure function of the id: identical across
-    re-runs AND across arbitrary repartitioning (df.sample is neither)."""
-    from ocr_project_spark.textops import hash_split
-
-    docs = spark.range(2000).select(F.col("id").alias("doc_id"))
-    a = {r["doc_id"]: r["split"] for r in hash_split(docs).collect()}
-    b = {
-        r["doc_id"]: r["split"]
-        for r in hash_split(docs.repartition(17)).collect()
-    }
-    assert a == b
-    from collections import Counter
-
-    shares = Counter(a.values())
-    assert shares["train"] > 1800  # ~98% of 2000, loose uniformity check
-    assert 0 < shares["val"] < 200 and 0 < shares["test"] < 200
-    # custom split weights partition the full bucket space in order
-    c = {r["doc_id"]: r["split"] for r in hash_split(
-        docs, splits={"a": 5000, "b": 5000}).collect()}
-    assert set(c.values()) == {"a", "b"}
-
-
-def test_hash_split_rejects_oversubscribed_weights(spark):
-    import pytest as _pytest
-
-    from ocr_project_spark.textops import hash_split
-
-    docs = spark.range(5).select(F.col("id").alias("doc_id"))
-    with _pytest.raises(ValueError, match="buckets"):
-        hash_split(docs, splits={"a": 9000, "b": 2000})
 
 
 def test_contamination_check_planted(spark):
@@ -370,97 +166,6 @@ def test_redact_pii_is_shuffle_free(spark):
     plan = plan_of(redact_pii(docs))
     assert n_nodes(plan, "Exchange") == 0
     assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
-
-
-def test_normalize_text_crafted(spark):
-    """Every pass verified on crafted rows: CRLF/CR → LF, NBSP → space,
-    control strip (LF/TAB kept), space-run collapse, NFC composition."""
-    from ocr_project_spark.textops import normalize_text
-
-    docs = spark.createDataFrame(
-        [
-            (1, "a\r\nb\rc"),
-            (2, "x y"),
-            (3, "bell\x07 del\x7f keep\ttab\nline"),
-            (4, "too   many    spaces"),
-            (5, "naïve étude"),  # decomposed
-            (6, "naïve étude"),  # precomposed — idempotent
-            (7, "already clean"),
-        ],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: (r["text"], r["changed"]) for r in normalize_text(docs).collect()}
-    assert got == {
-        1: ("a\nb\nc", True),
-        2: ("x y", True),
-        3: ("bell del keep\ttab\nline", True),
-        4: ("too many spaces", True),
-        5: ("naïve étude", True),
-        6: ("naïve étude", False),
-        7: ("already clean", False),
-    }
-
-
-def test_normalize_text_is_one_narrow_pass(spark):
-    """Plan contract: no shuffle anywhere — the JVM regex passes fuse into
-    the scan and NFC is a single MapInPandas over it."""
-    from tests.test_plans import n_nodes, plan_of
-
-    from ocr_project_spark.textops import normalize_text
-
-    docs = spark.range(10).select(
-        F.col("id").alias("doc_id"), F.lit("a  b").alias("text")
-    )
-    plan = plan_of(normalize_text(docs))
-    assert n_nodes(plan, "Exchange") == 0
-    assert n_nodes(plan, "MapInPandas") == 1
-
-
-def test_sample_corpus_mix_hits_target_proportions(spark):
-    """Planted corpus with known token totals: the limiting source is kept
-    in full and the others land within binomial tolerance of the target
-    token ratio; membership is a pure function of the id (stable across
-    repartition)."""
-    from ocr_project_spark.textops import sample_corpus_mix
-
-    rows = []
-    for i in range(3000):
-        src = ("a", "b", "c", "drop")[i % 4]
-        rows.append((i, src, "w " * 7 + "end"))  # 8 tokens each
-    docs = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    # totals: 6000 tokens per source; weights a:b:c = 1:2:4 → T/w =
-    # 6000/3000/1500, limiting source = c: c keeps all 6000 tokens,
-    # b thins to ~3000 (rate 1/2), a to ~1500 (rate 1/4).
-    out = sample_corpus_mix(docs, {"a": 1, "b": 2, "c": 4}, source_col="lang")
-    kept = {r["source"]: r["n"] for r in out.groupBy("source").agg(F.count("*").alias("n")).collect()}
-    assert set(kept) == {"a", "b", "c"}  # 'drop' gone
-    assert kept["c"] == 750  # limiting source fully kept (750 docs)
-    # a targets 750*8*1/4 = 1500 tokens = 187.5 docs; b: 375 docs (±4σ)
-    import math
-
-    for src, rate in (("a", 0.25), ("b", 0.5)):
-        n, p = 750, rate
-        sigma = math.sqrt(n * p * (1 - p))
-        assert abs(kept[src] - n * p) < 4 * sigma + 1, (src, kept[src])
-    # determinism across repartition
-    again = sample_corpus_mix(
-        docs.repartition(13), {"a": 1, "b": 2, "c": 4}, source_col="lang"
-    )
-    assert sorted(r["doc_id"] for r in out.collect()) == sorted(
-        r["doc_id"] for r in again.collect()
-    )
-
-
-def test_sample_corpus_mix_rejects_bad_weights(spark):
-    from ocr_project_spark.textops import sample_corpus_mix
-
-    docs = spark.createDataFrame([(1, "en", "a b")], "doc_id long, lang string, text string")
-    for bad in ({}, {"en": 0}, {"en": -1}):
-        try:
-            sample_corpus_mix(docs, bad)
-            assert False, f"expected ValueError for {bad}"
-        except ValueError:
-            pass
 
 
 def test_c4_line_filter_crafted(spark):
@@ -622,29 +327,16 @@ def test_gopher_gate_emit_all_matches_filter(spark, documents):
     assert {d for d, p in flagged.items() if p} == survivors
 
 
-def test_lang_id_survives_invalid_utf8_payload(spark):
-    """ANSI-mode crash-proofing: a non-UTF-8 byte in a crawl payload must
-    not fail the job; the valid regions still classify."""
-    from ocr_project_spark.textops import lang_id
-
-    payload = bytearray(b"\xff\xfe the and for are with that homepage about")
-    df = spark.createDataFrame([(1, payload)], "doc_id long, html binary")
-    rows = lang_id(df).collect()
-    assert len(rows) == 1 and rows[0]["pred_lang"] == "en"
-
-
 def test_gram_and_fingerprint_paths_tolerate_null_text(spark):
-    """NULL text must yield zero grams / an empty-string fingerprint, not
-    an AttributeError that kills the Arrow batch."""
-    from ocr_project_spark.textops import gram_hashes, rolling_fingerprints
+    """NULL text must yield zero grams, not an AttributeError that kills
+    the Arrow batch."""
+    from ocr_project_spark.textops import gram_hashes
 
     docs = spark.createDataFrame(
         [(1, None), (2, "alpha beta gamma delta")], "doc_id long, text string"
     )
     g = gram_hashes(docs, n=2).collect()
     assert {r["doc_id"] for r in g} == {2}
-    f = rolling_fingerprints(docs).collect()
-    assert {r["doc_id"] for r in f} == {1, 2}
 
 
 def test_quality_scores_survive_mega_document(spark):
@@ -663,61 +355,6 @@ def test_quality_scores_survive_mega_document(spark):
     assert rows[1]["avg_word_len_x100"] == 2_200_000_000
     assert rows[2]["stopword_ratio_x10000"] > 0
     gopher_gate(docs, emit_all=True).collect()  # must not raise
-
-
-def test_shard_bucketing_survives_wide_id_span(spark):
-    """Hash-derived 64-bit doc ids must not overflow the bucket arithmetic."""
-    from ocr_project_spark.textops import shard_by_token_budget
-
-    docs = spark.createDataFrame(
-        [(0, "a b c"), (2**62, "d e f")], "doc_id long, text string"
-    )
-    out = shard_by_token_budget(docs).collect()
-    assert len(out) == 2
-
-
-def test_shard_bucketing_exact_at_full_long_span(spark):
-    """Ids spanning the ENTIRE long range (the 64-bit-hash-id regime):
-    double division loses exactness above 2^53 and `doc_id - lo` overflows
-    long — the decimal-div bucketing must stay exact, never place a row in
-    bucket == n_parts, and the shard output must still equal the naive
-    global prefix sum ordered by id."""
-    from ocr_project_spark.textops import shard_by_token_budget
-
-    lo, hi = -(2**63), 2**63 - 1
-    ids = sorted(
-        {lo, lo + 1, -(2**53) - 1, -1, 0, 1, 2**53 + 1, hi - 1, hi}
-        | {lo + (hi - lo) // 7 * k for k in range(1, 7)}  # bucket edges
-    )
-    budget = 7
-    docs = spark.createDataFrame(
-        [(i, "w " * ((k % 5) + 1)) for k, i in enumerate(ids)],
-        "doc_id long, text string",
-    )
-    got = {
-        r["doc_id"]: (r["n_tokens"], r["shard"])
-        for r in shard_by_token_budget(docs, budget=budget).collect()
-    }
-    assert set(got) == set(ids)
-    cum = 0
-    for k, i in enumerate(ids):
-        # "w " * n splits on ' ' into n+1 tokens (trailing empty string)
-        n_tok = (k % 5) + 2
-        assert got[i] == (n_tok, cum // budget), f"id {i}"
-        cum += n_tok
-
-
-def test_importance_weights_empty_target_weight_is_zero(spark):
-    """The weight COLUMN itself (not just `selected`) must be readable on
-    an empty target corpus — 0/0 would abort under ANSI."""
-    from ocr_project_spark.textops import importance_weights
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta")], "doc_id long, text string"
-    )
-    empty = docs.where("doc_id < 0")
-    rows = importance_weights(docs, empty).select("doc_id", "weight").collect()
-    assert rows[0]["weight"] == 0.0
 
 
 def test_stateless_curation_ops_compose_with_streams(spark, documents, tmp_path):
