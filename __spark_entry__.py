@@ -16,9 +16,10 @@ instead of replaying the hash in SQL: dedup_minhash's *verified output*
 equals the exact n-gram-Jaccard pairs (candidate recall ≈ 1 at 128/32);
 dedup_simhash runs over a corpus with planted exact copies, whose pairing
 is a mathematical property of the hash (identical input ⇒ identical
-hash), making the expected answer exact SQL. The round-3 cluster queries
-(dedup_minhash_components) replay connected components with a
-recursive-CTE transitive closure over the exact-jaccard pair set;
+hash), making the expected answer exact SQL; corpus_percentiles is exact
+because the GK sketch is exact below its accuracy bound. The round-3
+cluster queries (dedup_minhash_components) replay connected components
+with a recursive-CTE transitive closure over the exact-jaccard pair set;
 warc_sinks closes the loop extraction → WET/WAT sinks → WARC parse against
 ground truth, byte-for-byte.
 """
@@ -741,6 +742,17 @@ def q_quality_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gram_lm_scores(docs.unionByName(planted), n=2)
 
 
+def q_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-language corpus profile: exact aggregates (corpus_stats) joined
+    with the mergeable-sketch word-length percentiles (corpus_percentiles
+    — exact below the GK accuracy bound, so DuckDB's quantile_disc replays
+    them)."""
+    from ocr_project_spark.textops import corpus_percentiles, corpus_stats
+
+    docs = _docs(spark, sf_dir)
+    return corpus_stats(docs).join(corpus_percentiles(docs), "lang")
+
+
 def q_warc_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BOTH Common-Crawl distribution sinks round-tripped in one
     format-tagged row set (subsumes the round-4 `wet_roundtrip` row).
@@ -932,6 +944,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_lines": q_dedup_lines,
         "contamination": q_contamination,
         "backend_listing": q_backend_listing,
+        "corpus_profile": q_corpus_profile,
         "host_profile": q_host_profile,
         # --- byte-identity core ---
         "flagship_rollup": q_flagship_rollup,
@@ -1467,6 +1480,28 @@ def oracle_sql() -> dict[str, str]:
                    (n_grams - n_rare) / n_grams AS familiarity,
                    (n_rare * 2 <= n_grams) AS passes_lm
             FROM per
+        """,
+        # corpus_profile: exact aggregates + percentiles in one per-lang
+        # row. The GK sketch is exact while per-group n ≤ its accuracy
+        # bound (10000), and Spark's exact-mode rank convention equals
+        # DuckDB's quantile_disc (validated on distinct values at n=7..1000)
+        "corpus_profile": """
+            SELECT lang, count(*) AS n_docs,
+                   CAST(sum(len(string_split(text, ' '))) AS BIGINT)
+                       AS total_words,
+                   CAST(floor(sum(len(string_split(text, ' '))) * 100
+                        / count(*)) AS BIGINT) AS avg_words_x100,
+                   CAST(min(len(string_split(text, ' '))) AS BIGINT)
+                       AS min_words,
+                   CAST(max(len(string_split(text, ' '))) AS BIGINT)
+                       AS max_words,
+                   CAST(quantile_disc(len(string_split(text, ' ')), 0.5)
+                        AS BIGINT) AS p50_words,
+                   CAST(quantile_disc(len(string_split(text, ' ')), 0.9)
+                        AS BIGINT) AS p90_words,
+                   CAST(quantile_disc(len(string_split(text, ' ')), 0.99)
+                        AS BIGINT) AS p99_words
+            FROM documents GROUP BY 1
         """,
         # 13-gram benchmark-overlap decontamination: the oracle rebuilds the
         # same eval set (20-word prefix of doc_id % 13 = 5), derives the same

@@ -2,7 +2,8 @@
 
 These are the large-scale corpus operations a 100 TB extraction pipeline
 feeds: token counting, quality scoring and gating, C4 line cleaning, PII
-redaction, benchmark decontamination and corpus-frequency LM scoring.
+redaction, benchmark decontamination, corpus-frequency LM scoring and
+per-language corpus statistics.
 Everything but the word-gram hashing of :func:`gram_hashes` (one narrow
 Arrow pass) stays JVM-side (built-in ``pyspark.sql.functions``, whole-stage
 codegen). Integer-safe formulas are used wherever a DuckDB differential
@@ -228,6 +229,42 @@ def repetition_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
             .cast("long")
             .alias("dup_2gram_frac_x10000"),
         )
+    )
+
+
+def corpus_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Per-language corpus rollup: doc counts, word totals, exact
+    avg/min/max word counts (integer-safe) — the dataset-card numbers a
+    corpus release ships. Partial+final aggregation throughout."""
+    n_words = F.size(F.split(F.col(text_col), " "))
+    return (
+        docs.groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(n_words).cast("long").alias("total_words"),
+            F.floor(F.sum(n_words) * 100 / F.count(F.lit(1)))
+            .cast("long")
+            .alias("avg_words_x100"),
+            F.min(n_words).cast("long").alias("min_words"),
+            F.max(n_words).cast("long").alias("max_words"),
+        )
+    )
+
+
+def corpus_percentiles(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Sketch-based distribution summary: approximate word-count
+    percentiles per language via ``percentile_approx`` (GK sketch —
+    mergeable across partitions, the 100 TB path for distribution stats).
+    The sketch is exact while per-group n ≤ its accuracy bound (10000), so
+    the DuckDB ``quantile_disc`` oracle checks it exactly at test scale."""
+    n_words = F.size(F.split(F.col(text_col), " "))
+    return docs.groupBy("lang").agg(
+        F.percentile_approx(n_words, [0.5, 0.9, 0.99], 10000).alias("pcts")
+    ).select(
+        "lang",
+        F.col("pcts")[0].cast("long").alias("p50_words"),
+        F.col("pcts")[1].cast("long").alias("p90_words"),
+        F.col("pcts")[2].cast("long").alias("p99_words"),
     )
 
 

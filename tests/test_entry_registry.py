@@ -143,6 +143,8 @@ QUERY_ONLY_FUNCTIONS = {
     "sources.warc.pages_from_warc": "ROADMAP item 2 candidate",
     "sources.warc.synthesize_warc_segment": "ROADMAP item 2 candidate",
     "textops.contamination_check": "ROADMAP item 2 candidate",
+    "textops.corpus_percentiles": "ROADMAP item 2 candidate",
+    "textops.corpus_stats": "ROADMAP item 2 candidate",
     "textops.gopher_gate": "ROADMAP item 2 candidate",
     "textops.quality_scores": "called in its own module by `quality_gate`",
     "textops.repetition_signals": "ROADMAP item 2 candidate",

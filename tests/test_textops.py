@@ -1,6 +1,7 @@
 """Text-analysis operator tests: token counting, quality scores and gates,
-repetition signals, decontamination, PII redaction, C4 cleaning and
-word-gram LM scoring over the driver documents and crafted corpora.
+corpus statistics, repetition signals, decontamination, PII redaction, C4
+cleaning and word-gram LM scoring over the driver documents and crafted
+corpora.
 """
 
 from __future__ import annotations
@@ -36,6 +37,49 @@ def test_quality_scores_crafted(spark):
     assert row["avg_word_len_x100"] == 200  # 10 chars / 5 words
     assert row["stopword_hits"] == 2
     assert row["stopword_ratio_x10000"] == 4000
+
+
+def test_corpus_stats_exact(documents):
+    from ocr_project_spark.textops import corpus_stats
+
+    row = {r["lang"]: r for r in corpus_stats(documents).collect()}
+    expected = {
+        r["lang"]: r
+        for r in documents.groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.size(F.split("text", " "))).alias("tw"),
+        )
+        .collect()
+    }
+    assert row.keys() == expected.keys()
+    for lang, e in expected.items():
+        assert row[lang]["n_docs"] == e["n"]
+        assert row[lang]["total_words"] == e["tw"]
+        assert row[lang]["min_words"] <= row[lang]["max_words"]
+
+
+def test_corpus_percentiles_vs_numpy(documents):
+    import numpy as np
+
+    from ocr_project_spark.textops import corpus_percentiles
+
+    got = {r["lang"]: r for r in corpus_percentiles(documents).collect()}
+    rows = documents.select(
+        "lang", F.size(F.split("text", " ")).alias("n")
+    ).collect()
+    by_lang: dict = {}
+    for r in rows:
+        by_lang.setdefault(r["lang"], []).append(r["n"])
+    for lang, vals in by_lang.items():
+        arr = np.array(sorted(vals))
+        # GK sketch at accuracy 10000 over ≤250 values is exact: the
+        # returned element's rank must bracket the target quantile
+        for p, col in ((0.5, "p50_words"), (0.9, "p90_words"), (0.99, "p99_words")):
+            v = got[lang][col]
+            rank = (arr <= v).mean()
+            assert rank >= p - 0.05
+            assert (arr < v).mean() <= p + 0.05
 
 
 def test_gopher_gate_rules(spark):
