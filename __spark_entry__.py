@@ -3,8 +3,8 @@
 ``entry(spark)`` runs the flagship per-language/backend extraction rollup on
 sf0.001. ``queries()`` exposes one callable per implemented operator family
 from SURVEY.md §2 (extraction lifecycle, lineage/health, skew observability,
-backend comparison) plus the training-data operators (dedup families,
-text analysis). ``oracle_sql()`` gives the DuckDB
+backend comparison) plus the training-data operators (MinHash dedup and
+its components, line dedup, text analysis). ``oracle_sql()`` gives the DuckDB
 equivalent for every SQL-expressible query; the synthetic ``pages`` table is
 a pure function of the driver's ``documents`` table (see
 ocr_project_spark/datagen.py), so every extraction invariant — including
@@ -13,10 +13,8 @@ re-derivable with plain SQL over ``documents``.
 
 Every query carries a DuckDB oracle. The hash-based families use invariants
 instead of replaying the hash in SQL: dedup_minhash's *verified output*
-equals the exact n-gram-Jaccard pairs (candidate recall ≈ 1 at 128/32);
-dedup_simhash runs over a corpus with planted exact copies, whose pairing
-is a mathematical property of the hash (identical input ⇒ identical
-hash), making the expected answer exact SQL; corpus_percentiles is exact
+equals the exact shingle-Jaccard pair set computed in SQL (candidate
+recall ≈ 1 at 128 hashes / 32 bands); corpus_percentiles is exact
 because the GK sketch is exact below its accuracy bound. The round-3
 cluster queries (dedup_minhash_components) replay connected components
 with a recursive-CTE transitive closure over the exact-jaccard pair set;
@@ -532,93 +530,15 @@ def q_backend_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compare_backends(_docs(spark, sf_dir))
 
 
-def q_dedup_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-hash and prefix-blocking dedup ledgers in one tagged row set
-    (merges round 4's dedup_exact + dedup_prefix rows) over the
-    planted-dup corpus: family='exact' rows carry one row per distinct
-    text at min_copies=1 (keeper_id IS the keep-list, n_docs > 1 recovers
-    the duplicate groups), family='prefix' rows the 4-word-prefix blocking
-    groups with >1 member. Both are single map-side-partial aggregations;
-    the oracle replays each family and UNION ALLs them."""
-    from ocr_project_spark.dedup import (
-        dedup_test_corpus,
-        exact_dup_groups,
-        prefix_dup_groups,
-    )
-
-    corpus = dedup_test_corpus(_docs(spark, sf_dir))
-    exact = exact_dup_groups(corpus, min_copies=1).select(
-        F.lit("exact").alias("family"),
-        F.col("content_md5").alias("group_key"),
-        "keeper_id",
-        F.col("n_copies").alias("n_docs"),
-    )
-    prefix = prefix_dup_groups(corpus).select(
-        F.lit("prefix").alias("family"),
-        F.col("prefix").alias("group_key"),
-        "keeper_id",
-        "n_docs",
-    )
-    return exact.unionByName(prefix)
-
-
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH near-dup pairs UNION the exact all-pairs n-gram Jaccard
-    baseline, family-tagged (round-4 merge of the dedup_minhash and
-    dedup_ngram_jaccard queries): both run on the same planted-dup corpus
-    at the same threshold, so the row sets must be identical up to the tag
-    — the LSH ≡ exact equivalence (candidate recall ≈ 1 at 128 hashes /
-    32 bands at j ≥ 0.8) asserted inside one driver row."""
-    from ocr_project_spark.dedup import minhash_near_dup_pairs, ngram_jaccard_pairs
+    """MinHash-LSH near-dup pairs over the planted-dup corpus at j ≥ 0.8.
+    The verify step computes exact shingle Jaccard, and candidate recall
+    is ≈ 1 at 128 hashes / 32 bands, so the row set equals the exact
+    all-pairs Jaccard pair set the oracle computes in SQL."""
+    from ocr_project_spark.dedup import minhash_near_dup_pairs
 
-    corpus = _dedup_corpus_de(spark, sf_dir)
-    mh = minhash_near_dup_pairs(corpus, threshold=0.8, num_hashes=128, bands=32)
-    ex = ngram_jaccard_pairs(corpus, threshold=0.8)
-    return mh.select(F.lit("minhash").alias("family"), "id_a", "id_b", "jaccard").unionByName(
-        ex.select(F.lit("exact").alias("family"), "id_a", "id_b", "jaccard")
-    )
-
-
-def q_dedup_repeated_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Substring-level duplication inventory: cross-document repeated 8-word
-    spans over the planted-dup corpus (exact aggregation → exact oracle)."""
-    from ocr_project_spark.dedup import repeated_ngram_spans
-
-    return repeated_ngram_spans(_dedup_corpus_de(spark, sf_dir), n=8)
-
-
-def q_dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Substring-span REMOVAL over the planted-dup corpus: documents are
-    rewritten with every position covered by a cross-doc repeated 8-gram
-    excised (planted exact copies reduce to empty text, the head-edited
-    near-dups keep exactly their unique head, natural boilerplate spans
-    vanish corpus-wide). The oracle replays the byte-exact string surgery
-    in SQL: same gram inventory, same covered-position set, same
-    single-space rejoin."""
-    from ocr_project_spark.dedup import remove_repeated_spans
-
-    return remove_repeated_spans(_dedup_corpus_de(spark, sf_dir), n=8)
-
-
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup over base ∪ planted exact copies (+100000),
-    projected to the planted pairs (id_b = id_a + 100000). Identical text ⇒
-    identical word multiset ⇒ identical simhash ⇒ the pair is guaranteed
-    through chunk banding at hamming 0 — a mathematical invariant of the
-    operator at any scale, so the expected set is exact SQL (one pair per
-    de-lang doc). General near-dup behavior (hamming ≤ k on one-word edits)
-    is covered by tests/test_dedup.py; the corpus's natural near-dup pairs
-    land at hash-dependent hamming 2-3 and are excluded by the projection,
-    not by weakening the operator."""
-    from ocr_project_spark.dedup import simhash_near_dup_pairs
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text", "lang")
-    corpus = docs.unionByName(
-        docs.select((F.col("doc_id") + 100000).alias("doc_id"), "text", "lang")
-    ).where(F.col("lang") == "de")
-    out = simhash_near_dup_pairs(corpus, max_hamming=3)
-    return out.where(F.col("id_b") - F.col("id_a") == 100000).select(
-        "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
+    return minhash_near_dup_pairs(
+        _dedup_corpus_de(spark, sf_dir), threshold=0.8, num_hashes=128, bands=32
     )
 
 
@@ -925,20 +845,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     window must be a long-stable query, never one that changed this round),
     with operator pairs that naturally compose (profile joins) merged into
     one entry. It covers every operator that a job, CLI or benchmark
-    reaches, plus the query-only operators listed in ROADMAP item 2.
-    tests/test_entry_registry.py keeps it whole: every query has
+    reaches, plus the query-only functions listed in ROADMAP item 2 (the
+    dedup fixtures ``dedup_test_corpus`` and ``near_dup_clusters`` among
+    them). tests/test_entry_registry.py keeps it whole: every query has
     its oracle and ``q_`` function, no package module is reached from
-    the tests alone, and only the modules it lists are reached from this
-    file alone."""
+    the tests alone, and only the modules and functions it lists are
+    reached from this file alone."""
     return {
         # --- changed or added this round / round 3 tail ---
+        "dedup_minhash": q_dedup_minhash,
         "text_quality": q_text_quality,
         "recrawl_ops": q_recrawl_ops,
         "warc_sinks": q_warc_sinks,
         "c4_clean": q_c4_clean,
-        "dedup_minhash": q_dedup_minhash,
         "quality_lm": q_quality_lm,
-        "dedup_blocking": q_dedup_blocking,
         "dedup_minhash_components": q_dedup_minhash_components,
         "pii_redact": q_pii_redact,
         "dedup_lines": q_dedup_lines,
@@ -960,10 +880,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "warc_extract": q_warc_extract,
         "page_selection": q_page_selection,
         "backend_compare": q_backend_compare,
-        # --- dedup families ---
-        "dedup_repeated_ngrams": q_dedup_repeated_ngrams,
-        "dedup_span_removal": q_dedup_span_removal,
-        "dedup_simhash": q_dedup_simhash,
     }
 
 
@@ -1216,106 +1132,10 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, true AS texts_agree, true AS matches_truth
             FROM documents
         """,
-        "dedup_blocking": f"""
-            WITH {_DEDUP_CORPUS},
-            e AS (
-                SELECT 'exact' AS family, md5(text) AS group_key,
-                       min(doc_id) AS keeper_id, count(*) AS n_docs
-                FROM corpus GROUP BY 2
-            ),
-            p AS (
-                SELECT 'prefix' AS family,
-                       array_to_string(
-                           list_slice(string_split(text, ' '), 1, 4), ' ')
-                           AS group_key,
-                       min(doc_id) AS keeper_id, count(*) AS n_docs
-                FROM corpus GROUP BY 2 HAVING count(*) > 1
-            )
-            SELECT * FROM e UNION ALL SELECT * FROM p
-        """,
-
-        "dedup_repeated_ngrams": f"""
-            WITH {_DEDUP_CORPUS},
-            g AS (
-                SELECT doc_id,
-                       unnest(list_transform(
-                           generate_series(1,
-                               greatest(len(string_split(text, ' ')) - 7, 1)),
-                           i -> array_to_string(
-                               list_slice(string_split(text, ' '), i, i + 7),
-                               ' ')
-                       )) AS gram
-                FROM corpus WHERE lang = 'de'
-            )
-            SELECT gram,
-                   CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-                   count(*) AS n_occurrences
-            FROM g GROUP BY 1
-            HAVING count(DISTINCT doc_id) >= 2
-        """,
         # the LSH-verified output equals exact Jaccard at ≥0.8 (candidate
         # recall ≈ 1 - 1e-7 at 128 hashes / 32 bands)
-        # both families must produce the identical pair set (LSH recall ≈ 1
-        # at these parameters) — asserted by replaying the exact SQL twice
-        "dedup_minhash": f"""
-            SELECT 'minhash' AS family, * FROM ({_JACCARD_DE_SQL})
-            UNION ALL
-            SELECT 'exact' AS family, * FROM ({_JACCARD_DE_SQL})
-        """,
-        # byte-exact replay of remove_repeated_spans: same full-8-gram
-        # inventory (parallel unnest zips starts with grams), same covered
-        # positions, same ordered single-space rejoin
-        "dedup_span_removal": f"""
-            WITH {_DEDUP_CORPUS},
-            corp AS (SELECT doc_id, text FROM corpus WHERE lang = 'de'),
-            w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM corp),
-            g AS (
-                SELECT doc_id,
-                       unnest(range(greatest(len(ws) - 7, 0))) AS start,
-                       unnest(list_transform(
-                           range(greatest(len(ws) - 7, 0)),
-                           i -> array_to_string(list_slice(ws, i + 1, i + 8), ' ')
-                       )) AS gram
-                FROM w
-            ),
-            rep AS (
-                SELECT gram FROM g GROUP BY gram
-                HAVING count(DISTINCT doc_id) >= 2
-            ),
-            cov AS (
-                SELECT DISTINCT g.doc_id, g.start + o.off AS pos
-                FROM g JOIN rep USING (gram), generate_series(0, 7) o(off)
-            ),
-            pw AS (
-                SELECT doc_id, unnest(range(len(ws))) AS pos,
-                       unnest(ws) AS word
-                FROM w
-            ),
-            kept AS (
-                SELECT pw.doc_id, pw.pos, pw.word
-                FROM pw LEFT JOIN cov
-                  ON pw.doc_id = cov.doc_id AND pw.pos = cov.pos
-                WHERE cov.doc_id IS NULL
-            ),
-            rebuilt AS (
-                SELECT doc_id, string_agg(word, ' ' ORDER BY pos) AS text
-                FROM kept GROUP BY doc_id
-            ),
-            nrem AS (SELECT doc_id, count(*) AS n_removed FROM cov GROUP BY doc_id)
-            SELECT c.doc_id, COALESCE(r.text, '') AS text,
-                   CAST(COALESCE(nr.n_removed, 0) AS BIGINT) AS n_removed
-            FROM corp c
-            LEFT JOIN rebuilt r USING (doc_id)
-            LEFT JOIN nrem nr USING (doc_id)
-        """,
+        "dedup_minhash": _JACCARD_DE_SQL,
         "dedup_minhash_components": _MINHASH_COMPONENTS_SQL,
-        # planted-copy projection: identical text ⇒ identical simhash ⇒
-        # pair guaranteed at hamming 0 (see q_dedup_simhash docstring)
-        "dedup_simhash": """
-            SELECT doc_id AS id_a, doc_id + 100000 AS id_b,
-                   CAST(0 AS BIGINT) AS hamming
-            FROM documents WHERE lang = 'de'
-        """,
         # text_quality: scores + the gate verdict as a CASE over the same
         # integer-scaled features (quality_scores ∘ quality_gate in one row)
         # + the two token counters (subsumes the round-3 text_token_counts)

@@ -5,7 +5,7 @@ lower-id partner" keeps C whenever C's only partners were themselves
 dropped, and misses A..C links entirely when similarity is transitive but
 the pair list is not. Training-data dedup therefore collapses the pair
 graph into connected components and keeps ONE representative (the min id)
-per component — this module is that step for the minhash/simhash families.
+per component — this module is that step for the MinHash near-dup pairs.
 
 Algorithm: alternating large-star / small-star (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC 2014) — O(log²n)

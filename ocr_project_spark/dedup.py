@@ -1,16 +1,14 @@
 """Deduplication operators for the training-data pipeline.
 
-Four families, ordered by scale path:
+Two passes, both run by the jobs:
 
-- exact         — hash-groupBy; the only full-shuffle op, partial-agg friendly.
-- minhash+LSH   — shingle → minhash signature (vectorized numpy in an Arrow
-                  batch) → banding → bucket join → exact-jaccard verify.
-                  Candidate generation is O(n·bands), never all-pairs: the
-                  100 TB path.
-- simhash       — 64-bit simhash + chunk banding + bit_count hamming verify.
-- n-gram jaccard — exact all-pairs *within a blocking key*; O(b²) per block,
-                  used as the small-scale verification baseline for the
-                  approximate families (and the DuckDB-oracle-checkable one).
+- near-dup (``jobs/dedup.py``) — MinHash + LSH: shingle → minhash signature
+  (vectorized numpy in an Arrow batch) → banding → bucket join →
+  exact-jaccard verify. Candidate generation is O(n·bands), never
+  all-pairs: the 100 TB path. The verified pairs collapse into connected
+  components (components.py) for the min-id keep-list.
+- line-level (``jobs/curate.py``'s first stage) — lines repeated across
+  documents are removed (:func:`remove_repeated_lines`).
 """
 
 from __future__ import annotations
@@ -46,82 +44,12 @@ def dedup_test_corpus(docs: DataFrame) -> DataFrame:
     return base.unionByName(exact).unionByName(near)
 
 
-def exact_dup_groups(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_copies: int = 2,
-) -> DataFrame:
-    """Exact-duplicate groups by content hash: one row per distinct text
-    with the keeper (min id) and the copy count, filtered to groups with at
-    least ``min_copies`` members (default: actual duplicate groups only).
-    With ``min_copies=1`` the result is the full dedup ledger — ``keeper_id``
-    is exactly the keep-list :func:`dedup_keep` returns, and ``n_copies > 1``
-    recovers the duplicate groups — one aggregation serving both views.
-    Map-side partial aggregation keeps the shuffle to one row per distinct
-    hash."""
-    # NULL text must not collapse into one fake duplicate group (md5(NULL)
-    # is NULL — grouping would keep ONE of the corpus's failed-extraction
-    # rows and silently drop the rest); key NULLs by their own id so each
-    # is its own group
-    key = F.coalesce(
-        F.md5(F.col(text_col)),
-        F.concat(F.lit("null-text-"), F.col(id_col).cast("string")),
-    )
-    grouped = docs.groupBy(key.alias("content_md5")).agg(
-        F.min(id_col).alias("keeper_id"),
-        F.count(F.lit(1)).alias("n_copies"),
-    )
-    if min_copies > 1:
-        grouped = grouped.where(F.col("n_copies") >= min_copies)
-    return grouped
-
-
-def dedup_keep(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact-dedup materializer: the surviving doc ids (min id per distinct
-    content hash) — the corpus a training pipeline actually keeps. One
-    map-side-combinable aggregation; no join back needed when downstream
-    only requires ids."""
-    key = F.coalesce(
-        F.md5(F.col(text_col)),
-        F.concat(F.lit("null-text-"), F.col(id_col).cast("string")),
-    )
-    return (
-        docs.groupBy(key.alias("content_md5"))
-        .agg(F.min(id_col).alias("doc_id"))
-        .select("doc_id")
-    )
-
-
-def prefix_dup_groups(
-    docs: DataFrame, n_words: int = 4, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Near-dup blocking by leading-word prefix (a cheap boilerplate-dedup
-    heuristic): groups sharing the first ``n_words`` words."""
-    prefix = F.concat_ws(" ", F.slice(F.split(F.col(text_col), " "), 1, n_words))
-    return (
-        docs.groupBy(prefix.alias("prefix"))
-        .agg(
-            F.min(id_col).alias("keeper_id"),
-            F.count(F.lit(1)).alias("n_docs"),
-        )
-        .where(F.col("n_docs") > 1)
-    )
-
-
 def shingle_sets(
-    docs: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    keep: tuple[str, ...] = (),
+    docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Distinct word n-gram shingles per doc (JVM: sequence/transform)."""
-    extra = [F.col(c) for c in keep]
     shingles = _shingles(F.col(text_col), n).alias("shingles")
-    return docs.select(F.col(id_col).alias("doc_id"), shingles, *extra)
+    return docs.select(F.col(id_col).alias("doc_id"), shingles)
 
 
 def _shingles(text: Column, n: int) -> Column:
@@ -131,119 +59,6 @@ def _shingles(text: Column, n: int) -> Column:
         F.transform(
             F.sequence(F.lit(1), F.greatest(cnt - (n - 1), F.lit(1))),
             lambda i: F.concat_ws(" ", F.slice(words, i, n)),
-        )
-    )
-
-
-def repeated_ngram_spans(
-    docs: DataFrame,
-    n: int = 8,
-    min_docs: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Substring-level duplication signal: word ``n``-grams occurring in at
-    least ``min_docs`` distinct documents — the cross-document repeated-span
-    inventory that substring dedup pipelines (boilerplate spans, licence
-    headers, templated paragraphs) prune before training.
-
-    All positions count (not the distinct-set shingles the Jaccard family
-    uses): explode → groupBy(gram) with partial aggregation; the shuffle is
-    one row per (gram, partial count). At 100 TB the gram column would be
-    ``xxhash64(gram)`` (8 bytes instead of the string); the string form is
-    kept here so a differential oracle can replay the exact output.
-    Output: (gram, n_docs, n_occurrences).
-    """
-    words = F.split(F.col(text_col), " ")
-    cnt = F.size(words)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(cnt - (n - 1), F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(words, i, n)),
-    )
-    exploded = docs.select(F.col(id_col).alias("doc_id"), F.explode(grams).alias("gram"))
-    return (
-        exploded.groupBy("gram")
-        .agg(
-            F.countDistinct("doc_id").alias("n_docs"),
-            F.count(F.lit(1)).alias("n_occurrences"),
-        )
-        .where(F.col("n_docs") >= min_docs)
-    )
-
-
-def remove_repeated_spans(
-    docs: DataFrame,
-    n: int = 8,
-    min_docs: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Substring-level dedup REWRITER: excise every word position covered by
-    a word ``n``-gram that occurs in ≥ ``min_docs`` distinct documents — the
-    step substring-dedup pipelines actually apply before training
-    (boilerplate paragraphs, licence headers, templated chrome), where
-    :func:`repeated_ngram_spans` only inventories. Byte-exact semantics:
-    a position is removed iff some repeated full n-gram occurrence covers
-    it; survivors re-join with single spaces — a pure function of the
-    corpus, replayed exactly by the driver's ``dedup_span_removal`` oracle.
-
-    Shape at 100 TB: one gram explode (cnt−n+1 rows/doc) → partial-agg
-    groupBy(gram) for the repeated set → semi-join hits → per-doc
-    covered-position sets (collect_set of ints, bounded by doc length) →
-    row-local rebuild via a JVM index-filter lambda. Only gram rows and
-    tiny position sets shuffle — document payloads never do; at 100 TB the
-    join key becomes ``xxhash64(gram)`` (the :func:`repeated_ngram_spans`
-    note). Output: (doc_id, text, n_removed).
-    """
-    words = F.split(F.col(text_col), " ")
-    cnt = F.size(words)
-    g = (
-        docs.where(cnt >= n)
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), cnt - n),
-                    lambda i: F.struct(
-                        i.alias("start"),
-                        F.concat_ws(" ", F.slice(words, i + 1, n)).alias("gram"),
-                    ),
-                )
-            ).alias("sg"),
-        )
-        .select("doc_id", F.col("sg.start").alias("start"), F.col("sg.gram").alias("gram"))
-    )
-    rep = (
-        g.groupBy("gram")
-        .agg(F.countDistinct("doc_id").alias("__nd"))
-        .where(F.col("__nd") >= min_docs)
-        .select("gram")
-    )
-    covered = (
-        g.join(rep, "gram", "left_semi")
-        .select(
-            "doc_id",
-            F.explode(F.sequence(F.col("start"), F.col("start") + n - 1)).alias(
-                "pos"
-            ),
-        )
-        .groupBy("doc_id")
-        .agg(F.collect_set("pos").alias("__covered"))
-    )
-    empty = F.array().cast("array<int>")
-    cov = F.coalesce(F.col("__covered"), empty)
-    return (
-        docs.select(F.col(id_col).alias("doc_id"), words.alias("__ws"))
-        .join(covered, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.array_join(
-                F.filter(
-                    "__ws", lambda w, i: ~F.array_contains(cov, i.cast("int"))
-                ),
-                " ",
-            ).alias("text"),
-            F.size(cov).cast("long").alias("n_removed"),
         )
     )
 
@@ -265,8 +80,7 @@ def remove_repeated_lines(
     repeated set (join key becomes ``xxhash64(line)`` at scale, one 8-byte
     column) → semi-join hits → per-doc covered-position int sets → row-local
     rebuild via a JVM index-filter lambda over the split array. Line rows
-    and tiny position sets shuffle — document payloads never do (same
-    contract as :func:`remove_repeated_spans`).
+    and tiny position sets shuffle — document payloads never do.
     """
     lines_arr = F.split(F.col(text_col), "\n")
     l = docs.select(
@@ -306,45 +120,6 @@ def remove_repeated_lines(
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.8,
-    n: int = 3,
-    block_col: str = "lang",
-    text_col: str = "text",
-) -> DataFrame:
-    """Exact n-gram-Jaccard near-dup pairs within a blocking key.
-
-    All-pairs *within each block* via a self-equi-join on the block column —
-    the shuffle is on the block key, and jaccard is computed with JVM array
-    intersect/union. Correct but quadratic per block: the verification
-    baseline the LSH family is tested against, and only ever run on blocks
-    small enough to enumerate (at 100 TB the blocked all-pairs is replaced by
-    minhash_candidate_pairs + the same verify step).
-    """
-    blocked = shingle_sets(
-        docs.select(text_col, block_col, "doc_id"), n, text_col, keep=(block_col,)
-    ).withColumnRenamed(block_col, "block")
-    a = blocked.select(
-        F.col("block"),
-        F.col("doc_id").alias("id_a"),
-        F.col("shingles").alias("sh_a"),
-    )
-    b = blocked.select(
-        F.col("block"),
-        F.col("doc_id").alias("id_b"),
-        F.col("shingles").alias("sh_b"),
-    )
-    pairs = a.join(b, "block").where(F.col("id_a") < F.col("id_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return pairs.select(
-        "id_a",
-        "id_b",
-        (inter / union).alias("jaccard"),
-    ).where(F.col("jaccard") >= threshold)
-
-
 # 31-bit Mersenne prime: (a·x + b) products of 31-bit operands fit in int64,
 # so the permutation hashing stays in vectorized numpy integer arithmetic
 # (the same scheme Spark MLlib's MinHashLSH uses with prime 2038074743).
@@ -372,8 +147,8 @@ def hashed_shingles(
     )
 
 
-def _flatten_batch(arrs) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Column of variable-length int lists → (flat values, lengths, starts).
+def _flatten_batch(arrs) -> tuple[np.ndarray, np.ndarray]:
+    """Column of variable-length int lists → (flat values, starts).
     Every downstream kernel is a single numpy pass over the flat array with
     ``reduceat`` at the per-document boundaries — no per-document Python."""
     lens = np.fromiter((len(h) for h in arrs), dtype=np.int64, count=len(arrs))
@@ -385,7 +160,7 @@ def _flatten_batch(arrs) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     starts = np.zeros(len(lens), dtype=np.int64)
     if len(lens) > 1:
         np.cumsum(lens[:-1], out=starts[1:])
-    return flat, lens, starts
+    return flat, starts
 
 
 def _sig_matrix(
@@ -456,7 +231,7 @@ def minhash_signatures(
         for pdf in batches:
             if not len(pdf):
                 continue
-            flat, _, starts = _flatten_batch(pdf["hashes"])
+            flat, starts = _flatten_batch(pdf["hashes"])
             sig = _sig_matrix(flat, starts, a, b)
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "signature": list(sig)})
 
@@ -508,7 +283,7 @@ def minhash_band_rows_from_hashes(
         for pdf in batches:
             if not len(pdf):
                 continue
-            flat, _, starts = _flatten_batch(pdf["hashes"])
+            flat, starts = _flatten_batch(pdf["hashes"])
             bh = _band_hash_matrix(_sig_matrix(flat, starts, a, b), bands)
             yield pd.DataFrame(
                 {
@@ -544,8 +319,8 @@ def minhash_candidate_pairs(
     """LSH banding: one row per (doc, band), bucket self-join on
     (band index, band hash). The fan-out is 1→bands (bounded) and the join
     shuffles one small row per (doc, band) — linear in corpus size; buckets
-    with a single member produce no pairs. Same shape as the simhash chunk
-    join; AQE's skew-join split is the backstop for a degenerate hot bucket.
+    with a single member produce no pairs. AQE's skew-join split is the
+    backstop for a degenerate hot bucket.
     """
     return _band_bucket_pairs(minhash_band_rows(signatures, bands))
 
@@ -573,13 +348,11 @@ def minhash_near_dup_pairs(
     band bucket of b members emits b² candidate pairs, so one bucket
     holding a million byte-identical boilerplate pages would go quadratic.
     Buckets larger than the cap are dropped BEFORE the self-join (a window
-    count over the same exchange). Over-cap buckets are *usually*
-    dominated by exact-duplicate classes (run :func:`exact_dup_groups`
-    first, which collapses those for a linear price) — but templated
-    near-identical pages can also share a band bucket, so capping CAN lose
-    genuine near-dup pairs. The loss is observable: pass the same arguments
-    to :func:`minhash_oversized_buckets` to inventory exactly which buckets
-    (and how many member rows) the cap excluded, the same
+    count over the same exchange). Over-cap buckets are usually exact- or
+    near-identical classes (boilerplate, templated pages), so capping CAN
+    lose genuine near-dup pairs. The loss is observable: at the default
+    shingle and band settings :func:`minhash_oversized_buckets`
+    inventories the over-cap buckets (and their member counts), the same
     count-what-you-drop posture as the WARC parser's ``n_skipped``. AQE's
     skew-join split remains the backstop for buckets under the cap."""
     hashed = hashed_shingles(docs, n, text_col)
@@ -612,154 +385,29 @@ def minhash_near_dup_pairs(
     return verified.where(F.col("jaccard") >= threshold)
 
 
-def minhash_dedup_keep(
-    docs: DataFrame,
-    threshold: float = 0.8,
-    n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    text_col: str = "text",
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """MinHash-family dedup materializer: collapse the verified near-dup
-    pairs into connected components (components.connected_components) and
-    keep the min-id representative of each plus every singleton — the
-    corpus a training pipeline actually trains on. Transitive closure
-    matters: pair lists under-delete chains (A~B, B~C must drop both B and
-    C even if the A,C pair never crossed the LSH threshold)."""
+def minhash_dedup_keep(docs: DataFrame, max_bucket: int | None = None) -> DataFrame:
+    """Dedup materializer: collapse the verified near-dup pairs (the
+    :func:`minhash_near_dup_pairs` defaults) into connected components
+    (components.connected_components) and keep the min-id representative
+    of each plus every singleton — the corpus a training pipeline actually
+    trains on. Transitive closure matters: pair lists under-delete chains
+    (A~B, B~C must drop both B and C even if the A,C pair never crossed
+    the LSH threshold)."""
     from ocr_project_spark.components import near_dup_keep
 
-    pairs = minhash_near_dup_pairs(
-        docs, threshold, n, num_hashes, bands, text_col, max_bucket
-    )
+    pairs = minhash_near_dup_pairs(docs, max_bucket=max_bucket)
     return near_dup_keep(docs, pairs.select("id_a", "id_b"))
 
 
-def simhash_dedup_keep(
-    docs: DataFrame, max_hamming: int = 3, text_col: str = "text"
-) -> DataFrame:
-    """SimHash-family dedup materializer: connected components over the
-    hamming-verified pair list → min-id keep-list (see
-    :func:`minhash_dedup_keep` for why closure beats per-pair dropping)."""
-    from ocr_project_spark.components import near_dup_keep
-
-    pairs = simhash_near_dup_pairs(docs, max_hamming, text_col)
-    return near_dup_keep(docs, pairs.select("id_a", "id_b"))
-
-
-def minhash_oversized_buckets(
-    docs: DataFrame,
-    max_bucket: int,
-    n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    text_col: str = "text",
-) -> DataFrame:
-    """Inventory of the band buckets :func:`minhash_near_dup_pairs` drops
+def minhash_oversized_buckets(docs: DataFrame, max_bucket: int) -> DataFrame:
+    """Inventory of the band buckets :func:`minhash_dedup_keep` drops
     under the same ``max_bucket`` cap: one row per over-cap (band_idx,
     band_hash) with its member count. What a production run logs next to
     its pair output so capped recall loss is observable, never silent —
     a partial-agg count, one row per degenerate bucket."""
-    hashed = hashed_shingles(docs, n, text_col)
-    banded = minhash_band_rows_from_hashes(hashed, num_hashes, bands)
+    banded = minhash_band_rows_from_hashes(hashed_shingles(docs))
     return (
         banded.groupBy("band_idx", "band_hash")
         .agg(F.count(F.lit(1)).alias("n_members"))
         .where(F.col("n_members") > max_bucket)
-    )
-
-
-def simhash_signatures(
-    docs: DataFrame, text_col: str = "text", bits: int = 64
-) -> DataFrame:
-    """64-bit SimHash per document.
-
-    Word hashing happens JVM-side (``xxhash64`` inside a codegen'd
-    ``transform`` — no per-token Python at 100 TB scale); the Python side is
-    one flat-array numpy pass per Arrow batch: bit matrix → per-doc ±1 vote
-    sums via ``add.reduceat`` → sign bits packed into one int64."""
-    bit_idx = np.arange(bits, dtype=np.uint64)
-    hashed = docs.select(
-        "doc_id",
-        # coalesce NULL text to '': split('') = [''] — one empty-word hash,
-        # the same posture as shingle_sets' guard — instead of a NULL array
-        # that crashes the Arrow kernel (len(None))
-        F.transform(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), " "),
-            lambda w: F.xxhash64(w),
-        ).alias("whashes"),
-    )
-
-    def _sim(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            flat, lens, starts = _flatten_batch(pdf["whashes"])
-            hv = flat.view(np.uint64)
-            bitmat = ((hv[:, None] >> bit_idx[None, :]) & 1).astype(np.int64)
-            ones = np.add.reduceat(bitmat, starts, axis=0)  # (n_docs, bits)
-            acc = 2 * ones - lens[:, None]  # ±1 vote sums
-            sig = ((acc > 0).astype(np.uint64) << bit_idx).sum(
-                axis=1, dtype=np.uint64
-            )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "simhash": sig.view(np.int64)}
-            )
-
-    return hashed.mapInPandas(_sim, schema="doc_id long, simhash long")
-
-
-def simhash_near_dup_pairs(
-    docs: DataFrame, max_hamming: int = 3, text_col: str = "text"
-) -> DataFrame:
-    """SimHash near-dup: band the 64-bit signature into ``max_hamming + 1``
-    chunks (pigeonhole: ≤ max_hamming differing bits across k+1 chunks ⇒ at
-    least one chunk identical — the chunk count DERIVES from the radius, so
-    no radius silently loses recall), bucket-join on (chunk index, chunk
-    value), verify with JVM ``bit_count(xor)``. The default radius 3 gives
-    the classic 4×16-bit banding."""
-    if not 0 <= max_hamming <= 63:
-        raise ValueError(f"max_hamming must be in [0, 63], got {max_hamming}")
-    n_chunks = max_hamming + 1
-    base, rem = divmod(64, n_chunks)
-    widths = [base + 1 if i < rem else base for i in range(n_chunks)]
-    offsets = [sum(widths[:i]) for i in range(n_chunks)]
-
-    def _chunk(i: int):
-        if widths[i] == 64:
-            return F.col("simhash")
-        # arithmetic shiftright is safe: the mask keeps only chunk bits
-        return F.shiftright(F.col("simhash"), offsets[i]).bitwiseAND(
-            F.lit((1 << widths[i]) - 1)
-        )
-
-    sigs = simhash_signatures(docs, text_col)
-    chunks = sigs.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(*[_chunk(i) for i in range(n_chunks)])
-        ).alias("chunk_idx", "chunk_val"),
-    )
-    a = chunks.select(
-        "chunk_idx",
-        "chunk_val",
-        F.col("doc_id").alias("id_a"),
-        F.col("simhash").alias("sig_a"),
-    )
-    b = chunks.select(
-        "chunk_idx",
-        "chunk_val",
-        F.col("doc_id").alias("id_b"),
-        F.col("simhash").alias("sig_b"),
-    )
-    cands = (
-        a.join(b, ["chunk_idx", "chunk_val"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sig_a", "sig_b")
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return cands.select("id_a", "id_b", hamming.alias("hamming")).where(
-        F.col("hamming") <= max_hamming
     )

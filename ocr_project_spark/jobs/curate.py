@@ -31,13 +31,13 @@ corpus. Both checkpoints are released when the job ends, also when a
 stage raises.
 
 Usage (cluster):
-    spark-submit --py-files dist/ocr_project_spark.zip \\
+    spark-submit --master <cluster> --py-files dist/ocr_project_spark.zip \\
         --driver-java-options -XX:TieredStopAtLevel=1 \\
         ocr_project_spark/jobs/curate.py \\
         --documents <parquet> --out <parquet> \\
         [--drop-repeated-lines] [--c4-clean] [--redact-pii] \\
-        [--decontaminate-against <eval parquet> [--ngram 13]] \\
-        [--quality-gate] [--lm-gate [--lm-ngram 2]]
+        [--decontaminate-against <eval parquet>] \\
+        [--quality-gate] [--lm-gate]
 
 Under spark-submit the driver JVM is already running when build_session()
 runs, so its C1-tier flag (see session.py) is passed on the command line.
@@ -76,9 +76,8 @@ def parse_args(argv=None):
     p.add_argument(
         "--drop-repeated-lines",
         action="store_true",
-        help="remove lines occurring in >= --line-min-docs distinct docs",
+        help="remove lines occurring in >= 2 distinct docs",
     )
-    p.add_argument("--line-min-docs", type=int, default=2)
     p.add_argument(
         "--c4-clean",
         action="store_true",
@@ -93,9 +92,8 @@ def parse_args(argv=None):
     p.add_argument(
         "--decontaminate-against",
         help="parquet of benchmark/eval texts (column: text); documents "
-        "sharing any word --ngram with it are dropped",
+        "sharing any word 13-gram with it are dropped",
     )
-    p.add_argument("--ngram", type=int, default=13)
     p.add_argument(
         "--quality-gate",
         action="store_true",
@@ -107,14 +105,13 @@ def parse_args(argv=None):
         help="keep only documents whose word n-grams are corpus-familiar "
         "(corpus-frequency LM gate, the CCNet perplexity-filter analog)",
     )
-    p.add_argument("--lm-ngram", type=int, default=2)
-    p.add_argument("--master", default=None)
     return p.parse_args(argv)
 
 
-def curation_chain(spark, args, held: list):
-    """The curated frame to write, with the stages ``args`` turns on, and
-    the ``(label, Observation)`` pairs for the stages that drop documents.
+def curation_chain(spark, src, args, held: list):
+    """The curated frame to write from the input frame ``src``, with the
+    stages ``args`` turns on, and the ``(label, Observation)`` pairs for
+    the stages that drop documents.
 
     The row-local stages (C4, PII, quality gate) are projections and
     filters on one ``(doc_id, text)`` frame. Before each corpus-statistic
@@ -127,7 +124,6 @@ def curation_chain(spark, args, held: list):
 
     from ocr_project_spark import textops
 
-    src = spark.read.parquet(args.documents)
     docs = src.select("doc_id", "text")
     observations: list[tuple[str, Observation]] = []
 
@@ -144,9 +140,7 @@ def curation_chain(spark, args, held: list):
     if args.drop_repeated_lines:
         from ocr_project_spark.dedup import remove_repeated_lines
 
-        docs = remove_repeated_lines(docs, min_docs=args.line_min_docs).drop(
-            "n_removed_lines"
-        )
+        docs = remove_repeated_lines(docs).drop("n_removed_lines")
     if args.c4_clean:
         docs = _observe(
             textops.c4_line_filter(docs).where("kept").select("doc_id", "text"),
@@ -157,7 +151,7 @@ def curation_chain(spark, args, held: list):
     if args.decontaminate_against:
         eval_docs = spark.read.parquet(args.decontaminate_against)
         docs = _observe(
-            textops.decontaminate(_materialize(docs), eval_docs, n=args.ngram),
+            textops.decontaminate(_materialize(docs), eval_docs),
             "decontamination",
         )
     if args.quality_gate:
@@ -165,9 +159,7 @@ def curation_chain(spark, args, held: list):
     if args.lm_gate:
         docs = _materialize(docs)
         keep = (
-            textops.gram_lm_scores(docs, n=args.lm_ngram)
-            .where("passes_lm")
-            .select("doc_id")
+            textops.gram_lm_scores(docs).where("passes_lm").select("doc_id")
         )
         docs = _observe(docs.join(keep, "doc_id", "left_semi"), "LM gate")
     if any(c not in ("doc_id", "text") for c in src.columns):
@@ -186,18 +178,20 @@ def main(argv=None, spark=None) -> None:
 
     owns_session = spark is None
     if owns_session:
-        spark = build_session(app_name="ocr-project-spark-curate", master=args.master)
+        spark = build_session(app_name="ocr-project-spark-curate")
     held: list = []
     rules_prev = spark.conf.get(AQE_RULES_KEY, None)
     spark.conf.set(
         AQE_RULES_KEY, ",".join(r for r in (rules_prev, AQE_EMPTY_PRUNING) if r)
     )
     try:
-        n0 = spark.read.parquet(args.documents).count()
+        # one read: its schema inference is a Spark job of its own
+        src = spark.read.parquet(args.documents)
+        n0 = src.count()
         print(f"curate: input {n0} documents")
         # per-stage and output counts ride the checkpoints and the final
         # write as observed metrics, not one .count() action each
-        docs, observations = curation_chain(spark, args, held)
+        docs, observations = curation_chain(spark, src, args, held)
         out_obs = Observation("out")
         docs.observe(out_obs, F.count(F.lit(1)).alias("n")).write.mode(
             "overwrite"

@@ -1,27 +1,25 @@
 """spark-submit entrypoint for the corpus dedup job (training-data side).
 
 Usage (cluster):
-    spark-submit --py-files dist/ocr_project_spark.zip \\
+    spark-submit --master <cluster> --py-files dist/ocr_project_spark.zip \\
         --driver-java-options -XX:TieredStopAtLevel=1 \\
         ocr_project_spark/jobs/dedup.py \\
         --documents <parquet> --keep <out> [--kept-corpus <out>] \\
-        [--method exact|minhash|simhash] [--threshold 0.8] \\
-        [--num-hashes 64] [--bands 16] [--max-bucket N] [--max-hamming 3]
+        [--max-bucket N]
 
 Under spark-submit the driver JVM is already running when build_session()
 runs, so its C1-tier flag (see session.py) is passed on the command line.
 
-Pipeline: read documents → near-dup pairs for the chosen family →
-connected components (large-star/small-star, components.py) → min-id
-keep-list written as a one-column parquet; ``--kept-corpus`` additionally
-materializes the surviving documents via a left-semi join (the corpus the
-training run actually reads). ``exact`` skips the component pass — exact
-groups are already equivalence classes (dedup.dedup_keep).
+Pipeline: read documents → MinHash-LSH near-dup pairs (threshold 0.8,
+64 hashes, 16 bands) → connected components (large-star/small-star,
+components.py) → min-id keep-list written as a one-column parquet;
+``--kept-corpus`` additionally materializes the surviving documents via a
+left-semi join (the corpus the training run actually reads).
 
 Local smoke (no cluster):
     python -m ocr_project_spark.jobs.dedup \\
         --documents /root/testdata/sf0.001/documents.parquet \\
-        --keep /tmp/keep --method minhash
+        --keep /tmp/keep
 """
 
 from __future__ import annotations
@@ -39,22 +37,12 @@ def parse_args(argv=None):
         "keep-list) to this path",
     )
     p.add_argument(
-        "--method",
-        choices=("exact", "minhash", "simhash"),
-        default="minhash",
-    )
-    p.add_argument("--threshold", type=float, default=0.8)
-    p.add_argument("--num-hashes", type=int, default=64)
-    p.add_argument("--bands", type=int, default=16)
-    p.add_argument(
         "--max-bucket",
         type=int,
         default=None,
         help="degenerate-LSH-bucket cap (see dedup.minhash_near_dup_pairs); "
         "dropped buckets are counted and logged",
     )
-    p.add_argument("--max-hamming", type=int, default=3)
-    p.add_argument("--master", default=None)
     return p.parse_args(argv)
 
 
@@ -64,46 +52,22 @@ def main(argv=None, spark=None) -> None:
     args = parse_args(argv)
     from pyspark.sql import Observation, functions as F
 
+    from ocr_project_spark.dedup import minhash_dedup_keep, minhash_oversized_buckets
     from ocr_project_spark.session import build_session
 
     owns_session = spark is None
     if owns_session:
-        spark = build_session(app_name="ocr-project-spark-dedup", master=args.master)
+        spark = build_session(app_name="ocr-project-spark-dedup")
     try:
         docs = spark.read.parquet(args.documents)
-        if args.method == "exact":
-            from ocr_project_spark.dedup import dedup_keep
-
-            keep = dedup_keep(docs)
-        elif args.method == "minhash":
-            from ocr_project_spark.dedup import (
-                minhash_dedup_keep,
-                minhash_oversized_buckets,
-            )
-
-            if args.max_bucket is not None:
-                # the inventory count recomputes the hash->band pass —
-                # deliberate: the module's no-persist stance (caching
-                # per-doc arrays at scale costs more than one extra
-                # codegen'd pass) applies to observability too
-                n_dropped = minhash_oversized_buckets(
-                    docs,
-                    args.max_bucket,
-                    num_hashes=args.num_hashes,
-                    bands=args.bands,
-                ).count()
-                print(f"dedup: max_bucket={args.max_bucket} drops {n_dropped} buckets")
-            keep = minhash_dedup_keep(
-                docs,
-                threshold=args.threshold,
-                num_hashes=args.num_hashes,
-                bands=args.bands,
-                max_bucket=args.max_bucket,
-            )
-        else:
-            from ocr_project_spark.dedup import simhash_dedup_keep
-
-            keep = simhash_dedup_keep(docs, max_hamming=args.max_hamming)
+        if args.max_bucket is not None:
+            # the inventory count recomputes the hash->band pass —
+            # deliberate: the module's no-persist stance (caching per-doc
+            # arrays at scale costs more than one extra codegen'd pass)
+            # applies to observability too
+            n_dropped = minhash_oversized_buckets(docs, args.max_bucket).count()
+            print(f"dedup: max_bucket={args.max_bucket} drops {n_dropped} buckets")
+        keep = minhash_dedup_keep(docs, max_bucket=args.max_bucket)
         kept_obs = Observation("keep")
         keep.observe(kept_obs, F.count(F.lit(1)).alias("n")).write.mode(
             "overwrite"

@@ -1,7 +1,7 @@
 """spark-submit entrypoint for the extraction batch job.
 
 Usage (cluster):
-    spark-submit --py-files dist/ocr_project_spark.zip \\
+    spark-submit --master <cluster> --py-files dist/ocr_project_spark.zip \\
         --driver-java-options -XX:TieredStopAtLevel=1 \\
         ocr_project_spark/jobs/extract.py \\
         --pages <table-or-parquet-path> --results <out> --lineage <out> \\
@@ -45,7 +45,6 @@ def parse_args(argv=None):
         "(default: keep the input partitioning); with --synthesize-sf-dir "
         "also the synthesized table's partition count",
     )
-    p.add_argument("--master", default=None)
     p.add_argument(
         "--wet",
         help="also publish the extracted text as WET segments (WARC "
@@ -71,9 +70,7 @@ def main(argv=None, spark=None) -> None:
 
     owns_session = spark is None
     if owns_session:
-        spark = build_session(
-            app_name="ocr-project-spark-extract", master=args.master
-        )
+        spark = build_session(app_name="ocr-project-spark-extract")
     try:
         if args.synthesize_sf_dir:
             from ocr_project_spark.datagen import synthesize_pages

@@ -27,6 +27,13 @@ launches the JVM, i.e. under ``python``; under ``spark-submit`` the JVM is
 already running when the builder runs, so pass
 ``--driver-java-options -XX:TieredStopAtLevel=1`` there.
 
+The master is ``local[SPARK_GRAFT_CPUS]`` only when this factory launches
+the JVM. Under ``spark-submit`` the launcher hands the driver its gateway
+through ``PYSPARK_GATEWAY_PORT`` and its ``--master`` (a cluster, or
+``local[N]``) stands. Whether ``spark.master`` is set cannot tell the two
+apart: under plain ``python``, PySpark's own launcher also goes through
+spark-submit, which defaults it to ``local[*]``.
+
 The console progress bar is off: its ``[Stage N:>`` redraws share stdout
 with the jobs' printed counts and ``check_oracles.py``'s per-query lines,
 and run into them.
@@ -41,16 +48,14 @@ from pyspark.sql import DataFrame, SparkSession
 DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1"
 
 
-def build_session(
-    app_name: str = "ocr-project-spark", master: str | None = None
-) -> SparkSession:
+def build_session(app_name: str = "ocr-project-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
     shuffle_partitions = int(cpus if cpus != "*" else 32)
+    builder = SparkSession.builder.appName(app_name)
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        builder = builder.master(f"local[{cpus}]")
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

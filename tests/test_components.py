@@ -103,22 +103,8 @@ def test_minhash_dedup_keep_transitive_chain(spark):
         for r in minhash_near_dup_pairs(df, threshold=0.8).collect()
     }
     assert (1, 2) in pairs and (2, 3) in pairs and (1, 3) not in pairs
-    kept = {r["doc_id"] for r in minhash_dedup_keep(df, threshold=0.8).collect()}
+    kept = {r["doc_id"] for r in minhash_dedup_keep(df).collect()}
     assert kept == {1, 50}
-
-
-def test_simhash_dedup_keep(spark):
-    from ocr_project_spark.dedup import simhash_dedup_keep
-
-    base = " ".join(f"tok{i}" for i in range(60))
-    rows = [
-        (1, base, "en"),
-        (2, base, "en"),  # exact copy: hamming 0
-        (9, " ".join(f"other{i}" for i in range(60)), "en"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    kept = {r["doc_id"] for r in simhash_dedup_keep(df).collect()}
-    assert kept == {1, 9}
 
 
 def test_nonconvergence_guard(spark):

@@ -124,17 +124,11 @@ def test_no_new_module_is_reached_only_from_the_query_registry():
 # Public package functions and classes that no engine file but their own
 # references, while __spark_entry__ does: each with the reason it stays.
 QUERY_ONLY_FUNCTIONS = {
-    "components.near_dup_clusters": "ROADMAP item 2 candidate",
+    "components.near_dup_clusters": "runs the `dedup_minhash_components` query's cluster labels",
     "datagen.page_slices": "called in its own module by `build_html`",
     "datagen.url_for": "called in its own module by `_synthesize_batch`",
     "datagen.warc_ts_for": "called in its own module by `_synthesize_batch`",
-    "dedup.dedup_test_corpus": "ROADMAP item 2 candidate",
-    "dedup.exact_dup_groups": "ROADMAP item 2 candidate",
-    "dedup.ngram_jaccard_pairs": "ROADMAP item 2 candidate",
-    "dedup.prefix_dup_groups": "ROADMAP item 2 candidate",
-    "dedup.remove_repeated_spans": "ROADMAP item 2 candidate",
-    "dedup.repeated_ngram_spans": "ROADMAP item 2 candidate",
-    "dedup.simhash_near_dup_pairs": "called in its own module by `simhash_dedup_keep`",
+    "dedup.dedup_test_corpus": "builds the `dedup_minhash` query's planted-dup corpus",
     "operators.compare.compare_backends": "paper parity (P9, comparison mode)",
     "operators.lineage.backend_listing": "paper parity (R6, backend listing)",
     "operators.resume.crawl_delta": "ROADMAP item 2 candidate",
@@ -180,3 +174,56 @@ def test_query_only_functions_are_listed():
             module = _module_name(path).removeprefix(f"{PACKAGE}.")
             flagged.add(f"{module}.{node.name}")
     assert flagged == set(QUERY_ONLY_FUNCTIONS)
+
+
+# Every ``--flag`` of a job, with who sets it: perfbench, a deployment
+# input or output, paper parity, or a candidate for removal.
+JOB_FLAGS = {
+    ("extract", "--pages"): "deployment input; perfbench",
+    ("extract", "--results"): "deployment output; perfbench",
+    ("extract", "--lineage"): "deployment output; perfbench",
+    ("extract", "--num-partitions"): "perfbench; resume placement depends on it",
+    ("extract", "--synthesize-sf-dir"): "ROADMAP item 8 candidate: fixture mode only",
+    ("extract", "--wet"): "ROADMAP item 8 candidate: set only by one test",
+    ("extract", "--circuit-breaker"): "paper parity (R3 health state)",
+    ("dedup", "--documents"): "deployment input; perfbench",
+    ("dedup", "--keep"): "deployment output; perfbench",
+    ("dedup", "--kept-corpus"): "deployment output; perfbench",
+    ("dedup", "--max-bucket"): "ROADMAP item 8 candidate: a default-on cap",
+    ("curate", "--documents"): "deployment input; perfbench",
+    ("curate", "--out"): "deployment output; perfbench",
+    ("curate", "--drop-repeated-lines"): "perfbench",
+    ("curate", "--c4-clean"): "perfbench",
+    ("curate", "--redact-pii"): "perfbench",
+    ("curate", "--decontaminate-against"): "perfbench; the eval-set input",
+    ("curate", "--quality-gate"): "perfbench",
+    ("curate", "--lm-gate"): "perfbench",
+}
+JOB_FLAG_CALLERS = (
+    "perfbench",
+    "deployment input",
+    "deployment output",
+    "paper parity",
+    "ROADMAP item 8 candidate",
+)
+
+
+def test_job_flags_are_listed():
+    """Every ``add_argument("--…")`` in ``jobs/*.py`` is listed above, and
+    each entry names who sets it. A new flag must name its caller; a
+    removed one must leave the list."""
+    found = set()
+    for path in (ROOT / PACKAGE / "jobs").glob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "add_argument"
+                and node.args
+                and isinstance(node.args[0], ast.Constant)
+                and str(node.args[0].value).startswith("--")
+            ):
+                found.add((path.stem, node.args[0].value))
+    assert found == set(JOB_FLAGS)
+    for key, caller in JOB_FLAGS.items():
+        assert caller.startswith(JOB_FLAG_CALLERS), key

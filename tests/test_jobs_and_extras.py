@@ -92,9 +92,6 @@ def test_dedup_cli_end_to_end(spark, tmp_path):
             "--documents", src,
             "--keep", keep_path,
             "--kept-corpus", kept_path,
-            "--method", "minhash",
-            "--num-hashes", "128",
-            "--bands", "32",
         ],
         spark=spark,
     )
@@ -108,17 +105,6 @@ def test_dedup_cli_end_to_end(spark, tmp_path):
     assert {r["doc_id"] for r in kept.select("doc_id").collect()} == keep
 
 
-def test_dedup_cli_exact_method(spark, tmp_path):
-    from ocr_project_spark.jobs.dedup import main
-
-    rows = [(1, "x y z", "en"), (2, "x y z", "en"), (3, "q r s", "en")]
-    src = str(tmp_path / "d")
-    spark.createDataFrame(rows, "doc_id long, text string, lang string").write.parquet(src)
-    out = str(tmp_path / "k")
-    main(["--documents", src, "--keep", out, "--method", "exact"], spark=spark)
-    assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == {1, 3}
-
-
 def test_dedup_cli_max_bucket_logs_drops(spark, tmp_path, capsys):
     from ocr_project_spark.jobs.dedup import main
 
@@ -128,15 +114,14 @@ def test_dedup_cli_max_bucket_logs_drops(spark, tmp_path, capsys):
     spark.createDataFrame(rows, "doc_id long, text string, lang string").write.parquet(src)
     out = str(tmp_path / "k")
     main(
-        ["--documents", src, "--keep", out, "--method", "minhash",
-         "--max-bucket", "10"],
+        ["--documents", src, "--keep", out, "--max-bucket", "10"],
         spark=spark,
     )
     printed = capsys.readouterr().out
     assert "drops" in printed
     keep = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    # capped LSH can't see the boiler class, so it survives as singletons —
-    # the CLI's documented posture is: run --method exact first
+    # capped LSH can't see the boiler class, so it survives as singletons;
+    # the printed drop count (minhash_oversized_buckets) is what shows it
     assert 90 in keep
 
 
@@ -542,7 +527,9 @@ def test_curate_releases_checkpoint_blocks(spark, tmp_path):
     before = c.persistent_rdd_ids(spark)
     held: list = []
     try:
-        curation_chain(spark, parse_args(_every_stage(src, "unused", ev)), held)
+        curation_chain(
+            spark, spark.read.parquet(src), parse_args(_every_stage(src, "unused", ev)), held
+        )
         assert len(held) == 2
         assert len(c.persistent_rdd_ids(spark) - before) == 2
     finally:

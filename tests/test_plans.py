@@ -80,15 +80,6 @@ def test_flagship_rollup_broadcasts_dim_and_partial_aggs(spark):
     assert n_nodes(plan, "HashAggregate") >= 2  # partial + final
 
 
-def test_exact_dedup_partial_aggregation(spark, documents):
-    """dedup: md5 groupBy decomposes into partial+final HashAggregate (one
-    row per distinct hash crosses the wire per partition)."""
-    from ocr_project_spark.dedup import exact_dup_groups
-
-    plan = plan_of(exact_dup_groups(documents))
-    assert n_nodes(plan, "HashAggregate") >= 2
-
-
 def test_filter_pushdown_reaches_parquet(spark):
     """Catalyst pushes the predicate into the parquet scan. Uses a table no
     fixture caches: a cached relation resolves to InMemoryTableScan, which
@@ -101,17 +92,6 @@ def test_filter_pushdown_reaches_parquet(spark):
         "PushedFilters: [IsNotNull(o_orderkey), LessThan(o_orderkey,100)]"
         in plan
     )
-
-
-def test_span_removal_no_cartesian_and_partial_aggs(spark, documents):
-    """PLANS §6: span removal's only wide ops are partial-agg groupBys and
-    key joins — never a cartesian product; payloads never shuffle."""
-    from ocr_project_spark.dedup import remove_repeated_spans
-
-    plan = plan_of(remove_repeated_spans(documents))
-    assert n_nodes(plan, "CartesianProduct") == 0
-    assert n_nodes(plan, "BroadcastNestedLoopJoin") == 0
-    assert "partial_count" in plan or "HashAggregate" in plan
 
 
 def test_lineage_readback_prunes_to_current_run(spark, pages, tmp_path):
@@ -177,7 +157,9 @@ def test_curation_chain_plan_is_linear(spark, tmp_path):
     )
     held: list = []
     try:
-        frame, observations = curation_chain(spark, args, held)
+        frame, observations = curation_chain(
+            spark, spark.read.parquet(args.documents), args, held
+        )
         plan = plan_of(frame)
     finally:
         for df in held:

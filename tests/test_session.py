@@ -2,7 +2,15 @@
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+from pathlib import Path
+
+import pyspark
 from pyspark.sql import SparkSession
+
+ROOT = Path(__file__).resolve().parent.parent
 
 
 def test_driver_runs_on_c1_tier(spark):
@@ -33,3 +41,42 @@ def test_factory_turns_off_console_progress(monkeypatch):
         SparkSession.Builder, "getOrCreate", lambda self: dict(self._options)
     )
     assert build_session()["spark.ui.showConsoleProgress"] == "false"
+
+
+def test_suite_session_runs_local_on_graft_cpus(spark):
+    """Under plain ``python`` the factory launches the JVM and sets the
+    local master from SPARK_GRAFT_CPUS."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    assert spark.sparkContext.master == f"local[{cpus}]"
+
+
+def test_spark_submit_master_stands(tmp_path):
+    """Under spark-submit the launcher's ``--master`` is kept: a driver
+    submitted with ``--master local[1]`` runs on local[1], not on
+    local[SPARK_GRAFT_CPUS]."""
+    script = tmp_path / "print_master.py"
+    script.write_text(
+        "from ocr_project_spark.session import build_session\n"
+        "spark = build_session(app_name='master-check')\n"
+        "print('MASTER=' + spark.sparkContext.master)\n"
+        "spark.stop()\n"
+    )
+    env = {
+        **os.environ,
+        "SPARK_GRAFT_CPUS": "2",
+        "PYTHONPATH": os.pathsep.join(
+            p for p in (str(ROOT), os.environ.get("PYTHONPATH")) if p
+        ),
+        "PYSPARK_DRIVER_PYTHON": sys.executable,
+        "PYSPARK_PYTHON": sys.executable,
+    }
+    submit = Path(pyspark.__file__).parent / "bin" / "spark-submit"
+    out = subprocess.run(
+        [str(submit), "--master", "local[1]", "--driver-memory", "512m", str(script)],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "MASTER=local[1]" in out.stdout.splitlines(), out.stdout
